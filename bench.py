@@ -245,6 +245,51 @@ def _force(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
+def stdout_line(timings: dict[str, float], total: float, sf_val) -> str:
+    """The final stdout line: the stable REPORTED subset plus the run's
+    slowest-8, 10 ms rounding, compact separators — it must fit the
+    2000-char stdout tail it is parsed from (see REPORTED above). If
+    values ever grow the line past 1950 bytes, the guard moves names
+    fastest-first from ``queries`` into a ``trimmed`` list (their times
+    stay in BENCH_DETAIL.json), so a name never silently leaves the line;
+    the dynamic slowest-8 are never trimmed."""
+    slowest8 = [
+        k for k, _ in sorted(timings.items(), key=lambda kv: -kv[1])[:8]
+    ]
+    names_out = [n for n in REPORTED if n in timings] + [
+        n for n in slowest8 if n not in REPORTED
+    ]
+    trimmed: list[str] = []
+
+    def _line() -> str:
+        obj = {
+            "metric": "headline_suite_seconds",
+            "value": total,
+            "unit": "sec",
+            "queries": {n: round(timings[n], 2) for n in names_out},
+            "sf": sf_val,
+            "n_queries": len(timings),
+            "detail": "BENCH_DETAIL.json",
+        }
+        if trimmed:
+            obj["trimmed"] = trimmed
+        return json.dumps(obj, separators=(",", ":"))
+
+    out = _line()
+    while len(out) > 1950 and len(names_out) > 8:
+        drop = min(
+            (n for n in names_out if n not in slowest8),
+            key=lambda n: timings[n],
+            default=None,
+        )
+        if drop is None:
+            break
+        names_out.remove(drop)
+        trimmed.append(drop)
+        out = _line()
+    return out
+
+
 def main() -> None:
     spark = get_spark(app_name="kinbaku_spark_bench")
     sf = SF_DIR.rstrip("/").split("sf")[-1]
@@ -290,44 +335,7 @@ def main() -> None:
     with open(detail_path, "w") as fh:
         json.dump(detail, fh, indent=1, sort_keys=True)
 
-    # stdout map: the stable REPORTED subset plus the run's slowest-8,
-    # 10 ms rounding, compact separators — must fit the driver's 2000-char
-    # stdout tail (see REPORTED above). The guard trims fastest-first from
-    # the reported tail if values ever grow the line past 1950 bytes; the
-    # dynamic slowest-8 are never trimmed.
-    slowest8 = [
-        k for k, _ in sorted(timings.items(), key=lambda kv: -kv[1])[:8]
-    ]
-    names_out = [n for n in REPORTED if n in timings] + [
-        n for n in slowest8 if n not in REPORTED
-    ]
-
-    def _line(sel: list[str]) -> str:
-        return json.dumps(
-            {
-                "metric": "headline_suite_seconds",
-                "value": total,
-                "unit": "sec",
-                "queries": {n: round(timings[n], 2) for n in sel},
-                "sf": sf_val,
-                "n_queries": len(timings),
-                "detail": "BENCH_DETAIL.json",
-            },
-            separators=(",", ":"),
-        )
-
-    out = _line(names_out)
-    while len(out) > 1950 and len(names_out) > 8:
-        drop = min(
-            (n for n in names_out if n not in slowest8),
-            key=lambda n: timings[n],
-            default=None,
-        )
-        if drop is None:
-            break
-        names_out.remove(drop)
-        out = _line(names_out)
-    print(out)
+    print(stdout_line(timings, total, sf_val))
 
 
 if __name__ == "__main__":

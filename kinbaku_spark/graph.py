@@ -8,14 +8,19 @@ Data model (SURVEY.md §1.4):
 
 Reference parity map (each method cites the reference implementation it
 re-expresses; the reference walks hand-rolled BSTs inside an mmap'd file —
-here every read is declarative DataFrame algebra that Catalyst turns into
-pruned, pushed-down parquet scans):
+here every bulk read is declarative DataFrame algebra that Catalyst turns
+into pruned, pushed-down parquet scans, and point reads of a source go
+through its cached out-edge block):
 
-    node/edge/has_node/has_edge   graph.py:999-1099   -> pushed-down filter
-    neighbors/predecessors        graph.py:856-884    -> filter + project
+    node/has_node                 graph.py:999-1099   -> pushed-down filter
+    edge/has_edge                 graph.py:999-1099   -> out-edge block
+    neighbors                     graph.py:856-884    -> out-edge block
+    predecessors                  graph.py:856-884    -> filter + project
     neighbors_from/..._from       graph.py:928-957    -> one shuffle join
     common_neighbors/preds        graph.py:959-983    -> intersect
-    out_degree/in_degree          graph.py:985-997    -> count / groupBy
+    out_degree                    graph.py:985-997    -> out-edge block
+    in_degree                     graph.py:985-997    -> count
+    out_degrees/in_degrees        (extension)         -> groupBy
     nodes/edges iteration         graph.py:152-171    -> full scan
     batch_get_nodes/edges         graph.py:1101-1186  -> keyset pagination
     adjacency_matrix/subgraph     graph.py:1188-1265  -> join to dense id map
@@ -30,6 +35,16 @@ last-op-per-entity — and materialize as ONE anti-join + union per flush
 (lineage stays O(flushes), not O(ops)). A driver-side identity index (node
 keys + edge triples, the moral equivalent of the reference's preload
 (graph.py:304-306)) makes point existence checks O(1).
+
+Out-edge blocks: the reference answers edge/has_edge/neighbors/out_degree
+by walking one node's out-edge tree (graph.py:472-492). The default path
+fetches that node's stored out-edges once, with one job, and keeps the
+block in an LRU bounded by ``cache_len`` total rows; pending edge ops of
+the source are laid over the block at read time, so reads never flush and
+still see the session's own writes. A point read on a hub therefore
+transfers all of the hub's out-edges once (a block over ``cache_len`` rows
+is answered but not kept). ``_flush`` drops the blocks of the sources it
+touched; bulk mutations drop them all.
 
 Scale notes: the identity index is for the reference's point-op API, which is
 inherently driver-bound; at 100 TB you use the batch API (`add_edges`,
@@ -134,16 +149,21 @@ class Graph:
         self._edge_keys: set[tuple[str, str, int]] | None = None
         # KV front for point reads (reference cache semantics,
         # graph.py:100-106 cache_pos_to_node + preload): full-record driver
-        # dicts when preload() ran, else a bounded read-through LRU. Point
-        # lookups are the one workload where a distributed scan is the
-        # wrong shape (~300 ms/job vs ~ms in the reference); the caches
-        # answer repeat reads at dict speed while every bulk/analytic path
-        # stays distributed.
+        # dicts when preload() ran, else a bounded read-through node LRU
+        # and per-source out-edge blocks (src -> {(dst, type): record},
+        # the reference's per-node out-edge tree). Reads of a source are
+        # served from its block plus that source's pending edge ops, so a
+        # read never flushes. Point lookups are the one workload where a
+        # distributed scan is the wrong shape (~300 ms/job vs ~ms in the
+        # reference); the caches answer repeat reads at dict speed while
+        # every bulk/analytic path stays distributed. ``cache_len`` bounds
+        # the node LRU's entries and the blocks' total rows.
         self._cache_len = cache_len
         self._node_rec: dict[str, dict] | None = None
         self._edge_rec: dict[tuple[str, str, int], dict] | None = None
         self._node_lru: OrderedDict[str, dict] = OrderedDict()
-        self._edge_lru: OrderedDict[tuple[str, str, int], dict] = OrderedDict()
+        self._blocks: OrderedDict[str, dict[tuple[str, int], dict]] = OrderedDict()
+        self._block_rows = 0
         # preload-built adjacency dicts (key -> neighbor/predecessor key
         # sets): dict-speed neighbors()/predecessors() for the reference's
         # flagship point read. Invalidated WHOLESALE by any mutation (the
@@ -297,9 +317,9 @@ class Graph:
         collect the identity key sets into driver RAM for O(1) existence
         checks. Valid when the key space fits one process — the reference's
         own operating envelope. The DEFAULT path never calls this: point
-        mutations use op-log-aware existence probes (_node_exists /
-        _edge_exists) and flush-time anti-joins, which stay distributed at
-        any graph size."""
+        mutations use op-log-aware existence probes (_node_exists, and
+        _edge_exists over one source's out-edge block) and flush-time
+        anti-joins, so no driver state grows with the graph size."""
         if self._node_keys is None:
             self._node_keys = {r[0] for r in self._nodes.select("key").collect()}
             self._edge_keys = {
@@ -316,10 +336,10 @@ class Graph:
         KV-front pattern for the one workload where a distributed scan is
         the wrong shape. Operating envelope: the record set fits one
         process — the reference's own envelope (its entire graph is one
-        local file). The DEFAULT path stays fully distributed; bulk
-        mutations (add_edges/remove_nodes/...) invalidate the preload, and
-        point mutations maintain it eagerly (same discipline as the
-        identity key sets)."""
+        local file). The DEFAULT path holds only the bounded node LRU and
+        out-edge blocks; bulk mutations (add_edges/remove_nodes/...)
+        invalidate the preload, and point mutations maintain it eagerly
+        (same discipline as the identity key sets)."""
         self._flush()
         self._ensure_index()
         if self._node_rec is None:
@@ -342,7 +362,63 @@ class Graph:
         row["key"] = key
         return row
 
-    # -- distributed existence probes (no driver-side key sets) --------------
+    # -- read-through stored records (no driver-side key sets) ---------------
+
+    def _stored_node(self, key: str) -> dict | None:
+        """The stored record of ``key`` (pending ops NOT applied), or None.
+        A miss is one job, found or not; found records enter the LRU."""
+        rec = _lru_get(self._node_lru, key)
+        if rec is None:
+            rows = self._nodes.filter(F.col("key") == key).collect()
+            if not rows:
+                return None
+            rec = rows[0].asDict()
+            _lru_put(self._node_lru, key, rec, self._cache_len)
+        return rec
+
+    def _block(self, src: str) -> dict[tuple[str, int], dict]:
+        """The stored out-edges of ``src`` as {(dst, type): record}, pending
+        ops NOT applied. A miss is one job; the block is kept unless it
+        alone exceeds ``cache_len`` rows. An empty block counts as one row,
+        so probes of edgeless sources stay bounded too."""
+        blk = _lru_get(self._blocks, src)
+        if blk is not None:
+            return blk
+        blk = {
+            (r["dst"], r["type"]): r.asDict()
+            for r in self._edges.filter(F.col("src") == src).collect()
+        }
+        size = max(1, len(blk))
+        if size <= self._cache_len:
+            self._blocks[src] = blk
+            self._block_rows += size
+            while self._block_rows > self._cache_len:
+                _, old = self._blocks.popitem(last=False)
+                self._block_rows -= max(1, len(old))
+        return blk
+
+    def _out_keys(self, src: str) -> set[tuple[str, int]]:
+        """(dst, type) of every out-edge of ``src``: its block with the
+        source's pending edge ops laid over it."""
+        keys = set(self._block(src))
+        for (s, d, t), (kind, _) in self._edge_ops.items():
+            if s == src:
+                if kind == "delete":
+                    keys.discard((d, t))
+                else:
+                    keys.add((d, t))
+        return keys
+
+    def _drop_blocks(self, sources=None) -> None:
+        """Forget the blocks of ``sources`` (all blocks when None)."""
+        if sources is None:
+            self._blocks.clear()
+            self._block_rows = 0
+            return
+        for s in sources:
+            blk = self._blocks.pop(s, None)
+            if blk is not None:
+                self._block_rows -= max(1, len(blk))
 
     def _node_exists(self, key: str) -> bool:
         if self._node_keys is not None:
@@ -350,7 +426,7 @@ class Graph:
         op = self._node_ops.get(key)
         if op is not None:
             return op[0] != "delete"
-        return not self._nodes.filter(F.col("key") == key).isEmpty()
+        return self._stored_node(key) is not None
 
     def _edge_exists(self, triple: tuple[str, str, int]) -> bool:
         if self._edge_keys is not None:
@@ -359,9 +435,7 @@ class Graph:
         if op is not None:
             return op[0] != "delete"
         src, dst, type_ = triple
-        return not self._edges.filter(
-            (F.col("src") == src) & (F.col("dst") == dst) & (F.col("type") == type_)
-        ).isEmpty()
+        return (dst, type_) in self._block(src)
 
     def _dirty(self) -> bool:
         return bool(self._node_ops or self._edge_ops)
@@ -405,11 +479,24 @@ class Graph:
                 rows = [self._node_row(k, attrs, schema) for k, attrs in upserts]
                 base = base.unionByName(spark.createDataFrame(rows, schema))
             if ensures:
-                rows = [self._node_row(k, attrs, schema) for k, attrs in ensures]
-                new_nodes = spark.createDataFrame(rows, schema).join(
-                    self._nodes.select("key"), on="key", how="left_anti"
-                )
-                base = base.unionByName(new_nodes)
+                # insert-if-absent: one probe job finds the ensure keys that
+                # are stored, so the new plan references the stored table
+                # once (an anti-join against it here doubled the node plan
+                # on every flush)
+                ensure_df = spark.createDataFrame([(k,) for k, _ in ensures], "key string")
+                present = {
+                    r[0]
+                    for r in self._nodes.select("key")
+                    .join(F.broadcast(ensure_df), on="key", how="left_semi")
+                    .collect()
+                }
+                rows = [
+                    self._node_row(k, attrs, schema)
+                    for k, attrs in ensures
+                    if k not in present
+                ]
+                if rows:
+                    base = base.unionByName(spark.createDataFrame(rows, schema))
             self._nodes = base
             self._node_ops = {}
         if self._edge_ops:
@@ -428,6 +515,7 @@ class Graph:
                 rows = [self._edge_row(t, attrs, schema) for t, attrs in upserts]
                 base = base.unionByName(spark.createDataFrame(rows, schema))
             self._edges = base
+            self._drop_blocks({s for s, _, _ in self._edge_ops})
             self._edge_ops = {}
         self._flushes += 1
         if self._flushes % CHECKPOINT_EVERY_FLUSHES == 0:
@@ -628,14 +716,9 @@ class Graph:
             if ensure_pending:
                 return self._blank_node_row(key)
             raise NodeNotFound(key)
-        rec = _lru_get(self._node_lru, key)
+        rec = self._stored_node(key)
         if rec is not None:
             return dict(rec)
-        rows = self._nodes.filter(F.col("key") == key).limit(1).collect()
-        if rows:
-            rec = rows[0].asDict()
-            _lru_put(self._node_lru, key, dict(rec), self._cache_len)
-            return rec
         if ensure_pending:
             return self._blank_node_row(key)
         raise NodeNotFound(key)
@@ -655,21 +738,10 @@ class Graph:
             if rec is None:
                 raise EdgeNotFound(triple)
             return dict(rec)
-        rec = _lru_get(self._edge_lru, triple)
-        if rec is not None:
-            return dict(rec)
-        rows = (
-            self._edges.filter(
-                (F.col("src") == src) & (F.col("dst") == dst) & (F.col("type") == type)
-            )
-            .limit(1)
-            .collect()
-        )
-        if not rows:
+        rec = self._block(src).get((dst, type))
+        if rec is None:
             raise EdgeNotFound(triple)
-        rec = rows[0].asDict()
-        _lru_put(self._edge_lru, triple, dict(rec), self._cache_len)
-        return rec
+        return dict(rec)
 
     def has_node(self, key: str) -> bool:
         return self._node_exists(key)
@@ -697,8 +769,7 @@ class Graph:
         if self._adj is not None and not self._dirty():
             yield from sorted(self._adj.get(key, ()))
             return
-        for row in self.neighbors_df(key).orderBy("key").toLocalIterator():
-            yield row[0]
+        yield from sorted({dst for dst, _ in self._out_keys(key)})
 
     def predecessors(self, key: str) -> Iterator[str]:
         if self._pred is not None and not self._dirty():
@@ -741,7 +812,7 @@ class Graph:
     #    count separately — matches `SELECT count(*) ... WHERE src=?`) --------
 
     def out_degree(self, key: str) -> int:
-        return self.edges_df.filter(F.col("src") == key).count()
+        return len(self._out_keys(key))
 
     def in_degree(self, key: str) -> int:
         return self.edges_df.filter(F.col("dst") == key).count()
@@ -928,7 +999,6 @@ class Graph:
         self._invalidate_adjacency()
         if self._edge_keys is not None:
             self._edge_keys.add((src, dst, type))
-        self._edge_lru.pop((src, dst, type), None)
         if self._edge_rec is not None:
             row = {f.name: (attr or {}).get(f.name) for f in self._edges.schema}
             row.update({"src": src, "dst": dst, "type": type})
@@ -944,7 +1014,6 @@ class Graph:
         self._invalidate_adjacency()
         if self._edge_keys is not None:
             self._edge_keys.discard(triple)
-        self._edge_lru.pop(triple, None)
         if self._edge_rec is not None:
             self._edge_rec.pop(triple, None)
         self._maybe_flush()
@@ -974,11 +1043,11 @@ class Graph:
         self._node_lru.pop(key, None)
         if self._node_rec is not None:
             self._node_rec.pop(key, None)
-        # cascade: drop every incident edge record (same rule as the key set)
-        for lru_or_rec in (self._edge_lru, self._edge_rec):
-            if lru_or_rec is not None:
-                for t in [t for t in lru_or_rec if t[0] == key or t[1] == key]:
-                    del lru_or_rec[t]
+            # cascade: drop every incident edge record (same rule as the key set)
+            for t in [t for t in self._edge_rec if t[0] == key or t[1] == key]:
+                del self._edge_rec[t]
+        # the cascade reaches into other sources' blocks (edges INTO key)
+        self._drop_blocks()
         self._flushes += 1
         if self._flushes % CHECKPOINT_EVERY_FLUSHES == 0:
             self._nodes = self._nodes.localCheckpoint(eager=False)
@@ -1041,25 +1110,24 @@ class Graph:
                     for t in self._edge_keys
                     if not (t[1] == key and t[2] == type and t[0] not in tgt)
                 } | {(v, key, type) for v in tgt}
-        # record caches: the set-diff is driver-enumerable only for the LRU
-        # and preload dicts we hold — surviving records keep their attrs,
-        # removed ones drop, new ones appear blank (matching the DataFrame
-        # algebra above); pending "ensure" node keys appear blank-if-absent
+        # preload dicts: the set-diff is driver-enumerable — surviving
+        # records keep their attrs, removed ones drop, new ones appear blank
+        # (matching the DataFrame algebra above); pending "ensure" node keys
+        # appear blank-if-absent. The in-direction touches many sources'
+        # blocks, so every block drops.
+        self._drop_blocks()
         tgt = set(target)
         if self._node_rec is not None:
             for k in [key] + target:
                 self._node_rec.setdefault(k, self._blank_node_row(k))
-        for cache in (self._edge_lru, self._edge_rec):
-            if cache is None:
-                continue
+        if self._edge_rec is not None:
             mine_idx, other_idx = (0, 1) if direction == "out" else (1, 0)
             for t in [
                 t
-                for t in cache
+                for t in self._edge_rec
                 if t[mine_idx] == key and t[2] == type and t[other_idx] not in tgt
             ]:
-                del cache[t]
-        if self._edge_rec is not None:
+                del self._edge_rec[t]
             for v in tgt:
                 t = (key, v, type) if direction == "out" else (v, key, type)
                 if t not in self._edge_rec:
@@ -1149,7 +1217,7 @@ class Graph:
         self._node_rec = None
         self._edge_rec = None
         self._node_lru.clear()
-        self._edge_lru.clear()
+        self._drop_blocks()
         self._invalidate_adjacency()
         if self._id_map is not None:
             try:

@@ -1,0 +1,220 @@
+"""Per-source out-edge blocks on the default (no preload) path: edge,
+has_edge, neighbors and out_degree answer from one cached block of the
+source's stored out-edges (the reference's per-node out-edge tree,
+graph.py:472-492) with the source's pending edge ops laid over it, so a
+read never flushes. Covers read-your-writes, the job count of hits and
+misses, coherence under every mutation class, the cache_len row bound, and
+the node plan's size across repeated flushes."""
+
+from __future__ import annotations
+
+import inspect
+import itertools
+import time
+from collections import OrderedDict
+
+import pytest
+
+from kinbaku_spark import graph as graph_mod
+from kinbaku_spark.exceptions import EdgeNotFound, NodeNotFound
+from kinbaku_spark.graph import Graph
+
+_group_ids = itertools.count()
+
+
+def _jobs(spark, fn):
+    """Run ``fn`` and return ``(result, number of Spark jobs it launched)``.
+    Job starts reach the status store asynchronously but in order, so a
+    sentinel job launched afterwards marks when the count is complete."""
+    sc = spark.sparkContext
+    n = next(_group_ids)
+    group, sentinel = f"blocks-{n}", f"blocks-{n}-end"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup(sentinel, sentinel)
+        sc.parallelize([0], 1).count()
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    deadline = time.monotonic() + 30
+    while not tracker.getJobIdsForGroup(sentinel) and time.monotonic() < deadline:
+        time.sleep(0.05)
+    return out, len(tracker.getJobIdsForGroup(group))
+
+
+@pytest.fixture
+def tables(spark, tmp_path):
+    """Stored (parquet) tables, so every stored-table read is a real job."""
+    nodes = spark.createDataFrame(
+        [("a", "Alice"), ("b", "Bob"), ("c", "Cara"), ("d", "Dan"), ("hub", "Hub")]
+        + [(f"x{i}", None) for i in range(10)],
+        "key string, name string",
+    )
+    edges = spark.createDataFrame(
+        [
+            ("a", "b", 0, 1.0),
+            ("a", "b", 1, 2.0),  # parallel edge of another type
+            ("a", "a", 0, 3.0),  # self-loop
+            ("a", "c", 0, 4.0),
+            ("b", "c", 0, 5.0),
+            ("c", "a", 0, 6.0),
+        ]
+        + [("hub", f"x{i}", 0, float(i)) for i in range(10)],
+        "src string, dst string, type int, weight double",
+    )
+    nodes.write.parquet(str(tmp_path / "nodes"))
+    edges.write.parquet(str(tmp_path / "edges"))
+    return spark.read.parquet(str(tmp_path / "nodes")), spark.read.parquet(str(tmp_path / "edges"))
+
+
+@pytest.fixture
+def g(spark, tables):
+    return Graph(spark, nodes=tables[0], edges=tables[1])
+
+
+def test_read_your_writes_without_flush(g):
+    assert list(g.neighbors("a")) == ["a", "b", "c"]  # block cached first
+    g.add_edge("a", "d", {"weight": 7.0})
+    g.remove_edge("a", "c")
+    g.add_edge("b", "d")  # a source with no cached block
+    assert list(g.neighbors("a")) == ["a", "b", "d"]
+    assert g.out_degree("a") == 4
+    assert g.edge("a", "d")["weight"] == 7.0
+    assert g.has_edge("a", "d") and not g.has_edge("a", "c")
+    with pytest.raises(EdgeNotFound):
+        g.edge("a", "c")
+    assert list(g.neighbors("b")) == ["c", "d"]
+    assert g.out_degree("b") == 2
+    assert g._flushes == 0
+    assert set(g._edge_ops) == {("a", "d", 0), ("a", "c", 0), ("b", "d", 0)}
+    # the stored block itself is untouched by pending writes
+    assert ("c", 0) in g._blocks["a"] and ("d", 0) not in g._blocks["a"]
+
+
+def test_one_job_per_miss_zero_per_hit(spark, g):
+    assert _jobs(spark, lambda: g.edge("a", "b")) == (
+        {"src": "a", "dst": "b", "type": 0, "weight": 1.0},
+        1,
+    )
+    for read in (
+        lambda: g.edge("a", "b", 1),
+        lambda: g.has_edge("a", "zz"),
+        lambda: g.out_degree("a"),
+        lambda: list(g.neighbors("a")),
+        lambda: g.remove_edge("a", "c"),
+    ):
+        assert _jobs(spark, read)[1] == 0
+    # an absent source is one job, then a cached empty block
+    assert _jobs(spark, lambda: g.has_edge("nobody", "a")) == (False, 1)
+    assert _jobs(spark, lambda: g.out_degree("nobody")) == (0, 0)
+    # node reads: one job per miss, found or not; zero per hit
+    assert _jobs(spark, lambda: g.node("b")["name"]) == ("Bob", 1)
+    assert _jobs(spark, lambda: g.node("b")["name"]) == ("Bob", 0)
+    assert _jobs(spark, lambda: g.has_node("b")) == (True, 0)
+    assert _jobs(spark, lambda: g.has_node("nope")) == (False, 1)
+    with pytest.raises(NodeNotFound):
+        _jobs(spark, lambda: g.node("nope"))
+    assert _jobs(spark, lambda: g.has_node("c")) == (True, 1)
+    assert _jobs(spark, lambda: g.node("c")["name"]) == ("Cara", 0)
+
+
+def test_flush_drops_only_touched_blocks(g):
+    assert g.out_degree("a") == 4 and g.out_degree("b") == 1
+    g.add_edge("a", "d", {"weight": 8.0})
+    g._flush()
+    assert "a" not in g._blocks and "b" in g._blocks
+    assert list(g.neighbors("a")) == ["a", "b", "c", "d"]
+    assert g.edge("a", "d")["weight"] == 8.0
+    assert g._block_rows == sum(max(1, len(b)) for b in g._blocks.values())
+
+
+def test_remove_node_cascade_reaches_other_blocks(g):
+    assert g.has_edge("a", "c") and g.has_edge("b", "c")
+    g.remove_node("c")
+    assert not g._blocks and g._block_rows == 0
+    assert list(g.neighbors("a")) == ["a", "b"]
+    assert not g.has_edge("b", "c")
+    assert g.out_degree("b") == 0
+    with pytest.raises(EdgeNotFound):
+        g.edge("a", "c")
+
+
+def test_set_adjacent_keeps_blocks_coherent(g):
+    assert g.out_degree("a") == 4 and g.out_degree("b") == 1
+    g.set_neighbors("a", ["d"])  # type 0 only: a->b of type 1 stays
+    assert list(g.neighbors("a")) == ["b", "d"]
+    assert g.out_degree("a") == 2
+    assert g.edge("a", "b", 1)["weight"] == 2.0
+    g.set_predecessors("c", ["a"])  # drops b->c from b's cached block
+    assert not g.has_edge("b", "c")
+    assert g.has_edge("a", "c") and g.edge("a", "c")["weight"] is None
+    assert g.out_degree("b") == 0
+
+
+def test_bulk_mutations_keep_blocks_coherent(spark, g):
+    assert g.out_degree("a") == 4
+    g.add_edges(
+        spark.createDataFrame(
+            [("a", "e", 0, 9.0)], "src string, dst string, type int, weight double"
+        )
+    )
+    assert list(g.neighbors("a")) == ["a", "b", "c", "e"]
+    assert g.edge("a", "e")["weight"] == 9.0
+    g.remove_edges(spark.createDataFrame([("a", "b", 1)], "src string, dst string, type int"))
+    assert g.out_degree("a") == 4
+    assert not g.has_edge("a", "b", 1) and g.has_edge("a", "b", 0)
+
+
+def test_parallel_types_and_self_loops_count(g):
+    assert g.out_degree("a") == 4
+    assert list(g.neighbors("a")) == ["a", "b", "c"]
+    g.add_edge("a", "b", type=2)
+    g.add_edge("a", "a", type=3)
+    assert g.out_degree("a") == 6
+    assert list(g.neighbors("a")) == ["a", "b", "c"]
+    g.remove_edge("a", "b", 0)
+    assert g.out_degree("a") == 5
+    assert list(g.neighbors("a")) == ["a", "b", "c"]
+
+
+def test_block_rows_bounded_by_cache_len(spark, tables):
+    g = Graph(spark, nodes=tables[0], edges=tables[1], cache_len=5)
+    assert g.out_degree("a") == 4
+    assert g.out_degree("b") == 1
+    assert list(g._blocks) == ["a", "b"] and g._block_rows == 5
+    assert g.out_degree("c") == 1  # evicts the least recently used block
+    assert list(g._blocks) == ["b", "c"] and g._block_rows == 2
+    # a hub over the cap is answered but not kept
+    assert _jobs(spark, lambda: g.out_degree("hub")) == (10, 1)
+    assert "hub" not in g._blocks and g._block_rows <= 5
+    assert _jobs(spark, lambda: g.has_edge("hub", "x3")) == (True, 1)
+    assert g._block_rows <= 5
+
+
+def test_one_edge_record_cache(spark):
+    assert "_edge_lru" not in inspect.getsource(graph_mod)
+    caches = sorted(k for k, v in vars(Graph(spark)).items() if isinstance(v, OrderedDict))
+    assert caches == ["_blocks", "_node_lru"]
+
+
+def _leaves(df) -> int:
+    return df._jdf.queryExecution().logical().collectLeaves().size()
+
+
+def test_repeated_flushes_grow_node_plan_linearly(spark, tables):
+    g = Graph(spark, nodes=tables[0], edges=tables[1])
+    leaves = []
+    for i in range(7):  # the 8th flush would checkpoint
+        g.add_edge("a", f"new{i}")  # "ensure" rows for both endpoints
+        g.add_node(f"up{i}", {"name": f"U{i}"})  # an upsert
+        g._flush()
+        leaves.append(_leaves(g._nodes))
+    steps = {b - a for a, b in zip(leaves, leaves[1:])}
+    assert len(steps) == 1, leaves  # the same growth per flush
+    assert leaves[-1] <= leaves[0] + 6 * 4, leaves
+    # insert-if-absent still holds: stored attrs kept, new keys blank
+    assert g.node("a")["name"] == "Alice"
+    assert g.node("new3")["name"] is None
+    assert g.node("up5")["name"] == "U5"
+    assert g.nodes_df.count() == 15 + 14

@@ -125,7 +125,11 @@ def test_lru_read_through_and_invalidation(g):
     g._flush()
     assert g.node("a")["name"] == "Ann"
     assert g.edge("a", "b")["weight"] == 1.5
-    assert ("a", "b", 0) in g._edge_lru
+    # the read kept a's out-edge block: the second read is a cache hit
+    assert ("b", 0) in g._blocks["a"]
+    stored, g._edges = g._edges, None  # a stored-table read would raise
+    assert g.edge("a", "b")["weight"] == 1.5
+    g._edges = stored
     g.remove_edge("a", "b")
     g._flush()
     with pytest.raises(EdgeNotFound):
