@@ -31,3 +31,7 @@ class KeyTooLong(KinbakuSparkError, ValueError):
     """Raised only when exporting to the reference's fixed-width binary
     format (its constraint, kinbaku/graph.py:1366-1367); the Parquet
     engine itself has no key-length limit."""
+
+
+class BadKnob(KinbakuSparkError, ValueError):
+    """An integer ``KB_*`` environment knob holds a non-integer value."""

@@ -467,8 +467,7 @@ def duplicate_clusters(
     streaming split-invariance suite). ``KB_CC_LOCAL_THRESHOLD`` overrides
     the gate; 0 forces the distributed kernel (tests lock both paths).
     """
-    import os
-
+    from kinbaku_spark.knobs import env_int
     from kinbaku_spark.operators.cc_kernel import min_label_fixpoint
 
     # LAZY checkpoint + count (the merged materialize-and-probe pattern):
@@ -488,7 +487,7 @@ def duplicate_clusters(
         .localCheckpoint(eager=False)
     )
     n_edges = und.count()
-    threshold = int(os.environ.get("KB_CC_LOCAL_THRESHOLD", "100000"))
+    threshold = env_int("KB_CC_LOCAL_THRESHOLD", 100000)
     if threshold and n_edges <= threshold:
         parent: dict = {}
 

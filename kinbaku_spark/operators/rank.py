@@ -50,6 +50,8 @@ running sum is tie-order-sensitive in any engine.
 
 from __future__ import annotations
 
+import threading
+
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 # Bounded pin registry (r08, VERDICT r07 "What's wrong #5"): every rank
@@ -61,9 +63,11 @@ from pyspark.sql import Column, DataFrame, Window, functions as F
 # recompute after eviction re-reads the already-written range-exchange
 # shuffle files (sort-before-repartition placement determinism — the ids.py
 # argument), never re-samples boundaries. _PIN_CAP = 16 comfortably covers
-# the deepest single-query pin fan-out (x_rfm_segmentation: 3).
+# the deepest single-query pin fan-out (x_rfm_segmentation: 3). One lock
+# makes the append and the eviction atomic across threads.
 _PIN_CAP = 16
 _PINNED: list[DataFrame] = []
+_PIN_LOCK = threading.Lock()
 
 
 def _pinned_range_parts(
@@ -76,9 +80,10 @@ def _pinned_range_parts(
         .withColumn("__pid", F.spark_partition_id())
         .persist()
     )
-    _PINNED.append(out)
-    while len(_PINNED) > _PIN_CAP:
-        old = _PINNED.pop(0)
+    with _PIN_LOCK:
+        _PINNED.append(out)
+        evicted = [_PINNED.pop(0) for _ in range(len(_PINNED) - _PIN_CAP)]
+    for old in evicted:
         try:
             old.unpersist(blocking=False)
         except Exception:

@@ -26,13 +26,13 @@ The reference (kerighan/kinbaku) has no analytics surface at all
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, functions as F
+
+from kinbaku_spark.knobs import env_int
 
 # row-block count: per-task memory is (n/B)·n int64 cells, so B (or the
 # KB_WEDGE_SAMPLE_PPM sparse path) scales with node count
-TRI_BLOCKS = int(os.environ.get("KB_TRI_BLOCKS", "8"))
+TRI_BLOCKS = env_int("KB_TRI_BLOCKS", 8)
 
 
 def triangle_block_gemm(proj: DataFrame, per_node: bool = False) -> DataFrame:

@@ -21,15 +21,15 @@ without materializing 5M-node fixtures.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, functions as F
+
+from kinbaku_spark.knobs import env_int
 
 DEFAULT_BROADCAST_BOUND = 5_000_000
 
 
 def broadcast_bound(default: int = DEFAULT_BROADCAST_BOUND) -> int:
-    return int(os.environ.get("KB_BROADCAST_BOUND", default))
+    return env_int("KB_BROADCAST_BOUND", default)
 
 
 def maybe_broadcast(

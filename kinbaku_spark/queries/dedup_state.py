@@ -1,10 +1,13 @@
 """Session-persisted dedup index state: the 3-shingle hash postings and
 the 32-hash MinHash signature table over `documents`, built ONCE per
 sf_dir and shared by every dedup-family consumer (pair dedup, banding
-sweep, point probe, edit-distance verify, containment).
+sweep, point probe, edit-distance verify, containment). Every table here
+is a ``state.shared`` entry over the ``documents`` input: it is rebuilt
+when that parquet is rewritten, and ``state.reset()`` drops it.
 
 Rationale — the same "stored engine state" framing as the derived graph
-(graph_queries._CACHE) and the near-dup labels (extensions._CLUSTER_CACHE):
+(graph_queries._cached) and the near-dup labels
+(extensions.dup_cluster_labels):
 a production dedup engine does not re-shingle and re-sign the corpus per
 query; the shingle index and signatures are materialized index-build
 artifacts, refreshed on ingest (see streaming/windows.dedup_ingest_batch,
@@ -28,14 +31,13 @@ from pyspark.sql import DataFrame, SparkSession
 from kinbaku_spark.operators.dedup import minhash_signatures, shingle_hashes
 from kinbaku_spark.queries.extensions import N_HASHES as SIG_HASHES
 from kinbaku_spark.sources.tables import load_table
+from kinbaku_spark.state import shared
 
 # single source of truth: the signature width is extensions.N_HASHES (the
 # same constant every band consumer and SQL oracle is generated from);
 # shingle width and seed match _sql_shingle_cte / minhash_coeffs defaults
 SHINGLE_N = 3
 SIG_SEED = 42
-
-_STATE: dict[str, tuple[DataFrame, DataFrame]] = {}
 
 
 def shingle_state(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
@@ -44,14 +46,15 @@ def shingle_state(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFram
     shingles: (doc_id, h) distinct 60-bit word-3-gram hashes.
     signatures: (doc_id, mh0..mh31) universal-hash minima.
     """
-    if sf_dir not in _STATE:
+    def build():
         docs = load_table(spark, sf_dir, "documents")
         sh = shingle_hashes(docs, "doc_id", "text", SHINGLE_N).persist()
         sig = minhash_signatures(sh, "doc_id", SIG_HASHES, SIG_SEED).persist()
         sig.count()  # one pass materializes sh (its only input) and sig
         sh.count()
-        _STATE[sf_dir] = (sh, sig)
-    return _STATE[sf_dir]
+        return sh, sig
+
+    return shared(spark, sf_dir, "shingle_state", build, ["documents"])
 
 
 # -- per-doc shingle sets (verification-side index) ---------------------------
@@ -64,21 +67,20 @@ def shingle_state(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFram
 # same index-build artifact class as the postings themselves, so it is
 # built once per sf_dir here and injected by every verify consumer.
 
-_SETS_STATE: dict[str, DataFrame] = {}
-
 
 def shingle_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, hs): persisted per-doc shingle-hash arrays over the
     documents corpus — collect_list over :func:`shingle_state`'s postings
     (order irrelevant: consumers only take sizes and intersections)."""
-    if sf_dir not in _SETS_STATE:
-        from pyspark.sql import functions as F
+    from pyspark.sql import functions as F
 
+    def build():
         sh, _ = shingle_state(spark, sf_dir)
         s = sh.groupBy("doc_id").agg(F.collect_list("h").alias("hs")).persist()
         s.count()
-        _SETS_STATE[sf_dir] = s
-    return _SETS_STATE[sf_dir]
+        return s
+
+    return shared(spark, sf_dir, "shingle_sets", build, ["documents"])
 
 
 # -- corpus SimHash signatures (banded-dedup index) ---------------------------
@@ -92,19 +94,18 @@ def shingle_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
 # 2·bands times in one plan, and a persisted table embeds its origin
 # lineage at every reference.
 
-_SIMHASH_STATE: dict[str, DataFrame] = {}
-
 
 def simhash_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, sig): pinned corpus-wide 60-bit SimHash signatures derived
     from :func:`shingle_state`'s postings."""
-    if sf_dir not in _SIMHASH_STATE:
-        from kinbaku_spark.operators.dedup import simhash_signatures_df
-        from kinbaku_spark.plans.checkpoints import pin
+    from kinbaku_spark.operators.dedup import simhash_signatures_df
+    from kinbaku_spark.plans.checkpoints import pin
 
+    def build():
         sh, _ = shingle_state(spark, sf_dir)
-        _SIMHASH_STATE[sf_dir] = pin(simhash_signatures_df(sh, "doc_id"))
-    return _SIMHASH_STATE[sf_dir]
+        return pin(simhash_signatures_df(sh, "doc_id"))
+
+    return shared(spark, sf_dir, "simhash_sigs", build, ["documents"])
 
 
 # -- positional span postings (exact-substring dedup index) ------------------
@@ -117,42 +118,17 @@ def simhash_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Span width is extensions.SPAN_N (the constant the SQL oracles are
 # generated from), imported lazily like the query consumers do.
 
-_SPAN_STATE: dict[str, DataFrame] = {}
-
 
 def span_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, pos, h): persisted positional SPAN_N-gram postings over
     the documents corpus (operators/dedup.py span_postings)."""
-    if sf_dir not in _SPAN_STATE:
-        from kinbaku_spark.operators.dedup import span_postings
-        from kinbaku_spark.queries.extensions import SPAN_N
+    from kinbaku_spark.operators.dedup import span_postings
+    from kinbaku_spark.queries.extensions import SPAN_N
 
+    def build():
         docs = load_table(spark, sf_dir, "documents")
         sp = span_postings(docs, "doc_id", "text", SPAN_N).persist()
         sp.count()
-        _SPAN_STATE[sf_dir] = sp
-    return _SPAN_STATE[sf_dir]
+        return sp
 
-
-def reset() -> None:
-    """Drop the persisted index state (tests rebuilding hermetic plans)."""
-    for sh, sig in _STATE.values():
-        for df in (sh, sig):
-            try:
-                df.unpersist()
-            except Exception:
-                pass
-    _STATE.clear()
-    for s in _SETS_STATE.values():
-        try:
-            s.unpersist()
-        except Exception:
-            pass
-    _SETS_STATE.clear()
-    _SIMHASH_STATE.clear()  # checkpoint blocks free with their RDDs
-    for sp in _SPAN_STATE.values():
-        try:
-            sp.unpersist()
-        except Exception:
-            pass
-    _SPAN_STATE.clear()
+    return shared(spark, sf_dir, "span_state", build, ["documents"])

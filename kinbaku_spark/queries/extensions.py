@@ -43,6 +43,7 @@ from kinbaku_spark.operators.text import (
     token_counts,
 )
 from kinbaku_spark.sources.tables import load_table
+from kinbaku_spark.state import shared
 
 # ---------------------------------------------------------------------------
 # SQL fragment generators (shared constants -> identical pipelines)
@@ -288,19 +289,17 @@ X_DEDUP_EMBEDDING_SQL = _emb_truth_sql()
 # x_ann_cosine_topk — brute-force top-k for the vec_id=0 query vector
 # ---------------------------------------------------------------------------
 
-_QUERY_VEC_CACHE: dict[str, list[float]] = {}
-
-
 def _query_vec(spark, sf_dir):
-    # memoized per sf_dir: the parquet is immutable, the vector is a plain
-    # Python list, and every ANN query would otherwise pay a one-row job.
+    # memoized per embeddings fingerprint: the vector is a plain Python
+    # list, and every ANN query would otherwise pay a one-row job.
     # None when the corpus is empty (degenerate input): callers return the
     # schema-correct empty result, matching their oracles' empty output.
-    if sf_dir not in _QUERY_VEC_CACHE:
+    def build():
         emb = load_table(spark, sf_dir, "embeddings")
         rows = emb.filter(F.col("vec_id") == 0).select("embedding").collect()
-        _QUERY_VEC_CACHE[sf_dir] = rows[0][0] if rows else None
-    return _QUERY_VEC_CACHE[sf_dir]
+        return rows[0][0] if rows else None
+
+    return shared(spark, sf_dir, "query_vec", build, ["embeddings"])
 
 
 def _empty_topk(emb):
@@ -540,20 +539,16 @@ ORACLES = {
 # x_dedup_clusters — connected components over MinHash near-dup pairs
 # ---------------------------------------------------------------------------
 
-_CLUSTER_CACHE: dict = {}
-
-
 def dup_cluster_labels(spark, sf_dir):
     """(doc_id, cluster_id) near-duplicate family labels, built ONCE per
     sf_dir and session-persisted — at 100 TB the dup-family index is
     engine state shared by every consumer (survivorship, soft weights,
     size histograms), not a per-query recompute. Same pattern as the
     graph module's co_shared/und_edges state."""
-    if sf_dir not in _CLUSTER_CACHE:
-        from kinbaku_spark.operators.dedup import duplicate_clusters
+    from kinbaku_spark.operators.dedup import duplicate_clusters
+    from kinbaku_spark.queries.dedup_state import shingle_sets, shingle_state
 
-        from kinbaku_spark.queries.dedup_state import shingle_sets, shingle_state
-
+    def build():
         docs = load_table(spark, sf_dir, "documents")
         sh, sig = shingle_state(spark, sf_dir)
         pairs = minhash_near_duplicates(
@@ -567,8 +562,9 @@ def dup_cluster_labels(spark, sf_dir):
         )
         labels = duplicate_clusters(docs, pairs).persist()
         labels.count()
-        _CLUSTER_CACHE[sf_dir] = labels
-    return _CLUSTER_CACHE[sf_dir]
+        return labels
+
+    return shared(spark, sf_dir, "dup_cluster_labels", build, ["documents"])
 
 
 def x_dedup_clusters(spark, sf_dir):
@@ -939,7 +935,6 @@ ORACLES["x_dedup_incremental"] = _incremental_sql()
 # ---------------------------------------------------------------------------
 
 FUZZY_PROBE_MOD = 97
-_FUZZY_BOUND_CACHE: dict[str, int] = {}
 
 
 def x_fuzzy_match(spark, sf_dir):
@@ -985,17 +980,17 @@ def x_fuzzy_match(spark, sf_dir):
     # like every other data-sized broadcast (ADVICE r03). Bound derived
     # from actual counts in one small agg over the filtered probe scan:
     # |probes_v| <= |probes| * (max corrupted length + 1 identity variant).
-    # Memoized per sf_dir (the parquet is immutable) so plan CONSTRUCTION
-    # stays lazy after the first call — the _query_vec pattern; an
-    # unmemoized .collect() here would run a part scan on every
-    # QUERIES['x_fuzzy_match'] call (bench/parity/plan-lock each build
-    # the plan several times).
-    if sf_dir not in _FUZZY_BOUND_CACHE:
+    # Memoized per part fingerprint so plan CONSTRUCTION stays lazy after
+    # the first call — the _query_vec pattern; an unmemoized .collect()
+    # here would run a part scan on every QUERIES['x_fuzzy_match'] call
+    # (bench/parity/plan-lock each build the plan several times).
+    def probes_bound():
         pstats = probes.agg(
             F.count("*").alias("n"), F.max(F.length("corrupted")).alias("mx")
         ).collect()[0]
-        _FUZZY_BOUND_CACHE[sf_dir] = (pstats["n"] or 0) * ((pstats["mx"] or 0) + 1)
-    probes_v_bound = _FUZZY_BOUND_CACHE[sf_dir]
+        return (pstats["n"] or 0) * ((pstats["mx"] or 0) + 1)
+
+    probes_v_bound = shared(spark, sf_dir, "fuzzy_probes_bound", probes_bound, ["part"])
     cand = (
         parts_v.join(maybe_broadcast(probes_v, probes_v_bound), "v")
         .select("probe_key", "corrupted", "match_key", "match_name")
@@ -1448,59 +1443,24 @@ EMB_RECALL_TARGET_STRATUM = 1000  # vectors per evaluation stratum
 DEDUP_RECALL_MIN_SUPPORT = 30  # truth pairs below which low_support fires
 
 
-_CORPUS_COUNT_CACHE: dict[tuple, int] = {}
-
-
-def _table_fingerprint(sf_dir: str, table: str) -> tuple:
-    """(sf_dir, table, latest parquet mtime_ns): regenerating parquet at
-    the same path invalidates the cache entry, so a rebuilt-fixture
+def _corpus_count(df, sf_dir: str, table: str) -> int:
+    """df.count() of base table ``table``, memoized as a ``state.shared``
+    entry: every monitor invocation after the first reads the count
+    instead of paying a job (the x_ann _query_vec pattern). The table's
+    parquet fingerprint is the invalidation rule, so a rebuilt-fixture
     session can never pair a stale Spark-side modulus with the DuckDB
-    oracle's live COUNT(*) (ADVICE r06 #3). Listing one directory entry
-    is driver-side metadata, orders cheaper than the count it saves."""
-    import os
-
-    path = os.path.join(sf_dir, f"{table}.parquet")
-    try:
-        if os.path.isdir(path):
-            mt = max(
-                (e.stat().st_mtime_ns for e in os.scandir(path)),
-                default=0,
-            )
-        else:
-            mt = os.stat(path).st_mtime_ns
-    except OSError:
-        mt = -1
-    return (sf_dir, table, mt)
+    oracle's live COUNT(*) (ADVICE r06 #3)."""
+    return shared(df.sparkSession, sf_dir, f"count:{table}", df.count, [table])
 
 
-def _corpus_count(df, cache_key: tuple[str, str] | None = None) -> int:
-    """df.count() memoized per (sf_dir, table, parquet mtime): parquet
-    inputs are immutable for a given mtime, so every monitor invocation
-    after the first reads the count from the dict instead of paying a
-    job (the x_ann _QUERY_VEC_CACHE pattern). The mtime in the key IS
-    the invalidation rule — a new sf_dir or a rewritten file both mint a
-    new key; clear_corpus_count_cache() is the explicit hook."""
-    if cache_key is None:
-        return df.count()
-    fkey = _table_fingerprint(*cache_key)
-    if fkey not in _CORPUS_COUNT_CACHE:
-        _CORPUS_COUNT_CACHE[fkey] = df.count()
-    return _CORPUS_COUNT_CACHE[fkey]
-
-
-def clear_corpus_count_cache() -> None:
-    """Documented cache-clear hook for in-session fixture rebuilds."""
-    _CORPUS_COUNT_CACHE.clear()
-
-
-def _stratum_mod(df, target: int, cache_key: tuple[str, str] | None = None) -> int:
+def _stratum_mod(df, target: int, sf_dir: str, table: str) -> int:
     """max(1, count // target) — the corpus-count-derived stratum modulus
     (VERDICT r05 #1). One driver-side count (parquet metadata-backed, a
-    rounding error next to the readout, memoized per immutable sf_dir);
+    rounding error next to the readout, memoized per table fingerprint);
     the DuckDB oracle inlines the SAME integer expression
     (GREATEST(1, COUNT(*) // target)) so both engines derive the
     identical modulus at any corpus size."""
-    return max(1, _corpus_count(df, cache_key) // target)
+    return max(1, _corpus_count(df, sf_dir, table) // target)
 
 
 def _sql_stratum_mod(table: str, target: int) -> str:
@@ -1560,9 +1520,7 @@ def x_dedup_recall_sampled(spark, sf_dir):
     from kinbaku_spark.operators.dedup import shingle_hashes
 
     docs_all = load_table(spark, sf_dir, "documents")
-    mod = _stratum_mod(
-        docs_all, DEDUP_RECALL_TARGET_STRATUM, (sf_dir, "documents")
-    )
+    mod = _stratum_mod(docs_all, DEDUP_RECALL_TARGET_STRATUM, sf_dir, "documents")
     docs = docs_all.filter(
         F.pmod(md5_long(F.col("doc_id").cast("string")), F.lit(mod)) == 0
     )
@@ -1633,7 +1591,7 @@ def x_dedup_recall_stratified(spark, sf_dir):
     from kinbaku_spark.queries.dedup_state import simhash_sigs
 
     docs = load_table(spark, sf_dir, "documents")
-    n_docs = _corpus_count(docs, (sf_dir, "documents"))
+    n_docs = _corpus_count(docs, sf_dir, "documents")
     mod = max(1, n_docs // DEDUP_RECALL_TARGET_STRATUM)
 
     def strat_of(col):
@@ -1752,9 +1710,7 @@ def x_dedup_embedding_recall_sampled(spark, sf_dir):
     )
 
     emb_all = load_table(spark, sf_dir, "embeddings")
-    mod = _stratum_mod(
-        emb_all, EMB_RECALL_TARGET_STRATUM, (sf_dir, "embeddings")
-    )
+    mod = _stratum_mod(emb_all, EMB_RECALL_TARGET_STRATUM, sf_dir, "embeddings")
     # lazy: both legs + the support count resolve in one action
     emb = emb_all.filter(
         F.pmod(md5_long(F.col("vec_id").cast("string")), F.lit(mod)) == 0

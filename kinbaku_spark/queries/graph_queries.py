@@ -22,6 +22,7 @@ from kinbaku_spark.sources.tables import (
     customer_order_edges,
     supplier_part_edges,
 )
+from kinbaku_spark.state import shared
 
 GRAPH_CTE = f"""
 WITH g_edges AS ({SUPPLIER_PART_EDGES_SQL}),
@@ -29,16 +30,24 @@ g_nodes AS ({SUPPLIER_PART_NODES_SQL.replace("lineitem", "lineitem")})
 """
 
 
-# Derived-graph cache: the supplier→part graph is the engine's STORED table
-# (at 100 TB the derivation is one-time ETL, not per-query work), so queries
-# share one persisted copy per sf_dir. Mutation queries get a FRESH Graph
+# The supplier→part graph is the engine's STORED table (at 100 TB the
+# derivation is one-time ETL, not per-query work), so queries share one
+# persisted copy per sf_dir: the "graph" entry of the engine-state registry
+# (kinbaku_spark/state.py). Every table derived from it is its own entry,
+# registered through _graph_state with the graph's one input, lineitem, so
+# a rewritten lineitem rebuilds them all. Mutation queries get a FRESH Graph
 # over the same immutable DataFrames (facade mutations never touch their
 # inputs) plus a copy of the pre-collected identity index.
-_CACHE: dict[str, tuple] = {}
 
 
-def _cached(spark: SparkSession, sf_dir: str) -> tuple:
-    if sf_dir not in _CACHE:
+def _graph_state(spark: SparkSession, sf_dir: str, name: str, build):
+    """Registry entry ``name`` derived from the stored graph of sf_dir."""
+    return shared(spark, sf_dir, name, build, ["lineitem"])
+
+
+def _cached(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """(nodes, edges) of the stored supplier→part graph."""
+    def build():
         edges = supplier_part_edges(spark, sf_dir).persist()
         # derive nodes FROM the cached edges (same canonical result as
         # supplier_part_nodes, without re-running the lineitem aggregation)
@@ -67,32 +76,43 @@ def _cached(spark: SparkSession, sf_dir: str) -> tuple:
         # materialize eagerly: this is one-time ETL (the stored graph), not
         # per-query work — queries then run against warm storage
         edges.count()
-        _CACHE[sf_dir] = (nodes, edges, {})
-    return _CACHE[sf_dir]
+        return nodes, edges
+
+    return _graph_state(spark, sf_dir, "graph", build)
 
 
 def _n_nodes(spark: SparkSession, sf_dir: str) -> int:
     """|V| of the stored graph, counted once per sf_dir — the bound every
     size-gated broadcast of a |V|-sized table (rank vectors, keep-lists,
     label/degree maps) is checked against."""
-    nodes, _, extra = _cached(spark, sf_dir)
-    if "n_nodes" not in extra:
-        extra["n_nodes"] = nodes.count()
-    return extra["n_nodes"]
+    return _graph_state(spark, sf_dir, "n_nodes", lambda: _cached(spark, sf_dir)[0].count())
 
 
 def _graph(spark: SparkSession, sf_dir: str, with_index: bool = False) -> Graph:
-    nodes, edges, extra = _cached(spark, sf_dir)
+    nodes, edges = _cached(spark, sf_dir)
     g = Graph(spark, nodes=nodes, edges=edges)
     if with_index:
-        if "node_keys" not in extra:
+        def build():
             g._ensure_index()
-            extra["node_keys"] = frozenset(g._node_keys)
-            extra["edge_keys"] = frozenset(g._edge_keys)
-        else:
-            g._node_keys = set(extra["node_keys"])
-            g._edge_keys = set(extra["edge_keys"])
+            return frozenset(g._node_keys), frozenset(g._edge_keys)
+
+        node_keys, edge_keys = _graph_state(spark, sf_dir, "index_keys", build)
+        g._node_keys, g._edge_keys = set(node_keys), set(edge_keys)
     return g
+
+
+def _edges_deg(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(src, dst, outd): the stored edges annotated with the source's
+    out-degree, persisted once per sf_dir — the loop- and call-invariant
+    input of every PageRank round. The degree table is |V|-sized, so its
+    join is size-gated on |V|."""
+    def build():
+        edges = _cached(spark, sf_dir)[1].select("src", "dst")
+        deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("outd"))
+        hint = size_hint(_n_nodes(spark, sf_dir))
+        return edges.join(hint(deg), "src").persist()
+
+    return _graph_state(spark, sf_dir, "edges_deg", build)
 
 
 # -- R1/R21: point node lookup ------------------------------------------------
@@ -647,8 +667,7 @@ def g_pagerank(spark, sf_dir):
     """
     g = _graph(spark, sf_dir)
     nodes = g.nodes_df.select("key")
-    edges = g.edges_df.select("src", "dst")
-    n = nodes.count()
+    n = _n_nodes(spark, sf_dir)
     if n == 0:  # empty graph: empty ranking, like the oracle
         return spark.createDataFrame([], "key string, pagerank double")
     base = (1.0 - PAGERANK_DAMPING) / n
@@ -656,16 +675,10 @@ def g_pagerank(spark, sf_dir):
     # is broadcastable so each iteration is a map-side join over edges (no
     # edge shuffle); past the bound switch to co-partitioned shuffle joins
     hint = size_hint(n)
-    # hoist the degree join out of the loop AND cache it per sf_dir:
-    # (src, dst, outd) is loop- and call-invariant (the stored graph is
-    # immutable), so every invocation's iterations reuse one persisted
-    # table and each iteration is ONE join + one aggregation. Division
-    # stays pr/outd (not pr * 1/outd) to match the oracle bit-for-bit.
-    extra = _cached(spark, sf_dir)[2]
-    if "edges_deg" not in extra:
-        deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("outd"))
-        extra["edges_deg"] = edges.join(hint(deg), "src").persist()
-    edges_deg = extra["edges_deg"]
+    # the degree join is hoisted out of the loop AND shared per sf_dir, so
+    # each iteration is ONE join + one aggregation. Division stays pr/outd
+    # (not pr * 1/outd) to match the oracle bit-for-bit.
+    edges_deg = _edges_deg(spark, sf_dir)
     # The rank vector stays SPARSE throughout: it holds only nodes with
     # in-edges, and an absent key means pr == base exactly (base + d·0).
     # This removes the |V|-densifying join from every iteration; iteration 1
@@ -830,17 +843,18 @@ def und_edges(spark, sf_dir):
     """The symmetrized (undirected) edge set, deduped and persisted once
     per sf_dir — shared by every iterative traversal (BFS, geodesic
     counting) so the distinct-shuffle is paid once, not once per round."""
-    extra = _cached(spark, sf_dir)[2]
-    if "und_plain" not in extra:
+    def build():
         g = _graph(spark, sf_dir)
-        extra["und_plain"] = (
+        und = (
             g.edges_df.select(F.col("src").alias("u"), F.col("dst").alias("v"))
             .union(g.edges_df.select(F.col("dst"), F.col("src")))
             .distinct()
             .persist()
         )
-        extra["und_plain"].count()
-    return extra["und_plain"]
+        und.count()
+        return und
+
+    return _graph_state(spark, sf_dir, "und_plain", build)
 
 
 def co_shared(spark, sf_dir):
@@ -849,12 +863,11 @@ def co_shared(spark, sf_dir):
     AND common-neighbor link prediction, built and persisted ONCE per
     sf_dir as engine state. Exact integer counts; identical to every
     consumer's inline SQL-oracle CTE."""
-    extra = _cached(spark, sf_dir)[2]
-    if "co_shared" not in extra:
+    def build():
         g = _graph(spark, sf_dir)
         sp = g.edges_df.select("src", "dst").distinct()
         b = sp.select(F.col("src").alias("s2"), F.col("dst").alias("p"))
-        shared = (
+        counts = (
             sp.select(F.col("src").alias("s1"), F.col("dst").alias("p"))
             .join(b, "p")
             .filter(F.col("s1") < F.col("s2"))
@@ -862,28 +875,29 @@ def co_shared(spark, sf_dir):
             .agg(F.count(F.lit(1)).alias("shared_parts"))
             .persist()
         )
-        shared.count()
-        extra["co_shared"] = shared
-    return extra["co_shared"]
+        counts.count()
+        return counts
+
+    return _graph_state(spark, sf_dir, "co_shared", build)
 
 
 def co_proj(spark, sf_dir):
     """The mean-thresholded co-supplier projection (s1 < s2 pairs sharing
     >= ceil(avg) parts) over :func:`co_shared`, persisted once per
     sf_dir."""
-    extra = _cached(spark, sf_dir)[2]
-    if "co_proj" not in extra:
-        shared = co_shared(spark, sf_dir)
-        thr = shared.agg(F.ceil(F.avg("shared_parts")).cast("long").alias("t"))
+    def build():
+        counts = co_shared(spark, sf_dir)
+        thr = counts.agg(F.ceil(F.avg("shared_parts")).cast("long").alias("t"))
         proj = (
-            shared.join(F.broadcast(thr))
+            counts.join(F.broadcast(thr))
             .filter(F.col("shared_parts") >= F.col("t"))
             .select("s1", "s2")
             .persist()
         )
         proj.count()
-        extra["co_proj"] = proj
-    return extra["co_proj"]
+        return proj
+
+    return _graph_state(spark, sf_dir, "co_proj", build)
 
 
 def tri_per_node(spark, sf_dir):
@@ -894,12 +908,12 @@ def tri_per_node(spark, sf_dir):
     however many metrics read it."""
     from kinbaku_spark.operators.triangles import triangle_block_gemm
 
-    extra = _cached(spark, sf_dir)[2]
-    if "tri_per_node" not in extra:
+    def build():
         t = triangle_block_gemm(co_proj(spark, sf_dir), per_node=True).persist()
         t.count()
-        extra["tri_per_node"] = t
-    return extra["tri_per_node"]
+        return t
+
+    return _graph_state(spark, sf_dir, "tri_per_node", build)
 
 
 def g_bfs_depths(spark, sf_dir):
@@ -912,9 +926,10 @@ def g_bfs_depths(spark, sf_dir):
     # pattern as und_edges / co_shared): built once per sf_dir, the second
     # consumer reads the checkpointed pieces instead of re-running 6
     # frontier rounds (census: g_closeness 6.6s -> aggregate-only)
-    extra = _cached(spark, sf_dir)[2]
-    if "bfs_depths" in extra:
-        return extra["bfs_depths"]
+    return _graph_state(spark, sf_dir, "bfs_depths", lambda: _bfs_depths(spark, sf_dir))
+
+
+def _bfs_depths(spark, sf_dir):
     und = und_edges(spark, sf_dir)
     depths = spark.createDataFrame([(BFS_SOURCE, 0)], "key string, depth int")
     frontier = depths
@@ -933,7 +948,6 @@ def g_bfs_depths(spark, sf_dir):
             break
         depths = depths.unionByName(new)
         frontier = new
-    extra["bfs_depths"] = depths
     return depths
 
 
@@ -1181,16 +1195,11 @@ def g_sssp_bounded(spark, sf_dir):
     # the symmetrized edge table is loop-invariant and consumed once per
     # round: cache it per sf_dir alongside the other derived-graph state
     # so rounds (and repeat invocations) never recompute the union
-    extra = _cached(spark, sf_dir)[2]
-    if "und_weighted" not in extra:
-        extra["und_weighted"] = (
-            g.edges_df.select(
-                F.col("src").alias("u"), F.col("dst").alias("v"), "weight"
-            )
-            .unionAll(g.edges_df.select(F.col("dst"), F.col("src"), "weight"))
-            .persist()
-        )
-    und = extra["und_weighted"]
+    und = _graph_state(spark, sf_dir, "und_weighted", lambda: (
+        g.edges_df.select(F.col("src").alias("u"), F.col("dst").alias("v"), "weight")
+        .unionAll(g.edges_df.select(F.col("dst"), F.col("src"), "weight"))
+        .persist()
+    ))
     # the distance table is bounded by the reached vertex set (<= |V|):
     # while |V| is broadcastable, ship it to every executor so the
     # persisted edge table is scanned in place per round instead of
@@ -1540,7 +1549,7 @@ def g_in_degrees_salted(spark, sf_dir):
     """
     from kinbaku_spark.operators.skew import salted_count
 
-    _, edges, _ = _cached(spark, sf_dir)
+    _, edges = _cached(spark, sf_dir)
     return salted_count(edges.select("dst"), ["dst"], salt=16).select(
         F.col("dst").alias("key"), F.col("count").alias("in_degree")
     )
@@ -1555,11 +1564,12 @@ def _lp_labels(spark, sf_dir):
     computed once per sf_dir and persisted (at 100 TB community labels are
     a materialized table, not per-query work — same policy as pagerank's
     degree table)."""
-    extra = _cached(spark, sf_dir)[2]
-    if "lp_labels" not in extra:
-        extra["lp_labels"] = g_label_propagation(spark, sf_dir).persist()
-        extra["lp_labels"].count()
-    return extra["lp_labels"]
+    def build():
+        labels = g_label_propagation(spark, sf_dir).persist()
+        labels.count()
+        return labels
+
+    return _graph_state(spark, sf_dir, "lp_labels", build)
 
 
 # -- modularity of the label-propagation communities --------------------------
@@ -1851,16 +1861,10 @@ def g_ppr_seeded(spark, sf_dir):
     integer aggregation. Rank surface for "related nodes from here" —
     recommendations, local graph exploration.
     """
-    g = _graph(spark, sf_dir)
-    edges = g.edges_df.select("src", "dst")
     # the degree table is |V|-sized and the pr vector can reach |V| rows
     # once the seed's component is fully explored: size-gate both
     hint = size_hint(_n_nodes(spark, sf_dir))
-    extra = _cached(spark, sf_dir)[2]
-    if "edges_deg" not in extra:
-        deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("outd"))
-        extra["edges_deg"] = edges.join(hint(deg), "src").persist()
-    edges_deg = extra["edges_deg"]
+    edges_deg = _edges_deg(spark, sf_dir)
     seed = spark.createDataFrame(
         [(PPR_SEED, PPR_UNIT)], "key string, pr_u long"
     )

@@ -23,11 +23,10 @@ hashing.py) with identical semantics in both engines.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from kinbaku_spark.functions.hashing import md5_long, sql_md5_long
+from kinbaku_spark.knobs import env_int
 from kinbaku_spark.sources.tables import load_table
 
 QUERIES: dict = {}
@@ -71,7 +70,7 @@ def g_transitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # closure cost; n_wedges stays analytic-exact (degree formula). This is
     # the sparse-at-scale path (successor-array intersect, no dense state).
     # Unset -> exact block-GEMM count, identical to the oracle.
-    sample_ppm = int(os.environ.get("KB_WEDGE_SAMPLE_PPM", "0")) or None
+    sample_ppm = env_int("KB_WEDGE_SAMPLE_PPM", 0) or None
     if sample_ppm:
         left = proj.filter(
             md5_long(F.concat_ws("\x1f", "s1", "s2")) % 1000000 < sample_ppm

@@ -73,38 +73,39 @@ def _truss_proj(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def truss_backbone(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """:func:`_truss_proj`, materialized ONCE per sf_dir as session state
-    (graph_queries extras — the co_shared/wed_canon pattern): both
-    g_truss_bounded's peel rounds and g_motif_brokers' motif join consume
-    the identical backbone, and each used to re-run the threshold
-    aggregation + an eager per-call checkpoint (r07 work profile)."""
-    from kinbaku_spark.queries.graph_queries import _cached
+def _truss_state(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, int]:
+    """:func:`_truss_proj` and its row count, materialized ONCE per sf_dir
+    as session state (a graph_queries._graph_state entry — the
+    co_shared/wed_canon pattern): both g_truss_bounded's peel rounds and
+    g_motif_brokers' motif join consume the identical backbone, and each
+    used to re-run the threshold aggregation + an eager per-call
+    checkpoint (r07 work profile)."""
+    from kinbaku_spark.queries.graph_queries import _graph_state
 
-    extra = _cached(spark, sf_dir)[2]
-    if "truss_backbone" not in extra:
+    def build():
         # eager localCheckpoint (the ids.py state pattern), NOT persist:
         # g_motif_brokers references the backbone ~12 times inside one
         # motif join chain, and a persisted table embeds its full origin
         # lineage at every reference (plan size grows ×refs), while a
         # checkpoint is a leaf RDD scan
-        extra["truss_backbone"] = _truss_proj(spark, sf_dir).localCheckpoint(
-            eager=True
-        )
+        backbone = _truss_proj(spark, sf_dir).localCheckpoint(eager=True)
         # measured edge count (one cheap count over the just-materialized
         # checkpoint blocks, once per sf_dir): the ACTUAL broadcast bound
         # for the peel joins — the backbone is data-dependent, so a
         # formula guess would violate the ADVICE r02 no-guessed-bounds rule
-        extra["truss_backbone_n"] = extra["truss_backbone"].count()
-    return extra["truss_backbone"]
+        return backbone, backbone.count()
+
+    return _graph_state(spark, sf_dir, "truss_backbone", build)
+
+
+def truss_backbone(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The session-state truss backbone (see :func:`_truss_state`)."""
+    return _truss_state(spark, sf_dir)[0]
 
 
 def truss_backbone_n(spark: SparkSession, sf_dir: str) -> int:
     """Measured row count of :func:`truss_backbone` (built alongside it)."""
-    from kinbaku_spark.queries.graph_queries import _cached
-
-    truss_backbone(spark, sf_dir)
-    return _cached(spark, sf_dir)[2]["truss_backbone_n"]
+    return _truss_state(spark, sf_dir)[1]
 
 
 def g_truss_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -472,20 +473,15 @@ def g_node2vec_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
     # blow a guessed bound, and an EXPLICIT hint is never demoted by
     # AQE): walkers from the state count, max degree measured once and
     # session-cached (loop- and call-invariant on the stored graph).
-    from kinbaku_spark.queries.graph_queries import _cached
+    from kinbaku_spark.queries.graph_queries import _graph_state
 
-    extra = _cached(spark, sf_dir)[2]
-    if "max_out_degree_und" not in extra:
-        extra["max_out_degree_und"] = (
-            adj.groupBy("pu")
-            .agg(F.count(F.lit(1)).alias("d"))
-            .agg(F.max("d"))
-            .collect()[0][0]
-            or 0
-        )
+    max_out_degree = _graph_state(spark, sf_dir, "max_out_degree_und", lambda: (
+        adj.groupBy("pu").agg(F.count(F.lit(1)).alias("d")).agg(F.max("d")).collect()[0][0]
+        or 0
+    ))
     n_walkers = cur.count()
     hint = size_hint(n_walkers, default_bound=1_000_000)
-    adj_hint = size_hint(n_walkers * max(extra["max_out_degree_und"], 1))
+    adj_hint = size_hint(n_walkers * max(max_out_degree, 1))
     for i in range(1, N2V_STEPS + 1):
         h = md5_long(
             F.concat_ws(":", F.col("walk_id"), F.lit(str(i)), F.col("v"))

@@ -56,13 +56,13 @@ _W_INT = "CAST(floor(weight * 1000000.0 + 0.5) AS BIGINT)"
 def _weighted_und(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Symmetrized weighted edges (u, v, w, a, b): w in exact micro-units,
     (a, b) the canonical undirected form (a < b). Session-persisted per
-    sf_dir (graph_queries extras) — loop-invariant input of both the
-    Borůvka rounds and the matching rounds, so the union+canonicalize is
-    paid once, like und_edges for the unweighted traversals."""
-    from kinbaku_spark.queries.graph_queries import _cached, _graph
+    sf_dir (a graph_queries._graph_state entry) — loop-invariant input of
+    both the Borůvka rounds and the matching rounds, so the
+    union+canonicalize is paid once, like und_edges for the unweighted
+    traversals."""
+    from kinbaku_spark.queries.graph_queries import _graph, _graph_state
 
-    extra = _cached(spark, sf_dir)[2]
-    if "wed_canon" not in extra:
+    def build():
         g = _graph(spark, sf_dir)
         e = g.edges_df.select(
             "src", "dst", F.expr(_W_INT).alias("w")
@@ -70,15 +70,17 @@ def _weighted_und(spark: SparkSession, sf_dir: str) -> DataFrame:
         both = e.select(
             F.col("src").alias("u"), F.col("dst").alias("v"), "w"
         ).unionAll(e.select(F.col("dst"), F.col("src"), "w"))
-        extra["wed_canon"] = both.select(
+        wed = both.select(
             "u",
             "v",
             "w",
             F.least("u", "v").alias("a"),
             F.greatest("u", "v").alias("b"),
         ).persist()
-        extra["wed_canon"].count()
-    return extra["wed_canon"]
+        wed.count()
+        return wed
+
+    return _graph_state(spark, sf_dir, "wed_canon", build)
 
 
 # -- g_boruvka_mst: bounded Borůvka minimum spanning forest --------------------

@@ -89,7 +89,7 @@ def g_katz_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kinbaku_spark.operators.components import katz_scores
     from kinbaku_spark.queries.graph_queries import _cached, _n_nodes
 
-    nodes, edges, _ = _cached(spark, sf_dir)
+    nodes, edges = _cached(spark, sf_dir)
     return (
         katz_scores(
             edges,
@@ -145,7 +145,7 @@ def g_eigenvector_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kinbaku_spark.operators.components import walk_counts
     from kinbaku_spark.queries.graph_queries import _cached, _n_nodes
 
-    nodes, edges, _ = _cached(spark, sf_dir)
+    nodes, edges = _cached(spark, sf_dir)
     w = walk_counts(
         edges,
         rounds=WALK_ROUNDS,
@@ -209,7 +209,7 @@ def g_densest_subgraph(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kinbaku_spark.operators.components import densest_subgraph_trace
     from kinbaku_spark.queries.graph_queries import _cached, _n_nodes
 
-    _, edges, _ = _cached(spark, sf_dir)
+    _, edges = _cached(spark, sf_dir)
     # keep-sets are node-sized and only shrink: |V| of the stored graph is
     # a sound bound for every peel round's semi-join sides
     return densest_subgraph_trace(

@@ -13,9 +13,10 @@ Same "stored engine state" framing as the dedup index tables
 (queries/dedup_state.py): a production pipeline clusters the corpus once
 and every downstream consumer (topic mix, purity eval, SemDeDup, noise
 screen) reads the stored assignment; it is refreshed on ingest, not
-re-derived per query. Here it is built once per sf_dir and injected via
-the ``assigned=`` parameter of :func:`kmeans_clusters` /
-:func:`semantic_dedup`, or selected directly.
+re-derived per query. Here it is one ``state.shared`` entry over the
+``embeddings`` input — built once per sf_dir, rebuilt when that parquet is
+rewritten — and injected via the ``assigned=`` parameter of
+:func:`kmeans_clusters` / :func:`semantic_dedup`, or selected directly.
 
 Stored as an eager :func:`pin` (localCheckpoint leaf), not persist:
 semantic_dedup references the table three times in one plan (sizes,
@@ -30,26 +31,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from kinbaku_spark.sources.tables import load_table
-
-_ASSIGN_STATE: dict[str, DataFrame] = {}
+from kinbaku_spark.state import shared
 
 
 def assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, embedding, cluster, sim): the pinned canonical k-means
     assignment over the embeddings corpus (KMEANS_K / KMEANS_ROUNDS)."""
-    if sf_dir not in _ASSIGN_STATE:
-        from kinbaku_spark.operators.similarity import kmeans_assign
-        from kinbaku_spark.plans.checkpoints import pin
-        from kinbaku_spark.queries.pipeline_ext2 import KMEANS_K, KMEANS_ROUNDS
+    from kinbaku_spark.operators.similarity import kmeans_assign
+    from kinbaku_spark.plans.checkpoints import pin
+    from kinbaku_spark.queries.pipeline_ext2 import KMEANS_K, KMEANS_ROUNDS
 
+    def build():
         emb = load_table(spark, sf_dir, "embeddings")
-        _ASSIGN_STATE[sf_dir] = pin(
-            kmeans_assign(emb, k=KMEANS_K, rounds=KMEANS_ROUNDS)
-        )
-    return _ASSIGN_STATE[sf_dir]
+        return pin(kmeans_assign(emb, k=KMEANS_K, rounds=KMEANS_ROUNDS))
 
-
-def reset() -> None:
-    """Drop the pinned assignment (tests rebuilding hermetic plans);
-    checkpoint blocks free with their RDDs."""
-    _ASSIGN_STATE.clear()
+    return shared(spark, sf_dir, "kmeans_assignment", build, ["embeddings"])

@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from kinbaku_spark.sources.tables import load_table
+from kinbaku_spark.state import shared
 
 QUERIES: dict = {}
 ORACLES: dict = {}
@@ -127,9 +128,6 @@ def x_ann_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     return scored.orderBy(F.desc("adc_dot"), "vec_id").limit(PQ_TOPK)
 
 
-_PQ_CACHE: dict = {}
-
-
 def _pq_scored(spark: SparkSession, sf_dir: str) -> DataFrame | None:
     """The full PQ-scored corpus (vec_id, adc_dot, exact_dot) for the
     vec_id-0 query — shared by the top-k query and the recall eval, and
@@ -137,8 +135,12 @@ def _pq_scored(spark: SparkSession, sf_dir: str) -> DataFrame | None:
     index-build work, paid once like the other derived engine state;
     consumers then rank a warm 3-column table). None when the corpus is
     empty (no seeds / no query vector)."""
-    if sf_dir in _PQ_CACHE:
-        return _PQ_CACHE[sf_dir]
+    return shared(
+        spark, sf_dir, "pq_scored", lambda: _pq_build(spark, sf_dir), ["embeddings"]
+    )
+
+
+def _pq_build(spark: SparkSession, sf_dir: str) -> DataFrame | None:
     emb = load_table(spark, sf_dir, "embeddings")
     qv = emb.select("vec_id", F.expr(_INT_VEC).alias("q"))
     wide = qv.select(
@@ -229,7 +231,6 @@ def _pq_scored(spark: SparkSession, sf_dir: str) -> DataFrame | None:
         .persist()
     )
     scored.count()
-    _PQ_CACHE[sf_dir] = scored
     return scored
 
 

@@ -178,10 +178,9 @@ def geo_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
     GEO_MAX_DEPTH), built once per sf_dir and persisted as engine state —
     shared by g_geodesic_counts and g_betweenness_bounded so the
     round-per-hop BFS jobs are paid once, not once per consumer."""
-    from kinbaku_spark.queries.graph_queries import _cached, und_edges
+    from kinbaku_spark.queries.graph_queries import _graph_state, und_edges
 
-    extra = _cached(spark, sf_dir)[2]
-    if "geo_fwd" not in extra:
+    def build():
         und = und_edges(spark, sf_dir)
         settled = spark.createDataFrame(
             [(GEO_SOURCE, 0, 1)], "key string, depth int, sigma long"
@@ -204,9 +203,11 @@ def geo_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
                 break
             settled = settled.unionByName(new)
             frontier = new
-        extra["geo_fwd"] = settled.persist()
-        extra["geo_fwd"].count()
-    return extra["geo_fwd"]
+        settled = settled.persist()
+        settled.count()
+        return settled
+
+    return _graph_state(spark, sf_dir, "geo_fwd", build)
 
 
 def g_geodesic_counts(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -15,6 +15,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from kinbaku_spark.state import fingerprint, shared
+
 TABLE_NAMES = [
     "region",
     "nation",
@@ -30,31 +32,26 @@ TABLE_NAMES = [
 
 
 # Resident-table mode (KB_CACHE_TABLES=1, used by bench.py): pin each base
-# table in executor memory as Spark's columnar in-memory cache. The driver's
-# parquet files are single-row-group, so a cold scan re-decodes parquet on
-# ONE task for every query; a resident engine (exactly like the reference's
-# warm mmap page cache, BENCH_COMPARISON.md methodology) decodes once and
-# serves batches from memory. Measured at sf0.1: persist-only beats both
-# cold scans and a repartitioned cache on every headline query — an extra
-# repartition destroys the single-pipeline shapes Catalyst already picks.
-# At cluster scale the same role is played by multi-row-group files +
-# executor/OS page cache; correctness paths never depend on this flag.
-_RESIDENT: dict[tuple[int, str, str], DataFrame] = {}
-
-
+# table in executor memory as Spark's columnar in-memory cache, one
+# state.shared entry per table, rebuilt when its parquet is rewritten. The
+# driver's parquet files are single-row-group, so a cold scan re-decodes
+# parquet on ONE task for every query; a resident engine (exactly like the
+# reference's warm mmap page cache, BENCH_COMPARISON.md methodology) decodes
+# once and serves batches from memory. Measured at sf0.1: persist-only beats
+# both cold scans and a repartitioned cache on every headline query — an
+# extra repartition destroys the single-pipeline shapes Catalyst already
+# picks. At cluster scale the same role is played by multi-row-group files
+# + executor/OS page cache; correctness paths never depend on this flag.
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    resident = os.environ.get("KB_CACHE_TABLES") == "1"
-    if resident:
-        key = (id(spark), sf_dir, name)
-        hit = _RESIDENT.get(key)
-        if hit is not None:
-            return hit
-    df = _read_table(spark, sf_dir, name)
-    if resident:
-        df = df.persist()
+    if os.environ.get("KB_CACHE_TABLES") != "1":
+        return _read_table(spark, sf_dir, name)
+
+    def build() -> DataFrame:
+        df = _read_table(spark, sf_dir, name).persist()
         df.count()  # materialize now: this is load, not query work
-        _RESIDENT[key] = df
-    return df
+        return df
+
+    return shared(spark, sf_dir, f"{name}.parquet", build, [name])
 
 
 def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -82,22 +79,24 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {name: load_table(spark, sf_dir, name) for name in TABLE_NAMES}
 
 
-_REGISTERED: dict[tuple[int, str], bool] = {}
+# The one (application, sf_dir, table fingerprint) the session's temp views
+# point at: a single slot, not a cache. A switch of sf_dir or a rewritten
+# table changes the key and re-registers the views.
+_REGISTERED: list[tuple] = []
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every base table as a temp view (same names DuckDB
     pre-registers), enabling a shared ANSI-SQL path: the identical query
-    string runs on both engines. Memoized per (session, sf_dir) — the
-    tables are immutable on disk and re-registration re-reads 10 parquet
-    footers per call."""
-    key = (id(spark), sf_dir)
-    if _REGISTERED.get(key):
+    string runs on both engines. Skipped while the views already point at
+    the current tables — re-registration re-reads 10 parquet footers per
+    call."""
+    key = (spark.sparkContext.applicationId, sf_dir, fingerprint(sf_dir, TABLE_NAMES))
+    if _REGISTERED == [key]:
         return
     for name in TABLE_NAMES:
         load_table(spark, sf_dir, name).createOrReplaceTempView(name)
-    _REGISTERED.clear()  # one sf_dir active per session: re-register on switch
-    _REGISTERED[key] = True
+    _REGISTERED[:] = [key]
 
 
 # ---------------------------------------------------------------------------

@@ -99,20 +99,16 @@ def build_hub_graph(spark):
     return nodes, edges
 
 
-def reset_graph_state(nodes, edges):
-    """(Re-)inject the hub graph as the cached stored graph for FAKE_DIR so
-    the registry queries run against it unchanged."""
-    from kinbaku_spark.queries import graph_queries
+def reset_graph_state(spark, nodes, edges):
+    """(Re-)inject the hub graph as the stored graph for FAKE_DIR so the
+    registry queries run against it unchanged. FAKE_DIR holds no lineitem,
+    so the entry's input fingerprint stays constant."""
+    from kinbaku_spark import state
+    from kinbaku_spark.queries.graph_queries import _graph_state
 
-    old = graph_queries._CACHE.pop(FAKE_DIR, None)
-    if old is not None:
-        for df in old[2].values():
-            if hasattr(df, "unpersist"):
-                try:
-                    df.unpersist()
-                except Exception:
-                    pass
-    graph_queries._CACHE[FAKE_DIR] = (nodes, edges, {})
+    state.reset()  # also unpersists the previous injection of these edges
+    edges.persist()
+    _graph_state(spark, FAKE_DIR, "graph", lambda: (nodes, edges))
 
 
 def run_op(spark, name, invariants):
@@ -227,7 +223,7 @@ def main():
             os.environ.pop("KB_BROADCAST_BOUND", None)
         else:
             os.environ["KB_BROADCAST_BOUND"] = env
-        reset_graph_state(nodes, edges)
+        reset_graph_state(spark, nodes, edges)
         for op in OPS:
             dt, rows, skew = run_op(spark, op, invariants)
             results[(op, mode)] = (dt, rows, skew)

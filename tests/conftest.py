@@ -1,5 +1,6 @@
 import os
 import sys
+import threading
 
 import pytest
 
@@ -35,3 +36,27 @@ def duck():
             f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM '{SF_ORACLE}/{t}.parquet'"
         )
     return con
+
+
+@pytest.fixture
+def run_threads():
+    """``run(n, target)``: start ``target(i)`` on n threads released at
+    once, under a short switch interval, and require all to finish."""
+
+    def run(n, target):
+        barrier = threading.Barrier(n)
+        threads = [
+            threading.Thread(target=lambda i=i: (barrier.wait(), target(i))) for i in range(n)
+        ]
+        interval = sys.getswitchinterval()
+        sys.setswitchinterval(1e-6)
+        try:
+            for t in threads:
+                t.start()
+            for t in threads:
+                t.join(timeout=120)
+        finally:
+            sys.setswitchinterval(interval)
+        assert not any(t.is_alive() for t in threads)
+
+    return run

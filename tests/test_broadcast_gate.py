@@ -18,53 +18,20 @@ import os
 
 import pytest
 
+from kinbaku_spark import state
 from kinbaku_spark.plans import hints
 from kinbaku_spark.queries import QUERIES
 
 
-def _reset_engine_state():
-    """Drop all session-persisted derived state so plans rebuild under the
-    CURRENT gate setting (the caches were built under the previous one)."""
-    from kinbaku_spark.queries import (
-        dedup_state,
-        extensions,
-        graph_queries,
-        kmeans_state,
-        mlprep_ext2,
-    )
-
-    for nodes, edges, extra in graph_queries._CACHE.values():
-        for df in [nodes, edges, *[v for v in extra.values() if hasattr(v, "unpersist")]]:
-            try:
-                df.unpersist()
-            except Exception:
-                pass
-    graph_queries._CACHE.clear()
-    for df in extensions._CLUSTER_CACHE.values():
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-    extensions._CLUSTER_CACHE.clear()
-    dedup_state.reset()
-    kmeans_state.reset()
-    for df in mlprep_ext2._PQ_CACHE.values():
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-    mlprep_ext2._PQ_CACHE.clear()
-
-
 @pytest.fixture
 def gate_closed(spark):
-    _reset_engine_state()
+    state.reset()
     os.environ["KB_BROADCAST_BOUND"] = "0"
     try:
         yield
     finally:
         os.environ.pop("KB_BROADCAST_BOUND", None)
-        _reset_engine_state()
+        state.reset()
 
 
 def test_gate_helpers_respect_bound(spark):

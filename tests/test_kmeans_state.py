@@ -51,12 +51,13 @@ def test_injected_matches_local(spark, corpus):
 
 
 def test_state_built_once_per_sf_dir(spark, sf_dir):
+    from kinbaku_spark import state
     from kinbaku_spark.queries import kmeans_state
 
-    kmeans_state.reset()
+    state.reset()
     a = kmeans_state.assignment(spark, sf_dir)
     b = kmeans_state.assignment(spark, sf_dir)
     assert a is b  # second call returns the pinned table, no rebuild
     # pinned leaf: the plan is a materialized scan, not the Lloyd's chain
     assert "Scan ExistingRDD" in b._jdf.queryExecution().executedPlan().toString()
-    kmeans_state.reset()
+    state.reset()

@@ -50,6 +50,11 @@ SMOKE = [
     "x_kmeans_clusters",
     "g_greedy_matching",
     "g_scc_bounded",
+    # consumers of the shared near-dup cluster labels (dup_cluster_labels)
+    "x_dedup_clusters",
+    "x_dup_cluster_sizes",
+    "x_soft_dedup_weights",
+    "x_curate_corpus",
 ]
 
 if os.environ.get("KB_FULL_PARITY") == "1":

@@ -5,10 +5,9 @@ partition-id-dependent logic leaks into results (the round-2 ids bug).
 
 Session-persisted engine state (co_shared, cluster labels, geo_fwd,
 the shingle/signature index, the PQ-scored corpus) would mask the
-re-partitioned run, so the resettable caches are DROPPED between the
-reference and alternate runs (graph-module state queries stay excluded —
-their cache lives with the persisted graph itself). The picks cover the
-sensitive arithmetic paths: decimal sums, minhash aggregation,
+re-partitioned run, so the whole engine-state registry is DROPPED
+(``state.reset()``) between the reference and alternate runs. The picks
+cover the sensitive arithmetic paths: decimal sums, minhash aggregation,
 exact-integer Gram partial aggs, k-means centroid sums, hash-argmin
 walks, window ranking.
 """
@@ -34,6 +33,7 @@ from datetime import datetime
 
 import pytest
 
+from kinbaku_spark import state
 from kinbaku_spark.queries import QUERIES
 
 PICKS = [
@@ -74,39 +74,16 @@ def _norm(pdf):
     )
 
 
-def _drop_resettable_state():
-    """Drop the session-persisted derived state that is NOT part of the
-    stored graph, so the alternate run truly recomputes it under the new
-    partitioning (otherwise the cache masks the very aggregation paths
-    these picks exist to stress)."""
-    from kinbaku_spark.queries import dedup_state, extensions, kmeans_state, mlprep_ext2
-
-    dedup_state.reset()
-    kmeans_state.reset()
-    for df in extensions._CLUSTER_CACHE.values():
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-    extensions._CLUSTER_CACHE.clear()
-    for df in mlprep_ext2._PQ_CACHE.values():
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-    mlprep_ext2._PQ_CACHE.clear()
-
-
 @pytest.mark.parametrize("name", PICKS)
 def test_result_is_partition_count_invariant(name, spark, sf_dir):
     base = spark.conf.get("spark.sql.shuffle.partitions")
-    _drop_resettable_state()
+    state.reset()
     ref = _norm(QUERIES[name](spark, sf_dir).toPandas())
     try:
         spark.conf.set("spark.sql.shuffle.partitions", "3")
-        _drop_resettable_state()
+        state.reset()
         alt = _norm(QUERIES[name](spark, sf_dir).toPandas())
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", base)
-        _drop_resettable_state()
+        state.reset()
     assert ref == alt, f"{name}: result depends on shuffle partition count"

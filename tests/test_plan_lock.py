@@ -13,6 +13,7 @@ import os
 
 import pytest
 
+from kinbaku_spark import state
 from kinbaku_spark.plans.signature import plan_signature
 from kinbaku_spark.queries import QUERIES
 
@@ -33,42 +34,12 @@ with open(LOCK_PATH) as _f:
 )
 def test_plan_signatures_match_lock(spark, sf_dir):
     # Hermetic steady state: earlier tests in the same session materialize,
-    # unpersist, or re-register the shared derived-graph cache in arbitrary
+    # unpersist, or re-register the shared derived state in arbitrary
     # order, which flips InMemoryTableScan/exchange-reuse markers in plan
     # STRINGS without changing any plan. Rebuild that state from scratch so
     # signatures are computed exactly as scripts/update_plan_lock.py does
     # in a fresh session.
-    from kinbaku_spark.queries import extensions, graph_queries
-
-    for nodes, edges, extra in graph_queries._CACHE.values():
-        for df in [nodes, edges, *[v for v in extra.values() if hasattr(v, "unpersist")]]:
-            try:
-                df.unpersist()
-            except Exception:
-                pass
-    graph_queries._CACHE.clear()
-    # the near-dup label cache is the same class of shared state: drop the
-    # stale handles so consumers re-plan over a freshly persisted build
-    for df in extensions._CLUSTER_CACHE.values():
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-    extensions._CLUSTER_CACHE.clear()
-    # same again for the shingle/signature dedup index state
-    from kinbaku_spark.queries import dedup_state, kmeans_state
-
-    dedup_state.reset()
-    kmeans_state.reset()
-    # same again for the PQ-scored corpus cache
-    from kinbaku_spark.queries import mlprep_ext2
-
-    for df in mlprep_ext2._PQ_CACHE.values():
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-    mlprep_ext2._PQ_CACHE.clear()
+    state.reset()
     spark.catalog.clearCache()
 
     missing = sorted(set(QUERIES) - set(LOCK))

@@ -187,7 +187,7 @@ def test_span_removal_cuts_license_header_keeps_owner(spark):
     doc_id), unique tails survive verbatim, and overlapping duplicated
     spans merge into one cut."""
     from kinbaku_spark.queries import extensions as ext
-    from kinbaku_spark.queries.dedup_state import span_state, reset
+    from kinbaku_spark.state import reset
 
     header = " ".join(f"lic{i}" for i in range(ext.SPAN_N))
     rows = [

@@ -193,3 +193,20 @@ def test_running_max_exclusive_matches_window(spark):
         )
         == []
     )
+
+
+def test_pin_registry_is_thread_safe(spark, run_threads):
+    """32 threads pin at once: the FIFO ends exactly at its cap and no
+    thread sees an exception from a concurrent append or eviction."""
+    from kinbaku_spark.operators import rank
+
+    df, errors = spark.range(8), []
+
+    def pin_one(i):
+        try:
+            rank._pinned_range_parts(df, [F.col("id")], 2)
+        except Exception as err:  # noqa: BLE001 - asserted below
+            errors.append(err)
+
+    run_threads(32, pin_one)
+    assert errors == [] and len(rank._PINNED) == rank._PIN_CAP
