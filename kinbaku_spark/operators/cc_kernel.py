@@ -35,14 +35,17 @@ labeling the DuckDB recursive-closure oracles state.
 Scale: each round is two joins + one aggregation + the O(1)-row change
 probe, all over the (checkpointed) undirected edge list and the label
 table — shuffle-partitioned on the id, no driver-side state, no broadcast
-of anything |V|-sized. Per-round ``localCheckpoint`` pins each iteration
-(lineage otherwise doubles per round) and keeps the stages
-AQE-skew-splittable (tests/test_skew_probe.py).
+of anything |V|-sized. The hop is an operators/supersteps.propagate
+round and the loop is supersteps.until_stable, which owns the per-round
+pin (lineage otherwise doubles per round; the pinned sides stay
+AQE-skew-splittable, tests/test_skew_probe.py) and the change probe.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
+
+from kinbaku_spark.operators.supersteps import propagate, until_stable
 
 
 class CCConvergenceError(RuntimeError):
@@ -58,85 +61,42 @@ def min_label_fixpoint(
     """Run min-label CC to fixpoint.
 
     ``labels``: (u, label) — one row per node, label initialised to the
-    node's own id; must cover every id that appears in ``und``.
-    ``und``: (u, v) — symmetrized, de-duplicated edge list.
-    Returns (u, label) with label = min id of u's component.
+    node's own id. ``und``: (u, v) — symmetrized, de-duplicated edge list.
+    Returns (u, label) for exactly the nodes of ``labels``, label = min id
+    of u's component; an edge naming an id without a label row joins
+    nothing.
     Raises :class:`CCConvergenceError` if ``max_rounds`` is exhausted while
     the change probe still reports movement (see module docstring).
     """
     labels = labels.localCheckpoint(eager=True)
-    label_t = dict(labels.dtypes)["label"]
-    for _ in range(max_rounds):
-        # hop as ONE join + ONE aggregation (r08, guide §1.2/§2.4):
-        # least(label, coalesce(min neighbor, label)) ≡ min over the union
-        # of the self row and the neighbor contributions — the separate
-        # left merge join of the r07 shape disappears. The old label rides
-        # the self row only (NULL on contributions; MIN skips nulls), so
-        # the change flag below still compares against it exactly.
-        contrib = und.join(
-            labels.withColumnRenamed("u", "v2"), und.v == F.col("v2")
-        ).select(
-            und["u"],
-            "label",
-            F.lit(None).cast(label_t).alias("old_label"),
-        )
-        hop = (
-            labels.select("u", "label", F.col("label").alias("old_label"))
-            .unionByName(contrib)
-            .groupBy("u")
-            .agg(
-                F.min("label").alias("label"),
-                F.min("old_label").alias("old_label"),
-            )
+
+    def step(labels):
+        # hop: MIN over the self row and the neighbor labels. The old label
+        # rides the self row only (NULL on messages; MIN skips nulls), so
+        # the change flag below compares against it exactly, and ids of
+        # `und` without a label row get no output row.
+        hop = propagate(
+            labels,
+            und,
+            src="v",
+            dst="u",
+            key="u",
+            message=[F.col("label")],
+            aggs=[F.min("label").alias("label"), F.min("old_label").alias("old_label")],
+            self_rows=labels.select("u", "label", F.col("label").alias("old_label")),
         )
         # pointer-doubling shortcut: label <- min(label, label[label]).
-        # Left join + coalesce: every label IS a node id present in the
-        # label table (see module invariant), the left form just keeps the
-        # plan robust if a caller's `labels` under-covers `und`.
-        # The change flag rides the SAME plan (r08, the components.scc
-        # fusion): labels only ever decrease, so chg = (label != old) on
-        # the new row is exactly what the old separate probe join
-        # computed — one aggregate on the cached result replaces a whole
-        # join-and-limit job per round.
+        # The change flag rides the SAME plan: labels only ever decrease,
+        # so chg = (label != old) on the new row is exactly what a
+        # separate probe join would compute.
         jump = hop.select(F.col("u").alias("lk"), F.col("label").alias("l2"))
-        new_labels = hop.join(jump, hop.label == F.col("lk"), "left").select(
-            "u",
-            F.least(
-                F.col("label"), F.coalesce(F.col("l2"), F.col("label"))
-            ).alias("label"),
-            (
-                F.least(
-                    F.col("label"), F.coalesce(F.col("l2"), F.col("label"))
-                )
-                != F.col("old_label")
-            ).alias("chg"),
+        new = F.least(F.col("label"), F.coalesce(F.col("l2"), F.col("label")))
+        return hop.join(jump, hop.label == F.col("lk"), "left").select(
+            "u", new.alias("label"), (new != F.col("old_label")).alias("chg")
         )
-        # materialize through persist() BEFORE the checkpoint:
-        # localCheckpoint preserves the origin plan's STATIC size
-        # estimate, and a join's static estimate is the PRODUCT of its
-        # children's — the hop+jump plan references the previous round's
-        # labels multiple times, so the stats BigInteger's digit count
-        # DOUBLES per round (measured: 46 digits at round 1, 3,481 by
-        # round 7). The change probe runs fine (AQE uses runtime stats),
-        # but the non-AQE planning inside .localCheckpoint() multiplies
-        # those BigIntegers — at the ~26-30 rounds a 10^8-diameter graph
-        # needs, that is a multi-GB driver allocation. An InMemoryRelation
-        # recomputes stats from the MATERIALIZED bytes, so checkpointing
-        # from the cache resets the estimate to reality every round
-        # (same fix as operators/components.scc; regression-pinned in
-        # tests/test_cc_kernel.py::test_label_stats_stay_bounded).
-        cached = new_labels.persist()
-        changed = (
-            cached.agg(F.sum(F.col("chg").cast("int")).alias("n")).collect()[0][
-                "n"
-            ]
-            or 0
-        )
-        labels = cached.select("u", "label").localCheckpoint(eager=True)
-        cached.unpersist()
-        if changed == 0:
-            return labels
-    raise CCConvergenceError(
+
+    error = CCConvergenceError(
         f"min-label CC still changing after {max_rounds} rounds "
         f"(diameter > ~2^{max_rounds}); refusing to return unconverged labels"
     )
+    return until_stable(step, labels, max_rounds, error)[0]

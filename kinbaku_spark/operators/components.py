@@ -10,27 +10,54 @@ this extends the engine the way NetworkX extends a dict-of-dicts.
 
 All determinism/scale contracts are documented on the query module
 (graphmetrics_ext4.py): integer-exact arithmetic throughout, MIN-label
-order-freedom, per-round size-gated broadcasts, fixed round budgets.
+order-freedom, per-round size-gated broadcasts, fixed round budgets. The
+rounds themselves are operators/supersteps.py shapes: ``propagate`` for
+the label, Katz and walk rounds, ``peel`` for the edge-set shrinks, and
+``until_stable`` for scc's f/b fixpoint.
 """
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, functions as F
 
+from kinbaku_spark.operators.supersteps import peel, propagate, until_stable
 from kinbaku_spark.plans.hints import size_hint
 
 
-def _gate(edges: DataFrame, bound_rows: int | None):
-    """Size gate for node-sized vectors: callers pass a known |V| bound;
+def _bound(edges: DataFrame, bound_rows: int | None) -> int:
+    """Row bound for node-sized vectors: callers pass a known |V| bound;
     a library caller without one pays one count of the endpoint set."""
-    if bound_rows is None:
-        bound_rows = (
-            edges.select(F.col("src").alias("k"))
-            .union(edges.select("dst"))
-            .distinct()
-            .count()
+    return _node_keys(edges).count() if bound_rows is None else bound_rows
+
+
+def _both_ways(edges: DataFrame, f_to: str) -> DataFrame:
+    """Direction-tagged edge stream (node, other, is_f), lazily pinned:
+    every (src, dst) edge twice, once carrying the f label to its ``f_to``
+    endpoint and once carrying b the other way — so one propagate round
+    moves both labels over one (key, f, b) table (r08: one exchange per
+    round where two aliased label broadcasts plus a merge join stood)."""
+    f_from = "dst" if f_to == "src" else "src"
+    return (
+        edges.select(
+            F.col(f_to).alias("node"), F.col(f_from).alias("other"), F.lit(True).alias("is_f")
         )
-    return size_hint(bound_rows)
+        .unionByName(
+            edges.select(
+                F.col(f_from).alias("node"), F.col(f_to).alias("other"), F.lit(False).alias("is_f")
+            )
+        )
+        .localCheckpoint(eager=False)
+    )
+
+
+def _fb_messages() -> list:
+    """The f half of a tagged edge sends f, the b half sends b."""
+    return [
+        F.when(F.col("is_f"), F.col("f")).alias("f"),
+        F.when(~F.col("is_f"), F.col("b")).alias("b"),
+    ]
 
 
 def scc_bounded(
@@ -50,84 +77,39 @@ def scc_bounded(
     (property-tested vs NetworkX, tests/test_property_components.py).
     """
     edges = edges.select("src", "dst").localCheckpoint(eager=False)
-    hint = _gate(edges, bound_rows)
-    active = (
-        edges.select(F.col("src").alias("key"))
-        .union(edges.select("dst"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    bound = _bound(edges, bound_rows)
+    active = _node_keys(edges).localCheckpoint(eager=False)
     e_act = edges
     certified = []
-    for peel in range(1, peels + 1):
-        # direction-tagged edge stream, built ONCE per peel (loop-invariant):
-        # a forward contribution flows dst→src (node learns f from its
-        # out-neighbor), a backward one src→dst. Tagging the direction into
-        # the edge table lets every prop round join it against ONE
-        # (key, f, b) label projection — r07's shape built two separately
-        # aliased label broadcasts per round (fwd + bwd) plus a contrib
-        # broadcast; this is 1 exchange per round for the identical
-        # recurrence (r08, guide §1.2/§2.4).
-        e2 = (
-            e_act.select(
-                F.col("src").alias("node"),
-                F.col("dst").alias("other"),
-                F.lit(True).alias("is_f"),
-            )
-            .unionByName(
-                e_act.select(
-                    F.col("dst").alias("node"),
-                    F.col("src").alias("other"),
-                    F.lit(False).alias("is_f"),
-                )
-            )
-            .localCheckpoint(eager=False)
-        )
+    for peel_no in range(1, peels + 1):
+        # built ONCE per peel (loop-invariant): f flows dst→src (a node
+        # learns f from its out-neighbor), b src→dst
+        e2 = _both_ways(e_act, f_to="src")
         lab = active.select("key", F.col("key").alias("f"), F.col("key").alias("b"))
         for _ in range(prop_rounds):
-            contrib = (
-                e2.join(
-                    hint(lab.withColumnRenamed("key", "other")),
-                    "other",
-                )
-                .select(
-                    F.col("node").alias("key"),
-                    F.when(F.col("is_f"), F.col("f")).alias("nf"),
-                    F.when(~F.col("is_f"), F.col("b")).alias("nb"),
-                )
-            )
-            # LEAST(x, COALESCE(MIN(contrib), x)) ≡ MIN over the union of
-            # the self row and the contributions (min skips nulls; every
-            # contribution node is in `lab`'s domain) — one aggregation
-            # replaces the contrib broadcast + merge join of the r07 shape
-            lab = (
-                lab.select("key", F.col("f").alias("nf"), F.col("b").alias("nb"))
-                .unionByName(contrib)
-                .groupBy("key")
-                .agg(F.min("nf").alias("f"), F.min("nb").alias("b"))
-                .localCheckpoint(eager=False)
-            )
+            lab = propagate(
+                lab,
+                e2,
+                src="other",
+                dst="node",
+                message=_fb_messages(),
+                aggs=[F.min("f").alias("f"), F.min("b").alias("b")],
+                self_rows=lab,
+                bound=bound,
+            ).localCheckpoint(eager=False)
         certified.append(
             lab.filter(F.col("f") == F.col("b")).select(
                 "key",
                 F.col("f").alias("comp"),
-                F.lit(peel).cast("int").alias("peel"),
+                F.lit(peel_no).cast("int").alias("peel"),
             )
         )
         active = lab.filter(F.col("f") != F.col("b")).select("key")
-        e_act = (
-            e_act.join(hint(active.withColumnRenamed("key", "src")), "src", "semi")
-            .join(hint(active.withColumnRenamed("key", "dst")), "dst", "semi")
-            .select("src", "dst")
-            .localCheckpoint(eager=False)
-        )
+        e_act = peel(e_act, active, "src", "dst", bound)
     pending = active.select(
         "key", F.col("key").alias("comp"), F.lit(None).cast("int").alias("peel")
     )
-    out = certified[0]
-    for c in certified[1:]:
-        out = out.unionByName(c)
-    return out.unionByName(pending)
+    return _union(*certified, pending)
 
 
 class SCCConvergenceError(RuntimeError):
@@ -261,7 +243,8 @@ def scc(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    hint = _gate(edges0, bound_rows)
+    bound = _bound(edges0, bound_rows)
+    hint = size_hint(bound)
     h = lambda c: F.concat(F.md5(F.col(c)), F.col(c))  # noqa: E731
     nodes = (
         _node_keys(edges0)
@@ -282,13 +265,7 @@ def scc(
     if selfloop_only.limit(1).count() > 0:
         certified.append(selfloop_only)
     rounds_left = max_rounds
-    for _it in range(max_iters):
-        if __import__("os").environ.get("KB_SCC_DEBUG"):
-            print(
-                f"scc iter {_it} active={nodes.count()}"
-                f" classes={nodes.select('cls').distinct().count()}",
-                flush=True,
-            )
+    for _ in range(max_iters):
         # class-induced active edge set (src, dst, cls)
         e = (
             edges0.join(hint(nodes.withColumnRenamed("key", "src")), "src")
@@ -328,121 +305,64 @@ def scc(
             certified.append(
                 spark.createDataFrame(rows, "key string, comp string")
             )
-            out = certified[0]
-            for c in certified[1:]:
-                out = out.unionByName(c)
-            return out
+            return _union(*certified)
         lab = nodes.select(
             "key", "cls", h("key").alias("f"), h("key").alias("b")
         ).localCheckpoint(eager=True)
-        while True:
-            if rounds_left == 0:
-                raise SCCConvergenceError(
-                    f"scc: f/b fixpoint still changing after {max_rounds}"
-                    " total one-hop+jump rounds; refusing to return"
-                    " unconverged labels"
-                )
-            rounds_left -= 1
-            # one fused plan per round — hop (both directions through ONE
-            # unioned contribution stream + one aggregation + one merge
-            # join, the scc_bounded fusion) then the label-suffix JUMP:
-            # f <- min(f, f[node(f)]) where node(f) = the argmin ancestor
-            # embedded in the label (chars 33+), the directed analogue of
-            # the CC kernel's label[label] shortcut. The change flag rides
-            # the same plan, so the round is TWO actions: one aggregate on
-            # the cached result (which also materializes it) and the
-            # checkpoint copy.
-            fwd = e.join(
-                hint(lab.select(F.col("key").alias("src"), F.col("f").alias("fs"))),
-                "src",
-            ).select(
-                F.col("dst").alias("key"),
-                "fs",
-                F.lit(None).cast("string").alias("bs"),
+        # f flows along an edge (min over ancestors), b against it
+        e2 = _both_ways(e, f_to="dst")
+
+        def step(lab):
+            # hop: MIN over the self row and the in-class neighbor labels;
+            # cls and the old labels (of, ob) ride the self row only
+            hop = propagate(
+                lab,
+                e2,
+                src="other",
+                dst="node",
+                message=_fb_messages(),
+                aggs=[F.min(c).alias(c) for c in ("cls", "f", "b", "of", "ob")],
+                self_rows=lab.select(
+                    "key", "cls", "f", "b", F.col("f").alias("of"), F.col("b").alias("ob")
+                ),
+                bound=bound,
             )
-            bwd = e.join(
-                hint(lab.select(F.col("key").alias("dst"), F.col("b").alias("bd"))),
-                "dst",
-            ).select(
-                F.col("src").alias("key"),
-                F.lit(None).cast("string").alias("fs"),
-                F.col("bd").alias("bs"),
-            )
-            contrib = (
-                fwd.unionByName(bwd)
-                .groupBy("key")
-                .agg(F.min("fs").alias("nf"), F.min("bs").alias("nb"))
-            )
-            hop = lab.join(hint(contrib), "key", "left").select(
-                "key",
-                "cls",
-                F.col("f").alias("of"),
-                F.col("b").alias("ob"),
-                F.least(F.col("f"), F.coalesce("nf", F.col("f"))).alias("f"),
-                F.least(F.col("b"), F.coalesce("nb", F.col("b"))).alias("b"),
-            )
-            # label-suffix jump: pull the argmin ancestor's own best
-            # ancestor (and the descendant twin). Jump sides read the
-            # PREVIOUS round's checkpointed lab keyed by node id; the
-            # argmin node only ever moves FURTHER away (labels only
-            # decrease), so coverage compounds geometrically — no pointer
-            # column to reset. Left join: node(f) is always an in-class
-            # node present in lab; the left form keeps the plan robust.
+            # label-suffix JUMP: f <- min(f, f[node(f)]) where node(f) = the
+            # argmin ancestor embedded in the label (chars 33+), the
+            # directed analogue of the CC kernel's label[label] shortcut.
+            # Jump sides read the PREVIOUS round's checkpointed lab keyed
+            # by node id; the argmin node only ever moves FURTHER away
+            # (labels only decrease), so coverage compounds geometrically —
+            # no pointer column to reset. Left join: node(f) is always an
+            # in-class node present in lab; the left form keeps the plan
+            # robust. The change flag rides the same plan.
             jf = lab.select(F.col("key").alias("jkf"), F.col("f").alias("fj"))
             jb = lab.select(F.col("key").alias("jkb"), F.col("b").alias("bj"))
-            pre = (
-                hop.join(
-                    hint(jf), F.expr("substring(f, 33)") == F.col("jkf"), "left"
-                )
+            f = F.least(F.col("f"), F.coalesce("fj", F.col("f")))
+            b = F.least(F.col("b"), F.coalesce("bj", F.col("b")))
+            return (
+                hop.join(hint(jf), F.expr("substring(f, 33)") == F.col("jkf"), "left")
                 .join(hint(jb), F.expr("substring(b, 33)") == F.col("jkb"), "left")
-                .select(
-                    "key",
-                    "cls",
-                    F.least(F.col("f"), F.coalesce("fj", F.col("f"))).alias("f"),
-                    F.least(F.col("b"), F.coalesce("bj", F.col("b"))).alias("b"),
-                    "of",
-                    "ob",
-                )
+                .select("key", "cls", f.alias("f"), b.alias("b"), "of", "ob")
                 .select(
                     "key",
                     "cls",
                     "f",
                     "b",
-                    ((F.col("f") != F.col("of")) | (F.col("b") != F.col("ob"))).alias(
-                        "chg"
-                    ),
+                    ((F.col("f") != F.col("of")) | (F.col("b") != F.col("ob"))).alias("chg"),
                 )
             )
-            # materialize through persist() BEFORE the checkpoint:
-            # localCheckpoint preserves the origin plan's STATIC size
-            # estimate, and a join's static estimate is the PRODUCT of its
-            # children's — ~5 label references per round means the stats
-            # BigInteger's digit count compounds 5x per round, and the
-            # non-AQE planning inside .localCheckpoint() then spends
-            # minutes in BigInteger.multiply (measured: 60 s/round by
-            # round 11). An InMemoryRelation recomputes stats from the
-            # MATERIALIZED bytes, so checkpointing from the cache resets
-            # the estimate to reality every round.
-            cached = pre.persist()
-            # zero combined change ⇒ in particular the hop phase lowered
-            # nothing (labels only decrease) ⇒ 1-hop stability ⇒ f = f*,
-            # b = b* exactly — the loop exit IS the convergence certificate
-            changed = cached.agg(
-                F.sum(F.col("chg").cast("int")).alias("n")
-            ).collect()[0]["n"] or 0
-            new_lab = cached.drop("chg").localCheckpoint(eager=True)
-            cached.unpersist()
-            lab = new_lab
-            if __import__("os").environ.get("KB_SCC_DEBUG"):
-                import time as _t
 
-                print(
-                    f"scc round {max_rounds - rounds_left} changed={changed}"
-                    f" t={_t.time():.1f}",
-                    flush=True,
-                )
-            if changed == 0:
-                break
+        # zero combined change ⇒ in particular the hop phase lowered
+        # nothing (labels only decrease) ⇒ 1-hop stability ⇒ f = f*,
+        # b = b* exactly — the loop exit IS the convergence certificate
+        error = SCCConvergenceError(
+            f"scc: f/b fixpoint still changing after {max_rounds}"
+            " total one-hop+jump rounds; refusing to return"
+            " unconverged labels"
+        )
+        lab, rounds = until_stable(step, lab, rounds_left, error)
+        rounds_left -= rounds
         done = lab.filter(F.col("f") == F.col("b"))
         comp_map = done.groupBy("cls", "f").agg(F.min("key").alias("comp"))
         certified.append(
@@ -455,14 +375,15 @@ def scc(
             "key", F.md5(F.concat("cls", "f", "b")).alias("cls")
         ).localCheckpoint(eager=True)
         if nodes.limit(1).count() == 0:
-            out = certified[0]
-            for c in certified[1:]:
-                out = out.unionByName(c)
-            return out
+            return _union(*certified)
     raise SCCConvergenceError(
         f"scc: {max_iters} FW-BW split iterations exhausted with nodes"
         " still uncertified; refusing to return a partial partition"
     )
+
+
+def _union(*dfs: DataFrame) -> DataFrame:
+    return reduce(lambda a, b: a.unionByName(b), dfs)
 
 
 def _symmetrized(edges: DataFrame) -> DataFrame:
@@ -477,6 +398,29 @@ def _node_keys(edges: DataFrame) -> DataFrame:
     )
 
 
+def _walk_sums(edges, rounds, nodes, bound_rows, beta) -> DataFrame:
+    """x_t(v) = beta(t) + Σ_{u ~ v} x_{t-1}(u) on the symmetrized edge
+    table, x_0 = 1, as exact BIGINTs: (key, x) for every node. The
+    constant rides the node's self row into the one SUM (a self row of 0
+    still keeps a node with no neighbors)."""
+    und = _symmetrized(edges)
+    nodes = (nodes or _node_keys(edges)).select("key")
+    bound = _bound(edges, bound_rows)
+    x = nodes.select("key", F.lit(1).cast("long").alias("x"))
+    for t in range(1, rounds + 1):
+        x = propagate(
+            x,
+            und,
+            src="u",
+            dst="v",
+            message=[F.col("x")],
+            aggs=[F.sum("x").alias("x")],
+            self_rows=nodes.select("key", F.lit(beta(t)).cast("long").alias("x")),
+            bound=bound,
+        ).localCheckpoint(eager=False)
+    return x
+
+
 def katz_scores(
     edges: DataFrame,
     rounds: int = 3,
@@ -488,30 +432,11 @@ def katz_scores(
     integer-exact: returns (key, katz_scaled BIGINT, katz double) with
     katz_scaled = scale^rounds · katz exactly (graphmetrics_ext4 contract).
     """
-    und = _symmetrized(edges)
-    nodes = (nodes or _node_keys(edges)).select("key")
-    hint = _gate(edges, bound_rows)
-    s = nodes.select("key", F.lit(1).cast("long").alias("s"))
-    for t in range(1, rounds + 1):
-        neigh = (
-            und.join(hint(s.select(F.col("key").alias("u2"), "s")), und.u == F.col("u2"))
-            .groupBy("v")
-            .agg(F.sum("s").alias("ns"))
-        )
-        s = (
-            nodes.join(hint(neigh.withColumnRenamed("v", "key")), "key", "left")
-            .select(
-                "key",
-                (F.lit(scale**t) + F.coalesce(F.col("ns"), F.lit(0)))
-                .cast("long")
-                .alias("s"),
-            )
-            .localCheckpoint(eager=False)
-        )
+    s = _walk_sums(edges, rounds, nodes, bound_rows, lambda t: scale**t)
     return s.select(
         "key",
-        F.col("s").alias("katz_scaled"),
-        (F.col("s") / F.lit(float(scale**rounds))).alias("katz"),
+        F.col("x").alias("katz_scaled"),
+        (F.col("x") / F.lit(float(scale**rounds))).alias("katz"),
     )
 
 
@@ -524,22 +449,8 @@ def walk_counts(
     """Exact length-``rounds`` walk counts on the symmetrized edge table
     (w = A^T·1): (key, walks BIGINT) — the un-normalized eigenvector-
     centrality power iteration (graphmetrics_ext4 contract)."""
-    und = _symmetrized(edges)
-    nodes = (nodes or _node_keys(edges)).select("key")
-    hint = _gate(edges, bound_rows)
-    w = nodes.select("key", F.lit(1).cast("long").alias("w"))
-    for _ in range(rounds):
-        neigh = (
-            und.join(hint(w.select(F.col("key").alias("u2"), "w")), und.u == F.col("u2"))
-            .groupBy("v")
-            .agg(F.sum("w").alias("nw"))
-        )
-        w = (
-            nodes.join(hint(neigh.withColumnRenamed("v", "key")), "key", "left")
-            .select("key", F.coalesce(F.col("nw"), F.lit(0)).cast("long").alias("w"))
-            .localCheckpoint(eager=False)
-        )
-    return w.select("key", F.col("w").alias("walks"))
+    w = _walk_sums(edges, rounds, nodes, bound_rows, lambda t: 0)
+    return w.select("key", F.col("x").alias("walks"))
 
 
 def densest_subgraph_trace(
@@ -552,7 +463,7 @@ def densest_subgraph_trace(
     n_nodes, n_edges, density_ppm), low-degree nodes removed per round
     (graphmetrics_ext4 contract — the max row 2(1+ε)-approximates the
     densest subgraph)."""
-    hint = _gate(edges, bound_rows)
+    bound = _bound(edges, bound_rows)
     e = edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
     rows = []
     for r in range(peel_rounds):
@@ -583,13 +494,5 @@ def densest_subgraph_trace(
             .filter(F.col("d") * F.col("n_nodes") * 10 > 22 * F.col("n_edges"))
             .select("v")
         )
-        e = (
-            e.join(hint(keep.withColumnRenamed("v", "a")), "a", "semi")
-            .join(hint(keep.withColumnRenamed("v", "b")), "b", "semi")
-            .select("a", "b")
-            .localCheckpoint(eager=False)
-        )
-    out = rows[0]
-    for r in rows[1:]:
-        out = out.unionByName(r)
-    return out
+        e = peel(e, keep, "a", "b", bound)
+    return _union(*rows)

@@ -466,6 +466,9 @@ def duplicate_clusters(
     way; differential-locked in tests/test_property_dedup.py and the
     streaming split-invariance suite). ``KB_CC_LOCAL_THRESHOLD`` overrides
     the gate; 0 forces the distributed kernel (tests lock both paths).
+
+    Both paths return one row per doc, and every cluster id is a doc: a
+    pair naming an id absent from ``docs`` is ignored.
     """
     from kinbaku_spark.knobs import env_int
     from kinbaku_spark.operators.cc_kernel import min_label_fixpoint
@@ -489,6 +492,25 @@ def duplicate_clusters(
     n_edges = und.count()
     threshold = env_int("KB_CC_LOCAL_THRESHOLD", 100000)
     if threshold and n_edges <= threshold:
+        from pyspark.sql.types import StructField, StructType
+
+        key_t = docs.schema[id_col].dataType
+        # a pair naming an id absent from docs is no edge, as in the
+        # distributed kernel: the collect also brings back which endpoints
+        # are docs (one semi-join of docs against the broadcast tail-sized
+        # endpoint list)
+        ends = F.broadcast(und.select(F.col("u").alias("__cc_k")))
+        is_doc = (
+            docs.select(F.col(id_col).alias("u"))
+            .join(ends, F.col("u") == F.col("__cc_k"), "left_semi")
+            .select("u", F.lit(None).cast(key_t).alias("v"))
+        )
+        rows = (
+            und.withColumn("pair", F.lit(True))
+            .unionByName(is_doc, allowMissingColumns=True)
+            .collect()
+        )
+        members = {r.u for r in rows if not r.pair}
         parent: dict = {}
 
         def find(x):
@@ -497,7 +519,9 @@ def duplicate_clusters(
                 x = parent[x]
             return x
 
-        for r in und.collect():
+        for r in rows:
+            if not (r.pair and r.u in members and r.v in members):
+                continue
             parent.setdefault(r.u, r.u)
             parent.setdefault(r.v, r.v)
             ru, rv = find(r.u), find(r.v)
@@ -508,14 +532,7 @@ def duplicate_clusters(
             root = find(x)
             if root not in comp_min or x < comp_min[root]:
                 comp_min[root] = x
-        from pyspark.sql.types import StructField, StructType
-
-        schema = StructType(
-            [
-                StructField("__cc_k", docs.schema[id_col].dataType),
-                StructField("__cc_m", docs.schema[id_col].dataType),
-            ]
-        )
+        schema = StructType([StructField("__cc_k", key_t), StructField("__cc_m", key_t)])
         relabel = docs.sparkSession.createDataFrame(
             [(x, comp_min[find(x)]) for x in parent], schema
         )

@@ -24,7 +24,9 @@ Per-round ITERATIVE checkpoints (bounded-round peels, frontier loops)
 intentionally stay on localCheckpoint even under the flag: their blocks
 live only for the duration of one query, a stage retry recomputes them
 naturally, and paying checkpoint-filesystem I/O per round would multiply
-the round floor. The flag is for state that OUTLIVES the query.
+the round floor. The flag is for state that OUTLIVES the query. The
+per-round pin policy itself lives in operators/supersteps.py (``peel``'s
+lazy pin, ``until_stable``'s persist-then-checkpoint round).
 """
 
 from __future__ import annotations

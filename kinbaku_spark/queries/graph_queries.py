@@ -14,7 +14,8 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from kinbaku_spark.graph import Graph
 from kinbaku_spark.operators.ids import ordered_zero_ids
-from kinbaku_spark.plans.hints import broadcast_bound, maybe_broadcast, size_hint
+from kinbaku_spark.operators.supersteps import peel, propagate
+from kinbaku_spark.plans.hints import maybe_broadcast, size_hint
 from kinbaku_spark.sources.tables import (
     CUSTOMER_ORDER_EDGES_SQL,
     SUPPLIER_PART_EDGES_SQL,
@@ -1032,43 +1033,23 @@ def g_kcore(spark, sf_dir):
     if n_nodes == 0:  # empty graph: empty core, like the oracle
         return spark.createDataFrame([], "key string, deg long")
     k = edges.count() // n_nodes
-    # the keep-list is |V|-sized: hint only while |V| is under the bound
-    # (an explicit hint is never demoted by AQE — ungated it is an OOM at
-    # 10^9 nodes); past the bound the semi-joins fall back to shuffle
-    hint = size_hint(n_nodes)
-    for _ in range(KCORE_ROUNDS):
-        deg = (
+
+    def core(edges):  # (key, deg) of the nodes with total degree >= k
+        return (
             edges.select(F.col("src").alias("key"))
             .unionAll(edges.select(F.col("dst").alias("key")))
             .groupBy("key")
             .agg(F.count(F.lit(1)).alias("deg"))
+            .filter(F.col("deg") >= k)
         )
-        # keep-list PINNED before the semi-joins IN THE DEMOTED REGIME
-        # (|V| past the broadcast gate): a shuffle join against a
-        # derived-aggregate side is never skew-split (STRESS_SKEW_HUB.md /
-        # VERDICT r05 #5), so a hub node's edge partition would be stuck
-        # hot; the checkpoint makes keep a plain scan, restoring AQE's
-        # split (lazy form is enough:
-        # tests/test_skew_probe.py::test_iterative_join_sides_skew_split).
-        # While keep still broadcasts there is no skew problem and no pin
-        # — the local plan stays a 3-stage broadcast chain.
-        keep = deg.filter(F.col("deg") >= k).select("key")
-        if n_nodes >= broadcast_bound():
-            keep = keep.localCheckpoint(eager=False)
-        edges = (
-            edges.join(hint(keep), edges.src == keep.key, "left_semi")
-            .join(hint(keep), edges.dst == keep.key, "left_semi")
-            .localCheckpoint(eager=False)
-        )
-    final_deg = (
-        edges.select(F.col("src").alias("key"))
-        .unionAll(edges.select(F.col("dst").alias("key")))
-        .groupBy("key")
-        .agg(F.count(F.lit(1)).alias("deg"))
-        .filter(F.col("deg") >= k)
-        .orderBy("key")
-    )
-    return final_deg
+
+    # the keep-list is |V|-sized: peel hints it only while |V| is under
+    # the bound (an explicit hint is never demoted by AQE — ungated it is
+    # an OOM at 10^9 nodes) and pins it past the bound, where the
+    # semi-joins fall back to shuffle
+    for _ in range(KCORE_ROUNDS):
+        edges = peel(edges, core(edges).select("key"), "src", "dst", n_nodes)
+    return core(edges).orderBy("key")
 
 
 def _kcore_sql() -> str:
@@ -1201,27 +1182,22 @@ def g_sssp_bounded(spark, sf_dir):
         .persist()
     ))
     # the distance table is bounded by the reached vertex set (<= |V|):
-    # while |V| is broadcastable, ship it to every executor so the
-    # persisted edge table is scanned in place per round instead of
-    # re-shuffled; past ~5M nodes drop the hint (an EXPLICIT broadcast
-    # hint is always honored — AQE never demotes it — so gating on |V|
-    # is the scale safety, same pattern as g_pagerank)
-    hint = size_hint(_n_nodes(spark, sf_dir))
+    # propagate broadcasts it while |V| is under the gate, so the
+    # persisted edge table is scanned in place per round
+    n = _n_nodes(spark, sf_dir)
     dist = spark.createDataFrame([(SSSP_SOURCE, 0.0)], "key string, dist double")
     for _ in range(SSSP_ROUNDS):
-        cand = (
-            und.join(
-                hint(dist.select(F.col("key").alias("u2"), F.col("dist").alias("du"))),
-                und.u == F.col("u2"),
-            )
-            .select(F.col("v").alias("key"), (F.col("du") + F.col("weight")).alias("dist"))
-        )
-        dist = (
-            dist.unionAll(cand)
-            .groupBy("key")
-            .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=False)
-        )
+        # the reached set grows: the old distances ride in as extra rows
+        dist = propagate(
+            dist,
+            und,
+            src="u",
+            dst="v",
+            message=[(F.col("dist") + F.col("weight")).alias("dist")],
+            aggs=[F.min("dist").alias("dist")],
+            extra_rows=dist,
+            bound=n,
+        ).localCheckpoint(eager=False)
     return dist.orderBy("key")
 
 
@@ -1361,9 +1337,9 @@ def g_hits(spark, sf_dir):
     """
     g = _graph(spark, sf_dir)
     edges = g.edges_df.select("src", "dst")
-    # hub/auth score vectors are |V|-sized: size-gate their hints (the
-    # 1-row max aggregate in normalize stays unconditional)
-    hint = size_hint(_n_nodes(spark, sf_dir))
+    # hub/auth score vectors are |V|-sized: propagate size-gates their
+    # hints (the 1-row max aggregate in normalize stays unconditional)
+    n = _n_nodes(spark, sf_dir)
 
     def normalize(df, col):
         # pin the raw scores first: the max-aggregate AND the division both
@@ -1380,18 +1356,16 @@ def g_hits(spark, sf_dir):
     auth = edges.groupBy("dst").agg(F.count(F.lit(1)).cast("double").alias("a"))
     auth = normalize(auth.select(F.col("dst").alias("key"), "a"), "a")
     for _ in range(HITS_ROUNDS):
-        hub = (
-            edges.join(hint(auth), edges.dst == auth.key)
-            .groupBy("src")
-            .agg(F.sum("a").alias("h"))
+        hub = propagate(
+            auth, edges, src="dst", dst="src",
+            message=[F.col("a").alias("h")], aggs=[F.sum("h").alias("h")], bound=n,
         )
-        hub = normalize(hub.select(F.col("src").alias("key"), "h"), "h")
-        auth = (
-            edges.join(hint(hub), edges.src == hub.key)
-            .groupBy("dst")
-            .agg(F.sum("h").alias("a"))
+        hub = normalize(hub, "h")
+        auth = propagate(
+            hub, edges, src="src", dst="dst",
+            message=[F.col("h").alias("a")], aggs=[F.sum("a").alias("a")], bound=n,
         )
-        auth = normalize(auth.select(F.col("dst").alias("key"), "a"), "a")
+        auth = normalize(auth, "a")
     # rank on the 6dp-rounded score: raw doubles carry engine-order drift
     # in the last bits, and near-max scores tie at 6dp — rounding first
     # makes the top-k cut (ties broken on key) identical across engines
@@ -1472,39 +1446,31 @@ def g_label_propagation(spark, sf_dir):
     connected components; fixed rounds keep the oracle an exact replay and
     the lineage bounded. Returns (key, label) for every node.
 
-    Each round is one join of the label vector to the edge list plus a
-    min-aggregation — MIN over strings is order-free, so the replay is
-    exact at any scale. The per-round label table is |V|-sized and
-    broadcast; the edge table never shuffles.
+    Each round is one join of the label vector to the edge list plus one
+    min-aggregation over the node's own label and its neighbors' — MIN
+    over strings is order-free, so the replay is exact at any scale. The
+    per-round label table is |V|-sized and broadcast; the edge table never
+    shuffles.
     """
     g = _graph(spark, sf_dir)
     und = g.edges_df.select(
         F.col("src").alias("u"), F.col("dst").alias("v")
     ).unionAll(g.edges_df.select(F.col("dst"), F.col("src")))
     lab = g.nodes_df.select("key", F.col("key").alias("label"))
-    # label vector and neighbor-min table are |V|-sized: size-gate
-    hint = size_hint(_n_nodes(spark, sf_dir))
+    n = _n_nodes(spark, sf_dir)
     for _ in range(LABEL_ROUNDS):
-        neigh = (
-            und.join(
-                hint(lab.select(F.col("key").alias("u2"), "label")),
-                und.u == F.col("u2"),
-            )
-            .groupBy("v")
-            .agg(F.min("label").alias("nlabel"))
-        )
-        lab = (
-            lab.join(
-                hint(neigh), lab.key == neigh.v, "left"
-            )
-            .select(
-                "key",
-                F.least(
-                    F.col("label"), F.coalesce("nlabel", F.col("label"))
-                ).alias("label"),
-            )
-            .localCheckpoint(eager=False)
-        )
+        # LEAST(label, COALESCE(MIN(neighbor labels), label)) ≡ MIN over
+        # the self row and the neighbor labels: one aggregation, no merge
+        lab = propagate(
+            lab,
+            und,
+            src="u",
+            dst="v",
+            message=[F.col("label")],
+            aggs=[F.min("label").alias("label")],
+            self_rows=lab,
+            bound=n,
+        ).localCheckpoint(eager=False)
     return lab.orderBy("key")
 
 
@@ -1863,36 +1829,30 @@ def g_ppr_seeded(spark, sf_dir):
     """
     # the degree table is |V|-sized and the pr vector can reach |V| rows
     # once the seed's component is fully explored: size-gate both
-    hint = size_hint(_n_nodes(spark, sf_dir))
+    n = _n_nodes(spark, sf_dir)
     edges_deg = _edges_deg(spark, sf_dir)
-    seed = spark.createDataFrame(
-        [(PPR_SEED, PPR_UNIT)], "key string, pr_u long"
-    )
+    pr = spark.createDataFrame([(PPR_SEED, PPR_UNIT)], "key string, pr_u long")
     base_u = (15 * PPR_UNIT) // 100
-    pr = seed
+    seed = spark.createDataFrame([(PPR_SEED, base_u)], "key string, base long")
     for _ in range(PPR_ROUNDS):
-        contrib = (
-            edges_deg.join(
-                hint(pr.withColumnRenamed("key", "src")), "src"
-            )
-            .select(
-                F.col("dst").alias("key"),
-                F.expr("pr_u div outd").alias("c"),
-            )
-            .groupBy("key")
-            .agg(F.sum("c").alias("m"))
-            .select("key", F.expr("(85 * m) div 100").alias("part"))
-        )
-        pr = (
-            contrib.unionByName(
-                spark.createDataFrame(
-                    [(PPR_SEED, base_u)], "key string, part long"
-                )
-            )
-            .groupBy("key")
-            .agg(F.sum("part").cast("long").alias("pr_u"))
-            .localCheckpoint(eager=False)
-        )
+        # (85 · Σ msgs) div 100 + the seed's teleport mass, in ONE
+        # aggregation: the seed row sums into `b`, the messages into `m`
+        pr = propagate(
+            pr,
+            edges_deg,
+            src="src",
+            dst="dst",
+            message=[F.expr("pr_u div outd").alias("m")],
+            aggs=[F.sum("m").alias("m"), F.sum("base").alias("b")],
+            extra_rows=seed,
+            bound=n,
+        ).select(
+            "key",
+            (
+                F.coalesce(F.expr("(85 * m) div 100"), F.lit(0))
+                + F.coalesce(F.col("b"), F.lit(0))
+            ).cast("long").alias("pr_u"),
+        ).localCheckpoint(eager=False)
     return pr.select(
         "key",
         "pr_u",

@@ -41,6 +41,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from kinbaku_spark.operators.supersteps import propagate
 from kinbaku_spark.plans.hints import size_hint
 
 QUERIES: dict = {}
@@ -107,7 +108,8 @@ def g_boruvka_mst(spark: SparkSession, sf_dir: str) -> DataFrame:
     wed = _weighted_und(spark, sf_dir)
     g = _graph(spark, sf_dir)
     lab = g.nodes_df.select("key", F.col("key").alias("label"))
-    hint = size_hint(_n_nodes(spark, sf_dir))
+    n = _n_nodes(spark, sf_dir)
+    hint = size_hint(n)
 
     out = []
     for r in range(1, MST_ROUNDS + 1):
@@ -147,24 +149,13 @@ def g_boruvka_mst(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("c", F.col("c").alias("nc"))
         )
         for _ in range(MERGE_ROUNDS):
-            # one contribution stream per merge round (r08, guide §1.2):
-            # LEAST(nc, COALESCE(MIN over neighbors, nc)) ≡ MIN over the
-            # union of the self row and the neighbor contributions — every
-            # comp endpoint is a label, so the grouped domain is exactly
-            # clab's. This replaces the nb broadcast build + left join
-            # (2 exchanges/round) with 1 join + 1 aggregation, halving the
-            # per-round broadcast jobs while computing the identical
-            # bounded min-label recurrence the oracle replays.
-            contrib = comp.join(
-                hint(clab.select(F.col("c").alias("x2"), "nc")),
-                comp.x == F.col("x2"),
-            ).select(F.col("y").alias("c"), "nc")
-            clab = (
-                contrib.unionByName(clab)
-                .groupBy("c")
-                .agg(F.min("nc").alias("nc"))
-                .localCheckpoint(eager=False)
-            )
+            # MIN over the self row and the neighbor labels; every comp
+            # endpoint is a label, so the domain stays exactly clab's
+            clab = propagate(
+                clab, comp, src="x", dst="y", key="c",
+                message=[F.col("nc")], aggs=[F.min("nc").alias("nc")],
+                self_rows=clab, bound=n,
+            ).localCheckpoint(eager=False)
         lab = (
             lab.join(hint(clab), lab.label == clab.c)
             .select("key", F.col("nc").alias("label"))

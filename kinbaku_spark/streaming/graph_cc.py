@@ -196,7 +196,9 @@ def cc_ingest_batch(
     resolved = endpoints.join(labels, "key", "left").select(
         "key", F.coalesce("label", F.col("key")).alias("label")
     ).localCheckpoint(eager=True)
-    # contraction graph: one edge between the two endpoint LABELS
+    # contraction graph: one edge between the two endpoint LABELS, pinned
+    # because duplicate_clusters reads it as pairs and (through cnodes) as
+    # docs, each more than once
     lmap = hint(resolved.withColumnRenamed("key", "k"))
     contraction = (
         edges.join(lmap.select(F.col("k").alias("src"), F.col("label").alias("la")), "src")
@@ -204,6 +206,7 @@ def cc_ingest_batch(
         .filter(F.col("la") != F.col("lb"))
         .select(F.col("la").alias("lab_a"), F.col("lb").alias("lab_b"))
         .distinct()
+        .localCheckpoint(eager=False)
     )
     cnodes = contraction.select(F.col("lab_a").alias("lab")).union(
         contraction.select("lab_b")

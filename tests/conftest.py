@@ -6,7 +6,10 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from kinbaku_spark.session import get_spark
+# the session default (24g) exceeds a 15 GB host; the suite runs in 8g
+os.environ.setdefault("SPARK_DRIVER_MEM", "8g")
+
+from kinbaku_spark.session import get_spark  # noqa: E402
 
 SF_SMOKE = os.environ.get("KB_TEST_SF_DIR", "/root/testdata/sf0.001")
 SF_ORACLE = os.environ.get("KB_ORACLE_SF_DIR", "/root/testdata/sf0.001")

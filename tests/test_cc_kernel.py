@@ -153,3 +153,24 @@ def test_label_stats_stay_bounded(spark):
         "before-checkpoint fix regressed)"
     )
     assert out.agg(F.count_distinct("label").alias("n")).collect()[0]["n"] == 1
+
+
+def test_duplicate_clusters_paths_agree_on_ids_absent_from_docs(spark, monkeypatch):
+    """A pair naming an id that is not a doc is no edge: the distributed
+    kernel (KB_CC_LOCAL_THRESHOLD=0) and the serial union-find tail
+    return the same rows, one per doc, with doc ids as cluster ids — the
+    absent id neither appears nor links d2 to d4."""
+    docs = spark.createDataFrame([(f"d{i}",) for i in range(6)], ["doc_id"])
+    pairs = spark.createDataFrame(
+        [("d0", "d1"), ("d2", "a_x"), ("a_x", "d4"), ("d3", "zz")],
+        "doc_id_a string, doc_id_b string",
+    )
+
+    def run():
+        return {tuple(r) for r in duplicate_clusters(docs, pairs).collect()}
+
+    local = run()
+    monkeypatch.setenv("KB_CC_LOCAL_THRESHOLD", "0")
+    dist = run()
+    want = {("d0", "d0"), ("d1", "d0"), ("d2", "d2"), ("d3", "d3"), ("d4", "d4"), ("d5", "d5")}
+    assert dist == local == want

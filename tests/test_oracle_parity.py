@@ -55,6 +55,16 @@ SMOKE = [
     "x_dup_cluster_sizes",
     "x_soft_dedup_weights",
     "x_curate_corpus",
+    # loops built on operators/supersteps.py (g_pagerank, g_scc and
+    # g_scc_bounded are listed above)
+    "g_sssp_bounded",
+    "g_ppr_seeded",
+    "g_label_propagation",
+    "g_hits",
+    "g_kcore",
+    "g_katz_bounded",
+    "g_eigenvector_bounded",
+    "g_densest_subgraph",
 ]
 
 if os.environ.get("KB_FULL_PARITY") == "1":
