@@ -12,14 +12,14 @@ here every bulk read is declarative DataFrame algebra that Catalyst turns
 into pruned, pushed-down parquet scans, and point reads of a source go
 through its cached out-edge block):
 
-    node/has_node                 graph.py:999-1099   -> pushed-down filter
+    node/has_node                 graph.py:999-1099   -> node record cache
     edge/has_edge                 graph.py:999-1099   -> out-edge block
     neighbors                     graph.py:856-884    -> out-edge block
-    predecessors                  graph.py:856-884    -> filter + project
+    predecessors                  graph.py:856-884    -> stored in-edges + pending ops
     neighbors_from/..._from       graph.py:928-957    -> one shuffle join
     common_neighbors/preds        graph.py:959-983    -> intersect
     out_degree                    graph.py:985-997    -> out-edge block
-    in_degree                     graph.py:985-997    -> count
+    in_degree                     graph.py:985-997    -> stored in-edges + pending ops
     out_degrees/in_degrees        (extension)         -> groupBy
     nodes/edges iteration         graph.py:152-171    -> full scan
     batch_get_nodes/edges         graph.py:1101-1186  -> keyset pagination
@@ -32,22 +32,24 @@ Mutation design: the reference mutates records in place and keeps counters in
 a header (graph.py:258-276) plus 4 LRU caches (graph.py:100-106). DataFrames
 are immutable, so point mutations buffer in a driver-side delta — a dict of
 last-op-per-entity — and materialize as ONE anti-join + union per flush
-(lineage stays O(flushes), not O(ops)). A driver-side identity index (node
-keys + edge triples, the moral equivalent of the reference's preload
-(graph.py:304-306)) makes point existence checks O(1).
+(lineage stays O(flushes), not O(ops)). Reads lay the pending ops over the
+stored records, so no point read flushes.
 
-Out-edge blocks: the reference answers edge/has_edge/neighbors/out_degree
-by walking one node's out-edge tree (graph.py:472-492). The default path
-fetches that node's stored out-edges once, with one job, and keeps the
-block in an LRU bounded by ``cache_len`` total rows; pending edge ops of
-the source are laid over the block at read time, so reads never flush and
-still see the session's own writes. A point read on a hub therefore
-transfers all of the hub's out-edges once (a block over ``cache_len`` rows
-is answered but not kept). ``_flush`` drops the blocks of the sources it
-touched; bulk mutations drop them all.
+Record caches: the reference answers edge/has_edge/neighbors/out_degree by
+walking one node's out-edge tree (graph.py:472-492). Point reads here go
+through two caches of STORED records: a node LRU and per-source out-edge
+blocks, bounded together by ``cache_len`` (a block over ``cache_len`` rows
+is answered but not kept). A miss is one job: a point read on a hub
+transfers all of the hub's out-edges once. Pending ops of the entity are
+laid over the cached record at read time, so reads see the session's own
+writes. Every table rewrite (flush, remove_node, set_neighbors/
+set_predecessors) applies the same change to the cached records, so they
+stay warm; bulk mutations drop them all. ``preload()`` is the reference's
+``preload=True`` (graph.py:31,59,304-306): the same caches, filled and
+complete — unbounded, and a miss means "absent" with no job.
 
-Scale notes: the identity index is for the reference's point-op API, which is
-inherently driver-bound; at 100 TB you use the batch API (`add_edges`,
+Scale notes: the record caches are for the reference's point-op API, which
+is inherently driver-bound; at 100 TB you use the batch API (`add_edges`,
 `remove_edges`, `add_nodes`, `remove_nodes`) — pure join/union transforms with
 no driver state — and partition `edges` by `src` (plus a `dst`-bucketed copy
 for predecessor-heavy workloads, mirroring the reference's dual out/in trees).
@@ -55,10 +57,11 @@ for predecessor-heavy workloads, mirroring the reference's dual out/in trees).
 
 from __future__ import annotations
 
+import math
 from collections import OrderedDict
 from typing import Any, Iterator
 
-from pyspark.sql import DataFrame, Row, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, Row, SparkSession, functions as F
 from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
 from kinbaku_spark.exceptions import BadArgument, EdgeNotFound, NodeNotFound
@@ -139,38 +142,28 @@ class Graph:
         for c in EDGE_KEY:
             if c not in self._edges.columns:
                 raise BadArgument(f"edges DataFrame must have a '{c}' column")
-        # delta buffers: entity -> ("upsert", attrs) | ("delete", None)
+        # delta buffers: node -> ("upsert", attrs) | ("ensure", {}),
+        # edge -> ("upsert", attrs) | ("delete", None)
         self._node_ops: dict[str, tuple[str, dict | None]] = {}
         self._edge_ops: dict[tuple[str, str, int], tuple[str, dict | None]] = {}
         self._flush_every = flush_every
         self._flushes = 0
-        # identity index (reference preload, graph.py:304-306)
-        self._node_keys: set[str] | None = None
-        self._edge_keys: set[tuple[str, str, int]] | None = None
         # KV front for point reads (reference cache semantics,
-        # graph.py:100-106 cache_pos_to_node + preload): full-record driver
-        # dicts when preload() ran, else a bounded read-through node LRU
-        # and per-source out-edge blocks (src -> {(dst, type): record},
-        # the reference's per-node out-edge tree). Reads of a source are
-        # served from its block plus that source's pending edge ops, so a
-        # read never flushes. Point lookups are the one workload where a
+        # graph.py:100-106 cache_pos_to_node + preload): a read-through
+        # node LRU and per-source out-edge blocks (src -> {(dst, type):
+        # record}, the reference's per-node out-edge tree), both holding
+        # STORED records; reads lay the entity's pending ops over them, so
+        # a read never flushes. Point lookups are the one workload where a
         # distributed scan is the wrong shape (~300 ms/job vs ~ms in the
         # reference); the caches answer repeat reads at dict speed while
         # every bulk/analytic path stays distributed. ``cache_len`` bounds
-        # the node LRU's entries and the blocks' total rows.
+        # the node LRU's entries and the blocks' total rows until
+        # preload() fills both and marks them complete.
         self._cache_len = cache_len
-        self._node_rec: dict[str, dict] | None = None
-        self._edge_rec: dict[tuple[str, str, int], dict] | None = None
+        self._complete = False
         self._node_lru: OrderedDict[str, dict] = OrderedDict()
         self._blocks: OrderedDict[str, dict[tuple[str, int], dict]] = OrderedDict()
         self._block_rows = 0
-        # preload-built adjacency dicts (key -> neighbor/predecessor key
-        # sets): dict-speed neighbors()/predecessors() for the reference's
-        # flagship point read. Invalidated WHOLESALE by any mutation (the
-        # per-type multiplicity bookkeeping is not worth the bug surface)
-        # and rebuilt by the next preload().
-        self._adj: dict[str, set] | None = None
-        self._pred: dict[str, set] | None = None
         self._id_map: DataFrame | None = None
         self._id_map_count: int | None = None
         if preload:
@@ -312,49 +305,36 @@ class Graph:
 
     # -- delta machinery -----------------------------------------------------
 
-    def _ensure_index(self) -> None:
-        """PRELOAD fast path only (reference preload, graph.py:304-306):
-        collect the identity key sets into driver RAM for O(1) existence
-        checks. Valid when the key space fits one process — the reference's
-        own operating envelope. The DEFAULT path never calls this: point
-        mutations use op-log-aware existence probes (_node_exists, and
-        _edge_exists over one source's out-edge block) and flush-time
-        anti-joins, so no driver state grows with the graph size."""
-        if self._node_keys is None:
-            self._node_keys = {r[0] for r in self._nodes.select("key").collect()}
-            self._edge_keys = {
-                (r[0], r[1], r[2]) for r in self._edges.select(*EDGE_KEY).collect()
-            }
-
     def preload(self) -> None:
-        """Load every node and edge record into driver dicts — the
+        """Load every node and edge record into the point-read caches — the
         reference's ``preload=True`` semantics (graph.py:31,59,304-306: all
         node attributes loaded at open, served from the record caches).
 
-        After this, the point reads (``node``/``edge``/``has_node``/
-        ``has_edge``) answer from driver memory with NO Spark job — the
-        KV-front pattern for the one workload where a distributed scan is
-        the wrong shape. Operating envelope: the record set fits one
-        process — the reference's own envelope (its entire graph is one
-        local file). The DEFAULT path holds only the bounded node LRU and
-        out-edge blocks; bulk mutations (add_edges/remove_nodes/...)
-        invalidate the preload, and point mutations maintain it eagerly
-        (same discipline as the identity key sets)."""
+        The node LRU and the out-edge blocks are filled completely, the
+        ``cache_len`` bound is lifted and the caches are marked complete:
+        a miss then means "absent", so every point read (``node``/``edge``/
+        ``has_node``/``has_edge``/``neighbors``/``predecessors``/degrees,
+        ``n_nodes``/``n_edges``) answers from driver memory with NO Spark
+        job. Point mutations keep the caches exact; bulk mutations
+        (add_edges/remove_nodes/...) and ``empty_cache`` drop them and end
+        complete mode. Operating envelope: the record set fits one process
+        — the reference's own envelope (its entire graph is one local
+        file)."""
         self._flush()
-        self._ensure_index()
-        if self._node_rec is None:
-            self._node_rec = {r["key"]: r.asDict() for r in self._nodes.collect()}
-            self._edge_rec = {
-                (r["src"], r["dst"], r["type"]): r.asDict()
-                for r in self._edges.collect()
-            }
-        if self._adj is None:
-            adj: dict[str, set] = {}
-            pred: dict[str, set] = {}
-            for src, dst, _t in self._edge_rec:
-                adj.setdefault(src, set()).add(dst)
-                pred.setdefault(dst, set()).add(src)
-            self._adj, self._pred = adj, pred
+        if self._complete:
+            return
+        self._node_lru = OrderedDict((r["key"], r.asDict()) for r in self._nodes.collect())
+        blocks: OrderedDict[str, dict[tuple[str, int], dict]] = OrderedDict()
+        for r in self._edges.collect():
+            blocks.setdefault(r["src"], {})[(r["dst"], r["type"])] = r.asDict()
+        self._blocks = blocks
+        self._block_rows = sum(len(b) for b in blocks.values())
+        self._complete = True
+
+    @property
+    def _cap(self) -> float:
+        """The cache bound: ``cache_len``, lifted while the caches are complete."""
+        return math.inf if self._complete else self._cache_len
 
     def _blank_node_row(self, key: str) -> dict:
         """The auto-created ('ensure'd) node record: every attr NULL."""
@@ -362,75 +342,105 @@ class Graph:
         row["key"] = key
         return row
 
-    # -- read-through stored records (no driver-side key sets) ---------------
+    # -- read-through stored records ------------------------------------------
 
     def _stored_node(self, key: str) -> dict | None:
         """The stored record of ``key`` (pending ops NOT applied), or None.
-        A miss is one job, found or not; found records enter the LRU."""
+        A miss is one job, found or not, and found records enter the LRU;
+        while the caches are complete a miss is None with no job."""
         rec = _lru_get(self._node_lru, key)
-        if rec is None:
+        if rec is None and not self._complete:
             rows = self._nodes.filter(F.col("key") == key).collect()
             if not rows:
                 return None
             rec = rows[0].asDict()
-            _lru_put(self._node_lru, key, rec, self._cache_len)
+            _lru_put(self._node_lru, key, rec, self._cap)
         return rec
 
     def _block(self, src: str) -> dict[tuple[str, int], dict]:
         """The stored out-edges of ``src`` as {(dst, type): record}, pending
-        ops NOT applied. A miss is one job; the block is kept unless it
-        alone exceeds ``cache_len`` rows. An empty block counts as one row,
-        so probes of edgeless sources stay bounded too."""
+        ops NOT applied. A miss is one job (none while the caches are
+        complete: the source has no out-edges)."""
         blk = _lru_get(self._blocks, src)
         if blk is not None:
             return blk
+        if self._complete:
+            return {}
         blk = {
             (r["dst"], r["type"]): r.asDict()
             for r in self._edges.filter(F.col("src") == src).collect()
         }
-        size = max(1, len(blk))
-        if size <= self._cache_len:
-            self._blocks[src] = blk
-            self._block_rows += size
-            while self._block_rows > self._cache_len:
-                _, old = self._blocks.popitem(last=False)
-                self._block_rows -= max(1, len(old))
+        self._keep_block(src, blk)
         return blk
+
+    def _keep_block(self, src: str, blk: dict[tuple[str, int], dict]) -> None:
+        """Cache ``blk`` as the block of ``src`` unless it alone exceeds the
+        bound; least recently used blocks are evicted down to the bound. An
+        empty block counts as one row, so probes of edgeless sources stay
+        bounded too."""
+        size = max(1, len(blk))
+        if size > self._cap:
+            return
+        self._blocks[src] = blk
+        self._block_rows += size
+        while self._block_rows > self._cap:
+            _, old = self._blocks.popitem(last=False)
+            self._block_rows -= max(1, len(old))
+
+    def _edit_blocks(self, changes: dict[str, dict[tuple[str, int], dict | None]]) -> None:
+        """Apply materialized edge changes to the cached blocks: per source,
+        {(dst, type): stored record, or None for a removal}. A source with
+        no cached block is skipped, unless the caches are complete, where
+        its block starts empty."""
+        for src, edits in changes.items():
+            blk = self._blocks.pop(src, None)
+            if blk is not None:
+                self._block_rows -= max(1, len(blk))
+            elif self._complete:
+                blk = {}
+            else:
+                continue
+            for k, rec in edits.items():
+                if rec is None:
+                    blk.pop(k, None)
+                else:
+                    blk[k] = rec
+            self._keep_block(src, blk)
+
+    def _pending_over(self, keys: set, key: str, end: int) -> set[tuple[str, int]]:
+        """``keys``, the (other endpoint, type) pairs of the stored edges
+        whose endpoint ``end`` (0 = src, 1 = dst) is ``key``, with the
+        pending edge ops at that endpoint laid over them."""
+        for triple, (kind, _) in self._edge_ops.items():
+            if triple[end] == key:
+                other = (triple[1 - end], triple[2])
+                if kind == "delete":
+                    keys.discard(other)
+                else:
+                    keys.add(other)
+        return keys
 
     def _out_keys(self, src: str) -> set[tuple[str, int]]:
         """(dst, type) of every out-edge of ``src``: its block with the
         source's pending edge ops laid over it."""
-        keys = set(self._block(src))
-        for (s, d, t), (kind, _) in self._edge_ops.items():
-            if s == src:
-                if kind == "delete":
-                    keys.discard((d, t))
-                else:
-                    keys.add((d, t))
-        return keys
+        return self._pending_over(set(self._block(src)), src, 0)
 
-    def _drop_blocks(self, sources=None) -> None:
-        """Forget the blocks of ``sources`` (all blocks when None)."""
-        if sources is None:
-            self._blocks.clear()
-            self._block_rows = 0
-            return
-        for s in sources:
-            blk = self._blocks.pop(s, None)
-            if blk is not None:
-                self._block_rows -= max(1, len(blk))
+    def _in_keys(self, dst: str) -> set[tuple[str, int]]:
+        """(src, type) of every in-edge of ``dst`` with pending ops laid
+        over: a scan of the resident blocks while the caches are complete,
+        else one filter job on the stored edges."""
+        if self._complete:
+            keys = {(s, t) for s, blk in self._blocks.items() for d, t in blk if d == dst}
+        else:
+            rows = self._edges.filter(F.col("dst") == dst).select("src", "type").collect()
+            keys = {(r[0], r[1]) for r in rows}
+        return self._pending_over(keys, dst, 1)
 
     def _node_exists(self, key: str) -> bool:
-        if self._node_keys is not None:
-            return key in self._node_keys
-        op = self._node_ops.get(key)
-        if op is not None:
-            return op[0] != "delete"
-        return self._stored_node(key) is not None
+        # every pending node op ("upsert" or "ensure") leaves the node present
+        return key in self._node_ops or self._stored_node(key) is not None
 
     def _edge_exists(self, triple: tuple[str, str, int]) -> bool:
-        if self._edge_keys is not None:
-            return triple in self._edge_keys
         op = self._edge_ops.get(triple)
         if op is not None:
             return op[0] != "delete"
@@ -445,7 +455,8 @@ class Graph:
             self._flush()
 
     def _flush(self) -> None:
-        """Materialize the delta: one anti-join + union per table."""
+        """Materialize the delta: one anti-join + union per table. The
+        flushed records are applied to the caches, which stay warm."""
         if not self._dirty():
             return
         spark = self.spark
@@ -453,74 +464,80 @@ class Graph:
             # key set changes -> dense key-ordered ids change; the memoized
             # |V| must go with the map or adjacency_coo gates its broadcast
             # on a stale count (ADVICE r03)
-            if self._id_map is not None:
-                try:
-                    self._id_map.unpersist()
-                except Exception:
-                    pass
-                self._id_map = None
-            self._id_map_count = None
-            upserts = [
-                (k, attrs) for k, (op, attrs) in self._node_ops.items() if op == "upsert"
-            ]
-            ensures = [
-                (k, attrs) for k, (op, attrs) in self._node_ops.items() if op == "ensure"
-            ]
-            # upserts REPLACE the whole record, deletes drop it — both evict
-            # the stored row; "ensure" (edge-endpoint auto-create) keeps the
-            # stored row and inserts only when absent (anti-join below)
-            touched = [k for k, (op, _) in self._node_ops.items() if op != "ensure"]
+            self._drop_id_map()
             schema = _nullable(self._nodes.schema, keep={"key"})
+            # upserts REPLACE the whole record, so they evict the stored
+            # row; "ensure" (edge-endpoint auto-create) keeps the stored row
+            # and inserts only when absent
+            upserts = [
+                self._node_row(k, attrs, schema)
+                for k, (op, attrs) in self._node_ops.items()
+                if op == "upsert"
+            ]
+            ensures = [k for k, (op, _) in self._node_ops.items() if op == "ensure"]
             base = self._nodes
-            if touched:
-                touched_df = spark.createDataFrame([(k,) for k in touched], "key string")
-                base = base.join(F.broadcast(touched_df), on="key", how="left_anti")
             if upserts:
-                rows = [self._node_row(k, attrs, schema) for k, attrs in upserts]
-                base = base.unionByName(spark.createDataFrame(rows, schema))
+                touched_df = spark.createDataFrame([(r["key"],) for r in upserts], "key string")
+                base = base.join(F.broadcast(touched_df), on="key", how="left_anti")
+            inserts = []
             if ensures:
                 # insert-if-absent: one probe job finds the ensure keys that
                 # are stored, so the new plan references the stored table
                 # once (an anti-join against it here doubled the node plan
                 # on every flush)
-                ensure_df = spark.createDataFrame([(k,) for k, _ in ensures], "key string")
+                ensure_df = spark.createDataFrame([(k,) for k in ensures], "key string")
                 present = {
                     r[0]
                     for r in self._nodes.select("key")
                     .join(F.broadcast(ensure_df), on="key", how="left_semi")
                     .collect()
                 }
-                rows = [
-                    self._node_row(k, attrs, schema)
-                    for k, attrs in ensures
-                    if k not in present
-                ]
-                if rows:
-                    base = base.unionByName(spark.createDataFrame(rows, schema))
+                inserts = [self._node_row(k, None, schema) for k in ensures if k not in present]
+            if upserts or inserts:
+                base = base.unionByName(self._rows_df(upserts + inserts, schema))
             self._nodes = base
             self._node_ops = {}
+            for r in upserts + inserts:
+                _lru_put(self._node_lru, r["key"], r.asDict(), self._cap)
         if self._edge_ops:
-            touched = list(self._edge_ops)
-            upserts = [
-                (t, attrs) for t, (op, attrs) in self._edge_ops.items() if op == "upsert"
-            ]
             schema = _nullable(self._edges.schema, keep=set(EDGE_KEY))
+            upserts = {
+                t: self._edge_row(t, attrs, schema)
+                for t, (op, attrs) in self._edge_ops.items()
+                if op == "upsert"
+            }
             touched_df = spark.createDataFrame(
-                touched, "src string, dst string, type int"
+                list(self._edge_ops), "src string, dst string, type int"
             )
             base = self._edges.join(
                 F.broadcast(touched_df), on=list(EDGE_KEY), how="left_anti"
             )
             if upserts:
-                rows = [self._edge_row(t, attrs, schema) for t, attrs in upserts]
-                base = base.unionByName(spark.createDataFrame(rows, schema))
+                base = base.unionByName(self._rows_df(list(upserts.values()), schema))
             self._edges = base
-            self._drop_blocks({s for s, _, _ in self._edge_ops})
+            changes: dict[str, dict] = {}
+            for t in self._edge_ops:
+                row = upserts.get(t)
+                changes.setdefault(t[0], {})[t[1:]] = None if row is None else row.asDict()
+            self._edit_blocks(changes)
             self._edge_ops = {}
+        self._count_rewrite()
+
+    def _count_rewrite(self) -> None:
+        """Count one rewrite of the stored tables; every
+        CHECKPOINT_EVERY_FLUSHES-th lazily localCheckpoints both tables to
+        truncate the lineage of long op-logs."""
         self._flushes += 1
         if self._flushes % CHECKPOINT_EVERY_FLUSHES == 0:
             self._nodes = self._nodes.localCheckpoint(eager=False)
             self._edges = self._edges.localCheckpoint(eager=False)
+
+    def _rows_df(self, rows: list[Row], schema: StructType) -> DataFrame:
+        """Driver rows as a ONE-partition DataFrame. A rewrite unions a few
+        rows onto a stored table, and createDataFrame would spread them over
+        the default parallelism, adding that many mostly empty partitions
+        (tasks per scan) on every rewrite."""
+        return self.spark.createDataFrame(self.spark.sparkContext.parallelize(rows, 1), schema)
 
     @staticmethod
     def _node_row(key: str, attrs: dict | None, schema: StructType) -> Row:
@@ -540,19 +557,19 @@ class Graph:
 
     @property
     def n_nodes(self) -> int:
-        if self._node_keys is not None and not self._dirty():
-            return len(self._node_keys)
-        if self._node_keys is not None:
-            # counters stay exact under delta because ops are applied eagerly
-            # to the identity index
-            return len(self._node_keys)
+        if self._complete:
+            # every pending node op adds its key unless it is stored
+            return len(self._node_lru) + sum(k not in self._node_lru for k in self._node_ops)
         self._flush()
         return self._nodes.count()
 
     @property
     def n_edges(self) -> int:
-        if self._edge_keys is not None:
-            return len(self._edge_keys)
+        if self._complete:
+            n = sum(len(b) for b in self._blocks.values())
+            for (s, d, t), (kind, _) in self._edge_ops.items():
+                n += (kind != "delete") - ((d, t) in self._blocks.get(s, ()))
+            return n
         self._flush()
         return self._edges.count()
 
@@ -693,33 +710,20 @@ class Graph:
         if not isinstance(key, str):
             raise BadArgument("node key must be a string")
         op = self._node_ops.get(key)
-        ensure_pending = False
-        if op is not None:
-            kind, attrs = op
-            if kind == "delete":
-                raise NodeNotFound(key)
-            if kind == "upsert":
-                # read-your-writes: same shape as a materialized row (absent
-                # attrs are NULL — upsert replaces the whole record)
-                row = {f.name: (attrs or {}).get(f.name) for f in self._nodes.schema}
-                row["key"] = key
-                return row
-            # "ensure" is insert-if-absent: a stored record keeps its attrs
-            # (reference add_edge auto-create never clobbers, graph.py:
-            # 1446-1453) — fall through to the stored lookup, and only an
-            # absent node reads back as the blank auto-created row
-            ensure_pending = True
-        if self._node_rec is not None:  # preload: dict-speed point read
-            rec = self._node_rec.get(key)
-            if rec is not None:
-                return dict(rec)
-            if ensure_pending:
-                return self._blank_node_row(key)
-            raise NodeNotFound(key)
+        if op is not None and op[0] == "upsert":
+            # read-your-writes: same shape as a materialized row (absent
+            # attrs are NULL — upsert replaces the whole record)
+            row = {f.name: (op[1] or {}).get(f.name) for f in self._nodes.schema}
+            row["key"] = key
+            return row
         rec = self._stored_node(key)
         if rec is not None:
             return dict(rec)
-        if ensure_pending:
+        if op is not None:
+            # a pending "ensure" is insert-if-absent: a stored record keeps
+            # its attrs (reference add_edge auto-create never clobbers,
+            # graph.py:1446-1453), an absent node reads back as the blank
+            # auto-created row
             return self._blank_node_row(key)
         raise NodeNotFound(key)
 
@@ -733,11 +737,6 @@ class Graph:
             row = {f.name: (attrs or {}).get(f.name) for f in self._edges.schema}
             row.update({"src": src, "dst": dst, "type": type})
             return row
-        if self._edge_rec is not None:  # preload: dict-speed point read
-            rec = self._edge_rec.get(triple)
-            if rec is None:
-                raise EdgeNotFound(triple)
-            return dict(rec)
         rec = self._block(src).get((dst, type))
         if rec is None:
             raise EdgeNotFound(triple)
@@ -766,17 +765,10 @@ class Graph:
         )
 
     def neighbors(self, key: str) -> Iterator[str]:
-        if self._adj is not None and not self._dirty():
-            yield from sorted(self._adj.get(key, ()))
-            return
         yield from sorted({dst for dst, _ in self._out_keys(key)})
 
     def predecessors(self, key: str) -> Iterator[str]:
-        if self._pred is not None and not self._dirty():
-            yield from sorted(self._pred.get(key, ()))
-            return
-        for row in self.predecessors_df(key).orderBy("key").toLocalIterator():
-            yield row[0]
+        yield from sorted({src for src, _ in self._in_keys(key)})
 
     def neighbors_from(self, keys: list[str]) -> DataFrame:
         """Batch neighbors: one broadcast join replaces N point lookups
@@ -815,7 +807,7 @@ class Graph:
         return len(self._out_keys(key))
 
     def in_degree(self, key: str) -> int:
-        return self.edges_df.filter(F.col("dst") == key).count()
+        return len(self._in_keys(key))
 
     def out_degrees(self) -> DataFrame:
         """Bulk degree table — the scale path: one shuffle for every node's
@@ -971,13 +963,6 @@ class Graph:
         if not isinstance(key, str):
             raise BadArgument("node key must be a string")
         self._node_ops[key] = ("upsert", dict(attr or {}))
-        if self._node_keys is not None:
-            self._node_keys.add(key)
-        self._node_lru.pop(key, None)
-        if self._node_rec is not None:  # upsert replaces the whole record
-            row = {f.name: (attr or {}).get(f.name) for f in self._nodes.schema}
-            row["key"] = key
-            self._node_rec[key] = row
         self._maybe_flush()
         return {"key": key, **(attr or {})}
 
@@ -986,23 +971,12 @@ class Graph:
     ) -> dict:
         # auto-create missing endpoints (graph.py:1446-1453); existing nodes
         # keep their attributes. "ensure" ops insert-if-absent at flush time
-        # (anti-join against the stored table), so no existence check — and
-        # no driver-side key set — is needed here. A pending upsert/delete
-        # for the same key wins (setdefault), preserving op order.
+        # (one probe of the stored table), so no existence check is needed
+        # here. A pending upsert for the same key wins (setdefault),
+        # preserving op order.
         for k in (src, dst):
             self._node_ops.setdefault(k, ("ensure", {}))
-            if self._node_keys is not None:
-                self._node_keys.add(k)
-            if self._node_rec is not None:  # insert-if-absent, attrs kept
-                self._node_rec.setdefault(k, self._blank_node_row(k))
         self._edge_ops[(src, dst, type)] = ("upsert", dict(attr or {}))
-        self._invalidate_adjacency()
-        if self._edge_keys is not None:
-            self._edge_keys.add((src, dst, type))
-        if self._edge_rec is not None:
-            row = {f.name: (attr or {}).get(f.name) for f in self._edges.schema}
-            row.update({"src": src, "dst": dst, "type": type})
-            self._edge_rec[(src, dst, type)] = row
         self._maybe_flush()
         return {"src": src, "dst": dst, "type": type, **(attr or {})}
 
@@ -1011,11 +985,6 @@ class Graph:
         if not self._edge_exists(triple):
             raise EdgeNotFound(triple)
         self._edge_ops[triple] = ("delete", None)
-        self._invalidate_adjacency()
-        if self._edge_keys is not None:
-            self._edge_keys.discard(triple)
-        if self._edge_rec is not None:
-            self._edge_rec.pop(triple, None)
         self._maybe_flush()
 
     def remove_node(self, key: str) -> None:
@@ -1024,34 +993,23 @@ class Graph:
         The cascade is DISTRIBUTED: pending ops flush first (preserving op
         order), then incident edges drop via a lazy filter on the edge
         table — no enumeration of incident edges on the driver, so the op
-        works at any degree. Preload key sets, when loaded, are maintained
-        for O(1) existence reuse."""
+        works at any degree. The cached records drop the node and its
+        incident edges."""
         if not self._node_exists(key):
             raise NodeNotFound(key)
-        self._invalidate_adjacency()
         self._flush()
         self._edges = self._edges.filter(
             (F.col("src") != key) & (F.col("dst") != key)
         )
         self._nodes = self._nodes.filter(F.col("key") != key)
-        if self._edge_keys is not None:
-            self._edge_keys = {
-                t for t in self._edge_keys if t[0] != key and t[1] != key
-            }
-        if self._node_keys is not None:
-            self._node_keys.discard(key)
+        self._drop_id_map()
         self._node_lru.pop(key, None)
-        if self._node_rec is not None:
-            self._node_rec.pop(key, None)
-            # cascade: drop every incident edge record (same rule as the key set)
-            for t in [t for t in self._edge_rec if t[0] == key or t[1] == key]:
-                del self._edge_rec[t]
-        # the cascade reaches into other sources' blocks (edges INTO key)
-        self._drop_blocks()
-        self._flushes += 1
-        if self._flushes % CHECKPOINT_EVERY_FLUSHES == 0:
-            self._nodes = self._nodes.localCheckpoint(eager=False)
-            self._edges = self._edges.localCheckpoint(eager=False)
+        gone = {
+            s: {(d, t): None for d, t in blk if key in (s, d)}
+            for s, blk in self._blocks.items()
+        }
+        self._edit_blocks({s: edits for s, edits in gone.items() if edits})
+        self._count_rewrite()
 
     def _set_adjacent(
         self, key: str, others: list[str], type: int, direction: str
@@ -1059,85 +1017,51 @@ class Graph:
         """Shared set_neighbors/set_predecessors core (graph.py:886-905):
         make the out- (in-) neighbor set of ``key`` exactly ``others``.
         Existing edges to surviving targets keep their attributes; removed
-        targets drop; new targets are created empty, endpoints auto-created
-        — all as lazy DataFrame algebra (filter + anti-join + union), no
-        driver-side enumeration of the current adjacency."""
-        self._invalidate_adjacency()
+        targets drop; new targets are created empty, endpoints auto-created.
+        The targets already stored are found on the driver (the out-edge
+        block of ``key``, or one probe job bounded by the target count), so
+        the new plan is one filter of the stored table plus the new rows."""
         self._flush()
         this_col, other_col = ("src", "dst") if direction == "out" else ("dst", "src")
         target = sorted(set(others))
-        spark = self.spark
+        keep = set(target)
         # nodes: ensure key + all targets exist (insert-if-absent)
         for k in [key] + target:
             self._node_ops.setdefault(k, ("ensure", {}))
-            if self._node_keys is not None:
-                self._node_keys.add(k)
+        changes: dict[str, dict] = {}
+        if direction == "out":
+            stored = {d for d, t in self._block(key) if t == type}
+            changes[key] = {(d, type): None for d in stored - keep}
+        else:
+            stored = set()
+            if target:
+                probe = self._edges.filter(
+                    (F.col("dst") == key) & (F.col("type") == type) & F.col("src").isin(target)
+                )
+                stored = {r[0] for r in probe.select("src").collect()}
+            changes = {
+                s: {(key, type): None}
+                for s, blk in self._blocks.items()
+                if (key, type) in blk and s not in keep
+            }
         # edges: drop (key, v) of this type where v no longer targeted
         mine = (F.col(this_col) == key) & (F.col("type") == type)
         survives = F.col(other_col).isin(target) if target else F.lit(False)
-        kept = self._edges.filter(~mine | survives)
-        # add rows for targets not already present (attrs NULL), same as the
+        self._edges = self._edges.filter(~mine | survives)
+        # add rows for targets not already stored (attrs NULL), same as the
         # reference's add-side of the set diff
-        tgt_df = spark.createDataFrame([(v,) for v in target], f"{other_col} string")
-        missing = tgt_df.join(
-            self._edges.filter(mine).select(other_col), other_col, "left_anti"
-        )
         schema = _nullable(self._edges.schema, keep=set(EDGE_KEY))
-        new_rows = missing.select(
-            *[
-                F.lit(key).alias(f.name)
-                if f.name == this_col
-                else F.col(other_col)
-                if f.name == other_col
-                else F.lit(type).cast("int").alias("type")
-                if f.name == "type"
-                else F.lit(None).cast(f.dataType).alias(f.name)
-                for f in schema
-            ]
-        )
-        self._edges = kept.unionByName(new_rows)
-        if self._edge_keys is not None:
-            tgt = set(target)
-            if direction == "out":
-                self._edge_keys = {
-                    t
-                    for t in self._edge_keys
-                    if not (t[0] == key and t[2] == type and t[1] not in tgt)
-                } | {(key, v, type) for v in tgt}
-            else:
-                self._edge_keys = {
-                    t
-                    for t in self._edge_keys
-                    if not (t[1] == key and t[2] == type and t[0] not in tgt)
-                } | {(v, key, type) for v in tgt}
-        # preload dicts: the set-diff is driver-enumerable — surviving
-        # records keep their attrs, removed ones drop, new ones appear blank
-        # (matching the DataFrame algebra above); pending "ensure" node keys
-        # appear blank-if-absent. The in-direction touches many sources'
-        # blocks, so every block drops.
-        self._drop_blocks()
-        tgt = set(target)
-        if self._node_rec is not None:
-            for k in [key] + target:
-                self._node_rec.setdefault(k, self._blank_node_row(k))
-        if self._edge_rec is not None:
-            mine_idx, other_idx = (0, 1) if direction == "out" else (1, 0)
-            for t in [
-                t
-                for t in self._edge_rec
-                if t[mine_idx] == key and t[2] == type and t[other_idx] not in tgt
-            ]:
-                del self._edge_rec[t]
-            for v in tgt:
-                t = (key, v, type) if direction == "out" else (v, key, type)
-                if t not in self._edge_rec:
-                    row = {f.name: None for f in self._edges.schema}
-                    row.update({"src": t[0], "dst": t[1], "type": type})
-                    self._edge_rec[t] = row
-        self._flushes += 1
-        if self._flushes % CHECKPOINT_EVERY_FLUSHES == 0:
-            self._nodes = self._nodes.localCheckpoint(eager=False)
-            self._edges = self._edges.localCheckpoint(eager=False)
+        rows = [
+            self._edge_row((key, v, type) if direction == "out" else (v, key, type), None, schema)
+            for v in target
+            if v not in stored
+        ]
+        if rows:
+            self._edges = self._edges.unionByName(self._rows_df(rows, schema))
+        for r in rows:
+            changes.setdefault(r["src"], {})[(r["dst"], type)] = r.asDict()
+        self._edit_blocks(changes)
+        self._count_rewrite()
 
     def set_neighbors(self, key: str, neighbors: list[str], type: int = 0) -> None:
         """Make the out-neighbor set exactly ``neighbors`` (graph.py:886-905)."""
@@ -1146,13 +1070,13 @@ class Graph:
     def set_predecessors(self, key: str, predecessors: list[str], type: int = 0) -> None:
         self._set_adjacent(key, predecessors, type, "in")
 
-    # -- batch mutations (the scale path; no driver-side index needed) --------
+    # -- batch mutations (the scale path; no driver-side state needed) --------
 
     def add_edges(self, new_edges: DataFrame) -> None:
         """Bulk upsert on (src,dst,type): anti-join + union, endpoints
         auto-created. One shuffle; Delta-MERGE-shaped."""
         self._flush()
-        self._invalidate_index()
+        self._drop_caches()
         if "type" not in new_edges.columns:
             new_edges = new_edges.withColumn("type", F.lit(0).cast("int"))
         for c in self._edges.columns:
@@ -1175,7 +1099,7 @@ class Graph:
 
     def remove_edges(self, triples: DataFrame) -> None:
         self._flush()
-        self._invalidate_index()
+        self._drop_caches()
         if "type" not in triples.columns:
             triples = triples.withColumn("type", F.lit(0).cast("int"))
         self._edges = self._edges.join(
@@ -1184,7 +1108,7 @@ class Graph:
 
     def add_nodes(self, new_nodes: DataFrame) -> None:
         self._flush()
-        self._invalidate_index()
+        self._drop_caches()
         for c in self._nodes.columns:
             if c not in new_nodes.columns:
                 new_nodes = new_nodes.withColumn(c, F.lit(None).cast(self._nodes.schema[c].dataType))
@@ -1197,7 +1121,7 @@ class Graph:
         """Bulk node removal; cascade drops incident edges (two anti-joins
         replace the reference's 250-line BST unlink, SURVEY.md §3.4)."""
         self._flush()
-        self._invalidate_index()
+        self._drop_caches()
         k = keys.select("key")
         self._nodes = self._nodes.join(k, "key", "left_anti")
         if cascade:
@@ -1207,18 +1131,16 @@ class Graph:
                 *[c for c in self._edges.columns]
             )
 
-    def _invalidate_adjacency(self) -> None:
-        self._adj = None
-        self._pred = None
-
-    def _invalidate_index(self) -> None:
-        self._node_keys = None
-        self._edge_keys = None
-        self._node_rec = None
-        self._edge_rec = None
+    def _drop_caches(self) -> None:
+        """Forget every cached record and end complete mode: bulk mutations
+        are set algebra the caches cannot follow row by row."""
+        self._complete = False
         self._node_lru.clear()
-        self._drop_blocks()
-        self._invalidate_adjacency()
+        self._blocks.clear()
+        self._block_rows = 0
+        self._drop_id_map()
+
+    def _drop_id_map(self) -> None:
         if self._id_map is not None:
             try:
                 self._id_map.unpersist()
@@ -1232,7 +1154,7 @@ class Graph:
     def empty_cache(self) -> None:
         """Drop cached/persisted state (reference empty_cache drops its four
         LRU caches, graph.py:383-388)."""
-        self._invalidate_index()
+        self._drop_caches()
         for df in (self._nodes, self._edges):
             try:
                 df.unpersist()

@@ -1,4 +1,4 @@
-"""Integer ``KB_*`` environment knobs, parsed in one place."""
+"""``KB_*`` environment knobs, integers and flags, parsed in one place."""
 
 import os
 
@@ -12,3 +12,11 @@ def env_int(name: str, default: int) -> int:
         return default if raw is None else int(raw)
     except ValueError:
         raise BadKnob(f"{name} must be an integer, got {raw!r}") from None
+
+
+def env_flag(name: str) -> bool:
+    """Whether flag ``name`` is on: unset, ``""`` and ``"0"`` are off, ``"1"`` is on."""
+    raw = os.environ.get(name, "")
+    if raw not in ("", "0", "1"):
+        raise BadKnob(f"{name} must be 0 or 1, got {raw!r}")
+    return raw == "1"

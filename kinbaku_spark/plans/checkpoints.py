@@ -35,9 +35,11 @@ import os
 
 from pyspark.sql import DataFrame
 
+from kinbaku_spark.knobs import env_flag
+
 
 def reliable_enabled() -> bool:
-    return os.environ.get("KB_RELIABLE_CHECKPOINT", "") == "1"
+    return env_flag("KB_RELIABLE_CHECKPOINT")
 
 
 def pin(df: DataFrame, eager: bool = True) -> DataFrame:

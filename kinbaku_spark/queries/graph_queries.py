@@ -89,17 +89,9 @@ def _n_nodes(spark: SparkSession, sf_dir: str) -> int:
     return _graph_state(spark, sf_dir, "n_nodes", lambda: _cached(spark, sf_dir)[0].count())
 
 
-def _graph(spark: SparkSession, sf_dir: str, with_index: bool = False) -> Graph:
+def _graph(spark: SparkSession, sf_dir: str) -> Graph:
     nodes, edges = _cached(spark, sf_dir)
-    g = Graph(spark, nodes=nodes, edges=edges)
-    if with_index:
-        def build():
-            g._ensure_index()
-            return frozenset(g._node_keys), frozenset(g._edge_keys)
-
-        node_keys, edge_keys = _graph_state(spark, sf_dir, "index_keys", build)
-        g._node_keys, g._edge_keys = set(node_keys), set(edge_keys)
-    return g
+    return Graph(spark, nodes=nodes, edges=edges)
 
 
 def _edges_deg(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -383,7 +375,7 @@ FROM g_edges e JOIN ids s ON e.src = s.key JOIN ids t ON e.dst = t.key
 # -- M1: add_node upsert (replace-whole-record semantics, graph.py:1385-1405) ---
 
 def m_add_node_upsert(spark, sf_dir):
-    g = _graph(spark, sf_dir, with_index=True)
+    g = _graph(spark, sf_dir)
     g.add_node("S1", {"index": -1, "name": "updated", "age": 99, "score": 1.5})
     return g.nodes_df
 
@@ -398,7 +390,7 @@ SELECT 'S1', CAST(-1 AS BIGINT), 'updated', 99, 1.5
 # -- M2: add_edge with endpoint auto-create (graph.py:1446-1453) -----------------
 
 def m_add_edge_autocreate(spark, sf_dir):
-    g = _graph(spark, sf_dir, with_index=True)
+    g = _graph(spark, sf_dir)
     g.add_edge("S1", "NEW_PART_X", {"weight": 0.5})
     return g.edges_df.select("src", "dst", "type", "weight")
 
@@ -413,7 +405,7 @@ SELECT 'S1', 'NEW_PART_X', 0, 0.5
 # -- M3: remove_edge --------------------------------------------------------------
 
 def m_remove_edge(spark, sf_dir):
-    g = _graph(spark, sf_dir, with_index=True)
+    g = _graph(spark, sf_dir)
     victim = g.edges_df.filter(F.col("src") == "S1").agg(F.min("dst")).collect()[0][0]
     g.remove_edge("S1", victim)
     return g.edges_df.filter(F.col("src") == "S1").select("src", "dst", "type", "weight")
@@ -428,7 +420,7 @@ WHERE src = 'S1' AND dst <> (SELECT min(dst) FROM g_edges WHERE src = 'S1')
 # -- M4: remove_node cascades incident edges (graph.py:1543-1563) -----------------
 
 def m_remove_node_cascade(spark, sf_dir):
-    g = _graph(spark, sf_dir, with_index=True)
+    g = _graph(spark, sf_dir)
     g.remove_node("S1")
     n = g.nodes_df.agg(F.count(F.lit(1)).alias("n_nodes"))
     e = g.edges_df.agg(F.count(F.lit(1)).alias("n_edges"))
@@ -444,7 +436,7 @@ SELECT (SELECT COUNT(*) FROM g_nodes WHERE key <> 'S1') AS n_nodes,
 # -- M5/M6: declarative neighbor-set replacement (graph.py:886-926) ----------------
 
 def m_set_neighbors(spark, sf_dir):
-    g = _graph(spark, sf_dir, with_index=True)
+    g = _graph(spark, sf_dir)
     keep = g.edges_df.filter(F.col("src") == "S1").agg(F.min("dst")).collect()[0][0]
     # keep is None on an empty graph: set only the new target (the SQL
     # oracle's first branch matches nothing on NULL the same way)
@@ -461,7 +453,7 @@ SELECT 'S1', 'NEW_PART_Y', 0, CAST(NULL AS DOUBLE)
 
 
 def m_set_predecessors(spark, sf_dir):
-    g = _graph(spark, sf_dir, with_index=True)
+    g = _graph(spark, sf_dir)
     keep = g.edges_df.filter(F.col("dst") == "P1").agg(F.min("src")).collect()[0][0]
     g.set_predecessors("P1", ([keep] if keep is not None else []) + ["NEW_SUPP_Z"])
     return g.edges_df.filter(F.col("dst") == "P1").select("src", "dst", "type", "weight")

@@ -11,10 +11,9 @@ parquet scans (only the 3-4 referenced columns are read).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from kinbaku_spark.knobs import env_flag
 from kinbaku_spark.state import fingerprint, shared
 
 TABLE_NAMES = [
@@ -43,7 +42,7 @@ TABLE_NAMES = [
 # picks. At cluster scale the same role is played by multi-row-group files
 # + executor/OS page cache; correctness paths never depend on this flag.
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    if os.environ.get("KB_CACHE_TABLES") != "1":
+    if not env_flag("KB_CACHE_TABLES"):
         return _read_table(spark, sf_dir, name)
 
     def build() -> DataFrame:

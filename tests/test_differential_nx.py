@@ -242,34 +242,50 @@ def test_set_adjacent_differential_no_preload(spark):
     assert g.edge("v0", "v1")["weight"] == 1.0
 
 
-def test_oplog_replay_point_reads_through_record_cache(spark):
-    """Round-3 KV front: the interleaved op-log with node()/edge()/
-    has_node()/has_edge() point reads woven BETWEEN mutations, so the
-    preloaded record dicts, adjacency invalidation, and the op-log
-    read-your-writes path all answer mid-stream — parity vs NetworkX at
-    every step, then post-flush record parity and a fresh-preload
-    equivalence check."""
+@pytest.mark.parametrize("preload", [True, False], ids=["preload", "default"])
+def test_oplog_replay_point_reads_through_record_cache(spark, preload):
+    """Round-3 KV front: the interleaved op-log (edge adds/removes, node
+    removes, set_neighbors/set_predecessors) with point reads woven BETWEEN
+    mutations, so the record caches, the maintenance every rewrite applies
+    to them, and the op-log read-your-writes path all answer mid-stream —
+    parity vs NetworkX at every step, in both modes, then post-flush
+    parity and a fresh-preload equivalence check of every cached record."""
     rng = random.Random(13)
-    g = Graph(spark, preload=True)
+    g = Graph(spark, preload=preload)
     nxg = nx.DiGraph()
     for i in range(200):
         p = rng.random()
         u, v = str(rng.randrange(25)), str(rng.randrange(25))
-        if p < 0.55:
+        if p < 0.5:
             g.add_edge(u, v)
             nxg.add_edge(u, v)
-        elif p < 0.75 and nxg.has_edge(u, v):
+        elif p < 0.65 and nxg.has_edge(u, v):
             g.remove_edge(u, v)
             nxg.remove_edge(u, v)
-        elif p >= 0.75 and nxg.has_node(u):
+        elif 0.65 <= p < 0.8 and nxg.has_node(u):
             g.remove_node(u)
             nxg.remove_node(u)
+        elif p >= 0.8:
+            targets = [str(rng.randrange(25)) for _ in range(rng.randrange(4))]
+            nxg.add_nodes_from([u, *targets])
+            if p < 0.9:
+                g.set_neighbors(u, targets)
+                nxg.remove_edges_from(list(nxg.out_edges(u)))
+                nxg.add_edges_from((u, t) for t in targets)
+            else:
+                g.set_predecessors(u, targets)
+                nxg.remove_edges_from(list(nxg.in_edges(u)))
+                nxg.add_edges_from((t, u) for t in targets)
         w = str(rng.randrange(25))
         assert g.has_node(w) == nxg.has_node(w), (i, w)
         x, y = str(rng.randrange(25)), str(rng.randrange(25))
         assert g.has_edge(x, y) == nxg.has_edge(x, y), (i, x, y)
         if nxg.has_node(w):
             assert g.node(w)["key"] == w, (i, w)
+            assert list(g.neighbors(w)) == sorted(nxg.successors(w)), (i, w)
+            assert list(g.predecessors(w)) == sorted(nxg.predecessors(w)), (i, w)
+            assert g.out_degree(w) == nxg.out_degree(w), (i, w)
+            assert g.in_degree(w) == nxg.in_degree(w), (i, w)
         else:
             with pytest.raises(NodeNotFound):
                 g.node(w)
@@ -279,17 +295,25 @@ def test_oplog_replay_point_reads_through_record_cache(spark):
         else:
             with pytest.raises(EdgeNotFound):
                 g.edge(x, y)
+        assert g.n_nodes == nxg.number_of_nodes(), i
+        assert g.n_edges == nxg.number_of_edges(), i
     g._flush()
-    # post-flush, the eagerly-maintained record dicts still answer
+    # post-flush, the maintained caches still answer
     for n in list(nxg.nodes):
         assert g.node(n)["key"] == n
     for a, b in list(nxg.edges)[:25]:
         assert g.edge(a, b)["src"] == a
     assert set(g.nodes) == set(nxg.nodes)
     assert set(g.edges) == set(nxg.edges)
-    # a from-scratch preload over the flushed tables equals the maintained
-    # state: same record keys, same adjacency answers
+    # a from-scratch preload over the flushed tables holds the same records
+    # as every cached entry of the maintained state (all of them, when
+    # complete), and answers the same adjacency
     g2 = Graph(spark, nodes=g.nodes_df, edges=g.edges_df, preload=True)
-    assert set(g2._node_rec) == set(g._node_rec or g2._node_rec)
+    assert set(g2._node_lru) == set(nxg.nodes)
+    assert all(g2._node_lru[k] == rec for k, rec in g._node_lru.items())
+    assert all(g2._blocks.get(s, {}) == blk for s, blk in g._blocks.items())
+    if preload:
+        assert set(g._node_lru) == set(g2._node_lru)
+        assert {s for s, blk in g._blocks.items() if blk} == set(g2._blocks)
     for n in list(nxg.nodes)[:10]:
         assert set(g2.neighbors(n)) == set(nxg.successors(n)), n

@@ -55,11 +55,14 @@ def test_autocreate_endpoints(g):
 def test_remove_node_cascade(g):
     g.add_edge("b", "a")
     g.add_edge("a", "a")  # self-loop
+    assert [r["key"] for r in g.node_id_map().orderBy("id").collect()] == ["a", "b"]
     g.remove_node("a")
     assert not g.has_node("a")
     assert g.n_edges == 0
     with pytest.raises(NodeNotFound):
         g.node("a")
+    # the dense key-ordered ids follow the removal
+    assert [r["key"] for r in g.node_id_map().orderBy("id").collect()] == ["b"]
 
 
 def test_dunder_sugar(g):

@@ -65,6 +65,13 @@ SMOKE = [
     "g_katz_bounded",
     "g_eigenvector_bounded",
     "g_densest_subgraph",
+    # point mutations on the record-cache path (graph.Graph)
+    "m_add_node_upsert",
+    "m_add_edge_autocreate",
+    "m_remove_edge",
+    "m_remove_node_cascade",
+    "m_set_neighbors",
+    "m_set_predecessors",
 ]
 
 if os.environ.get("KB_FULL_PARITY") == "1":

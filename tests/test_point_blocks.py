@@ -3,13 +3,16 @@ has_edge, neighbors and out_degree answer from one cached block of the
 source's stored out-edges (the reference's per-node out-edge tree,
 graph.py:472-492) with the source's pending edge ops laid over it, so a
 read never flushes. Covers read-your-writes, the job count of hits and
-misses, coherence under every mutation class, the cache_len row bound, and
-the node plan's size across repeated flushes."""
+misses, blocks kept warm and exact across flushes and every other
+rewrite, the cache_len row bound, and the plan size across repeated
+flushes and set_neighbors/set_predecessors calls."""
 
 from __future__ import annotations
 
 import inspect
 import itertools
+import pathlib
+import re
 import time
 from collections import OrderedDict
 
@@ -119,37 +122,51 @@ def test_one_job_per_miss_zero_per_hit(spark, g):
     assert _jobs(spark, lambda: g.node("c")["name"]) == ("Cara", 0)
 
 
-def test_flush_drops_only_touched_blocks(g):
+def test_flush_keeps_touched_blocks_warm(spark, g):
     assert g.out_degree("a") == 4 and g.out_degree("b") == 1
     g.add_edge("a", "d", {"weight": 8.0})
+    g.remove_edge("a", "c")
     g._flush()
-    assert "a" not in g._blocks and "b" in g._blocks
-    assert list(g.neighbors("a")) == ["a", "b", "c", "d"]
-    assert g.edge("a", "d")["weight"] == 8.0
+    # the flushed ops were applied to a's block, which stays cached
+    assert set(g._blocks["a"]) == {("a", 0), ("b", 0), ("b", 1), ("d", 0)}
+    assert "b" in g._blocks
+    assert _jobs(spark, lambda: list(g.neighbors("a"))) == (["a", "b", "d"], 0)
+    assert _jobs(spark, lambda: g.edge("a", "d")["weight"]) == (8.0, 0)
+    assert _jobs(spark, lambda: g.has_edge("a", "c")) == (False, 0)
     assert g._block_rows == sum(max(1, len(b)) for b in g._blocks.values())
 
 
-def test_remove_node_cascade_reaches_other_blocks(g):
-    assert g.has_edge("a", "c") and g.has_edge("b", "c")
+def test_remove_node_cascade_reaches_other_blocks(spark, g):
+    assert g.has_edge("a", "c") and g.has_edge("b", "c") and g.out_degree("c") == 1
     g.remove_node("c")
-    assert not g._blocks and g._block_rows == 0
-    assert list(g.neighbors("a")) == ["a", "b"]
-    assert not g.has_edge("b", "c")
-    assert g.out_degree("b") == 0
+    # the cascade is applied to every cached block, which stay cached
+    assert set(g._blocks) == {"a", "b", "c"}
+    assert g._block_rows == sum(max(1, len(b)) for b in g._blocks.values())
+    for read, want in (
+        (lambda: list(g.neighbors("a")), ["a", "b"]),
+        (lambda: g.has_edge("b", "c"), False),
+        (lambda: g.out_degree("b"), 0),
+        (lambda: g.out_degree("c"), 0),
+    ):
+        assert _jobs(spark, read) == (want, 0)
     with pytest.raises(EdgeNotFound):
         g.edge("a", "c")
 
 
-def test_set_adjacent_keeps_blocks_coherent(g):
+def test_set_adjacent_keeps_blocks_coherent(spark, g):
     assert g.out_degree("a") == 4 and g.out_degree("b") == 1
     g.set_neighbors("a", ["d"])  # type 0 only: a->b of type 1 stays
-    assert list(g.neighbors("a")) == ["b", "d"]
+    assert _jobs(spark, lambda: list(g.neighbors("a"))) == (["b", "d"], 0)
     assert g.out_degree("a") == 2
     assert g.edge("a", "b", 1)["weight"] == 2.0
     g.set_predecessors("c", ["a"])  # drops b->c from b's cached block
-    assert not g.has_edge("b", "c")
+    assert _jobs(spark, lambda: g.has_edge("b", "c")) == (False, 0)
     assert g.has_edge("a", "c") and g.edge("a", "c")["weight"] is None
-    assert g.out_degree("b") == 0
+    assert _jobs(spark, lambda: g.out_degree("b")) == (0, 0)
+    assert list(g.predecessors("c")) == ["a"]
+    assert set(g.edges) == {("a", "b"), ("a", "c"), ("a", "d"), ("c", "a")} | {
+        ("hub", f"x{i}") for i in range(10)
+    }
 
 
 def test_bulk_mutations_keep_blocks_coherent(spark, g):
@@ -196,6 +213,39 @@ def test_one_edge_record_cache(spark):
     assert "_edge_lru" not in inspect.getsource(graph_mod)
     caches = sorted(k for k, v in vars(Graph(spark)).items() if isinstance(v, OrderedDict))
     assert caches == ["_blocks", "_node_lru"]
+    # preload fills the same two caches: no other record or key structure
+    g = Graph(spark, preload=True)
+    g.add_edge("a", "b")
+    g.remove_node("a")
+    held = {k for k, v in vars(g).items() if isinstance(v, (dict, set, frozenset))}
+    assert held - {"_node_ops", "_edge_ops"} == {"_blocks", "_node_lru"}
+
+
+def test_preload_only_structures_are_gone():
+    """One point-read cache for both modes: the preload-only driver
+    structures and the query layer's key-index path do not come back."""
+    root = pathlib.Path(graph_mod.__file__).parent
+    names = (
+        "_node_keys", "_edge_keys", "_node_rec", "_edge_rec", "_adj", "_pred",
+        "_ensure_index", "_invalidate_adjacency",
+    )
+    src = (root / "graph.py").read_text()
+    assert [n for n in names if re.search(rf"\b{n}\b", src)] == []
+    queries = "".join(p.read_text() for p in (root / "queries").glob("*.py"))
+    assert "with_index" not in queries and "index_keys" not in queries
+
+
+def test_rewrites_add_one_partition_per_union(spark, tables):
+    g = Graph(spark, nodes=tables[0], edges=tables[1])
+
+    def parts():
+        return g._nodes.rdd.getNumPartitions(), g._edges.rdd.getNumPartitions()
+
+    nodes0, edges0 = parts()
+    for i in range(3):
+        g.add_edge("a", f"p{i}")  # one new node row, one new edge row
+        g._flush()
+    assert parts() == (nodes0 + 3, edges0 + 3)
 
 
 def _leaves(df) -> int:
@@ -218,3 +268,26 @@ def test_repeated_flushes_grow_node_plan_linearly(spark, tables):
     assert g.node("new3")["name"] is None
     assert g.node("up5")["name"] == "U5"
     assert g.nodes_df.count() == 15 + 14
+
+
+def test_repeated_set_adjacent_grows_edge_plan_linearly(spark, tables, monkeypatch):
+    # each call flushes and rewrites the edge table: keep the periodic
+    # checkpoint out of the measured window
+    monkeypatch.setattr(graph_mod, "CHECKPOINT_EVERY_FLUSHES", 10**6)
+    g = Graph(spark, nodes=tables[0], edges=tables[1])
+    leaves = []
+    for i in range(7):
+        if i % 2 == 0:
+            g.set_neighbors("a", ["b", "c", f"new{i}"])
+        else:
+            g.set_predecessors("c", ["a", f"new{i}"])
+        leaves.append(_leaves(g._edges))
+    steps = {b - a for a, b in zip(leaves, leaves[1:])}
+    assert len(steps) == 1, leaves  # the same growth per call
+    assert leaves[-1] <= leaves[0] + 6 * 2, leaves
+    # the set differences held: surviving attrs kept, new targets blank
+    assert list(g.neighbors("a")) == ["b", "c", "new6"]
+    assert g.edge("a", "b", 1)["weight"] == 2.0
+    assert g.edge("a", "c")["weight"] == 4.0
+    assert list(g.predecessors("c")) == ["a", "new5"]
+    assert g.edge("new5", "c")["weight"] is None

@@ -1,9 +1,13 @@
-"""Point-read KV front (VERDICT r02 #6): Graph.preload() record dicts and
-the read-through LRU must answer node/edge lookups at driver-dict speed
-while staying coherent with every mutation class — the same eager-maintain
-discipline as the identity key sets. Reference parity: preload=True loads
-all node attributes at open (reference graph.py:31,59,304-306); the LRU
-mirrors its cache_pos_to_node (graph.py:100-106)."""
+"""Point-read KV front (VERDICT r02 #6): one pair of record caches — the
+node LRU and the per-source out-edge blocks — serves both Graph modes.
+By default they read through, one job per miss; preload() fills them and
+marks them complete, so every point read answers at driver-dict speed
+with no job. Either way the caches stay exact under every point mutation
+(flushed ops, remove_node and set_neighbors are applied to the cached
+records), pending ops are laid over them at read time, and bulk mutations
+drop them. Reference parity: preload=True loads all node attributes at
+open (reference graph.py:31,59,304-306); the LRU mirrors its
+cache_pos_to_node (graph.py:100-106)."""
 
 from __future__ import annotations
 
@@ -13,6 +17,7 @@ import pytest
 
 from kinbaku_spark.exceptions import EdgeNotFound, NodeNotFound
 from kinbaku_spark.graph import Graph
+from test_point_blocks import _jobs
 
 
 @pytest.fixture
@@ -96,15 +101,15 @@ def test_preload_coherent_under_set_neighbors(g):
 
 def test_bulk_mutations_invalidate_preload(g, spark):
     g.preload()
-    assert g._node_rec is not None
+    assert g._complete and len(g._node_lru) == 3
     g.add_edges(
         spark.createDataFrame(
             [("c", "e", 0, 3.5)], "src string, dst string, type int, weight double"
         )
     )
-    # bulk paths are set algebra on DataFrames — the driver dicts cannot be
-    # maintained per-row, so they drop and point reads fall back distributed
-    assert g._node_rec is None and g._edge_rec is None
+    # bulk paths are set algebra on DataFrames — the cached records cannot
+    # be maintained per-row, so they drop and point reads read through
+    assert not g._complete and not g._node_lru and not g._blocks
     assert g.edge("c", "e")["weight"] == 3.5
     assert g.node("e")["name"] is None
     # preload can be rebuilt after the bulk load
@@ -156,13 +161,65 @@ def test_preload_adjacency_point_reads(g):
         list(g.neighbors("a"))
         list(g.predecessors("c"))
     assert time.monotonic() - t0 < 1.0
-    # any mutation drops the adjacency dicts; the distributed path answers
+    # point mutations keep the caches complete; pending ops lay over them
     g.add_edge("a", "c")
-    assert g._adj is None
+    assert g._complete
     assert list(g.neighbors("a")) == ["b", "c"]
-    # rebuildable
+    # preload again is a no-op on complete caches
     g.preload()
     assert list(g.neighbors("a")) == ["b", "c"]
     g.set_neighbors("a", ["c"])
-    assert g._adj is None
+    assert g._complete
     assert list(g.neighbors("a")) == ["c"]
+
+
+def test_preload_point_reads_run_no_job_after_mutations(spark, g):
+    g.preload()
+    g.add_edge("a", "d", {"weight": 4.5})
+    g.add_node("b", {"name": "Bea"})
+    g._flush()
+    g.add_edge("c", "a")
+    g.remove_edge("b", "c")
+    g.remove_node("c")  # flushes the ops above, then cascades
+    g.set_neighbors("d", ["a", "e"])
+    g.set_predecessors("b", ["e"])
+    g.add_edge("e", "b", {"weight": 0.5})  # left pending
+    reads = [
+        (lambda: g.node("a")["name"], "Alice"),
+        (lambda: g.node("b")["name"], "Bea"),
+        (lambda: g.node("e")["name"], None),
+        (lambda: g.has_node("c"), False),
+        (lambda: g.edge("a", "d")["weight"], 4.5),
+        (lambda: g.edge("e", "b")["weight"], 0.5),
+        (lambda: g.has_edge("a", "b"), False),
+        (lambda: g.has_edge("d", "a"), True),
+        (lambda: list(g.neighbors("a")), ["d"]),
+        (lambda: list(g.neighbors("d")), ["a", "e"]),
+        (lambda: list(g.predecessors("a")), ["d"]),
+        (lambda: list(g.predecessors("b")), ["e"]),
+        (lambda: g.out_degree("e"), 1),
+        (lambda: g.in_degree("e"), 1),
+        (lambda: g.in_degree("c"), 0),
+        (lambda: g.n_nodes, 4),
+        (lambda: g.n_edges, 4),
+    ]
+    for read, want in reads:
+        assert _jobs(spark, read) == (want, 0)
+    with pytest.raises(NodeNotFound):
+        _jobs(spark, lambda: g.node("c"))
+    # the stored tables agree with the caches
+    assert set(g.edges) == {("a", "d"), ("d", "a"), ("d", "e"), ("e", "b")}
+    assert sorted(g.nodes) == ["a", "b", "d", "e"]
+
+
+def test_in_edge_reads_lay_pending_ops_over_stored_edges(spark, g):
+    assert list(g.predecessors("b")) == ["a"] and g.in_degree("c") == 1
+    g.add_edge("c", "b")
+    g.add_edge("a", "c", type=1)
+    g.remove_edge("a", "b")
+    pending = dict(g._edge_ops)
+    assert _jobs(spark, lambda: list(g.predecessors("b"))) == (["c"], 1)
+    assert _jobs(spark, lambda: g.in_degree("b")) == (1, 1)
+    assert _jobs(spark, lambda: g.in_degree("c")) == (2, 1)
+    assert _jobs(spark, lambda: list(g.predecessors("c"))) == (["a", "b"], 1)
+    assert g._edge_ops == pending and g._flushes == 0
