@@ -1,7 +1,7 @@
 """Reusable bounded graph-analytics operators over plain edge DataFrames:
 FW-BW min-label strongly connected components, integer-exact Katz power
 iteration, walk-count eigenvector estimates, and Charikar densest-subgraph
-peeling. The registry queries (queries/graphmetrics_ext4.py) and the Graph
+peeling. The registry queries (queries/graph_metrics.py) and the Graph
 facade methods both delegate here, so the algorithms are library API —
 callable on ANY (src, dst) edge table — not query-file one-offs.
 
@@ -9,7 +9,7 @@ The reference (kerighan/kinbaku) has no analytics surface (SURVEY.md §2.4);
 this extends the engine the way NetworkX extends a dict-of-dicts.
 
 All determinism/scale contracts are documented on the query module
-(graphmetrics_ext4.py): integer-exact arithmetic throughout, MIN-label
+(graph_metrics.py): integer-exact arithmetic throughout, MIN-label
 order-freedom, per-round size-gated broadcasts, fixed round budgets. The
 rounds themselves are operators/supersteps.py shapes: ``propagate`` for
 the label, Katz and walk rounds, ``peel`` for the edge-set shrinks, and
@@ -430,7 +430,7 @@ def katz_scores(
 ) -> DataFrame:
     """Katz centrality (α = 1/scale, β = 1) on the symmetrized edge table,
     integer-exact: returns (key, katz_scaled BIGINT, katz double) with
-    katz_scaled = scale^rounds · katz exactly (graphmetrics_ext4 contract).
+    katz_scaled = scale^rounds · katz exactly (graph_metrics contract).
     """
     s = _walk_sums(edges, rounds, nodes, bound_rows, lambda t: scale**t)
     return s.select(
@@ -448,7 +448,7 @@ def walk_counts(
 ) -> DataFrame:
     """Exact length-``rounds`` walk counts on the symmetrized edge table
     (w = A^T·1): (key, walks BIGINT) — the un-normalized eigenvector-
-    centrality power iteration (graphmetrics_ext4 contract)."""
+    centrality power iteration (graph_metrics contract)."""
     w = _walk_sums(edges, rounds, nodes, bound_rows, lambda t: 0)
     return w.select("key", F.col("x").alias("walks"))
 
@@ -461,7 +461,7 @@ def densest_subgraph_trace(
     """Charikar ε-peel (ε = 0.1) density trace over a (src, dst) edge set
     treated as undirected simple edges: PEEL fixed rounds of (round,
     n_nodes, n_edges, density_ppm), low-degree nodes removed per round
-    (graphmetrics_ext4 contract — the max row 2(1+ε)-approximates the
+    (graph_metrics contract — the max row 2(1+ε)-approximates the
     densest subgraph)."""
     bound = _bound(edges, bound_rows)
     e = edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))

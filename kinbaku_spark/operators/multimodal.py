@@ -49,17 +49,6 @@ def decode_audio(payload: bytes):
     return CODECS["decode_wav"](payload)
 
 
-def _fake_image_dims(n_bytes: int) -> tuple[int, int]:
-    """Deterministic stand-in: dimensions derived from payload size."""
-    return (n_bytes % 512 + 16, (n_bytes // 7) % 512 + 16)
-
-
-def _checksum(payload: bytes) -> int:
-    """Cheap deterministic checksum (sum of bytes) — stands in for a
-    perceptual hash."""
-    return int(sum(payload))
-
-
 def with_binary_payload(
     df: DataFrame, source_col: str = "text", payload_col: str = "payload"
 ) -> DataFrame:
@@ -265,7 +254,6 @@ def video_frame_samples(
 
 
 PHASH_SCHEMA = "doc_id long, phash long"
-PHASH_SAMPLES = 61  # 61 sampled bytes -> 60 gradient bits
 PHASH_BANDS = 4     # 4 x 15-bit bands: hamming <= 3 pairs share a band
 
 

@@ -54,6 +54,20 @@ def cosine(a: Column, b: Column) -> Column:
 # Literal-query fast path: pure-Python query math + single-parse SQL exprs
 # ---------------------------------------------------------------------------
 
+def _lit_vec(vals: list[int]) -> Column:
+    return F.array(*[F.lit(int(v)).cast("long") for v in vals])
+
+
+def _l2_lit(vec: Column, cent: list[int]) -> Column:
+    """Exact integer squared L2 between a micro-unit column vector and a
+    literal centroid."""
+    return F.aggregate(
+        F.zip_with(vec, _lit_vec(cent), lambda a, b: (a - b) * (a - b)),
+        F.lit(0).cast("long"),
+        lambda acc, x: acc + x,
+    )
+
+
 def py_dot(a: list[float], b: list[float]) -> float:
     """Sequential left-to-right Σ a_i*b_i — bit-identical to dot_double."""
     acc = 0.0
@@ -208,7 +222,7 @@ def embedding_near_duplicates(
     :func:`embedding_near_duplicates_lsh`).
 
     The pair space is a distributed BLOCK MATRIX MULTIPLY (the proven
-    x_knn_hubness pattern, mlprep_ext.py): both sides hash into ``blocks``
+    x_knn_hubness pattern, queries/eval.py): both sides hash into ``blocks``
     row-blocks, the B x B block pairs cross-join JVM-side (Arrow transfer
     is O(n*B) vectors, never the n² pair space), and each task folds the
     dims SEQUENTIALLY (``acc += outer(x_d, y_d)``, norms accumulated once
@@ -472,7 +486,7 @@ def semantic_dedup(
     # through the interpreted expression cosine. The dim-sequential outer-
     # product fold is the SAME accumulation the SQL oracle replays —
     # proven bit-identical against DuckDB by the x_knn_hubness block
-    # kernel (queries/mlprep_ext.py). A cell must fit one task: that is
+    # kernel (queries/eval.py). A cell must fit one task: that is
     # SemDeDup's own working assumption, and max_cluster_size bounds it.
     id_type = dict(
         (f.name, f.dataType.simpleString()) for f in assigned.schema.fields

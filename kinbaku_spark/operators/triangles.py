@@ -8,12 +8,12 @@ join rows but the same arithmetic runs as B² numpy GEMMs over
     Σ_{u,v adjacent} |N(u) ∩ N(v)|  =  Σ A∘A²  =  6·T
     per-node:  Σ_v A_uv·(A²)_uv     =  (A³)_uu  =  2·T(u)
 
-Mirrors x_knn_hubness's block-multiply (queries/mlprep_ext.py):
+Mirrors x_knn_hubness's block-multiply (queries/eval.py):
 row-blocks by id % B, JVM crossJoin of the B² block pairs, one int64
 GEMM per task, the driver sees B² partial rows. Per-task memory is
 (n/B)·n bytes — B (or a column-block split) is the knob when n grows;
 for sparse-large graphs a successor-array-intersect plan (see
-queries/graphmetrics_ext.py KB_WEDGE_SAMPLE_PPM) is the right
+queries/graph_metrics.py KB_WEDGE_SAMPLE_PPM) is the right
 asymptotic instead.
 
 Ids are two-phase range ids (operators/ids.py) — dense 0..n-1, no

@@ -1,148 +1,37 @@
 """Query registry: every implemented operator exposed as a
-(spark, sf_dir) -> DataFrame callable plus, where SQL-expressible, a DuckDB
-oracle string with IDENTICAL output column names (driver contract).
+(spark, sf_dir) -> DataFrame callable plus its DuckDB oracle string with
+IDENTICAL output column names (driver contract).
 
-Submodules register into QUERIES / ORACLES at import time.
+Queries live in one module per domain (relational, graph_queries,
+graph_metrics, dedup, similarity, text, curation, stats, timeseries, eval,
+media); dedup_state and kmeans_state hold the shared engine state several
+domains read. Each domain module calls ``register(fn, oracle)`` next to
+the query it registers; importing this package imports every submodule.
 """
 
-from kinbaku_spark.queries import (  # noqa: F401
-    analytics,
-    analytics_ext,
-    audit_ext,
-    behavioral_ext,
-    curation_ext,
-    curation_ext2,
-    dedup_ext,
-    dedup_ext2,
-    drift_ext,
-    drift_ext2,
-    eval_ext,
-    eval_ext2,
-    graph_queries,
-    graphmetrics_ext,
-    graphmetrics_ext2,
-    graphmetrics_ext3,
-    graphmetrics_ext4,
-    linalg_ext,
-    media_ext,
-    mining_ext,
-    mining_ext2,
-    mlprep_ext,
-    mlprep_ext2,
-    optimizer_ext,
-    pipeline_ext,
-    pipeline_ext2,
-    pipeline_ext3,
-    pipeline_ext4,
-    pipeline_ext5,
-    profiling_ext,
-    relational,
-    relational_ext,
-    relational_ext3,
-    reshape,
-    retrieval_ext,
-    setops_ext,
-    sketches_ext,
-    stats_ext,
-    stats_ext2,
-    stats_ext3,
-    stats_ext4,
-    summary_ext,
-    sql_surface,
-    temporal,
-    timeseries,
-    timeseries_ext,
-    udf_surface,
-    window_ext,
-)
+import importlib
+import pkgutil
 
 QUERIES: dict = {}
 ORACLES: dict = {}
 
-for mod in (
-    relational,
-    relational_ext,
-    relational_ext3,
-    analytics,
-    analytics_ext,
-    audit_ext,
-    behavioral_ext,
-    curation_ext,
-    curation_ext2,
-    dedup_ext,
-    dedup_ext2,
-    drift_ext,
-    drift_ext2,
-    eval_ext,
-    eval_ext2,
-    graph_queries,
-    graphmetrics_ext,
-    graphmetrics_ext2,
-    graphmetrics_ext3,
-    graphmetrics_ext4,
-    linalg_ext,
-    media_ext,
-    mining_ext,
-    mining_ext2,
-    mlprep_ext,
-    mlprep_ext2,
-    optimizer_ext,
-    pipeline_ext,
-    pipeline_ext2,
-    pipeline_ext3,
-    pipeline_ext4,
-    pipeline_ext5,
-    profiling_ext,
-    reshape,
-    retrieval_ext,
-    setops_ext,
-    sketches_ext,
-    stats_ext,
-    stats_ext2,
-    stats_ext3,
-    stats_ext4,
-    summary_ext,
-    sql_surface,
-    temporal,
-    timeseries,
-    timeseries_ext,
-    udf_surface,
-    window_ext,
-):
-    QUERIES.update(mod.QUERIES)
-    ORACLES.update(mod.ORACLES)
 
-try:
-    from kinbaku_spark.queries import extensions  # noqa: F401
+def register(fn, oracle: str) -> None:
+    """Register ``fn`` under its ``__name__`` with its DuckDB oracle SQL."""
+    name = fn.__name__
+    if name in QUERIES:
+        raise ValueError(f"query {name!r} is already registered")
+    if not isinstance(oracle, str) or not oracle:
+        raise ValueError(f"query {name!r} needs a non-empty oracle SQL string")
+    QUERIES[name] = fn
+    ORACLES[name] = oracle
 
-    QUERIES.update(extensions.QUERIES)
-    ORACLES.update(extensions.ORACLES)
-except ImportError:  # extensions land incrementally
-    pass
 
-# Registry order is the driver's correctness-sample order (it checks the
-# first N entries in insertion order). Round-7 rotation (VERDICT r06
-# next-round #5): all 286 unique entries are driver-green over rounds 1-6
-# with 0 failures; those stay green via the local replica gate
-# (tests/test_oracle_parity.py). With the never-checked backlog closed,
-# rotation now re-greens by STAMP AGE. This round's 50-entry window
-# front-loads (a) the 23 entries whose engine path changed this round —
-# the exact distributed rank/ntile/prefix-sum sweep (g_degree_gini,
-# x_hist_quantile_accuracy, x_histogram_equidepth, x_ks_statistic,
-# x_percentile_ranks, x_quality_resample, x_revenue_concentration,
-# x_rfm_segmentation, x_winsorized_stats), the x_skyline_orders
-# running-max fix, the limit-first top-k rewrites (x_collocations,
-# g_rich_club), the TakeOrderedAndProject pagination pair
-# (g_batch_nodes_page2, g_batch_edges_page2), the four ADVICE-item
-# paths (x_roc_auc DECIMAL numerator, g_scc self-loop singletons,
-# g_cc_incremental numeric GC ordering, the three recall monitors'
-# mtime-keyed count cache), and the ppm-overflow audit's DECIMAL
-# numerators (x_quality_threshold_sweep, x_dup_cluster_sizes,
-# x_source_lang_impurity — found when the 100x rank drill tripped
-# x_revenue_concentration's int64 share numerator) — then (b) the 27
-# OLDEST-stamped entries (all r01: the TPC-H q10-q22 family, events
-# windowing, set ops) so every stamp stays <= ~3 rounds old on a
-# rolling basis.
+for _mod in sorted(m.name for m in pkgutil.iter_modules(__path__)):
+    importlib.import_module(f"{__name__}.{_mod}")
+
+# The driver's correctness sample is the first 50 registry entries, in
+# insertion order; these are the entries it checks.
 _PRIORITY = [
     "g_degree_gini",
     "x_hist_quantile_accuracy",
@@ -198,11 +87,7 @@ _PRIORITY = [
 
 _missing = [k for k in _PRIORITY if k not in QUERIES]
 assert not _missing, f"priority queries missing from registry: {_missing}"
-QUERIES = {
-    **{k: QUERIES[k] for k in _PRIORITY},
-    **{k: v for k, v in QUERIES.items() if k not in _PRIORITY},
-}
-ORACLES = {
-    **{k: ORACLES[k] for k in _PRIORITY if k in ORACLES},
-    **{k: v for k, v in ORACLES.items() if k not in _PRIORITY},
-}
+# move the priority entries to the front of the same two dict objects
+for _reg in (QUERIES, ORACLES):
+    for _k in _PRIORITY + [k for k in _reg if k not in _PRIORITY]:
+        _reg[_k] = _reg.pop(_k)

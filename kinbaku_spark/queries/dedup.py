@@ -1,16 +1,11 @@
-"""Extension-surface queries: dedup, similarity search, text analysis,
-multimodal plumbing — the training-data-pipeline operators (north-star per
-BASELINE.json; no counterpart in the reference, SURVEY.md §2.4).
-
-Every oracle replays the Spark pipeline EXACTLY: same md5-derived hashes,
-same universal-hash coefficients, same sequential double accumulation
-(list_reduce ≡ F.aggregate), same rounding. The SQL strings are generated
-from the same Python constants the Spark operators use.
+"""Near-duplicate detection and dedup-driven curation: exact, MinHash,
+SimHash, embedding and substring dedup, their recall monitors, the point
+probe and the curation diagnostics built on the dedup index.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from kinbaku_spark.functions.hashing import (
     HASH_PRIME,
@@ -23,41 +18,55 @@ from kinbaku_spark.operators.dedup import (
     SIMHASH_BITS,
     exact_dedup,
     jaccard_near_duplicates,
+    minhash_band_candidates,
     minhash_near_duplicates,
+    prefix_filter_candidates,
     simhash_near_duplicates,
 )
 from kinbaku_spark.operators.similarity import (
-    cosine_topk,
     embedding_near_duplicates,
-    lsh_topk,
     random_hyperplanes,
 )
+from kinbaku_spark.operators.text import doc_fingerprint, text_quality
 from kinbaku_spark.plans.checkpoints import pin
 from kinbaku_spark.plans.hints import maybe_broadcast
-from kinbaku_spark.operators.text import (
-    LANG_STOPWORDS,
-    TOKEN_PATTERN,
-    doc_fingerprint,
-    lang_id,
-    text_quality,
-    token_counts,
+from kinbaku_spark.queries import register
+from kinbaku_spark.queries.dedup_state import (
+    BAND_ROWS,
+    N_BANDS,
+    N_HASHES,
+    SPAN_N,
+    shingle_sets,
+    shingle_state,
+    simhash_sigs,
+    span_state,
 )
+from kinbaku_spark.queries.similarity import _sql_cosine, _sql_lsh_sig
+from kinbaku_spark.queries.text import X_TEXT_QUALITY_SQL
 from kinbaku_spark.sources.tables import load_table
 from kinbaku_spark.state import shared
+
+
+# ---------------------------------------------------------------------------
+# Core dedup operators: exact, MinHash/LSH, n-gram Jaccard, SimHash,
+# embedding near-dups, clusters, incremental and substring dedup, and
+# their sampled recall monitors.
+#
+# Every oracle replays the Spark pipeline EXACTLY: same md5-derived hashes,
+# same universal-hash coefficients, same sequential double accumulation
+# (list_reduce ≡ F.aggregate), same rounding. The SQL strings are generated
+# from the same Python constants the Spark operators use.
+# ---------------------------------------------------------------------------
 
 # ---------------------------------------------------------------------------
 # SQL fragment generators (shared constants -> identical pipelines)
 # ---------------------------------------------------------------------------
 
 P = HASH_PRIME
-N_HASHES, N_BANDS, BAND_ROWS = 32, 8, 4
 MINHASH_THRESHOLD = 0.8
 JACCARD_THRESHOLD = 0.5
 SIMHASH_MAX_HAMMING = 10
 EMB_NEAR_DUP_THRESHOLD = 0.4
-ANN_K = 10
-LSH_PLANES = random_hyperplanes(n_planes=16, dim=64, seed=7)
-LSH_PROBE_HAMMING = 2
 
 
 def _sql_shingle_cte(n: int, source: str = "documents") -> str:
@@ -90,38 +99,6 @@ WHERE i.i * 1.0 / (sa.n + sb.n - i.i) >= {threshold}
 """
 
 
-def _sql_dot(a: str, b: str) -> str:
-    """Sequential double dot product — same accumulation order as Spark's
-    F.aggregate fold."""
-    return (
-        f"list_reduce(list_transform(generate_series(1, len({a})), "
-        f"i -> CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE)), (x, y) -> x + y)"
-    )
-
-
-def _sql_norm(a: str) -> str:
-    return f"sqrt({_sql_dot(a, a)})"
-
-
-def _sql_cosine(a: str, b: str) -> str:
-    return f"({_sql_dot(a, b)} / ({_sql_norm(a)} * {_sql_norm(b)}))"
-
-
-def _sql_plane_literal(plane: list[float]) -> str:
-    # string -> double casts use strtod (correctly-rounded), matching how
-    # Python/Java parse the same literal; a bare numeric literal would go
-    # through DECIMAL and could round differently in the last bit
-    return "[" + ", ".join(f"CAST('{v!r}' AS DOUBLE)" for v in plane) + "]"
-
-
-def _sql_lsh_sig(vec: str, planes: list[list[float]] | None = None) -> str:
-    terms = []
-    for i, plane in enumerate(planes if planes is not None else LSH_PLANES):
-        proj = _sql_dot(vec, _sql_plane_literal(plane))
-        terms.append(f"(CASE WHEN {proj} > 0 THEN (CAST(1 AS BIGINT) << {i}) ELSE 0 END)")
-    return "(" + " + ".join(terms) + ")"
-
-
 # ---------------------------------------------------------------------------
 # x_dedup_exact
 # ---------------------------------------------------------------------------
@@ -145,8 +122,6 @@ JOIN (SELECT MIN(doc_id) AS doc_id FROM documents
 # ---------------------------------------------------------------------------
 
 def x_dedup_minhash(spark, sf_dir):
-    from kinbaku_spark.queries.dedup_state import shingle_sets, shingle_state
-
     docs = load_table(spark, sf_dir, "documents")
     sh, sig = shingle_state(spark, sf_dir)
     return minhash_near_duplicates(
@@ -192,8 +167,6 @@ cand AS (
 # ---------------------------------------------------------------------------
 
 def x_dedup_ngram_jaccard(spark, sf_dir):
-    from kinbaku_spark.queries.dedup_state import shingle_sets, shingle_state
-
     docs = load_table(spark, sf_dir, "documents")
     sh, _ = shingle_state(spark, sf_dir)
     return jaccard_near_duplicates(
@@ -220,8 +193,6 @@ cand AS (
 # ---------------------------------------------------------------------------
 
 def x_dedup_simhash(spark, sf_dir):
-    from kinbaku_spark.queries.dedup_state import simhash_sigs
-
     docs = load_table(spark, sf_dir, "documents")
     return simhash_near_duplicates(
         docs, max_hamming=SIMHASH_MAX_HAMMING, sig=simhash_sigs(spark, sf_dir)
@@ -286,208 +257,6 @@ X_DEDUP_EMBEDDING_SQL = _emb_truth_sql()
 
 
 # ---------------------------------------------------------------------------
-# x_ann_cosine_topk — brute-force top-k for the vec_id=0 query vector
-# ---------------------------------------------------------------------------
-
-def _query_vec(spark, sf_dir):
-    # memoized per embeddings fingerprint: the vector is a plain Python
-    # list, and every ANN query would otherwise pay a one-row job.
-    # None when the corpus is empty (degenerate input): callers return the
-    # schema-correct empty result, matching their oracles' empty output.
-    def build():
-        emb = load_table(spark, sf_dir, "embeddings")
-        rows = emb.filter(F.col("vec_id") == 0).select("embedding").collect()
-        return rows[0][0] if rows else None
-
-    return shared(spark, sf_dir, "query_vec", build, ["embeddings"])
-
-
-def _empty_topk(emb):
-    """(vec_id, sim) with zero rows — the every-ANN-query result on an
-    empty corpus."""
-    return emb.select("vec_id", F.lit(0.0).alias("sim")).limit(0)
-
-
-def x_ann_cosine_topk(spark, sf_dir):
-    emb = load_table(spark, sf_dir, "embeddings")
-    qv = _query_vec(spark, sf_dir)
-    if qv is None:
-        return _empty_topk(emb)
-    return cosine_topk(emb, qv, k=ANN_K, exclude_id=0)
-
-
-X_ANN_COSINE_SQL = f"""
-WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0)
-SELECT e.vec_id, ROUND({_sql_cosine('e.embedding', 'q.qv')}, 6) AS sim
-FROM embeddings e, q
-WHERE e.vec_id <> 0
-ORDER BY sim DESC, e.vec_id
-LIMIT {ANN_K}
-"""
-
-
-# ---------------------------------------------------------------------------
-# x_ann_lsh_topk — multi-probe hyperplane LSH + exact re-rank
-# ---------------------------------------------------------------------------
-
-def x_ann_lsh_topk(spark, sf_dir):
-    from kinbaku_spark.plans.hints import spread_rows
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    qv = _query_vec(spark, sf_dir)
-    if qv is None:
-        return _empty_topk(emb)
-    # the 24-plane signature is an expensive per-row expression over the
-    # whole corpus: widen a too-narrow scan to the cluster's cores
-    return lsh_topk(
-        spread_rows(emb.select("vec_id", "embedding")),
-        qv,
-        k=ANN_K,
-        planes=LSH_PLANES,
-        max_probe_hamming=LSH_PROBE_HAMMING,
-        exclude_id=0,
-    )
-
-
-def _ann_lsh_sql() -> str:
-    return f"""
-WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
-qs AS (SELECT {_sql_lsh_sig('qv')} AS qsig FROM q),
-sigs AS (SELECT vec_id, embedding, {_sql_lsh_sig('embedding')} AS sig FROM embeddings)
-SELECT s.vec_id, ROUND({_sql_cosine('s.embedding', 'q.qv')}, 6) AS sim
-FROM sigs s, qs, q
-WHERE s.vec_id <> 0
-  AND bit_count(xor(s.sig, qs.qsig)) <= {LSH_PROBE_HAMMING}
-ORDER BY sim DESC, s.vec_id
-LIMIT {ANN_K}
-"""
-
-
-# ---------------------------------------------------------------------------
-# x_multimodal_image — binary-column decode plumbing (mapInPandas). The
-# fake decoder is a pure function of the payload bytes, so DuckDB replays it
-# exactly (hex() + per-byte arithmetic, like the audio/video twins); the
-# aspect ratio is an integer ppm (floor division) so no float rounding can
-# tie — full value-hash check, not rows-only.
-# ---------------------------------------------------------------------------
-
-def x_multimodal_image(spark, sf_dir):
-    from kinbaku_spark.operators.multimodal import image_features, with_binary_payload
-
-    docs = load_table(spark, sf_dir, "documents")
-    return image_features(with_binary_payload(docs), fake=True)
-
-
-X_MULTIMODAL_IMAGE_SQL = """
-WITH b AS (
-  SELECT doc_id, hex(encode(text)) AS hx, octet_length(encode(text)) AS n
-  FROM documents
-)
-SELECT doc_id,
-  CAST(n AS INT) AS n_bytes,
-  CAST(n % 512 + 16 AS INT) AS width,
-  CAST((n // 7) % 512 + 16 AS INT) AS height,
-  CAST((n % 512 + 16) * 1000000 // ((n // 7) % 512 + 16) AS BIGINT) AS aspect_ppm,
-  CAST(list_aggregate(list_transform(
-      generate_series(CAST(1 AS BIGINT), CAST(n AS BIGINT)),
-      i -> CAST(('0x' || substr(hx, CAST(2 * i - 1 AS INT), 2)) AS BIGINT)),
-    'sum') AS BIGINT) AS checksum
-FROM b
-"""
-
-
-# ---------------------------------------------------------------------------
-# x_text_quality
-# ---------------------------------------------------------------------------
-
-def x_text_quality(spark, sf_dir):
-    # regex-heavy per-row projection: widen a too-narrow scan to the
-    # cluster's cores (plans/hints.spread_rows), shuffling only the two
-    # consumed columns
-    from kinbaku_spark.plans.hints import spread_rows
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    return text_quality(spread_rows(docs))
-
-
-X_TEXT_QUALITY_SQL = f"""
-WITH feats AS (
-  SELECT doc_id,
-    len(regexp_extract_all(text, '{TOKEN_PATTERN}')) AS n_tokens,
-    length(text) AS n_chars,
-    length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS alpha,
-    length(regexp_replace(text, '[^0-9]', '', 'g')) AS digits,
-    length(regexp_replace(text, '[^ ]', '', 'g')) AS spaces
-  FROM documents
-)
-SELECT doc_id,
-  CAST(n_tokens AS INTEGER) AS n_tokens,
-  CASE WHEN n_tokens > 0 THEN ROUND(n_chars * 1.0 / n_tokens, 6) ELSE 0.0 END AS avg_token_len,
-  ROUND(CASE WHEN n_chars > 0 THEN alpha * 1.0 / n_chars ELSE 0.0 END, 6) AS alpha_ratio,
-  ROUND(CASE WHEN n_chars > 0 THEN digits * 1.0 / n_chars ELSE 0.0 END, 6) AS digit_ratio,
-  CASE WHEN n_chars > 0 THEN ROUND(spaces * 1.0 / n_chars, 6) ELSE 0.0 END AS space_ratio,
-  ROUND(
-    (CASE WHEN n_chars > 0 THEN alpha * 1.0 / n_chars ELSE 0.0 END) * 0.5
-    + LEAST(n_tokens / 100.0, 1.0) * 0.3
-    + (1.0 - (CASE WHEN n_chars > 0 THEN digits * 1.0 / n_chars ELSE 0.0 END)) * 0.2,
-  6) AS quality_score
-FROM feats
-"""
-
-
-# ---------------------------------------------------------------------------
-# x_lang_id
-# ---------------------------------------------------------------------------
-
-def x_lang_id(spark, sf_dir):
-    return lang_id(load_table(spark, sf_dir, "documents"))
-
-
-def _lang_id_sql() -> str:
-    langs = sorted(LANG_STOPWORDS)
-    score_exprs = []
-    for lang in langs:
-        terms = []
-        for w in LANG_STOPWORDS[lang]:
-            needle = f" {w} "
-            terms.append(
-                f"((length(padded) - length(replace(padded, '{needle}', ''))) / {len(needle)})"
-            )
-        score_exprs.append((lang, "(" + " + ".join(terms) + ")"))
-    best = "GREATEST(" + ", ".join(s for _, s in score_exprs) + ")"
-    case = "CASE "
-    for lang, s in score_exprs:
-        case += f"WHEN {best} > 0 AND {s} = {best} THEN '{lang}' "
-    case += "ELSE 'und' END"
-    cols = ",\n  ".join(f"ROUND({s}, 6) AS score_{lang}" for lang, s in score_exprs)
-    return f"""
-WITH padded_docs AS (SELECT doc_id, ' ' || lower(text) || ' ' AS padded FROM documents)
-SELECT doc_id,
-  {cols},
-  {case} AS pred_lang
-FROM padded_docs
-"""
-
-
-# ---------------------------------------------------------------------------
-# x_token_count
-# ---------------------------------------------------------------------------
-
-def x_token_count(spark, sf_dir):
-    return token_counts(load_table(spark, sf_dir, "documents"))
-
-
-X_TOKEN_COUNT_SQL = f"""
-SELECT source,
-  COUNT(*) AS n_docs,
-  CAST(SUM(len(regexp_extract_all(text, '{TOKEN_PATTERN}'))) AS BIGINT) AS n_tokens,
-  ROUND(SUM(len(regexp_extract_all(text, '{TOKEN_PATTERN}'))) * 1.0 / COUNT(*), 6) AS tokens_per_doc
-FROM documents
-GROUP BY source
-"""
-
-
-# ---------------------------------------------------------------------------
 # x_doc_fingerprint
 # ---------------------------------------------------------------------------
 
@@ -504,35 +273,12 @@ FROM w
 """
 
 
-QUERIES = {
-    "x_dedup_exact": x_dedup_exact,
-    "x_dedup_minhash": x_dedup_minhash,
-    "x_dedup_ngram_jaccard": x_dedup_ngram_jaccard,
-    "x_dedup_simhash": x_dedup_simhash,
-    "x_dedup_embedding": x_dedup_embedding,
-    "x_ann_cosine_topk": x_ann_cosine_topk,
-    "x_ann_lsh_topk": x_ann_lsh_topk,
-    "x_multimodal_image": x_multimodal_image,
-    "x_text_quality": x_text_quality,
-    "x_lang_id": x_lang_id,
-    "x_token_count": x_token_count,
-    "x_doc_fingerprint": x_doc_fingerprint,
-}
-
-ORACLES = {
-    "x_dedup_exact": X_DEDUP_EXACT_SQL,
-    "x_dedup_minhash": _minhash_sql(),
-    "x_dedup_ngram_jaccard": X_JACCARD_SQL,
-    "x_dedup_simhash": _simhash_sql(),
-    "x_dedup_embedding": X_DEDUP_EMBEDDING_SQL,
-    "x_ann_cosine_topk": X_ANN_COSINE_SQL,
-    "x_ann_lsh_topk": _ann_lsh_sql(),
-    "x_multimodal_image": X_MULTIMODAL_IMAGE_SQL,
-    "x_text_quality": X_TEXT_QUALITY_SQL,
-    "x_lang_id": _lang_id_sql(),
-    "x_token_count": X_TOKEN_COUNT_SQL,
-    "x_doc_fingerprint": X_DOC_FINGERPRINT_SQL,
-}
+register(x_dedup_exact, X_DEDUP_EXACT_SQL)
+register(x_dedup_minhash, _minhash_sql())
+register(x_dedup_ngram_jaccard, X_JACCARD_SQL)
+register(x_dedup_simhash, _simhash_sql())
+register(x_dedup_embedding, X_DEDUP_EMBEDDING_SQL)
+register(x_doc_fingerprint, X_DOC_FINGERPRINT_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -546,7 +292,6 @@ def dup_cluster_labels(spark, sf_dir):
     size histograms), not a per-query recompute. Same pattern as the
     graph module's co_shared/und_edges state."""
     from kinbaku_spark.operators.dedup import duplicate_clusters
-    from kinbaku_spark.queries.dedup_state import shingle_sets, shingle_state
 
     def build():
         docs = load_table(spark, sf_dir, "documents")
@@ -594,56 +339,7 @@ FROM documents d
 """
 
 
-QUERIES["x_dedup_clusters"] = x_dedup_clusters
-ORACLES["x_dedup_clusters"] = _clusters_sql()
-
-
-# ---------------------------------------------------------------------------
-# x_ann_ivf_topk — IVF-style cell-probed ANN (labels as cells)
-# ---------------------------------------------------------------------------
-
-IVF_N_PROBE = 2
-
-
-def x_ann_ivf_topk(spark, sf_dir):
-    from kinbaku_spark.operators.similarity import ivf_topk
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    qv = _query_vec(spark, sf_dir)
-    if qv is None:
-        return _empty_topk(emb)
-    return ivf_topk(emb, qv, k=ANN_K, n_probe=IVF_N_PROBE, exclude_id=0)
-
-
-def _ann_ivf_sql() -> str:
-    return f"""
-WITH ex AS (
-  SELECT label, generate_subscripts(embedding, 1) AS pos, unnest(embedding) AS val
-  FROM embeddings
-),
-cen AS (
-  SELECT label, list(avg ORDER BY pos) AS centroid FROM (
-    SELECT label, pos,
-           CAST(CAST(SUM(CAST(floor(CAST(val AS DOUBLE) * CAST(1000000000.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) AS BIGINT)) AS BIGINT) AS DOUBLE) / CAST(1000000000.0 AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS avg
-    FROM ex GROUP BY label, pos
-  ) GROUP BY label
-),
-q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
-probes AS (
-  SELECT cen.label FROM cen, q
-  ORDER BY {_sql_cosine('cen.centroid', 'q.qv')} DESC, cen.label
-  LIMIT {IVF_N_PROBE}
-)
-SELECT e.vec_id, ROUND({_sql_cosine('e.embedding', 'q.qv')}, 6) AS sim
-FROM embeddings e JOIN probes ON e.label = probes.label, q
-WHERE e.vec_id <> 0
-ORDER BY sim DESC, e.vec_id
-LIMIT {ANN_K}
-"""
-
-
-QUERIES["x_ann_ivf_topk"] = x_ann_ivf_topk
-ORACLES["x_ann_ivf_topk"] = _ann_ivf_sql()
+register(x_dedup_clusters, _clusters_sql())
 
 
 # ---------------------------------------------------------------------------
@@ -686,182 +382,7 @@ FROM hx
 """
 
 
-QUERIES["x_doc_winnowing"] = x_doc_winnowing
-ORACLES["x_doc_winnowing"] = X_DOC_WINNOWING_SQL
-
-
-# ---------------------------------------------------------------------------
-# x_curate_corpus — the composed pipeline: quality filter -> MinHash-LSH
-# near-dup clustering -> representative selection. The oracle replays the
-# identical composition as nested CTEs.
-# ---------------------------------------------------------------------------
-
-MIN_QUALITY = 0.72
-
-
-def x_curate_corpus(spark, sf_dir):
-    from kinbaku_spark.operators.pipeline import curate_corpus
-    from kinbaku_spark.queries.dedup_state import shingle_sets, shingle_state
-
-    sh, sig = shingle_state(spark, sf_dir)
-    return curate_corpus(
-        load_table(spark, sf_dir, "documents"),
-        min_quality=MIN_QUALITY,
-        dup_threshold=MINHASH_THRESHOLD,
-        n_hashes=N_HASHES,
-        bands=N_BANDS,
-        sh=sh,
-        sig=sig,
-        sets=shingle_sets(spark, sf_dir),
-    )
-
-
-def _curate_sql() -> str:
-    quality = X_TEXT_QUALITY_SQL.strip()
-    minhash_on_filtered = _minhash_sql("filtered").strip()
-    return f"""
-WITH RECURSIVE q AS (
-  SELECT doc_id, quality_score FROM ({quality})
-),
-filtered AS (
-  SELECT d.*, q.quality_score FROM documents d JOIN q USING (doc_id)
-  WHERE q.quality_score >= {MIN_QUALITY}
-),
-pairs AS (
-  SELECT doc_id_a, doc_id_b FROM ({minhash_on_filtered})
-),
-und AS (
-  SELECT doc_id_a AS u, doc_id_b AS v FROM pairs
-  UNION
-  SELECT doc_id_b, doc_id_a FROM pairs
-),
-reach(u, v) AS (
-  SELECT u, v FROM und
-  UNION
-  SELECT r.u, n.v FROM reach r JOIN und n ON r.v = n.u
-)
-SELECT f.doc_id, f.lang, f.source, f.quality_score
-FROM filtered f
-WHERE COALESCE(LEAST(f.doc_id, (SELECT MIN(v) FROM reach WHERE u = f.doc_id)),
-               f.doc_id) = f.doc_id
-"""
-
-
-QUERIES["x_curate_corpus"] = x_curate_corpus
-ORACLES["x_curate_corpus"] = _curate_sql()
-
-
-# ---------------------------------------------------------------------------
-# x_ann_recall — recall@k of the LSH path vs brute-force ground truth
-# ---------------------------------------------------------------------------
-
-def x_ann_recall(spark, sf_dir):
-    """Recall@k of each ANN index (IVF cell-probe, multi-probe LSH)
-    against the brute-force top-k — the quality metric that decides
-    whether an index is shippable, and the honest comparison between
-    them: on these synthetic near-uniform embeddings IVF beats
-    hyperplane LSH, which concentration of measure renders unselective.
-
-    At 100 TB this is the standard offline evaluation loop: ground truth
-    on a sampled query set (brute force is O(n) per query but exact),
-    semi-joined against each index's candidates. Composes the existing
-    pipelines unchanged; the oracle nests all three SQL replays as CTEs,
-    so any drift in any path surfaces here too.
-    """
-    exact = x_ann_cosine_topk(spark, sf_dir).select("vec_id")
-    per_method = []
-    for method, qfn in (("ivf", x_ann_ivf_topk), ("lsh", x_ann_lsh_topk)):
-        approx = qfn(spark, sf_dir).select("vec_id")
-        per_method.append(
-            exact.join(approx, "vec_id", "left_semi")
-            .agg(F.count(F.lit(1)).alias("n_overlap"))
-            .select(
-                F.lit(method).alias("method"),
-                F.lit(ANN_K).alias("k"),
-                "n_overlap",
-                (
-                    F.col("n_overlap").cast("double") / F.lit(float(ANN_K))
-                ).alias("recall_at_k"),
-            )
-        )
-    return per_method[0].unionAll(per_method[1]).orderBy("method")
-
-
-def _ann_recall_sql() -> str:
-    frac = f"CAST(COUNT(*) AS DOUBLE) / CAST('{ANN_K}' AS DOUBLE)"
-    return f"""
-WITH exact_k AS ({X_ANN_COSINE_SQL}),
-approx_ivf AS ({_ann_ivf_sql()}),
-approx_lsh AS ({_ann_lsh_sql()})
-SELECT 'ivf' AS method, {ANN_K} AS k, COUNT(*) AS n_overlap,
-       {frac} AS recall_at_k
-FROM exact_k WHERE vec_id IN (SELECT vec_id FROM approx_ivf)
-UNION ALL
-SELECT 'lsh' AS method, {ANN_K} AS k, COUNT(*) AS n_overlap,
-       {frac} AS recall_at_k
-FROM exact_k WHERE vec_id IN (SELECT vec_id FROM approx_lsh)
-ORDER BY method
-"""
-
-
-QUERIES["x_ann_recall"] = x_ann_recall
-ORACLES["x_ann_recall"] = _ann_recall_sql()
-
-
-# ---------------------------------------------------------------------------
-# x_pii_scrub — email/phone redaction over a deterministically-enriched
-# corpus (the synthetic docs contain no PII, so every third doc gets a
-# synthesized contact line FIRST — identically in both engines — and the
-# scrub then has real work to verify: varying counts and masked text).
-# ---------------------------------------------------------------------------
-
-def x_pii_scrub(spark, sf_dir):
-    from kinbaku_spark.operators.text import pii_scrub
-
-    docs = load_table(spark, sf_dir, "documents")
-    enriched = docs.select(
-        "doc_id",
-        F.when(
-            F.col("doc_id") % 3 == 0,
-            F.concat(
-                F.col("text"),
-                F.lit(" Contact: user"),
-                F.col("doc_id").cast("string"),
-                F.lit("@example.com tel 555-123-"),
-                F.lpad((F.col("doc_id") % 10000).cast("string"), 4, "0"),
-            ),
-        )
-        .otherwise(F.col("text"))
-        .alias("text"),
-    )
-    return pii_scrub(enriched).orderBy("doc_id")
-
-
-def _pii_scrub_sql() -> str:
-    from kinbaku_spark.operators.text import PII_EMAIL_RE, PII_PHONE_RE
-
-    return f"""
-WITH enriched AS (
-  SELECT doc_id,
-    CASE WHEN doc_id % 3 = 0
-      THEN text || ' Contact: user' || CAST(doc_id AS VARCHAR)
-           || '@example.com tel 555-123-'
-           || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0')
-      ELSE text END AS t
-  FROM documents
-)
-SELECT doc_id,
-  CAST(len(regexp_extract_all(t, '{PII_EMAIL_RE}')) AS INTEGER) AS n_emails,
-  CAST(len(regexp_extract_all(t, '{PII_PHONE_RE}')) AS INTEGER) AS n_phones,
-  regexp_replace(regexp_replace(t, '{PII_EMAIL_RE}', '[EMAIL]', 'g'),
-                 '{PII_PHONE_RE}', '[PHONE]', 'g') AS scrubbed
-FROM enriched
-ORDER BY doc_id
-"""
-
-
-QUERIES["x_pii_scrub"] = x_pii_scrub
-ORACLES["x_pii_scrub"] = _pii_scrub_sql()
+register(x_doc_winnowing, X_DOC_WINNOWING_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -921,8 +442,7 @@ WHERE i.i * 1.0 / (sa.n + sb.n - i.i) >= {MINHASH_THRESHOLD}
 """
 
 
-QUERIES["x_dedup_incremental"] = x_dedup_incremental
-ORACLES["x_dedup_incremental"] = _incremental_sql()
+register(x_dedup_incremental, _incremental_sql())
 
 
 # ---------------------------------------------------------------------------
@@ -1032,160 +552,7 @@ ORDER BY probe_key
 """
 
 
-QUERIES["x_fuzzy_match"] = x_fuzzy_match
-ORACLES["x_fuzzy_match"] = X_FUZZY_MATCH_SQL
-
-
-# ---------------------------------------------------------------------------
-# x_embed_quantize — per-vector int8 scalar quantization (the storage
-# compression step for vector indexes: 4 bytes/dim float32 -> 1 byte/dim).
-# Codes are floor((x - min) / scale) clamped to [0, 255]; outputs are the
-# quantization params plus integer checksums over the code array (exact in
-# both engines — no float emitted, and the code arithmetic is the identical
-# double sequence on both sides).
-# ---------------------------------------------------------------------------
-
-def x_embed_quantize(spark, sf_dir):
-    emb = load_table(spark, sf_dir, "embeddings")
-    v = F.col("embedding")
-    mn = F.array_min(v).cast("double")
-    mx = F.array_max(v).cast("double")
-    scale = (mx - mn) / F.lit(255.0)
-    code = lambda x: F.least(  # noqa: E731
-        F.floor((x.cast("double") - mn) / scale), F.lit(255)
-    )
-    codes = F.when(mx == mn, F.transform(v, lambda x: F.lit(0).cast("bigint"))).otherwise(
-        F.transform(v, lambda x: code(x))
-    )
-    return emb.select(
-        "vec_id",
-        F.size(v).alias("n_dims"),
-        mn.alias("q_min"),
-        mx.alias("q_max"),
-        F.aggregate(codes, F.lit(0).cast("bigint"), lambda a, x: a + x).alias(
-            "code_sum"
-        ),
-        F.element_at(codes, 1).alias("code_first"),
-        F.element_at(codes, -1).alias("code_last"),
-    ).orderBy("vec_id")
-
-
-X_EMBED_QUANTIZE_SQL = """
-WITH q AS (
-  SELECT vec_id,
-         len(embedding) AS n_dims,
-         CAST(list_aggregate(embedding, 'min') AS DOUBLE) AS q_min,
-         CAST(list_aggregate(embedding, 'max') AS DOUBLE) AS q_max
-  FROM embeddings
-),
-c AS (
-  SELECT e.vec_id, q.n_dims, q.q_min, q.q_max,
-         CASE WHEN q.q_max = q.q_min
-           THEN list_transform(e.embedding, x -> CAST(0 AS BIGINT))
-           ELSE list_transform(e.embedding,
-             x -> CAST(LEAST(FLOOR((CAST(x AS DOUBLE) - q.q_min)
-                                   / ((q.q_max - q.q_min) / 255.0)), 255) AS BIGINT))
-         END AS codes
-  FROM embeddings e JOIN q USING (vec_id)
-)
-SELECT vec_id, CAST(n_dims AS INTEGER) AS n_dims, q_min, q_max,
-       CAST(list_aggregate(codes, 'sum') AS BIGINT) AS code_sum,
-       codes[1] AS code_first,
-       codes[len(codes)] AS code_last
-FROM c
-ORDER BY vec_id
-"""
-
-
-QUERIES["x_embed_quantize"] = x_embed_quantize
-ORACLES["x_embed_quantize"] = X_EMBED_QUANTIZE_SQL
-
-
-# ---------------------------------------------------------------------------
-# x_embed_covariance — distributed second-moment (Gram) matrix over the
-# embedding corpus: each Arrow batch collapses to a d(d+1)/2 partial via one
-# numpy int64 matmul, so the shuffle is O(partitions x d^2) regardless of
-# corpus size — the covariance/PCA/whitening kernel for 100 TB embedding
-# tables. Quantization (floor(x*1e6) in double) is engine-exact, so the
-# oracle replays the full pairwise sum with integer arithmetic.
-# ---------------------------------------------------------------------------
-
-def x_embed_covariance(spark, sf_dir):
-    from kinbaku_spark.operators.similarity import embedding_gram
-
-    return embedding_gram(load_table(spark, sf_dir, "embeddings"))
-
-
-X_EMBED_COVARIANCE_SQL = """
-WITH q AS (
-  SELECT vec_id,
-         list_transform(embedding,
-                        x -> CAST(floor(CAST(x AS DOUBLE) * 1000000) AS BIGINT)) AS qv
-  FROM embeddings
-),
-ex AS (
-  SELECT vec_id, generate_subscripts(qv, 1) AS i, unnest(qv) AS v FROM q
-)
-SELECT CAST(a.i AS INT) AS i, CAST(b.i AS INT) AS j,
-       CAST(SUM(a.v * b.v) AS BIGINT) AS dot_q
-FROM ex a JOIN ex b ON a.vec_id = b.vec_id AND a.i <= b.i
-GROUP BY 1, 2
-ORDER BY 1, 2
-"""
-
-
-QUERIES["x_embed_covariance"] = x_embed_covariance
-ORACLES["x_embed_covariance"] = X_EMBED_COVARIANCE_SQL
-
-
-# ---------------------------------------------------------------------------
-# x_repetition_ratio — duplicate 3-gram ratio per document (the Gopher-rule
-# repetition filter): documents whose n-grams repeat heavily are boilerplate
-# or degenerate generations. Pure per-row projection — no shuffle anywhere
-# except the presentation sort — so at 100 TB it rides the scan. The ratio
-# is integer ppm (floor), exact in any engine.
-# ---------------------------------------------------------------------------
-
-def x_repetition_ratio(spark, sf_dir):
-    from kinbaku_spark.functions.textfns import shingle_array
-
-    docs = load_table(spark, sf_dir, "documents")
-    words = F.split(F.trim(F.col("text")), r"\s+")
-    total = F.greatest(F.size(words) - 2, F.lit(0)).cast("long")
-    distinct = F.size(shingle_array(F.col("text"), 3)).cast("long")
-    return (
-        docs.select("doc_id", total.alias("n_grams"), distinct.alias("n_distinct"))
-        .withColumn(
-            "rep_ppm",
-            F.when(
-                F.col("n_grams") > 0,
-                F.expr("((n_grams - n_distinct) * 1000000) div n_grams"),
-            ).otherwise(F.lit(0)),
-        )
-        .orderBy("doc_id")
-    )
-
-
-X_REPETITION_SQL = f"""
-WITH w AS (
-  SELECT doc_id, {SQL_WORDS.format(expr='text')} AS words FROM documents
-),
-g AS (
-  SELECT doc_id,
-         CAST(GREATEST(len(words) - 2, 0) AS BIGINT) AS n_grams,
-         CAST(len({sql_shingle_array('words', 3)}) AS BIGINT) AS n_distinct
-  FROM w
-)
-SELECT doc_id, n_grams, n_distinct,
-       CASE WHEN n_grams > 0
-            THEN ((n_grams - n_distinct) * 1000000) // n_grams
-            ELSE 0 END AS rep_ppm
-FROM g ORDER BY doc_id
-"""
-
-
-QUERIES["x_repetition_ratio"] = x_repetition_ratio
-ORACLES["x_repetition_ratio"] = X_REPETITION_SQL
+register(x_fuzzy_match, X_FUZZY_MATCH_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -1207,8 +574,6 @@ SIMHASH_BANDED_HAMMING = SIMHASH_BANDS - 1  # pigeonhole-exact reach
 
 
 def x_dedup_simhash_banded(spark, sf_dir):
-    from kinbaku_spark.queries.dedup_state import simhash_sigs
-
     docs = load_table(spark, sf_dir, "documents")
     return simhash_near_duplicates(
         docs,
@@ -1219,10 +584,9 @@ def x_dedup_simhash_banded(spark, sf_dir):
     )
 
 
-QUERIES["x_dedup_simhash_banded"] = x_dedup_simhash_banded
 # the oracle is the naive all-pairs SQL at the band-reachable threshold —
 # banding is exact (pigeonhole) below SIMHASH_BANDS, so the sets coincide
-ORACLES["x_dedup_simhash_banded"] = _simhash_sql(SIMHASH_BANDED_HAMMING)
+register(x_dedup_simhash_banded, _simhash_sql(SIMHASH_BANDED_HAMMING))
 
 
 def _pair_recall(truth, cand, keys, truth_name, cand_name):
@@ -1312,10 +676,12 @@ def x_dedup_simhash_banded_recall(spark, sf_dir):
     )
 
 
-QUERIES["x_dedup_simhash_banded_recall"] = x_dedup_simhash_banded_recall
-ORACLES["x_dedup_simhash_banded_recall"] = _pair_recall_sql(
-    _simhash_sql(), _simhash_sql(SIMHASH_BANDED_HAMMING),
-    "doc_id_a", "doc_id_b", "n_baseline", "n_banded",
+register(
+    x_dedup_simhash_banded_recall,
+    _pair_recall_sql(
+        _simhash_sql(), _simhash_sql(SIMHASH_BANDED_HAMMING),
+        "doc_id_a", "doc_id_b", "n_baseline", "n_banded",
+    ),
 )
 
 
@@ -1380,8 +746,7 @@ WHERE ROUND({_sql_cosine('a.embedding', 'b.embedding')}, 6) >= {EMB_NEAR_DUP_THR
 """
 
 
-QUERIES["x_dedup_embedding_lsh"] = x_dedup_embedding_lsh
-ORACLES["x_dedup_embedding_lsh"] = _emb_lsh_sql()
+register(x_dedup_embedding_lsh, _emb_lsh_sql())
 
 
 # ---------------------------------------------------------------------------
@@ -1406,10 +771,12 @@ def x_dedup_embedding_lsh_recall(spark, sf_dir):
     return _pair_recall(truth, lsh, ["vec_id_a", "vec_id_b"], "n_truth", "n_lsh")
 
 
-QUERIES["x_dedup_embedding_lsh_recall"] = x_dedup_embedding_lsh_recall
-ORACLES["x_dedup_embedding_lsh_recall"] = _pair_recall_sql(
-    X_DEDUP_EMBEDDING_SQL, _emb_lsh_sql(), "vec_id_a", "vec_id_b",
-    "n_truth", "n_lsh",
+register(
+    x_dedup_embedding_lsh_recall,
+    _pair_recall_sql(
+        X_DEDUP_EMBEDDING_SQL, _emb_lsh_sql(), "vec_id_a", "vec_id_b",
+        "n_truth", "n_lsh",
+    ),
 )
 
 
@@ -1552,16 +919,18 @@ def x_dedup_recall_sampled(spark, sf_dir):
     return _with_support_counted(readout, mod, docs, "n_baseline")
 
 
-QUERIES["x_dedup_recall_sampled"] = x_dedup_recall_sampled
-ORACLES["x_dedup_recall_sampled"] = _with_support_sql(
-    _pair_recall_sql(
-        _simhash_sql(source=_SAMPLED_DOCS_SQL),
-        _simhash_sql(SIMHASH_BANDED_HAMMING, source=_SAMPLED_DOCS_SQL),
-        "doc_id_a", "doc_id_b", "n_baseline", "n_banded",
+register(
+    x_dedup_recall_sampled,
+    _with_support_sql(
+        _pair_recall_sql(
+            _simhash_sql(source=_SAMPLED_DOCS_SQL),
+            _simhash_sql(SIMHASH_BANDED_HAMMING, source=_SAMPLED_DOCS_SQL),
+            "doc_id_a", "doc_id_b", "n_baseline", "n_banded",
+        ),
+        _SAMPLED_DOCS_MOD_SQL,
+        f"(SELECT COUNT(*) FROM {_SAMPLED_DOCS_SQL})",
+        "n_baseline",
     ),
-    _SAMPLED_DOCS_MOD_SQL,
-    f"(SELECT COUNT(*) FROM {_SAMPLED_DOCS_SQL})",
-    "n_baseline",
 )
 
 
@@ -1588,8 +957,6 @@ ORACLES["x_dedup_recall_sampled"] = _with_support_sql(
 
 
 def x_dedup_recall_stratified(spark, sf_dir):
-    from kinbaku_spark.queries.dedup_state import simhash_sigs
-
     docs = load_table(spark, sf_dir, "documents")
     n_docs = _corpus_count(docs, sf_dir, "documents")
     mod = max(1, n_docs // DEDUP_RECALL_TARGET_STRATUM)
@@ -1636,18 +1003,20 @@ def x_dedup_recall_stratified(spark, sf_dir):
     return _with_support(readout, mod, n_docs // mod, "n_baseline")
 
 
-QUERIES["x_dedup_recall_stratified"] = x_dedup_recall_stratified
-ORACLES["x_dedup_recall_stratified"] = _with_support_sql(
-    _pair_recall_sql(
-        _simhash_sql(stratum_mod_sql=_SAMPLED_DOCS_MOD_SQL),
-        _simhash_sql(
-            SIMHASH_BANDED_HAMMING, stratum_mod_sql=_SAMPLED_DOCS_MOD_SQL
+register(
+    x_dedup_recall_stratified,
+    _with_support_sql(
+        _pair_recall_sql(
+            _simhash_sql(stratum_mod_sql=_SAMPLED_DOCS_MOD_SQL),
+            _simhash_sql(
+                SIMHASH_BANDED_HAMMING, stratum_mod_sql=_SAMPLED_DOCS_MOD_SQL
+            ),
+            "doc_id_a", "doc_id_b", "n_baseline", "n_banded",
         ),
-        "doc_id_a", "doc_id_b", "n_baseline", "n_banded",
+        _SAMPLED_DOCS_MOD_SQL,
+        f"(SELECT COUNT(*) // {_SAMPLED_DOCS_MOD_SQL} FROM documents)",
+        "n_baseline",
     ),
-    _SAMPLED_DOCS_MOD_SQL,
-    f"(SELECT COUNT(*) // {_SAMPLED_DOCS_MOD_SQL} FROM documents)",
-    "n_baseline",
 )
 
 
@@ -1678,9 +1047,11 @@ def x_dedup_embedding_lsh_wide(spark, sf_dir):
     )
 
 
-QUERIES["x_dedup_embedding_lsh_wide"] = x_dedup_embedding_lsh_wide
-ORACLES["x_dedup_embedding_lsh_wide"] = _emb_lsh_sql(
-    EMB_LSH_WIDE_PLANES, EMB_LSH_WIDE_BANDS
+register(
+    x_dedup_embedding_lsh_wide,
+    _emb_lsh_sql(
+        EMB_LSH_WIDE_PLANES, EMB_LSH_WIDE_BANDS
+    ),
 )
 
 
@@ -1732,19 +1103,21 @@ def x_dedup_embedding_recall_sampled(spark, sf_dir):
     return _with_support_counted(readout, mod, emb, "n_truth")
 
 
-QUERIES["x_dedup_embedding_recall_sampled"] = x_dedup_embedding_recall_sampled
 # both legs REUSE the canonical SQL builders with the sampled stratum as
 # the source relation — one definition of the sig/band/verify math, so a
 # fix to the canonical oracle cannot silently diverge from the sampled one
-ORACLES["x_dedup_embedding_recall_sampled"] = _with_support_sql(
-    _pair_recall_sql(
-        _emb_truth_sql(_SAMPLED_EMB_SRC),
-        _emb_lsh_sql(source=_SAMPLED_EMB_SRC),
-        "vec_id_a", "vec_id_b", "n_truth", "n_lsh",
+register(
+    x_dedup_embedding_recall_sampled,
+    _with_support_sql(
+        _pair_recall_sql(
+            _emb_truth_sql(_SAMPLED_EMB_SRC),
+            _emb_lsh_sql(source=_SAMPLED_EMB_SRC),
+            "vec_id_a", "vec_id_b", "n_truth", "n_lsh",
+        ),
+        _SAMPLED_EMB_MOD_SQL,
+        f"(SELECT COUNT(*) FROM {_SAMPLED_EMB_SRC} esamp)",
+        "n_truth",
     ),
-    _SAMPLED_EMB_MOD_SQL,
-    f"(SELECT COUNT(*) FROM {_SAMPLED_EMB_SRC} esamp)",
-    "n_truth",
 )
 
 
@@ -1766,13 +1139,10 @@ ORACLES["x_dedup_embedding_recall_sampled"] = _with_support_sql(
 # semantics, coverage-interval cut, rebuilt text.
 # ---------------------------------------------------------------------------
 
-SPAN_N = 20
-SUBSTRING_DF_CAP = 16  # mirrors WINDOW_DF_CAP (pipeline_ext4.py)
+SUBSTRING_DF_CAP = 16  # mirrors WINDOW_DF_CAP (curation.py)
 
 
 def x_substring_dedup(spark, sf_dir):
-    from kinbaku_spark.queries.dedup_state import span_state
-
     # the positional span postings are session-persisted engine state
     # (dedup_state.span_state — the suffix-array replacement shared with
     # the removal query); the distinct (doc_id, h) form this query needs
@@ -1811,8 +1181,7 @@ GROUP BY 1, 2
 ORDER BY 1, 2
 """
 
-QUERIES["x_substring_dedup"] = x_substring_dedup
-ORACLES["x_substring_dedup"] = X_SUBSTRING_DEDUP_SQL
+register(x_substring_dedup, X_SUBSTRING_DEDUP_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -1850,8 +1219,6 @@ ORACLES["x_substring_dedup"] = X_SUBSTRING_DEDUP_SQL
 
 
 def x_substring_dedup_apply(spark, sf_dir):
-    from kinbaku_spark.queries.dedup_state import span_state
-
     docs = load_table(spark, sf_dir, "documents")
     # the positional postings are the session-persisted span index (shared
     # with x_substring_dedup); the token explode has two consumers (kept
@@ -1971,5 +1338,1061 @@ ORDER BY r.doc_id
 """
 
 
-QUERIES["x_substring_dedup_apply"] = x_substring_dedup_apply
-ORACLES["x_substring_dedup_apply"] = _substring_apply_sql()
+register(x_substring_dedup_apply, _substring_apply_sql())
+
+
+# ---------------------------------------------------------------------------
+# Containment dedup, corpus-diversity impurity, and rank-distribution
+# windows.
+#
+# The reference (kerighan/kinbaku) has no text/window surface (SURVEY.md
+# §2.4); these extend the dedup family (Jaccard's asymmetric sibling), the
+# dataset-card diversity metrics, and the window-function coverage
+# (percent_rank / cume_dist).
+#
+# Shuffle shapes (the 100 TB story):
+#
+# - containment: identical plan to x_dedup_ngram_jaccard — inverted-index
+#   candidate join on shared shingle hashes, then exact verification over
+#   candidates only; at scale the candidate generator swaps to MinHash
+#   banding (x_dedup_minhash) with the same verify tail.
+# - impurity: ONE groupBy(source, lang) collapses the corpus; the
+#   per-source rollup runs over O(sources x langs) rows.
+# - rank windows: degrees are one groupBy(src); both rank functions share
+#   ONE window sort over the |V|-sized degree table.
+#
+# Determinism: containment divides exact intersection counts by the exact
+# smaller set size (round 6dp — the proven jaccard pattern); impurity is
+# exact integer ppm ((n² - Σ n_l²)·10⁶ div n²); percent_rank/cume_dist are
+# ratios of exact integers, IEEE-identical in both engines, rounded 6dp.
+# ---------------------------------------------------------------------------
+
+
+# -- x_dedup_containment: asymmetric (subset) near-dup detection -------------
+
+CONTAINMENT_THRESHOLD = 0.8
+
+
+def x_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Containment near-duplicates: pairs where the SMALLER document's
+    shingle set is >= 80% contained in the other — catches excerpt/
+    quotation duplication that symmetric Jaccard misses (a 10x-longer
+    superset document caps Jaccard at ~0.1 but containment at 1.0).
+    """
+    # three consumers (df counts, ranked postings, verify sets) share the
+    # session-persisted shingle index (dedup_state.py) — the materialized
+    # table every dedup query scans instead of re-shingling the corpus
+    sh, _ = shingle_state(spark, sf_dir)
+
+    # Exact prefix filtering (operators/dedup.py prefix_filter_candidates):
+    # for containment >= t the smaller set's required overlap is
+    # alpha = ceil(t*n), so the prefix is n - ((4n + 4) div 5) + 1 rarest
+    # shingles at t = 0.8 (exact integer ceil). Provable superset of the
+    # naive self-join pairs -> the naive-SQL oracle stays the unchanged
+    # ground truth, while hot-shingle df^2 buckets disappear from the plan.
+    cand = prefix_filter_candidates(
+        sh, "doc_id", F.col("r") <= F.expr("n - ((4 * n + 4) div 5) + 1")
+    )
+    # array-set verification (same shape as operators/dedup._jaccard_verify):
+    # two doc-keyed joins + codegen array_intersect over candidates only,
+    # reading the MATERIALIZED per-doc set index (dedup_state.shingle_sets)
+    # instead of re-aggregating the postings per call
+    sets = shingle_sets(spark, sf_dir)
+    return (
+        cand.join(
+            sets.select(F.col("doc_id").alias("doc_id_a"), F.col("hs").alias("hs_a")),
+            "doc_id_a",
+        )
+        .join(
+            sets.select(F.col("doc_id").alias("doc_id_b"), F.col("hs").alias("hs_b")),
+            "doc_id_b",
+        )
+        .select(
+            "doc_id_a",
+            "doc_id_b",
+            F.size(F.array_intersect("hs_a", "hs_b")).alias("inter"),
+            F.least(F.size("hs_a"), F.size("hs_b")).alias("nmin"),
+        )
+        .withColumn("containment", F.round(F.col("inter") / F.col("nmin"), 6))
+        .filter(F.col("containment") >= CONTAINMENT_THRESHOLD)
+        .select("doc_id_a", "doc_id_b", "containment")
+        .orderBy("doc_id_a", "doc_id_b")
+    )
+
+
+def _containment_sql() -> str:
+    return f"""
+WITH {_sql_shingle_cte(3)},
+cand AS (
+  SELECT DISTINCT a.doc_id AS doc_id_a, b.doc_id AS doc_id_b
+  FROM hx a JOIN hx b ON a.h = b.h
+  WHERE a.doc_id < b.doc_id
+),
+sizes AS (SELECT doc_id, COUNT(*) AS n FROM hx GROUP BY doc_id),
+inter AS (
+  SELECT c.doc_id_a, c.doc_id_b, COUNT(*) AS i
+  FROM cand c
+  JOIN hx a ON a.doc_id = c.doc_id_a
+  JOIN hx b ON b.doc_id = c.doc_id_b AND b.h = a.h
+  GROUP BY 1, 2
+)
+SELECT i.doc_id_a, i.doc_id_b,
+       ROUND(i.i * 1.0 / LEAST(sa.n, sb.n), 6) AS containment
+FROM inter i
+JOIN sizes sa ON sa.doc_id = i.doc_id_a
+JOIN sizes sb ON sb.doc_id = i.doc_id_b
+WHERE ROUND(i.i * 1.0 / LEAST(sa.n, sb.n), 6) >= {CONTAINMENT_THRESHOLD}
+ORDER BY i.doc_id_a, i.doc_id_b
+"""
+
+
+# -- x_source_lang_impurity: corpus diversity per source ---------------------
+
+def x_source_lang_impurity(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Gini impurity of the language mix per source, in exact integer ppm
+    ((n² − Σ n_l²)·10⁶ div n²) — the log-free diversity metric for
+    dataset cards (0 = monolingual source, →10⁶ = uniform mix).
+    """
+    docs = load_table(spark, sf_dir, "documents")
+    per = docs.groupBy("source", "lang").agg(F.count(F.lit(1)).alias("nl"))
+    return (
+        per.groupBy("source")
+        .agg(
+            F.sum("nl").alias("n_docs"),
+            # DECIMAL sum-of-squares: nl^2 wraps int64 at ~3e9 docs in one
+            # (source, lang) cell, and n_docs^2 * 10^6 wraps at just ~3e6
+            # docs per source — the tightest overflow bound the ppm audit
+            # found; DECIMAL(38,0)/HUGEINT keeps the Gini-Simpson impurity
+            # integer-exact at any corpus size on both engines
+            F.sum(F.col("nl").cast("decimal(38,0)") * F.col("nl")).alias(
+                "ssq"
+            ),
+            F.count(F.lit(1)).cast("long").alias("n_langs"),
+        )
+        .select(
+            "source",
+            "n_docs",
+            "n_langs",
+            F.expr(
+                "CAST((CAST(n_docs AS DECIMAL(38,0)) * n_docs - ssq)"
+                " * 1000000"
+                " div (CAST(n_docs AS DECIMAL(38,0)) * n_docs) AS BIGINT)"
+            ).alias("impurity_ppm"),
+        )
+        .orderBy("source")
+    )
+
+
+X_LANG_IMPURITY_SQL = """
+WITH per AS (
+  SELECT source, lang, CAST(COUNT(*) AS BIGINT) AS nl
+  FROM documents GROUP BY 1, 2
+),
+agg AS (
+  SELECT source, CAST(SUM(nl) AS BIGINT) AS n_docs,
+         SUM(CAST(nl AS HUGEINT) * nl) AS ssq,
+         CAST(COUNT(*) AS BIGINT) AS n_langs
+  FROM per GROUP BY source
+)
+SELECT source, n_docs, n_langs,
+       CAST((CAST(n_docs AS HUGEINT) * n_docs - ssq) * 1000000
+              // (CAST(n_docs AS HUGEINT) * n_docs) AS BIGINT)
+         AS impurity_ppm
+FROM agg
+ORDER BY source
+"""
+
+
+register(x_dedup_containment, _containment_sql())
+register(x_source_lang_impurity, X_LANG_IMPURITY_SQL)
+
+
+# ---------------------------------------------------------------------------
+# Character-level (edit-distance) near-duplicate detection.
+#
+# The dedup family so far works at token/shingle granularity (exact hash,
+# MinHash-Jaccard, SimHash, containment) or embedding granularity (cosine,
+# SemDeDup). This adds the character-granularity member: Levenshtein
+# distance, relative to the longer document — the right tool for
+# boilerplate-injected or lightly-templated duplicates where a handful of
+# character edits separate the copies.
+#
+# Shape (the 100 TB story): all-pairs Levenshtein is O(n² · len²) and
+# never viable; the scale path is CANDIDATES-THEN-VERIFY reusing the
+# MinHash banded-LSH generator (operators/dedup.minhash_band_candidates —
+# the same 8-band equi-join that powers x_dedup_minhash, shuffle keys are
+# 32-byte band keys, never text), then one join back to the text column and
+# a JVM-side `levenshtein()` verify over candidate pairs only. The verify
+# is built-in in BOTH engines (Spark `F.levenshtein`, DuckDB
+# `levenshtein`), so the oracle replays the full pipeline bit-for-bit:
+# same shingles, same universal-hash signatures, same bands, same verify.
+#
+# Determinism: the accept test is exact integer arithmetic —
+# ed * 100 <= ED_REL_PCT * greatest(len_a, len_b) — and the reported
+# relative distance is integer ppm (truncating div), so the value hash is
+# exact, no float rounding anywhere.
+#
+# Reference parity: the reference (kerighan/kinbaku) has no text dedup at
+# all (SURVEY.md §2.4) — this extends the brief's dedup requirement.
+# ---------------------------------------------------------------------------
+
+ED_REL_PCT = 20  # accept pairs within 20% of the longer doc's length
+
+
+def x_dedup_edit_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Edit-distance near-duplicates: MinHash band candidates (same
+    generator as x_dedup_minhash), verified by relative Levenshtein —
+    ed <= 20% of the longer document's length. Output: the pair, the
+    exact edit distance, and the relative distance in ppm."""
+    docs = load_table(spark, sf_dir, "documents")
+    _, sig = shingle_state(spark, sf_dir)
+    cand = minhash_band_candidates(sig, "doc_id", N_HASHES, N_BANDS)
+    texts = docs.select("doc_id", "text")
+    ed = F.levenshtein("text_a", "text_b")
+    mx = F.greatest(F.length("text_a"), F.length("text_b"))
+    return (
+        cand.join(
+            texts.select(
+                F.col("doc_id").alias("doc_id_a"), F.col("text").alias("text_a")
+            ),
+            "doc_id_a",
+        )
+        .join(
+            texts.select(
+                F.col("doc_id").alias("doc_id_b"), F.col("text").alias("text_b")
+            ),
+            "doc_id_b",
+        )
+        .select(
+            "doc_id_a",
+            "doc_id_b",
+            ed.cast("int").alias("edit_dist"),
+            mx.alias("mx"),
+        )
+        .filter(F.col("edit_dist") * 100 <= ED_REL_PCT * F.col("mx"))
+        .select(
+            "doc_id_a",
+            "doc_id_b",
+            "edit_dist",
+            F.expr("CAST(edit_dist AS BIGINT) * 1000000 div mx").alias("rel_ppm"),
+        )
+        .orderBy("doc_id_a", "doc_id_b")
+    )
+
+
+def _edit_distance_sql() -> str:
+    # reuse x_dedup_minhash's CTE chain up to `cand`, swap the verify tail
+    base = _minhash_sql()
+    head, _tail = base.split("sizes AS", 1)
+    return (
+        head
+        + f"""t AS (SELECT doc_id, text FROM documents)
+SELECT c.doc_id_a, c.doc_id_b,
+       CAST(levenshtein(a.text, b.text) AS INTEGER) AS edit_dist,
+       CAST(CAST(levenshtein(a.text, b.text) AS BIGINT) * 1000000
+            // GREATEST(LENGTH(a.text), LENGTH(b.text)) AS BIGINT) AS rel_ppm
+FROM cand c
+JOIN t a ON a.doc_id = c.doc_id_a
+JOIN t b ON b.doc_id = c.doc_id_b
+WHERE levenshtein(a.text, b.text) * 100
+      <= {ED_REL_PCT} * GREATEST(LENGTH(a.text), LENGTH(b.text))
+ORDER BY c.doc_id_a, c.doc_id_b
+"""
+    )
+
+
+register(x_dedup_edit_distance, _edit_distance_sql())
+
+
+# ---------------------------------------------------------------------------
+# Curation planning: quality-threshold sweep and duplicate-cluster size
+# distribution.
+#
+# The reference (kerighan/kinbaku) has no curation surface (SURVEY.md §2.4);
+# these are the two readouts a filtering run is planned from:
+#
+# - threshold sweep: docs/tokens retained at each candidate quality cutoff
+#   — the yield curve that picks the operating point before committing a
+#   100 TB filter pass.
+# - cluster sizes: the size histogram of MinHash near-duplicate components
+#   — duplication's shape (many pairs vs few giant families) decides
+#   whether survivorship or family-level review is the right dedup action.
+#
+# Shuffle shapes (the 100 TB story): the sweep is one scan-bound projection
+# (text_quality rides the parquet scan) cross-joined to a 9-row broadcast
+# threshold table, then ONE aggregation keyed by threshold — no per-
+# threshold passes over the corpus. Cluster sizes reuse x_dedup_clusters'
+# banded-LSH + hash-min label propagation and add two O(|clusters|)
+# aggregations on top.
+#
+# Determinism: retention shares are exact integer ppm; the quality score is
+# the proven 6dp-rounded composite compared against k/100.0 double literals
+# (identical strtod in both engines); cluster labels are min-doc_id labels,
+# size buckets exact integers.
+# ---------------------------------------------------------------------------
+
+
+# -- x_quality_threshold_sweep: retention yield curve -------------------------
+
+SWEEP_THRESHOLDS_PCT = list(range(50, 95, 5))  # 0.50 .. 0.90
+
+
+def x_quality_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Docs and tokens retained at each candidate quality_score cutoff
+    (0.50‥0.90 by 0.05), with exact ppm retention shares — one corpus
+    scan, one broadcast cross join, one aggregation.
+    """
+    docs = load_table(spark, sf_dir, "documents")
+    per = text_quality(docs).select("quality_score", "n_tokens")
+    thr = spark.createDataFrame(
+        [(t,) for t in SWEEP_THRESHOLDS_PCT], "thr_pct int"
+    )
+    keep = F.col("quality_score") >= F.col("thr_pct") / F.lit(100.0)
+    return (
+        per.crossJoin(F.broadcast(thr))
+        .groupBy("thr_pct")
+        .agg(
+            F.sum(F.when(keep, 1).otherwise(0)).alias("docs_kept"),
+            F.sum(F.when(keep, F.col("n_tokens")).otherwise(0))
+            .cast("long")
+            .alias("tokens_kept"),
+            F.count(F.lit(1)).alias("n_docs"),
+            F.sum("n_tokens").cast("long").alias("n_tokens_total"),
+        )
+        .select(
+            "thr_pct",
+            "docs_kept",
+            "tokens_kept",
+            # DECIMAL numerators: token mass scales with the corpus and
+            # tokens_kept * 10^6 wraps int64 near 9.2e12 tokens (~35 TB
+            # of text — inside the 100 TB brief); docs get the same cast
+            # so the ppm contract is unconditional
+            F.expr(
+                "CAST(CAST(docs_kept AS DECIMAL(38,0)) * 1000000"
+                " div n_docs AS BIGINT)"
+            ).alias("docs_share_ppm"),
+            F.expr(
+                "CASE WHEN n_tokens_total = 0 THEN CAST(0 AS BIGINT)"
+                " ELSE CAST(CAST(tokens_kept AS DECIMAL(38,0)) * 1000000"
+                " div n_tokens_total AS BIGINT) END"
+            ).alias("tokens_share_ppm"),
+        )
+        .orderBy("thr_pct")
+    )
+
+
+def _sweep_sql() -> str:
+    values = ", ".join(f"({t})" for t in SWEEP_THRESHOLDS_PCT)
+    return f"""
+WITH per AS (SELECT quality_score, n_tokens FROM ({X_TEXT_QUALITY_SQL})),
+thr(thr_pct) AS (VALUES {values}),
+agg AS (
+  SELECT thr_pct,
+         CAST(SUM(CASE WHEN quality_score >= thr_pct / 100.0 THEN 1 ELSE 0 END)
+              AS BIGINT) AS docs_kept,
+         CAST(SUM(CASE WHEN quality_score >= thr_pct / 100.0 THEN n_tokens
+                       ELSE 0 END) AS BIGINT) AS tokens_kept,
+         CAST(COUNT(*) AS BIGINT) AS n_docs,
+         CAST(SUM(n_tokens) AS BIGINT) AS n_tokens_total
+  FROM per CROSS JOIN thr
+  GROUP BY thr_pct
+)
+SELECT CAST(thr_pct AS INTEGER) AS thr_pct, docs_kept, tokens_kept,
+       CAST(CAST(docs_kept AS HUGEINT) * 1000000 // n_docs AS BIGINT)
+         AS docs_share_ppm,
+       CAST(CASE WHEN n_tokens_total = 0 THEN 0
+                 ELSE CAST(tokens_kept AS HUGEINT) * 1000000 // n_tokens_total
+            END AS BIGINT) AS tokens_share_ppm
+FROM agg
+ORDER BY thr_pct
+"""
+
+
+# -- x_dup_cluster_sizes: near-duplicate family size histogram ----------------
+
+def x_dup_cluster_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Histogram of MinHash near-duplicate component sizes: how many
+    clusters of each size exist and what share of the corpus sits in
+    them. Size 1 = unique documents.
+    """
+    # the labels are session-persisted engine state (built once per sf_dir)
+    labels = dup_cluster_labels(spark, sf_dir)
+    sizes = labels.groupBy("cluster_id").agg(
+        F.count(F.lit(1)).alias("cluster_size")
+    )
+    total = labels.agg(F.count(F.lit(1)).alias("n_total"))
+    return (
+        sizes.groupBy("cluster_size")
+        .agg(F.count(F.lit(1)).alias("n_clusters"))
+        .crossJoin(F.broadcast(total))
+        .select(
+            "cluster_size",
+            "n_clusters",
+            (F.col("cluster_size") * F.col("n_clusters")).alias("n_docs"),
+            # DECIMAL numerator: cluster_size * n_clusters is up to the
+            # corpus doc count, and * 10^6 wraps int64 near 9.2e12 docs
+            F.expr(
+                "CAST(CAST(cluster_size AS DECIMAL(38,0)) * n_clusters"
+                " * 1000000 div n_total AS BIGINT)"
+            ).alias("docs_share_ppm"),
+        )
+        .orderBy("cluster_size")
+    )
+
+
+def _cluster_sizes_sql() -> str:
+    return f"""
+WITH labels AS (SELECT * FROM ({_clusters_sql()})),
+sizes AS (
+  SELECT cluster_id, CAST(COUNT(*) AS BIGINT) AS cluster_size
+  FROM labels GROUP BY cluster_id
+),
+total AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM labels)
+SELECT cluster_size,
+       CAST(COUNT(*) AS BIGINT) AS n_clusters,
+       CAST(cluster_size * COUNT(*) AS BIGINT) AS n_docs,
+       CAST(CAST(cluster_size AS HUGEINT) * COUNT(*) * 1000000
+              // (SELECT n FROM total)
+            AS BIGINT) AS docs_share_ppm
+FROM sizes
+GROUP BY cluster_size
+ORDER BY cluster_size
+"""
+
+
+# -- x_soft_dedup_weights: down-weight duplicate families ---------------------
+
+def x_soft_dedup_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Soft deduplication: instead of dropping near-duplicates, give every
+    document the training weight 10⁶ div |its duplicate family| — the
+    family's total influence stays one document's worth while all
+    surface variants remain sampleable. Unique docs keep weight 10⁶.
+    """
+    labels = dup_cluster_labels(spark, sf_dir)
+    sizes = labels.groupBy("cluster_id").agg(
+        F.count(F.lit(1)).alias("cluster_size")
+    )
+    return (
+        labels.join(sizes, "cluster_id")
+        .select(
+            "doc_id",
+            "cluster_id",
+            "cluster_size",
+            F.expr("1000000 div cluster_size").alias("weight_ppm"),
+        )
+        .orderBy("doc_id")
+    )
+
+
+def _soft_dedup_sql() -> str:
+    return f"""
+WITH labels AS (SELECT * FROM ({_clusters_sql()})),
+sizes AS (
+  SELECT cluster_id, CAST(COUNT(*) AS BIGINT) AS cluster_size
+  FROM labels GROUP BY cluster_id
+)
+SELECT l.doc_id, l.cluster_id, s.cluster_size,
+       CAST(1000000 // s.cluster_size AS BIGINT) AS weight_ppm
+FROM labels l JOIN sizes s USING (cluster_id)
+ORDER BY l.doc_id
+"""
+
+
+register(x_quality_threshold_sweep, _sweep_sql())
+register(x_dup_cluster_sizes, _cluster_sizes_sql())
+# -- x_minhash_band_sweep: LSH banding-config planner --------------------------
+
+SWEEP_BANDS = (4, 8, 16)  # over the 32-hash signature: r = 8, 4, 2 rows/band
+SWEEP_JACCARD = 0.8
+
+
+def x_minhash_band_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Candidate volume vs confirmed-pair precision for three LSH banding
+    configs of the same 32-hash MinHash signature — the planning readout
+    that picks bands before a corpus-scale dedup run (more bands = higher
+    recall, quadratically more candidates to verify).
+
+    The signature table is computed ONCE (checkpointed) and shared by all
+    configs; per config the cost is one band equi-join + the exact-Jaccard
+    verify over its own candidates. No driver collects — each config's
+    counts are 1-row aggregates unioned JVM-side.
+    """
+    from kinbaku_spark.operators.dedup import (
+        _jaccard_verify,
+        minhash_band_candidates,
+    )
+
+    sh, sig = shingle_state(spark, sf_dir)
+    sets = shingle_sets(spark, sf_dir)
+    per_config = []
+    for b in SWEEP_BANDS:
+        # lazy checkpoint: both consumers (count, verify) resolve inside
+        # the ONE final action, so the candidates still materialize once —
+        # without the three serial per-config jobs the eager form ran at
+        # query-construction time (r07 work profile: 28 jobs -> fewer)
+        cand = minhash_band_candidates(sig, "doc_id", 32, b).localCheckpoint(
+            eager=False
+        )
+        n_cand = cand.agg(F.count(F.lit(1)).alias("n_candidates"))
+        n_conf = _jaccard_verify(cand, sh, "doc_id", SWEEP_JACCARD, sets=sets).agg(
+            F.count(F.lit(1)).alias("n_confirmed")
+        )
+        per_config.append(
+            n_cand.crossJoin(n_conf).select(
+                F.lit(b).alias("bands"),
+                F.lit(32 // b).alias("rows_per_band"),
+                "n_candidates",
+                "n_confirmed",
+                F.expr(
+                    "CASE WHEN n_candidates = 0 THEN 0"
+                    " ELSE n_confirmed * 1000000 div n_candidates END"
+                ).alias("precision_ppm"),
+            )
+        )
+    out = per_config[0]
+    for p in per_config[1:]:
+        out = out.unionByName(p)
+    return out.orderBy("bands")
+
+
+def _band_sweep_sql() -> str:
+    from kinbaku_spark.functions.hashing import HASH_PRIME as P
+    from kinbaku_spark.functions.hashing import minhash_coeffs
+
+    coeffs = minhash_coeffs(32, 42)
+    mins = ",\n    ".join(
+        f"MIN(({a} * (h % {P}) + {b}) % {P}) AS mh{j}"
+        for j, (a, b) in enumerate(coeffs)
+    )
+    parts = [
+        f"{_sql_shingle_cte(3)}".strip().lstrip(","),
+        f"sig AS MATERIALIZED (SELECT doc_id, {mins} FROM hx GROUP BY doc_id)",
+        "sizes AS (SELECT doc_id, COUNT(*) AS n FROM hx GROUP BY doc_id)",
+    ]
+    selects = []
+    for b in SWEEP_BANDS:
+        rows = 32 // b
+        band_selects = "\n  UNION ALL\n  ".join(
+            "SELECT doc_id, {k} AS band, {key} AS key FROM sig".format(
+                k=k,
+                key=" || '|' || ".join(
+                    f"CAST(mh{k * rows + r} AS VARCHAR)" for r in range(rows)
+                ),
+            )
+            for k in range(b)
+        )
+        parts.append(
+            f"""bands{b} AS (
+  {band_selects}
+),
+cand{b} AS MATERIALIZED (
+  SELECT DISTINCT a.doc_id AS doc_id_a, b.doc_id AS doc_id_b
+  FROM bands{b} a JOIN bands{b} b ON a.band = b.band AND a.key = b.key
+  WHERE a.doc_id < b.doc_id
+),
+conf{b} AS (
+  SELECT COUNT(*) AS n FROM (
+    SELECT c.doc_id_a, c.doc_id_b, COUNT(*) AS i
+    FROM cand{b} c
+    JOIN hx a ON a.doc_id = c.doc_id_a
+    JOIN hx x ON x.doc_id = c.doc_id_b AND x.h = a.h
+    GROUP BY 1, 2
+  ) j
+  JOIN sizes sa ON sa.doc_id = j.doc_id_a
+  JOIN sizes sb ON sb.doc_id = j.doc_id_b
+  WHERE ROUND(j.i * 1.0 / (sa.n + sb.n - j.i), 6) >= {SWEEP_JACCARD}
+)""",
+        )
+        selects.append(
+            f"""SELECT {b} AS bands, {rows} AS rows_per_band,
+       (SELECT CAST(COUNT(*) AS BIGINT) FROM cand{b}) AS n_candidates,
+       (SELECT CAST(n AS BIGINT) FROM conf{b}) AS n_confirmed,
+       CAST(CASE WHEN (SELECT COUNT(*) FROM cand{b}) = 0 THEN 0
+                 ELSE (SELECT n FROM conf{b}) * 1000000
+                      // (SELECT COUNT(*) FROM cand{b}) END AS BIGINT)
+         AS precision_ppm"""
+        )
+    union = "\nUNION ALL\n".join(selects)
+    return (
+        "WITH "
+        + ",\n".join(parts)
+        + f"""
+SELECT CAST(bands AS INTEGER) AS bands,
+       CAST(rows_per_band AS INTEGER) AS rows_per_band,
+       n_candidates, n_confirmed, precision_ppm
+FROM (
+{union}
+) ORDER BY bands
+"""
+    )
+
+
+register(x_soft_dedup_weights, _soft_dedup_sql())
+# -- x_normalized_dedup: normalization's effect on exact dedup ----------------
+
+def x_normalized_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """One-row normalization audit: how many exact-dup groups exist on the
+    raw text vs after canonical normalization (lowercase, whitespace
+    collapse, trim) — `extra_merged` is the number of distinct raw texts
+    that normalization folds together, i.e. the dup mass raw-exact dedup
+    would MISS. The canonical pre-dedup pass every curation pipeline runs
+    first; one projection + one aggregate, rides the scan at any scale.
+    """
+    docs = load_table(spark, sf_dir, "documents")
+    norm = F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))
+    return (
+        docs.select(
+            F.md5(norm).alias("norm_hash"), F.md5(F.col("text")).alias("raw_hash")
+        )
+        .agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.countDistinct("raw_hash").alias("raw_distinct"),
+            F.countDistinct("norm_hash").alias("norm_distinct"),
+        )
+        .select(
+            "n_docs",
+            "raw_distinct",
+            "norm_distinct",
+            (F.col("n_docs") - F.col("raw_distinct")).alias("raw_dup_docs"),
+            (F.col("raw_distinct") - F.col("norm_distinct")).alias("extra_merged"),
+        )
+    )
+
+
+X_NORMALIZED_DEDUP_SQL = r"""
+WITH h AS (
+  SELECT md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS norm_hash,
+         md5(text) AS raw_hash
+  FROM documents
+)
+SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
+       CAST(COUNT(DISTINCT raw_hash) AS BIGINT) AS raw_distinct,
+       CAST(COUNT(DISTINCT norm_hash) AS BIGINT) AS norm_distinct,
+       CAST(COUNT(*) - COUNT(DISTINCT raw_hash) AS BIGINT) AS raw_dup_docs,
+       CAST(COUNT(DISTINCT raw_hash) - COUNT(DISTINCT norm_hash) AS BIGINT)
+         AS extra_merged
+FROM h
+"""
+
+
+register(x_minhash_band_sweep, _band_sweep_sql())
+register(x_normalized_dedup, X_NORMALIZED_DEDUP_SQL)
+
+
+# ---------------------------------------------------------------------------
+# Curation operators, batch 2: point near-duplicate probe and the
+# quality-band × duplication contingency matrix.
+#
+# The probe is the dedup family's POINT-LOOKUP shape — the analog of the
+# reference's `node(key)` / `neighbors(key)` point reads (kinbaku
+# graph.py:856) applied to the MinHash index: given ONE document, return
+# its verified near-duplicates without an all-pairs pass. The matrix is
+# the curation diagnostic that tells you whether your duplicates are
+# concentrated in low-quality mass (drop them with the quality gate) or
+# spread across the quality range (dedup must run regardless).
+#
+# Shuffle shapes (the 100 TB story):
+#
+# - probe: the corpus band index is built once (at scale: the PERSISTED
+#   incremental index of x_dedup_incremental); the probe's ≤ B band keys
+#   broadcast onto it, so candidate generation touches only the probe's
+#   band buckets, and verification joins the ≤ |candidates| shingle sets
+#   against ONE broadcast probe set. Nothing pairs corpus-with-corpus.
+# - matrix: quality scoring rides the scan (pure column expressions); the
+#   dup flag is one hash groupBy + a hash-keyed join-back; the contingency
+#   is a ≤ (bands × 2)-group aggregate with map-side partials. Quality
+#   bands are FIXED ppm thresholds (map-only), not NTILE — a global
+#   tercile window would single-task sort the corpus.
+#
+# Determinism: the probe is the smallest doc_id that has an exact
+# duplicate (computable identically in both engines); MinHash coefficients
+# and shingle hashing are the shared fixtures (functions/hashing.py);
+# quality in integer ppm; jaccard rounded to 6dp.
+# ---------------------------------------------------------------------------
+
+PROBE_THRESHOLD = 0.5
+PROBE_TOPK = 10
+
+_DOC_HASH = 'md5(COALESCE(text, chr(0) || \'NULL\'))'
+
+
+def _banded(sig: DataFrame) -> DataFrame:
+    band_cols = [
+        F.struct(
+            F.lit(k).alias("band"),
+            F.concat_ws(
+                "|",
+                *[F.col(f"mh{k * BAND_ROWS + r}") for r in range(BAND_ROWS)],
+            ).alias("key"),
+        )
+        for k in range(N_BANDS)
+    ]
+    return sig.select(
+        "doc_id", F.explode(F.array(*band_cols)).alias("bk")
+    ).select("doc_id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
+
+
+# -- x_dedup_probe: point near-dup lookup against the band index --------------
+
+def x_dedup_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Verified near-duplicates of ONE probe document: band-bucket
+    candidate lookup + exact-Jaccard verification against the single
+    broadcast probe set. Returns (doc_id, jaccard) with jaccard >=
+    `PROBE_THRESHOLD`, strongest first, top `PROBE_TOPK`.
+
+    The probe FIXTURE (smallest doc_id that collides with another doc in
+    any band — guaranteed to have candidates when near-dups exist) costs
+    one band self-join; a production point-probe skips it (the caller
+    has the id) and touches only the probe's own band buckets.
+    """
+    sh, sig = shingle_state(spark, sf_dir)
+    banded = _banded(sig)
+
+    other = banded.select(
+        F.col("doc_id").alias("doc_id_b"), "band", "key"
+    )
+    probe = (
+        banded.join(other, ["band", "key"])
+        .filter(F.col("doc_id") != F.col("doc_id_b"))
+        .agg(F.min("doc_id").alias("probe_id"))
+        .where(F.col("probe_id").isNotNull())
+    )
+
+    pb = banded.join(
+        F.broadcast(probe), banded.doc_id == F.col("probe_id")
+    ).select("band", "key")
+    cand = (
+        banded.join(F.broadcast(pb), ["band", "key"])
+        .join(F.broadcast(probe), banded.doc_id != F.col("probe_id"))
+        .select("doc_id")
+        .distinct()
+    )
+
+    # the MATERIALIZED per-doc set index (dedup_state.shingle_sets) —
+    # previously re-aggregated from the postings per probe
+    sets = shingle_sets(spark, sf_dir)
+    pset = sets.join(
+        F.broadcast(probe), sets.doc_id == F.col("probe_id")
+    ).select(F.col("hs").alias("hs_p"))
+    return (
+        cand.join(sets, "doc_id")
+        .crossJoin(F.broadcast(pset))
+        .select(
+            "doc_id",
+            F.size(F.array_intersect("hs", "hs_p")).alias("i"),
+            F.size("hs").alias("n"),
+            F.size("hs_p").alias("np"),
+        )
+        .withColumn(
+            "jaccard",
+            F.round(F.col("i") / (F.col("n") + F.col("np") - F.col("i")), 6),
+        )
+        .filter(F.col("jaccard") >= PROBE_THRESHOLD)
+        .select("doc_id", "jaccard")
+        .orderBy(F.desc("jaccard"), "doc_id")
+        .limit(PROBE_TOPK)
+    )
+
+
+def _probe_sql() -> str:
+    coeffs = minhash_coeffs(N_HASHES, 42)
+    p = (1 << 31) - 1
+    mins = ",\n    ".join(
+        f"MIN(({a} * (h % {p}) + {b}) % {p}) AS mh{j}"
+        for j, (a, b) in enumerate(coeffs)
+    )
+    band_selects = "\n  UNION ALL\n  ".join(
+        "SELECT doc_id, {k} AS band, {key} AS key FROM sig".format(
+            k=k,
+            key=" || '|' || ".join(
+                f"CAST(mh{k * BAND_ROWS + r} AS VARCHAR)"
+                for r in range(BAND_ROWS)
+            ),
+        )
+        for k in range(N_BANDS)
+    )
+    return f"""
+WITH {_sql_shingle_cte(3)},
+sig AS (SELECT doc_id, {mins} FROM hx GROUP BY doc_id),
+bands AS (
+  {band_selects}
+),
+pid AS (
+  SELECT MIN(a.doc_id) AS probe_id
+  FROM bands a JOIN bands b ON a.band = b.band AND a.key = b.key
+  WHERE a.doc_id <> b.doc_id
+),
+pb AS (SELECT band, key FROM bands JOIN pid ON doc_id = probe_id),
+cand AS (
+  SELECT DISTINCT b.doc_id
+  FROM bands b JOIN pb USING (band, key) CROSS JOIN pid
+  WHERE b.doc_id <> pid.probe_id
+),
+sizes AS (SELECT doc_id, COUNT(*) AS n FROM hx GROUP BY doc_id),
+psize AS (SELECT n AS np FROM sizes JOIN pid ON doc_id = probe_id),
+inter AS (
+  SELECT b.doc_id, COUNT(*) AS i
+  FROM cand c
+  JOIN hx b ON b.doc_id = c.doc_id
+  CROSS JOIN pid
+  JOIN hx p ON p.doc_id = pid.probe_id AND p.h = b.h
+  GROUP BY b.doc_id
+)
+SELECT i.doc_id, ROUND(i.i * 1.0 / (s.n + ps.np - i.i), 6) AS jaccard
+FROM inter i JOIN sizes s USING (doc_id) CROSS JOIN psize ps
+WHERE i.i * 1.0 / (s.n + ps.np - i.i) >= {PROBE_THRESHOLD}
+ORDER BY jaccard DESC, doc_id
+LIMIT {PROBE_TOPK}
+"""
+
+
+# -- x_quality_dup_matrix: quality band x duplication contingency -------------
+
+QBAND_WIDTH_PPM = 250_000
+
+
+def x_quality_dup_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Contingency of fixed quality bands (integer-ppm score div 250k,
+    capped at band 3) × exact-duplicate status, with each cell's share of
+    its band in ppm — tells you whether duplicates concentrate in
+    low-quality mass (quality gate handles them) or not (dedup must run).
+    """
+    docs = load_table(spark, sf_dir, "documents")
+    h = F.md5(F.coalesce(F.col("text"), F.lit("\x00NULL")))
+    feats = docs.select(
+        "doc_id",
+        h.alias("__h"),
+        F.size(F.split(F.trim(F.col("text")), r"\s+")).cast("long").alias("n_tokens"),
+        F.length("text").cast("long").alias("n_chars"),
+        (F.length("text") - F.length(F.translate("text", "ABCDEFGHIJKLMNOPQRSTUVWXYZabcdefghijklmnopqrstuvwxyz", ""))).cast("long").alias("alpha"),
+        (F.length("text") - F.length(F.translate("text", "0123456789", ""))).cast("long").alias("digits"),
+    )
+    scored = feats.select(
+        "doc_id",
+        "__h",
+        F.expr(
+            "(CASE WHEN n_chars > 0 THEN alpha * 1000000 div n_chars ELSE 0 END * 5"
+            " + LEAST(n_tokens * 10000, 1000000) * 3"
+            " + (1000000 - CASE WHEN n_chars > 0 THEN digits * 1000000 div n_chars ELSE 0 END) * 2"
+            ") div 10"
+        ).alias("score_ppm"),
+    )
+    dup = (
+        scored.groupBy("__h")
+        .agg(F.count(F.lit(1)).alias("c"))
+        .select("__h", (F.col("c") >= 2).alias("is_dup"))
+    )
+    banded = scored.join(dup, "__h").select(
+        F.least(F.expr(f"score_ppm div {QBAND_WIDTH_PPM}"), F.lit(3))
+        .cast("int")
+        .alias("score_band"),
+        "is_dup",
+    )
+    cells = banded.groupBy("score_band", "is_dup").agg(
+        F.count(F.lit(1)).alias("n_docs")
+    )
+    totals = cells.groupBy("score_band").agg(
+        F.sum("n_docs").cast("long").alias("band_total")
+    )
+    return (
+        cells.join(F.broadcast(totals), "score_band")
+        .select(
+            "score_band",
+            "is_dup",
+            "n_docs",
+            F.expr(
+                "CAST(CAST(n_docs AS DECIMAL(38,0)) * 1000000"
+                " div band_total AS BIGINT)"
+            ).alias("band_share_ppm"),
+        )
+        .orderBy("score_band", "is_dup")
+    )
+
+
+X_QUALITY_DUP_SQL = rf"""
+WITH feats AS (
+  SELECT doc_id, {_DOC_HASH} AS h,
+         len(string_split_regex(trim(text), '\s+')) AS n_tokens,
+         length(text) AS n_chars,
+         length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS alpha,
+         length(regexp_replace(text, '[^0-9]', '', 'g')) AS digits
+  FROM documents
+),
+scored AS (
+  SELECT doc_id, h,
+         (CASE WHEN n_chars > 0 THEN alpha * 1000000 // n_chars ELSE 0 END * 5
+          + LEAST(n_tokens * 10000, 1000000) * 3
+          + (1000000 - CASE WHEN n_chars > 0
+                            THEN digits * 1000000 // n_chars ELSE 0 END) * 2
+         ) // 10 AS score_ppm
+  FROM feats
+),
+dup AS (SELECT h, COUNT(*) >= 2 AS is_dup FROM scored GROUP BY h),
+banded AS (
+  SELECT CAST(LEAST(s.score_ppm // {QBAND_WIDTH_PPM}, 3) AS INTEGER)
+           AS score_band,
+         d.is_dup
+  FROM scored s JOIN dup d USING (h)
+),
+cells AS (
+  SELECT score_band, is_dup, CAST(COUNT(*) AS BIGINT) AS n_docs
+  FROM banded GROUP BY score_band, is_dup
+),
+totals AS (
+  SELECT score_band, CAST(SUM(n_docs) AS BIGINT) AS band_total
+  FROM cells GROUP BY score_band
+)
+SELECT c.score_band, c.is_dup, c.n_docs,
+       CAST(CAST(c.n_docs AS HUGEINT) * 1000000 // t.band_total AS BIGINT)
+         AS band_share_ppm
+FROM cells c JOIN totals t USING (score_band)
+ORDER BY c.score_band, c.is_dup
+"""
+
+
+register(x_dedup_probe, _probe_sql())
+register(x_quality_dup_matrix, X_QUALITY_DUP_SQL)
+
+
+# -- x_linkage_agreement_lift: Fellegi-Sunter-style field weights --------------
+#
+# The u-probability side of probabilistic record linkage, computed WITHOUT
+# enumerating a single pair: P(field agrees | pair in same nation block)
+# vs P(field agrees | random pair) from contingency counts alone —
+# Σ C(n_{block,value}, 2) over Σ C(N_block, 2), etc. At 100 TB every term
+# is a small-dim groupBy with map-side partials; the pair space (10²³ at
+# that scale) is never materialized. Fields whose block-agreement lift is
+# high are informative matchers; lift ≈ 10⁶ means the field is
+# independent of the block and adds no linkage evidence.
+
+_LINK_FIELDS = [
+    ("mktsegment", "c_mktsegment"),
+    ("bal_sign", "CASE WHEN c_acctbal < 0 THEN 'neg' ELSE 'pos' END"),
+    ("bal_kbucket", "CAST(CAST(floor(c_acctbal) AS BIGINT) // 1000 AS VARCHAR)"),
+]
+
+
+def x_linkage_agreement_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-field agreement rates among same-nation-block customer pairs
+    vs all pairs, and the block lift (ppm of the overall rate) — the
+    field-informativeness table a Fellegi-Sunter linker is seeded with.
+    """
+    cust = load_table(spark, sf_dir, "customer")
+    spark_exprs = {
+        "mktsegment": F.col("c_mktsegment"),
+        "bal_sign": F.when(F.col("c_acctbal") < 0, "neg").otherwise("pos"),
+        "bal_kbucket": F.expr(
+            "CAST(CAST(floor(c_acctbal) AS BIGINT) div 1000 AS STRING)"
+        ),
+    }
+    d38 = "decimal(38,0)"
+    pairs2 = lambda c: (F.col(c).cast(d38) * (F.col(c) - 1))  # noqa: E731
+
+    # ONE customer pass for all fields: explode each row into its three
+    # (field, value) pairs and aggregate by (field, nation, value) — the
+    # r07 work profile showed the per-field form scanning customer 8
+    # times through 31 serial single-task jobs (guide §1.2, §2.3: the
+    # exploded rows carry only nation + two short strings, and every
+    # per-field / per-block / per-nation aggregate below is an exact
+    # integer rollup of this table)
+    f0 = _LINK_FIELDS[0][0]
+    base = cust.select(
+        "c_nationkey",
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(fname).alias("field"),
+                        spark_exprs[fname].alias("v"),
+                    )
+                    for fname, _sql in _LINK_FIELDS
+                ]
+            )
+        ).alias("fv"),
+    ).select("c_nationkey", F.col("fv.field").alias("field"), F.col("fv.v").alias("v"))
+    # (field, nation, value) counts: every downstream statistic is an
+    # exact rollup; lazily pinned — four consumers inside one action
+    g = (
+        base.groupBy("field", "c_nationkey", "v")
+        .agg(F.count(F.lit(1)).alias("c"))
+        .localCheckpoint(eager=False)
+    )
+    gb = g.groupBy("field").agg(F.sum(pairs2("c")).alias("agree_block2"))
+    cv = g.groupBy("field", "v").agg(F.sum("c").alias("c"))
+    ga = cv.groupBy("field").agg(F.sum(pairs2("c")).alias("agree_all2"))
+    # n = corpus rows = Σc over any one field's groups; nb = per-nation
+    # rows likewise (exact identities — each field maps every row once)
+    total = cv.filter(F.col("field") == f0).agg(
+        F.sum("c").cast("long").alias("n")
+    )
+    block_tot = (
+        g.filter(F.col("field") == f0)
+        .groupBy("c_nationkey")
+        .agg(F.sum("c").cast("long").alias("nb"))
+        .agg(F.sum(F.expr("CAST(nb AS DECIMAL(38,0)) * (nb - 1)")).alias("bp2"))
+    )
+    return (
+        gb.join(ga, "field")
+        .crossJoin(F.broadcast(block_tot))
+        .crossJoin(F.broadcast(total))
+        .filter(
+            (F.col("bp2") > 0)
+            & (F.col("n") >= 2)
+            & (F.col("agree_all2") > 0)
+        )
+        .select(
+            "field",
+            F.expr(
+                "CAST(agree_block2 * 1000000 div bp2 AS BIGINT)"
+            ).alias("block_agree_ppm"),
+            F.expr(
+                "CAST(agree_all2 * 1000000 div"
+                " (CAST(n AS DECIMAL(38,0)) * (n - 1)) AS BIGINT)"
+            ).alias("overall_agree_ppm"),
+            F.expr(
+                "CAST((agree_block2 * 1000000 div bp2) * 1000000 div"
+                " (agree_all2 * 1000000 div"
+                "  (CAST(n AS DECIMAL(38,0)) * (n - 1))) AS BIGINT)"
+            ).alias("lift_ppm"),
+        )
+        .orderBy("field")
+    )
+
+
+def _linkage_sql() -> str:
+    blocks = []
+    for fname, sql_expr in _LINK_FIELDS:
+        blocks.append(
+            f"""
+SELECT '{fname}' AS field,
+       CAST(ab.agree_block2 * 1000000 // bt.bp2 AS BIGINT)
+         AS block_agree_ppm,
+       CAST(aa.agree_all2 * 1000000 // (CAST(t.n AS HUGEINT) * (t.n - 1))
+            AS BIGINT) AS overall_agree_ppm,
+       CAST((ab.agree_block2 * 1000000 // bt.bp2) * 1000000 //
+            (aa.agree_all2 * 1000000 // (CAST(t.n AS HUGEINT) * (t.n - 1)))
+            AS BIGINT) AS lift_ppm
+FROM (
+  SELECT SUM(CAST(c AS HUGEINT) * (c - 1)) AS agree_block2 FROM (
+    SELECT c_nationkey, {sql_expr} AS v, COUNT(*) AS c
+    FROM customer GROUP BY 1, 2
+  )
+) ab
+CROSS JOIN (
+  SELECT SUM(CAST(c AS HUGEINT) * (c - 1)) AS agree_all2 FROM (
+    SELECT {sql_expr} AS v, COUNT(*) AS c FROM customer GROUP BY 1
+  )
+) aa
+CROSS JOIN (
+  SELECT SUM(CAST(nb AS HUGEINT) * (nb - 1)) AS bp2 FROM (
+    SELECT c_nationkey, COUNT(*) AS nb FROM customer GROUP BY 1
+  )
+) bt
+CROSS JOIN (SELECT COUNT(*) AS n FROM customer) t
+WHERE bt.bp2 > 0 AND t.n >= 2 AND aa.agree_all2 > 0
+"""
+        )
+    return "\nUNION ALL\n".join(blocks) + "\nORDER BY field"
+
+
+register(x_linkage_agreement_lift, _linkage_sql())

@@ -7,7 +7,7 @@ when that parquet is rewritten, and ``state.reset()`` drops it.
 
 Rationale — the same "stored engine state" framing as the derived graph
 (graph_queries._cached) and the near-dup labels
-(extensions.dup_cluster_labels):
+(dedup.dup_cluster_labels):
 a production dedup engine does not re-shingle and re-sign the corpus per
 query; the shingle index and signatures are materialized index-build
 artifacts, refreshed on ingest (see streaming/windows.dedup_ingest_batch,
@@ -28,14 +28,19 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from kinbaku_spark.operators.dedup import minhash_signatures, shingle_hashes
-from kinbaku_spark.queries.extensions import N_HASHES as SIG_HASHES
+from kinbaku_spark.operators.dedup import (
+    minhash_signatures,
+    shingle_hashes,
+    span_postings,
+)
 from kinbaku_spark.sources.tables import load_table
 from kinbaku_spark.state import shared
 
-# single source of truth: the signature width is extensions.N_HASHES (the
-# same constant every band consumer and SQL oracle is generated from);
-# shingle width and seed match _sql_shingle_cte / minhash_coeffs defaults
+# single source of truth: the signature width N_HASHES and its banding
+# (N_BANDS bands of BAND_ROWS rows) are the constants every band consumer
+# and SQL oracle is generated from; shingle width and seed match
+# _sql_shingle_cte / minhash_coeffs defaults
+N_HASHES, N_BANDS, BAND_ROWS = 32, 8, 4
 SHINGLE_N = 3
 SIG_SEED = 42
 
@@ -49,7 +54,7 @@ def shingle_state(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFram
     def build():
         docs = load_table(spark, sf_dir, "documents")
         sh = shingle_hashes(docs, "doc_id", "text", SHINGLE_N).persist()
-        sig = minhash_signatures(sh, "doc_id", SIG_HASHES, SIG_SEED).persist()
+        sig = minhash_signatures(sh, "doc_id", N_HASHES, SIG_SEED).persist()
         sig.count()  # one pass materializes sh (its only input) and sig
         sh.count()
         return sh, sig
@@ -115,16 +120,13 @@ def simhash_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (x_substring_dedup, which derives the distinct (doc_id, h) form) and
 # the removal query (x_substring_dedup_apply, which needs the offsets).
 # Built once per sf_dir; refreshed on ingest in a production deployment.
-# Span width is extensions.SPAN_N (the constant the SQL oracles are
-# generated from), imported lazily like the query consumers do.
+# Span width is SPAN_N, the constant the SQL oracles are generated from.
+SPAN_N = 20
 
 
 def span_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, pos, h): persisted positional SPAN_N-gram postings over
     the documents corpus (operators/dedup.py span_postings)."""
-    from kinbaku_spark.operators.dedup import span_postings
-    from kinbaku_spark.queries.extensions import SPAN_N
-
     def build():
         docs = load_table(spark, sf_dir, "documents")
         sp = span_postings(docs, "doc_id", "text", SPAN_N).persist()

@@ -16,6 +16,7 @@ from kinbaku_spark.graph import Graph
 from kinbaku_spark.operators.ids import ordered_zero_ids
 from kinbaku_spark.operators.supersteps import peel, propagate
 from kinbaku_spark.plans.hints import maybe_broadcast, size_hint
+from kinbaku_spark.queries import register
 from kinbaku_spark.sources.tables import (
     CUSTOMER_ORDER_EDGES_SQL,
     SUPPLIER_PART_EDGES_SQL,
@@ -505,65 +506,33 @@ SELECT (SELECT COUNT(*) FROM g_nodes WHERE key NOT IN ('S1','S2','S3')) AS n_nod
 """
 
 
-QUERIES = {
-    "g_node_lookup": g_node_lookup,
-    "g_edge_lookup": g_edge_lookup,
-    "g_exists": g_exists,
-    "g_neighbors": g_neighbors,
-    "g_predecessors": g_predecessors,
-    "g_neighbors_from": g_neighbors_from,
-    "g_predecessors_from": g_predecessors_from,
-    "g_common_neighbors": g_common_neighbors,
-    "g_common_predecessors": g_common_predecessors,
-    "g_out_degrees": g_out_degrees,
-    "g_in_degrees": g_in_degrees,
-    "g_degree_histogram": g_degree_histogram,
-    "g_nodes_table": g_nodes_table,
-    "g_edges_table": g_edges_table,
-    "g_counts": g_counts,
-    "g_batch_nodes_page2": g_batch_nodes_page2,
-    "g_batch_edges_page2": g_batch_edges_page2,
-    "g_adjacency_coo": g_adjacency_coo,
-    "g_subgraph_coo": g_subgraph_coo,
-    "m_add_node_upsert": m_add_node_upsert,
-    "m_add_edge_autocreate": m_add_edge_autocreate,
-    "m_remove_edge": m_remove_edge,
-    "m_remove_node_cascade": m_remove_node_cascade,
-    "m_set_neighbors": m_set_neighbors,
-    "m_set_predecessors": m_set_predecessors,
-    "m_bulk_add_edges": m_bulk_add_edges,
-    "m_bulk_remove_nodes": m_bulk_remove_nodes,
-}
-
-ORACLES = {
-    "g_node_lookup": G_NODE_LOOKUP_SQL,
-    "g_edge_lookup": G_EDGE_LOOKUP_SQL,
-    "g_exists": G_EXISTS_SQL,
-    "g_neighbors": G_NEIGHBORS_SQL,
-    "g_predecessors": G_PREDECESSORS_SQL,
-    "g_neighbors_from": G_NEIGHBORS_FROM_SQL,
-    "g_predecessors_from": G_PREDECESSORS_FROM_SQL,
-    "g_common_neighbors": G_COMMON_NEIGHBORS_SQL,
-    "g_common_predecessors": G_COMMON_PREDECESSORS_SQL,
-    "g_out_degrees": G_OUT_DEGREES_SQL,
-    "g_in_degrees": G_IN_DEGREES_SQL,
-    "g_degree_histogram": G_DEGREE_HISTOGRAM_SQL,
-    "g_nodes_table": G_NODES_TABLE_SQL,
-    "g_edges_table": G_EDGES_TABLE_SQL,
-    "g_counts": G_COUNTS_SQL,
-    "g_batch_nodes_page2": G_BATCH_NODES_SQL,
-    "g_batch_edges_page2": G_BATCH_EDGES_SQL,
-    "g_adjacency_coo": G_ADJACENCY_SQL,
-    "g_subgraph_coo": G_SUBGRAPH_SQL,
-    "m_add_node_upsert": M_ADD_NODE_SQL,
-    "m_add_edge_autocreate": M_ADD_EDGE_SQL,
-    "m_remove_edge": M_REMOVE_EDGE_SQL,
-    "m_remove_node_cascade": M_REMOVE_NODE_SQL,
-    "m_set_neighbors": M_SET_NEIGHBORS_SQL,
-    "m_set_predecessors": M_SET_PREDECESSORS_SQL,
-    "m_bulk_add_edges": M_BULK_ADD_EDGES_SQL,
-    "m_bulk_remove_nodes": M_BULK_REMOVE_NODES_SQL,
-}
+register(g_node_lookup, G_NODE_LOOKUP_SQL)
+register(g_edge_lookup, G_EDGE_LOOKUP_SQL)
+register(g_exists, G_EXISTS_SQL)
+register(g_neighbors, G_NEIGHBORS_SQL)
+register(g_predecessors, G_PREDECESSORS_SQL)
+register(g_neighbors_from, G_NEIGHBORS_FROM_SQL)
+register(g_predecessors_from, G_PREDECESSORS_FROM_SQL)
+register(g_common_neighbors, G_COMMON_NEIGHBORS_SQL)
+register(g_common_predecessors, G_COMMON_PREDECESSORS_SQL)
+register(g_out_degrees, G_OUT_DEGREES_SQL)
+register(g_in_degrees, G_IN_DEGREES_SQL)
+register(g_degree_histogram, G_DEGREE_HISTOGRAM_SQL)
+register(g_nodes_table, G_NODES_TABLE_SQL)
+register(g_edges_table, G_EDGES_TABLE_SQL)
+register(g_counts, G_COUNTS_SQL)
+register(g_batch_nodes_page2, G_BATCH_NODES_SQL)
+register(g_batch_edges_page2, G_BATCH_EDGES_SQL)
+register(g_adjacency_coo, G_ADJACENCY_SQL)
+register(g_subgraph_coo, G_SUBGRAPH_SQL)
+register(m_add_node_upsert, M_ADD_NODE_SQL)
+register(m_add_edge_autocreate, M_ADD_EDGE_SQL)
+register(m_remove_edge, M_REMOVE_EDGE_SQL)
+register(m_remove_node_cascade, M_REMOVE_NODE_SQL)
+register(m_set_neighbors, M_SET_NEIGHBORS_SQL)
+register(m_set_predecessors, M_SET_PREDECESSORS_SQL)
+register(m_bulk_add_edges, M_BULK_ADD_EDGES_SQL)
+register(m_bulk_remove_nodes, M_BULK_REMOVE_NODES_SQL)
 
 
 # -- Graph analytics extensions (multi-hop traversal, link prediction,
@@ -732,22 +701,10 @@ LIMIT 20
 """
 
 
-QUERIES.update(
-    {
-        "g_cosuppliers": g_cosuppliers,
-        "g_three_hop_parts": g_three_hop_parts,
-        "g_link_prediction": g_link_prediction,
-        "g_pagerank": g_pagerank,
-    }
-)
-ORACLES.update(
-    {
-        "g_cosuppliers": G_COSUPPLIERS_SQL,
-        "g_three_hop_parts": G_THREE_HOP_SQL,
-        "g_link_prediction": G_LINK_PREDICTION_SQL,
-        "g_pagerank": _pagerank_sql(),
-    }
-)
+register(g_cosuppliers, G_COSUPPLIERS_SQL)
+register(g_three_hop_parts, G_THREE_HOP_SQL)
+register(g_link_prediction, G_LINK_PREDICTION_SQL)
+register(g_pagerank, _pagerank_sql())
 
 
 # -- Queries over the other two FIXTURES.md §2 graph derivations ----------------
@@ -812,18 +769,8 @@ ORDER BY key
 """
 
 
-QUERIES.update(
-    {
-        "g_co_top_customers": g_co_top_customers,
-        "g_ue_activity": g_ue_activity,
-    }
-)
-ORACLES.update(
-    {
-        "g_co_top_customers": G_CO_TOP_CUSTOMERS_SQL,
-        "g_ue_activity": G_UE_ACTIVITY_SQL,
-    }
-)
+register(g_co_top_customers, G_CO_TOP_CUSTOMERS_SQL)
+register(g_ue_activity, G_UE_ACTIVITY_SQL)
 
 
 # -- BFS depths (iterative frontier expansion; recursive-CTE oracle) ------------
@@ -984,18 +931,8 @@ SELECT src, dst, weight, rk FROM (
 """
 
 
-QUERIES.update(
-    {
-        "g_bfs_depths": g_bfs_depths,
-        "g_top_edges_per_node": g_top_edges_per_node,
-    }
-)
-ORACLES.update(
-    {
-        "g_bfs_depths": G_BFS_SQL,
-        "g_top_edges_per_node": G_TOP_EDGES_SQL,
-    }
-)
+register(g_bfs_depths, G_BFS_SQL)
+register(g_top_edges_per_node, G_TOP_EDGES_SQL)
 
 
 # -- k-core decomposition (fixed-round peeling) ------------------------------
@@ -1074,8 +1011,7 @@ ORDER BY key
 """
 
 
-QUERIES["g_kcore"] = g_kcore
-ORACLES["g_kcore"] = _kcore_sql()
+register(g_kcore, _kcore_sql())
 
 
 # -- triangle participation on the co-supplier projection --------------------
@@ -1141,8 +1077,7 @@ LIMIT 20
 )
 
 
-QUERIES["g_triangles"] = g_triangles
-ORACLES["g_triangles"] = G_TRIANGLES_SQL
+register(g_triangles, G_TRIANGLES_SQL)
 
 
 # -- bounded weighted SSSP (Bellman-Ford rounds) ------------------------------
@@ -1218,8 +1153,7 @@ d{i + 1} AS MATERIALIZED (
     )
 
 
-QUERIES["g_sssp_bounded"] = g_sssp_bounded
-ORACLES["g_sssp_bounded"] = _sssp_sql()
+register(g_sssp_bounded, _sssp_sql())
 
 
 # -- deterministic random walks (node2vec-style sampling primitive) -----------
@@ -1304,8 +1238,7 @@ def _walks_sql() -> str:
     return _walks_cte() + "\nSELECT walk_id, step, node FROM walks ORDER BY walk_id, step\n"
 
 
-QUERIES["g_random_walks"] = g_random_walks
-ORACLES["g_random_walks"] = _walks_sql()
+register(g_random_walks, _walks_sql())
 
 
 # -- HITS hubs & authorities (bounded rounds) ---------------------------------
@@ -1422,8 +1355,7 @@ ORDER BY role, score DESC, key
     )
 
 
-QUERIES["g_hits"] = g_hits
-ORACLES["g_hits"] = _hits_sql()
+register(g_hits, _hits_sql())
 
 
 # -- label-propagation components (bounded min-label rounds) ------------------
@@ -1490,8 +1422,7 @@ l{i + 1} AS MATERIALIZED (
     )
 
 
-QUERIES["g_label_propagation"] = g_label_propagation
-ORACLES["g_label_propagation"] = _label_prop_sql()
+register(g_label_propagation, _label_prop_sql())
 
 
 # -- salted two-phase degree count (skew mitigation, identical result) --------
@@ -1513,8 +1444,7 @@ def g_in_degrees_salted(spark, sf_dir):
     )
 
 
-QUERIES["g_in_degrees_salted"] = g_in_degrees_salted
-ORACLES["g_in_degrees_salted"] = G_IN_DEGREES_SQL
+register(g_in_degrees_salted, G_IN_DEGREES_SQL)
 
 
 def _lp_labels(spark, sf_dir):
@@ -1624,8 +1554,7 @@ FROM comm c LEFT JOIN intra i ON i.label = c.label CROSS JOIN mt
 """
 
 
-QUERIES["g_modularity"] = g_modularity
-ORACLES["g_modularity"] = _modularity_sql()
+register(g_modularity, _modularity_sql())
 
 
 # -- degree assortativity (Pearson r over edge endpoint degrees) --------------
@@ -1692,8 +1621,7 @@ FROM mom
 """
 
 
-QUERIES["g_assortativity"] = g_assortativity
-ORACLES["g_assortativity"] = G_ASSORTATIVITY_SQL
+register(g_assortativity, G_ASSORTATIVITY_SQL)
 
 
 # -- deterministic negative edge sampling (link-prediction training data) -----
@@ -1795,8 +1723,7 @@ SELECT src, dst, CAST(slot AS INTEGER) AS slot FROM (
 """
 
 
-QUERIES["g_negative_samples"] = g_negative_samples
-ORACLES["g_negative_samples"] = _negative_samples_sql()
+register(g_negative_samples, _negative_samples_sql())
 
 
 # -- personalized PageRank, exact integer arithmetic --------------------------
@@ -1886,8 +1813,7 @@ FROM p{PPR_ROUNDS}
     )
 
 
-QUERIES["g_ppr_seeded"] = g_ppr_seeded
-ORACLES["g_ppr_seeded"] = _ppr_sql()
+register(g_ppr_seeded, _ppr_sql())
 
 
 # -- per-node structural feature table (graph features for ML) ----------------
@@ -1943,8 +1869,7 @@ LEFT JOIN ppr p ON p.key = n.key
 """
 
 
-QUERIES["g_node_features"] = g_node_features
-ORACLES["g_node_features"] = _node_features_sql()
+register(g_node_features, _node_features_sql())
 
 
 # -- ego network: induced subgraph within radius 2 of a seed ------------------
@@ -2010,8 +1935,7 @@ JOIN ball b ON b.key = e.dst
 """
 
 
-QUERIES["g_ego_network"] = g_ego_network
-ORACLES["g_ego_network"] = G_EGO_SQL
+register(g_ego_network, G_EGO_SQL)
 
 
 # -- closeness centrality of the BFS seed (bounded undirected BFS) -----------
@@ -2066,8 +1990,7 @@ FROM s
 """
 
 
-QUERIES["g_closeness"] = g_closeness
-ORACLES["g_closeness"] = G_CLOSENESS_SQL
+register(g_closeness, G_CLOSENESS_SQL)
 
 
 # -- normalized link prediction: Jaccard + resource-allocation ---------------
@@ -2176,10 +2099,8 @@ LIMIT 20
 """
 
 
-QUERIES["g_jaccard_links"] = g_jaccard_links
-ORACLES["g_jaccard_links"] = G_JACCARD_LINKS_SQL
-QUERIES["g_resource_allocation"] = g_resource_allocation
-ORACLES["g_resource_allocation"] = G_RESOURCE_ALLOCATION_SQL
+register(g_jaccard_links, G_JACCARD_LINKS_SQL)
+register(g_resource_allocation, G_RESOURCE_ALLOCATION_SQL)
 
 
 # -- skip-gram training pairs from the deterministic walks -------------------
@@ -2228,5 +2149,4 @@ LIMIT {SKIPGRAM_TOP}
 """
 
 
-QUERIES["g_skipgram_pairs"] = g_skipgram_pairs
-ORACLES["g_skipgram_pairs"] = _skipgram_sql()
+register(g_skipgram_pairs, _skipgram_sql())

@@ -1,23 +1,5 @@
-"""REAL media decode queries, oracle-checked end-to-end.
-
-Round-1 verdict item 9: the multimodal decode step was an honest stub
-(no PIL/torchaudio in the container). operators/codecs.py now implements
-real decoders from the stdlib — full PNG pixel decode (zlib inflate + all
-five scanline filters), uncompressed BMP, 16-bit PCM WAV — and these two
-queries prove them through the driver's exact-hash oracle gate:
-
-each document row synthesizes a REAL media payload executor-side (actual
-PNG/BMP/WAV bytes, parameterized by doc_id/n_chars), then round-trips it
-through the real decoder; the DuckDB oracle recomputes the expected
-decode outputs (dimensions, pixel sums, sample rates, frame counts) from
-the same parameters in pure SQL. A decoder bug — wrong filter math, wrong
-row padding, wrong header offset — breaks the value hash.
-
-Scale notes: encode+decode run inside one mapInPandas pass (Arrow batches,
-payload bytes never leave the executor, never shuffle, never hit the
-driver); the operator inherits the scan's partitioning, so at 100 TB it is
-embarrassingly parallel — exactly the shape a real decode-and-featurize
-stage has.
+"""Media decoding: real image, audio and video decoders over binary blobs,
+and the multimodal image plumbing.
 """
 
 from __future__ import annotations
@@ -28,7 +10,67 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from kinbaku_spark.plans.hints import spread_rows
+from kinbaku_spark.queries import register
 from kinbaku_spark.sources.tables import load_table
+
+
+# ---------------------------------------------------------------------------
+# x_multimodal_image — binary-column decode plumbing (mapInPandas). The
+# fake decoder is a pure function of the payload bytes, so DuckDB replays it
+# exactly (hex() + per-byte arithmetic, like the audio/video twins); the
+# aspect ratio is an integer ppm (floor division) so no float rounding can
+# tie — full value-hash check, not rows-only.
+# ---------------------------------------------------------------------------
+
+def x_multimodal_image(spark, sf_dir):
+    from kinbaku_spark.operators.multimodal import image_features, with_binary_payload
+
+    docs = load_table(spark, sf_dir, "documents")
+    return image_features(with_binary_payload(docs), fake=True)
+
+
+X_MULTIMODAL_IMAGE_SQL = """
+WITH b AS (
+  SELECT doc_id, hex(encode(text)) AS hx, octet_length(encode(text)) AS n
+  FROM documents
+)
+SELECT doc_id,
+  CAST(n AS INT) AS n_bytes,
+  CAST(n % 512 + 16 AS INT) AS width,
+  CAST((n // 7) % 512 + 16 AS INT) AS height,
+  CAST((n % 512 + 16) * 1000000 // ((n // 7) % 512 + 16) AS BIGINT) AS aspect_ppm,
+  CAST(list_aggregate(list_transform(
+      generate_series(CAST(1 AS BIGINT), CAST(n AS BIGINT)),
+      i -> CAST(('0x' || substr(hx, CAST(2 * i - 1 AS INT), 2)) AS BIGINT)),
+    'sum') AS BIGINT) AS checksum
+FROM b
+"""
+
+register(x_multimodal_image, X_MULTIMODAL_IMAGE_SQL)
+
+
+# ---------------------------------------------------------------------------
+# REAL media decode queries, oracle-checked end-to-end.
+#
+# Round-1 verdict item 9: the multimodal decode step was an honest stub
+# (no PIL/torchaudio in the container). operators/codecs.py now implements
+# real decoders from the stdlib — full PNG pixel decode (zlib inflate + all
+# five scanline filters), uncompressed BMP, 16-bit PCM WAV — and these two
+# queries prove them through the driver's exact-hash oracle gate:
+#
+# each document row synthesizes a REAL media payload executor-side (actual
+# PNG/BMP/WAV bytes, parameterized by doc_id/n_chars), then round-trips it
+# through the real decoder; the DuckDB oracle recomputes the expected
+# decode outputs (dimensions, pixel sums, sample rates, frame counts) from
+# the same parameters in pure SQL. A decoder bug — wrong filter math, wrong
+# row padding, wrong header offset — breaks the value hash.
+#
+# Scale notes: encode+decode run inside one mapInPandas pass (Arrow batches,
+# payload bytes never leave the executor, never shuffle, never hit the
+# driver); the operator inherits the scan's partitioning, so at 100 TB it is
+# embarrassingly parallel — exactly the shape a real decode-and-featurize
+# stage has.
+# ---------------------------------------------------------------------------
 
 IMAGE_DECODE_SCHEMA = (
     "doc_id bigint, fmt string, width int, height int, pixel_sum bigint"
@@ -563,20 +605,9 @@ GROUP BY doc_id
 """
 
 
-QUERIES = {
-    "x_image_decode_real": x_image_decode_real,
-    "x_audio_decode_real": x_audio_decode_real,
-    "x_image_resize_real": x_image_resize_real,
-    "x_video_decode_real": x_video_decode_real,
-    "x_video_decode_mjpeg": x_video_decode_mjpeg,
-    "x_image_decode_gif": x_image_decode_gif,
-}
-
-ORACLES = {
-    "x_image_decode_real": X_IMAGE_DECODE_REAL_SQL,
-    "x_audio_decode_real": X_AUDIO_DECODE_REAL_SQL,
-    "x_image_resize_real": X_IMAGE_RESIZE_REAL_SQL,
-    "x_video_decode_real": X_VIDEO_DECODE_REAL_SQL,
-    "x_video_decode_mjpeg": X_VIDEO_DECODE_MJPEG_SQL,
-    "x_image_decode_gif": X_IMAGE_DECODE_GIF_SQL,
-}
+register(x_image_decode_real, X_IMAGE_DECODE_REAL_SQL)
+register(x_audio_decode_real, X_AUDIO_DECODE_REAL_SQL)
+register(x_image_resize_real, X_IMAGE_RESIZE_REAL_SQL)
+register(x_video_decode_real, X_VIDEO_DECODE_REAL_SQL)
+register(x_video_decode_mjpeg, X_VIDEO_DECODE_MJPEG_SQL)
+register(x_image_decode_gif, X_IMAGE_DECODE_GIF_SQL)

@@ -20,6 +20,17 @@ from pyspark.sql import SparkSession
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 
+def default_driver_memory() -> str:
+    """``spark.driver.memory`` default: half the host's physical RAM, capped
+    at 24g, so the driver heap never asks for more than the machine has."""
+    cap_mb = 24 * 1024
+    try:
+        ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    except (AttributeError, ValueError, OSError):
+        return f"{cap_mb}m"
+    return f"{min(cap_mb, ram_mb // 2)}m"
+
+
 def get_spark(
     app_name: str = "kinbaku_spark",
     master: str | None = None,
@@ -42,7 +53,10 @@ def get_spark(
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM", default_driver_memory()),
+        )
         .config("spark.ui.enabled", "true" if ui_enabled else "false")
         .config("spark.ui.retainedJobs", "5000")
         .config("spark.ui.retainedStages", "5000")

@@ -219,14 +219,6 @@ class KinbakuLayout:
                 pos += 1
 
 
-_NODE_INTERNAL = {"is_node", "exists", "hash", "left", "right", "parent", "edge_start"}
-_EDGE_INTERNAL = {
-    "is_node", "exists", "is_edge_start", "hash",
-    "out_edge_left", "out_edge_right", "out_edge_parent",
-    "in_edge_left", "in_edge_right", "in_edge_parent",
-}
-
-
 def _attr_spark_type(kind) -> T.DataType:
     if isinstance(kind, tuple) and kind[0] == "text":
         return T.StringType()

@@ -189,16 +189,6 @@ def customer_order_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-USER_EVENT_EDGES_SQL = """
-SELECT 'U' || CAST(user_id AS VARCHAR) AS src,
-       'E:' || event_type AS dst,
-       0 AS type,
-       CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS weight
-FROM events
-GROUP BY 1, 2, 3
-"""
-
-
 def user_event_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """user→event-type graph from events."""
     ev = load_table(spark, sf_dir, "events")

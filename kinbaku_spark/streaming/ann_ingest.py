@@ -28,22 +28,12 @@ import os
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from kinbaku_spark.operators.similarity import _l2_lit
+
 _INT_VEC = (
     "transform(embedding, v -> "
     "CAST(floor(CAST(v AS DOUBLE) * CAST('1000000.0' AS DOUBLE)) AS BIGINT))"
 )
-
-
-def _lit_vec(vals: list[int]) -> Column:
-    return F.array(*[F.lit(int(v)).cast("long") for v in vals])
-
-
-def _l2_lit(vec: Column, cent: list[int]) -> Column:
-    return F.aggregate(
-        F.zip_with(vec, _lit_vec(cent), lambda a, b: (a - b) * (a - b)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
 
 
 def _nearest_cells(vec: Column, centroids: list[tuple[int, list[int]]], n: int) -> Column:

@@ -65,7 +65,7 @@ def width_scaled_lsh(spark, sf_dir: str):
         embedding_near_duplicates_lsh,
         random_hyperplanes,
     )
-    from kinbaku_spark.queries.extensions import EMB_NEAR_DUP_THRESHOLD
+    from kinbaku_spark.queries.dedup import EMB_NEAR_DUP_THRESHOLD
     from kinbaku_spark.sources.tables import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")

@@ -6,7 +6,8 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-# the session default (24g) exceeds a 15 GB host; the suite runs in 8g
+# pin the driver heap so the suite's footprint does not depend on the host
+# (the session default is half the host's RAM, capped at 24g)
 os.environ.setdefault("SPARK_DRIVER_MEM", "8g")
 
 from kinbaku_spark.session import get_spark  # noqa: E402

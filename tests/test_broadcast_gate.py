@@ -87,7 +87,7 @@ _GATED_ITERATIVE = [
     # surviving hints are the audited co_proj 1-row threshold copies
     "g_triangles",
     "g_transitivity",
-    # graphmetrics_ext4 family: score/label vectors + keep-sets are all
+    # Katz/eigenvector/densest/SCC family: score/label vectors + keep-sets are all
     # |V|-gated; eigenvector's surviving hint is its 1-row Σw total
     "g_katz_bounded",
     "g_eigenvector_bounded",

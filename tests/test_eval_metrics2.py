@@ -1,4 +1,4 @@
-"""Classifier-eval family (queries/eval_ext2.py): the integer-exact ROC
+"""Classifier-eval family (queries/eval.py): the integer-exact ROC
 AUC must equal a brute-force O(P*N) pairwise count (the Mann-Whitney
 definition: P(score_pos > score_neg) + 0.5 P(=)), and the confusion/
 calibration readouts must match a pure-Python replay."""
@@ -7,7 +7,7 @@ from __future__ import annotations
 
 from fractions import Fraction
 
-from kinbaku_spark.queries.eval_ext2 import (
+from kinbaku_spark.queries.eval import (
     CONFUSION_THRESHOLDS_PCT,
     x_calibration_bins,
     x_confusion_f1,

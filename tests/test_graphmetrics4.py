@@ -1,6 +1,7 @@
-"""Semantic (non-oracle) checks for the graphmetrics_ext4 family:
-differential against NetworkX / numpy replays of the same recurrences —
-independent of the DuckDB oracles, which share the SQL formulation."""
+"""Semantic (non-oracle) checks for the spectral / density / SCC queries
+of queries/graph_metrics.py: differential against NetworkX / numpy replays
+of the same recurrences — independent of the DuckDB oracles, which share
+the SQL formulation."""
 
 from __future__ import annotations
 
@@ -8,7 +9,7 @@ import networkx as nx
 import numpy as np
 from pyspark.sql import functions as F
 
-from kinbaku_spark.queries.graphmetrics_ext4 import (
+from kinbaku_spark.queries.graph_metrics import (
     KATZ_ROUNDS,
     KATZ_SCALE,
     WALK_ROUNDS,

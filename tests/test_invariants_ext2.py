@@ -22,8 +22,8 @@ def test_betweenness_matches_pure_python(spark, sf_dir):
     """Independent replay: BFS layering, sigma counting, and the exact
     truncating-div delta recursion re-implemented from scratch on the
     collected edge list must reproduce every output row."""
-    from kinbaku_spark.queries.graphmetrics_ext2 import BETW_SCALE
-    from kinbaku_spark.queries.profiling_ext import GEO_MAX_DEPTH, GEO_SOURCE
+    from kinbaku_spark.queries.graph_metrics import BETW_SCALE
+    from kinbaku_spark.queries.graph_metrics import GEO_MAX_DEPTH, GEO_SOURCE
 
     adj = defaultdict(set)
     for u, v in _und_edges(spark, sf_dir):
@@ -64,7 +64,7 @@ def test_betweenness_matches_pure_python(spark, sf_dir):
 def test_truss_survivors_have_support(spark, sf_dir):
     """Every surviving edge's reported support equals its common-neighbor
     count within the survivor edge set, and meets the k-2 floor."""
-    from kinbaku_spark.queries.graphmetrics_ext2 import TRUSS_K
+    from kinbaku_spark.queries.graph_metrics import TRUSS_K
 
     rows = QUERIES["g_truss_bounded"](spark, sf_dir).collect()
     assert rows, "bounded truss must be non-trivial at this SF"
@@ -81,7 +81,7 @@ def test_truss_survivors_have_support(spark, sf_dir):
 def test_eccentricity_landmarks_and_bounds(spark, sf_dir):
     """Landmarks are exactly the top-degree nodes (independent recount);
     each reaches at least its own neighborhood."""
-    from kinbaku_spark.queries.graphmetrics_ext2 import N_LANDMARKS
+    from kinbaku_spark.queries.graph_metrics import N_LANDMARKS
 
     deg = defaultdict(int)
     for u, _ in _und_edges(spark, sf_dir):
@@ -98,7 +98,7 @@ def test_window_dedup_pairs_really_share_text(spark, sf_dir):
     """Reported pairs share at least shared_windows distinct 8-word
     windows in the raw text (the df-cap can only remove shared windows,
     never invent them)."""
-    from kinbaku_spark.queries.pipeline_ext4 import WINDOW_W
+    from kinbaku_spark.queries.curation import WINDOW_W
     from kinbaku_spark.sources.tables import load_table
 
     rows = QUERIES["x_window_dedup"](spark, sf_dir).collect()
@@ -153,7 +153,7 @@ def test_tokenizer_fertility_bounds(spark, sf_dir):
 def test_rrf_score_recomputes_from_ranks(spark, sf_dir):
     """rrf_score is exactly the sum of 10⁶ div (K + rank) over present
     legs, and the output is the top slice of that ordering."""
-    from kinbaku_spark.queries.retrieval_ext import RRF_K, RRF_TOP_K
+    from kinbaku_spark.queries.similarity import RRF_K, RRF_TOP_K
 
     rows = QUERIES["x_rrf_fusion"](spark, sf_dir).collect()
     assert 0 < len(rows) <= RRF_TOP_K

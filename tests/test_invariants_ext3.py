@@ -35,7 +35,7 @@ def test_boruvka_round1_is_per_node_min_edge(run, spark, sf_dir):
     """At round 1 every component is a single node, so the chosen edge
     set must be exactly the distinct per-node minimum-(w, a, b) incident
     edges — replayed in plain Python on the collected edge list."""
-    from kinbaku_spark.queries.graphmetrics_ext3 import _weighted_und
+    from kinbaku_spark.queries.graph_metrics import _weighted_und
 
     edges = _weighted_und(spark, sf_dir).collect()
     best: dict[str, tuple] = {}
@@ -50,7 +50,7 @@ def test_boruvka_round1_is_per_node_min_edge(run, spark, sf_dir):
 
 
 def test_matching_is_node_disjoint_and_mutual_min(run, spark, sf_dir):
-    from kinbaku_spark.queries.graphmetrics_ext3 import _weighted_und
+    from kinbaku_spark.queries.graph_metrics import _weighted_und
 
     matched = run("g_greedy_matching")
     seen: set[str] = set()
@@ -210,7 +210,7 @@ def test_linkage_lift_fields_and_bounds(run):
 def test_hist_quantile_within_one_bucket(run, spark, sf_dir):
     from pyspark.sql import functions as F
 
-    from kinbaku_spark.queries.sketches_ext import HQ_BUCKETS
+    from kinbaku_spark.queries.stats import HQ_BUCKETS
     from kinbaku_spark.sources.tables import load_table
 
     o = load_table(spark, sf_dir, "orders")
@@ -228,7 +228,7 @@ def test_hist_quantile_within_one_bucket(run, spark, sf_dir):
 
 
 def test_motif_brokers_are_backbone_nodes(run, spark, sf_dir):
-    from kinbaku_spark.queries.graphmetrics_ext2 import _truss_proj
+    from kinbaku_spark.queries.graph_metrics import _truss_proj
 
     proj = _truss_proj(spark, sf_dir).collect()
     nodes = {r.s1 for r in proj} | {r.s2 for r in proj}

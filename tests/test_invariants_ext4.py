@@ -64,7 +64,7 @@ def test_audio_decode_real_matches_synthesis_params(run, spark, sf_dir):
 def test_edit_distance_pairs_verified_in_python(run, spark, sf_dir):
     """Every reported pair must satisfy the relative threshold with the
     TRUE Levenshtein distance, recomputed in pure Python."""
-    from kinbaku_spark.queries.dedup_ext2 import ED_REL_PCT
+    from kinbaku_spark.queries.dedup import ED_REL_PCT
 
     def lev(a: str, b: str) -> int:
         if len(a) < len(b):
@@ -121,7 +121,7 @@ def test_kcenter_picks_are_true_farthest_first(run, spark, sf_dir):
     """Replay greedy farthest-first in plain Python over the collected
     embeddings (micro-unit integer L2) — the incremental-min rewrite must
     still produce the exact greedy sequence."""
-    from kinbaku_spark.queries.mlprep_ext2 import KC_PICKS
+    from kinbaku_spark.queries.similarity import KC_PICKS
 
     import math
 
@@ -158,7 +158,7 @@ def test_image_resize_real_replayed_in_python(run, spark, sf_dir):
         .select("doc_id", "n_chars")
         .collect()
     }
-    from kinbaku_spark.queries.media_ext import RESIZE_TO
+    from kinbaku_spark.queries.media import RESIZE_TO
 
     rows = run("x_image_resize_real")
     assert len(rows) == len(docs)

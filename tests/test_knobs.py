@@ -30,7 +30,7 @@ READERS = {
     "KB_CC_LOCAL_THRESHOLD": _duplicate_clusters,
     "KB_TRI_BLOCKS": lambda spark, sf_dir: importlib.reload(_module("operators.triangles")),
     "KB_WEDGE_SAMPLE_PPM": lambda spark, sf_dir: _module(
-        "queries.graphmetrics_ext"
+        "queries.graph_metrics"
     ).g_transitivity(spark, sf_dir),
 }
 

@@ -186,10 +186,10 @@ def test_span_removal_cuts_license_header_keeps_owner(spark):
     header shared by every doc is removed from all but the owner (min
     doc_id), unique tails survive verbatim, and overlapping duplicated
     spans merge into one cut."""
-    from kinbaku_spark.queries import extensions as ext
+    from kinbaku_spark.queries import dedup
     from kinbaku_spark.state import reset
 
-    header = " ".join(f"lic{i}" for i in range(ext.SPAN_N))
+    header = " ".join(f"lic{i}" for i in range(dedup.SPAN_N))
     rows = [
         (i, f"{header} tail{i}a tail{i}b tail{i}c", "en", "t", 0)
         for i in range(4)
@@ -208,17 +208,17 @@ def test_span_removal_cuts_license_header_keeps_owner(spark):
     try:
         out = {
             r["doc_id"]: r
-            for r in ext.x_substring_dedup_apply(spark, sf).collect()
+            for r in dedup.x_substring_dedup_apply(spark, sf).collect()
         }
         # owner (doc 0) keeps everything -> not in the output at all
         assert 0 not in out
         for i in (1, 2, 3):
             r = out[i]
-            assert r["n_removed"] == ext.SPAN_N
+            assert r["n_removed"] == dedup.SPAN_N
             assert r["text_clean"] == f"tail{i}a tail{i}b tail{i}c"
         r10 = out[10]
         assert r10["text_clean"] == "own10"
-        assert r10["n_removed"] == 2 * ext.SPAN_N
+        assert r10["n_removed"] == 2 * dedup.SPAN_N
     finally:
         reset()  # drop the persisted span index for the temp sf_dir
         import shutil

@@ -248,7 +248,7 @@ def _family_state(name, fact):
             .select("k")
         )
     if name == "boruvka_label_map":
-        # queries/graphmetrics_ext3.py g_boruvka_mst: per-round component
+        # queries/graph_metrics.py g_boruvka_mst: per-round component
         # label map (key -> min label) relabeling the edge endpoints
         return fact.groupBy("k").agg(F.min("payload").alias("label"))
     if name == "scc_label_vector":

@@ -40,7 +40,7 @@ def test_no_module_level_caches_outside_state():
                     if re.search(r"(_CACHE|_STATE|:_RESIDENT)$", name) and name not in ALLOWED:
                         found.append(name)
     assert found == []
-    for rel in ("queries/dedup_state.py", "queries/kmeans_state.py", "queries/extensions.py"):
+    for rel in ("queries/dedup_state.py", "queries/kmeans_state.py", "queries/dedup.py"):
         defs = {n.name for n in _tree(rel).body if isinstance(n, ast.FunctionDef)}
         assert not defs & {"reset", "clear_corpus_count_cache"}, rel
 
@@ -52,7 +52,7 @@ def _write_embeddings(path, rows):
 
 
 def test_rewritten_table_rebuilds_resident_and_derived_state(spark, tmp_path, monkeypatch):
-    from kinbaku_spark.queries.extensions import _query_vec
+    from kinbaku_spark.queries.similarity import _query_vec
 
     monkeypatch.setenv("KB_CACHE_TABLES", "1")
     sf_dir, path = str(tmp_path), str(tmp_path / "embeddings.parquet")
