@@ -6,13 +6,26 @@ JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 Execution is forced with the noop sink (full pipeline runs, nothing is
 collected to the driver), so timings measure the distributed plan, not
 driver materialization.
+
+    python bench.py [--trace] [NAME...]
+
+Every query runs twice in one session, run 1 *cold* (it pays the query's
+shared-state builds and first-call codegen) and run 2 *warm*; the faster
+one is reported. ``--trace`` adds both runs' work, folded from Spark's
+event log (see ``run_columns``), to BENCH_DETAIL.json. NAMEs run those
+registry queries instead, print one JSON line each and leave
+BENCH_DETAIL.json alone; one NAME per process gives a fresh-process cold
+number.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
+import shutil
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
@@ -28,8 +41,12 @@ os.environ.setdefault("KB_CACHE_TABLES", "1")
 from kinbaku_spark.queries import QUERIES  # noqa: E402
 from kinbaku_spark.session import get_spark  # noqa: E402
 from kinbaku_spark.sources.tables import load_tables  # noqa: E402
+from perfbench.eventlog import GroupWork, driver_gap_s, fold_dir  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+DETAIL_PATH = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json"
+)
 
 # Headline set: scan-bound agg, shuffle join, star join, top-k, window,
 # sessionization, graph degree agg, graph traversal join, adjacency export.
@@ -290,10 +307,71 @@ def stdout_line(timings: dict[str, float], total: float, sf_val) -> str:
     return out
 
 
-def main() -> None:
+def enable_event_log() -> str:
+    """Turn on Spark's event log, uncompressed (Spark 4 defaults to zstd;
+    stdlib ``json`` needs it plain), in a fresh temp dir and return that
+    dir. The submit args are read once, when the JVM starts, so this must
+    run before the first ``get_spark``; existing ones are kept."""
+    log_dir = tempfile.mkdtemp(prefix="kb_bench_events_")
+    conf = [
+        "spark.eventLog.enabled=true",
+        f"spark.eventLog.dir=file://{log_dir}",
+        "spark.eventLog.compress=false",
+    ]
+    args = os.environ.get("PYSPARK_SUBMIT_ARGS", "").strip()
+    args = args.removesuffix("pyspark-shell") + "".join(f"--conf {c} " for c in conf)
+    os.environ["PYSPARK_SUBMIT_ARGS"] = args + "pyspark-shell"
+    return log_dir
+
+
+def time_query(spark, name: str, spans: dict, tag: bool) -> None:
+    """Run ``name`` twice; ``spans["<name>|<run>"]`` gets each run's epoch
+    start (ms) and wall seconds. With ``tag`` the run's jobs carry that
+    key as their job group."""
+    for run in ("cold", "warm"):
+        group = f"{name}|{run}"
+        if tag:
+            spark.sparkContext.setJobGroup(group, group)
+        wall0, t0 = time.time(), time.perf_counter()
+        _force(QUERIES[name](spark, SF_DIR))
+        spans[group] = (wall0 * 1e3, time.perf_counter() - t0)
+        if tag:
+            spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
+
+
+def run_columns(spans, folded: dict[str, GroupWork] | None = None) -> dict:
+    """``{name: {run: columns}}``: each run's wall seconds and, given the
+    folded event log, the work of its job group and its driver gap."""
+    out: dict[str, dict] = {}
+    for group, (start_ms, secs) in spans.items():
+        name, run = group.rsplit("|", 1)
+        cols = out.setdefault(name, {})[run] = {"wall_s": round(secs, 3)}
+        if folded is None:
+            continue
+        w = folded.get(group, GroupWork())
+        gap = driver_gap_s(start_ms, start_ms + secs * 1e3, w.job_intervals_ms)
+        cols.update(
+            jobs=w.jobs,
+            stages=w.stages,
+            tasks=w.tasks,
+            task_failures=w.task_failures,
+            executor_cpu_s=round(w.executor_cpu_s, 3),
+            gc_s=round(w.gc_s, 3),
+            shuffle_read_mb=round(w.shuffle_read_bytes / 2**20, 3),
+            shuffle_write_mb=round(w.shuffle_write_bytes / 2**20, 3),
+            spill_mb=round(w.spill_bytes / 2**20, 3),
+            python_bytes=w.python_bytes,
+            driver_gap_s=round(gap, 3),
+        )
+    return out
+
+
+def measure(names: list[str], log_dir: str | None) -> dict:
+    """Warm up, then run each query (the headline suite when ``names`` is
+    empty) twice; returns :func:`run_columns`, traced when ``log_dir`` is
+    the event-log dir."""
     spark = get_spark(app_name="kinbaku_spark_bench")
-    sf = SF_DIR.rstrip("/").split("sf")[-1]
-    names = [n for n in HEADLINE + EXTENSION_HEADLINE if n in QUERIES]
+    names = names or [n for n in HEADLINE + EXTENSION_HEADLINE if n in QUERIES]
 
     # warm up the JVM, load every base table into the resident cache, and
     # materialize the derived-graph ETL once — all outside the timed region
@@ -306,16 +384,51 @@ def main() -> None:
     # two runs per query, report the faster: the first run pays one-time
     # codegen/broadcast setup that a resident engine amortizes; steady-state
     # is the comparable number
-    timings: dict[str, float] = {}
+    spans: dict[str, tuple[float, float]] = {}
     for name in names:
-        best = float("inf")
-        for _ in range(2):
-            t0 = time.perf_counter()
-            _force(QUERIES[name](spark, SF_DIR))
-            best = min(best, time.perf_counter() - t0)
-        timings[name] = round(best, 3)
+        time_query(spark, name, spans, tag=log_dir is not None)
+    if log_dir is None:
+        return run_columns(spans)
+    spark.stop()  # flushes the event log
+    return run_columns(spans, fold_dir(log_dir))
+
+
+def main(argv: list[str] | None = None) -> None:
+    parser = argparse.ArgumentParser(
+        description="Time the headline suite, or the named registry queries."
+    )
+    parser.add_argument(
+        "--trace", action="store_true",
+        help="add each run's work, folded from Spark's event log",
+    )
+    parser.add_argument(
+        "names", nargs="*", metavar="NAME",
+        help="registry queries to run instead of the headline suite",
+    )
+    args = parser.parse_args(argv)
+    unknown = [n for n in args.names if n not in QUERIES]
+    if unknown:
+        parser.error(
+            f"unknown query name(s): {', '.join(unknown)} "
+            "(REGISTRY.md lists the registry)"
+        )
+    log_dir = enable_event_log() if args.trace else None
+    try:
+        columns = measure(args.names, log_dir)
+    finally:
+        if log_dir:
+            shutil.rmtree(log_dir, ignore_errors=True)
+    timings = {
+        name: min(c["wall_s"] for c in runs.values())
+        for name, runs in columns.items()
+    }
+    if args.names:
+        for name, runs in columns.items():
+            print(json.dumps({"query": name, "best_s": timings[name], **runs}))
+        return
 
     total = round(sum(timings.values()), 3)
+    sf = SF_DIR.rstrip("/").split("sf")[-1]
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
 
     # Full per-query map goes to a file; the final stdout line stays SHORT
@@ -329,10 +442,9 @@ def main() -> None:
         "sf": sf_val,
         "n_queries": len(timings),
     }
-    detail_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json"
-    )
-    with open(detail_path, "w") as fh:
+    if args.trace:
+        detail["trace"] = columns
+    with open(DETAIL_PATH, "w") as fh:
         json.dump(detail, fh, indent=1, sort_keys=True)
 
     print(stdout_line(timings, total, sf_val))

@@ -17,7 +17,7 @@ through its cached out-edge block):
     neighbors                     graph.py:856-884    -> out-edge block
     predecessors                  graph.py:856-884    -> stored in-edges + pending ops
     neighbors_from/..._from       graph.py:928-957    -> one shuffle join
-    common_neighbors/preds        graph.py:959-983    -> intersect
+    common_neighbors/preds        graph.py:959-983    -> intersect of point reads
     out_degree                    graph.py:985-997    -> out-edge block
     in_degree                     graph.py:985-997    -> stored in-edges + pending ops
     out_degrees/in_degrees        (extension)         -> groupBy
@@ -793,12 +793,10 @@ class Graph:
         )
 
     def common_neighbors(self, u: str, v: str) -> set[str]:
-        df = self.neighbors_df(u).intersect(self.neighbors_df(v))
-        return {r[0] for r in df.collect()}
+        return set(self.neighbors(u)) & set(self.neighbors(v))
 
     def common_predecessors(self, u: str, v: str) -> set[str]:
-        df = self.predecessors_df(u).intersect(self.predecessors_df(v))
-        return {r[0] for r in df.collect()}
+        return set(self.predecessors(u)) & set(self.predecessors(v))
 
     # -- degrees (reference graph.py:985-997; counts EDGES, so parallel types
     #    count separately — matches `SELECT count(*) ... WHERE src=?`) --------
@@ -883,7 +881,7 @@ class Graph:
         reference's scipy CSR export. Two joins against the |V|-sized id
         map, broadcast only while |V| is under the size gate
         (plans/hints.py) — past it they fall back to shuffle joins."""
-        from kinbaku_spark.plans.hints import maybe_broadcast
+        from kinbaku_spark.plans.hints import size_hint
 
         ids_df = self.node_id_map()
         if self._id_map_count is None:
@@ -891,7 +889,7 @@ class Graph:
             # memoized per Graph — NOT self.n_nodes, which would add a
             # full nodes-table scan job to every adjacency export
             self._id_map_count = ids_df.count()
-        ids = maybe_broadcast(ids_df, self._id_map_count)
+        ids = size_hint(self._id_map_count)(ids_df)
         e = self.edges_df
         w = F.col(weight) if weight else F.lit(1.0)
         return (

@@ -25,7 +25,7 @@ from functools import reduce
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from kinbaku_spark.plans.hints import broadcast_bound, size_hint
+from kinbaku_spark.plans.hints import size_hint
 
 _KEY = "__ss_key"
 _SELF = "__ss_self"
@@ -96,10 +96,8 @@ def peel(edges: DataFrame, keep: DataFrame, a: str, b: str, bound: int) -> DataF
     pin makes ``keep`` a plain scan and restores AQE's split
     (tests/test_skew_probe.py::test_iterative_join_sides_skew_split).
     """
-    if bound < broadcast_bound():
-        hint = F.broadcast
-    else:
-        hint = lambda df: df  # noqa: E731
+    hint = size_hint(bound)
+    if hint is not F.broadcast:
         keep = keep.localCheckpoint(eager=False)
     k = keep.columns[0]
     return (

@@ -4,7 +4,7 @@ An EXPLICIT ``F.broadcast`` hint is ALWAYS honored — AQE never demotes it —
 so an ungated hint on a |V|-sized table (rank vectors, keep-lists, label
 maps, degree tables) is a guaranteed executor OOM once |V| outgrows
 executor memory (~10⁹ nodes). Every such hint in the iterative graph
-queries goes through :func:`maybe_broadcast`: the hint is applied only
+queries goes through :func:`size_hint`: the hint is applied only
 while the caller's known row bound is under the broadcast bound; past it,
 the table is returned unhinted so the planner falls back to a partitioned
 shuffle join (and AQE may still choose a broadcast from runtime stats —
@@ -32,20 +32,13 @@ def broadcast_bound(default: int = DEFAULT_BROADCAST_BOUND) -> int:
     return env_int("KB_BROADCAST_BOUND", default)
 
 
-def maybe_broadcast(
-    df: DataFrame, n_rows: int, default_bound: int = DEFAULT_BROADCAST_BOUND
-) -> DataFrame:
-    """``F.broadcast(df)`` while ``n_rows`` (the caller's bound on df's
-    cardinality — typically |V|, never an estimate from a degree guess) is
-    under the gate; the unhinted ``df`` otherwise."""
-    return F.broadcast(df) if n_rows < broadcast_bound(default_bound) else df
-
-
 def size_hint(n_rows: int, default_bound: int = DEFAULT_BROADCAST_BOUND):
-    """Curried form for loop bodies: ``hint = size_hint(n)`` then
-    ``hint(df)`` per join side — one gate decision, many sites.
-    ``default_bound`` lets a site keep a tighter default (e.g. wide
-    walker-state rows); KB_BROADCAST_BOUND still overrides it."""
+    """``F.broadcast`` while ``n_rows`` (the caller's bound on the hinted
+    table's cardinality — typically |V|, never an estimate from a degree
+    guess) is under the gate; the identity otherwise. ``hint =
+    size_hint(n)`` then ``hint(df)`` per join side — one gate decision,
+    many sites. ``default_bound`` lets a site keep a tighter default (e.g.
+    wide walker-state rows); KB_BROADCAST_BOUND still overrides it."""
     if n_rows < broadcast_bound(default_bound):
         return F.broadcast
     return lambda df: df

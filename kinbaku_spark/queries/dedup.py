@@ -29,7 +29,7 @@ from kinbaku_spark.operators.similarity import (
 )
 from kinbaku_spark.operators.text import doc_fingerprint, text_quality
 from kinbaku_spark.plans.checkpoints import pin
-from kinbaku_spark.plans.hints import maybe_broadcast
+from kinbaku_spark.plans.hints import size_hint
 from kinbaku_spark.queries import register
 from kinbaku_spark.queries.dedup_state import (
     BAND_ROWS,
@@ -512,7 +512,7 @@ def x_fuzzy_match(spark, sf_dir):
 
     probes_v_bound = shared(spark, sf_dir, "fuzzy_probes_bound", probes_bound, ["part"])
     cand = (
-        parts_v.join(maybe_broadcast(probes_v, probes_v_bound), "v")
+        parts_v.join(size_hint(probes_v_bound)(probes_v), "v")
         .select("probe_key", "corrupted", "match_key", "match_name")
         .distinct()
     )

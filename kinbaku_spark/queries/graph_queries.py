@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from kinbaku_spark.graph import Graph
 from kinbaku_spark.operators.ids import ordered_zero_ids
 from kinbaku_spark.operators.supersteps import peel, propagate
-from kinbaku_spark.plans.hints import maybe_broadcast, size_hint
+from kinbaku_spark.plans.hints import size_hint
 from kinbaku_spark.queries import register
 from kinbaku_spark.sources.tables import (
     CUSTOMER_ORDER_EDGES_SQL,
@@ -1670,10 +1670,9 @@ def g_negative_samples(spark, sf_dir):
     cand = cand.join(
         # the (index, key) map is |V|-sized: size-gate (n_row stays
         # unconditional — it is one row)
-        maybe_broadcast(
+        size_hint(_n_nodes(spark, sf_dir))(
             nodes.select(F.col("index").alias("cand_idx"),
                          F.col("key").alias("dst")),
-            _n_nodes(spark, sf_dir),
         ),
         "cand_idx",
     ).filter(F.col("dst") != F.col("src"))
@@ -2066,7 +2065,7 @@ def g_resource_allocation(spark, sf_dir):
     g = _graph(spark, sf_dir)
     e = g.edges_df.select("src", "dst")
     indeg = e.groupBy("dst").agg(F.count(F.lit(1)).alias("indeg"))
-    quota = maybe_broadcast(indeg, _n_nodes(spark, sf_dir)).select(
+    quota = size_hint(_n_nodes(spark, sf_dir))(indeg).select(
         "dst", F.expr("1000000 div indeg").alias("quota")
     )
     a = e.withColumnRenamed("src", "key_a")

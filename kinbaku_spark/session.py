@@ -35,13 +35,13 @@ def get_spark(
     app_name: str = "kinbaku_spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
-    ui_enabled: bool = False,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession tuned for this engine.
 
-    ``ui_enabled`` turns the Spark UI (and its REST status API) on for
-    measurement harnesses (scripts/workprof.py); the engine default stays
-    off — the UI server is pure overhead for headless runs.
+    The Spark UI stays off: its server is pure overhead for headless runs,
+    and per-query work is read from Spark's event log instead (``python
+    bench.py --trace``). The ``spark.ui.retained*`` limits still matter —
+    ``statusTracker`` job counts read the same status store.
     """
     cpus = int(DEFAULT_CPUS)
     builder = (
@@ -57,7 +57,7 @@ def get_spark(
             "spark.driver.memory",
             os.environ.get("SPARK_DRIVER_MEM", default_driver_memory()),
         )
-        .config("spark.ui.enabled", "true" if ui_enabled else "false")
+        .config("spark.ui.enabled", "false")
         .config("spark.ui.retainedJobs", "5000")
         .config("spark.ui.retainedStages", "5000")
         .config("spark.sql.session.timeZone", "UTC")

@@ -9,8 +9,9 @@ offline and FIXED; each foreachBatch step (1) assigns the batch's
 vectors to their nearest centroid cell, (2) probes only the `n_probe`
 nearest cells of the persistent index for candidates — never the whole
 index, (3) emits verified top-k neighbors, and (4) appends the batch's
-vectors to the index under a batch_id partition so a replayed batch
-overwrites itself (exactly-once on at-least-once foreachBatch retries).
+vectors to the index under a batch_id partition; a replayed batch probes
+the index without its own partition and overwrites it (exactly-once on
+at-least-once foreachBatch retries; streaming/batch_index.py).
 
 At 100 TB the index is a cell-bucketed table: the probe join hits
 `n_probe` buckets per query vector, so per-batch cost scales with batch
@@ -24,11 +25,10 @@ results and index bit-for-bit (test_streaming).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, functions as F
 
 from kinbaku_spark.operators.similarity import _l2_lit
+from kinbaku_spark.streaming.batch_index import prior_index, write_batch
 
 _INT_VEC = (
     "transform(embedding, v -> "
@@ -88,13 +88,8 @@ def ann_ingest_batch(
         F.explode(_nearest_cells(F.col("q"), centroids, n_probe)).alias("probe"),
     ).localCheckpoint(eager=True)
 
-    index_has_data = os.path.isdir(index_dir) and any(
-        f.endswith(".parquet")
-        for _, _, files in os.walk(index_dir)
-        for f in files
-    )
-    if index_has_data:
-        index = spark.read.parquet(index_dir)
+    index = prior_index(spark, index_dir, batch_id)
+    if index is not None:
         pairs = vecs.join(
             index.select(
                 F.col("cell").alias("probe"),
@@ -126,18 +121,8 @@ def ann_ingest_batch(
             [], "vec_id long, neighbor_id long, dot long, rank int"
         )
 
-    if batch_id is not None:
-        results.write.mode("overwrite").parquet(
-            f"{results_dir}/batch_id={batch_id}"
-        )
-        vecs.select("vec_id", "q", "cell").distinct().write.mode(
-            "overwrite"
-        ).parquet(f"{index_dir}/batch_id={batch_id}")
-    else:
-        results.write.mode("append").parquet(results_dir)
-        vecs.select("vec_id", "q", "cell").distinct().write.mode(
-            "append"
-        ).parquet(index_dir)
+    write_batch(results, results_dir, batch_id)
+    write_batch(vecs.select("vec_id", "q", "cell").distinct(), index_dir, batch_id)
 
 
 def ann_ingest_to_parquet(

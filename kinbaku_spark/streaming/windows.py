@@ -22,6 +22,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from kinbaku_spark.streaming.batch_index import prior_index, write_batch
+
 EVENTS_SCHEMA = (
     "event_id bigint, ts timestamp, user_id bigint, event_type string, "
     "value double, props string"
@@ -378,13 +380,7 @@ def dedup_ingest_batch(
     with novel content; each batch pays one broadcast/shuffle probe join,
     and payload text never reaches the index — only band keys.
     """
-    import os
-
-    from kinbaku_spark.operators.dedup import (
-        minhash_band_candidates,  # noqa: F401 (same banding constants)
-        minhash_signatures,
-        shingle_hashes,
-    )
+    from kinbaku_spark.operators.dedup import minhash_signatures, shingle_hashes
 
     spark = batch_df.sparkSession
     if batch_df.isEmpty():
@@ -406,13 +402,8 @@ def dedup_ingest_batch(
     ).select("doc_id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
     keys = keys.localCheckpoint(eager=True)
 
-    index_has_data = os.path.isdir(index_dir) and any(
-        f.endswith(".parquet")
-        for _, _, files in os.walk(index_dir)
-        for f in files
-    )
-    if index_has_data:
-        index = spark.read.parquet(index_dir)
+    index = prior_index(spark, index_dir, batch_id)
+    if index is not None:
         hit = (
             keys.join(index.withColumnRenamed("doc_id", "first_doc"),
                       ["band", "key"])
@@ -445,24 +436,13 @@ def dedup_ingest_batch(
         )
         .localCheckpoint(eager=True)
     )
-    # idempotent retry: when foreachBatch replays a batch after a failure,
-    # overwriting the SAME batch_id partition keeps flags/index exactly-once
-    # (the checkpoint guarantees at-least-once invocation, not execution)
-    if batch_id is not None:
-        flags.write.mode("overwrite").parquet(
-            f"{flags_dir}/batch_id={batch_id}"
-        )
-    else:
-        flags.write.mode("append").parquet(flags_dir)
+    # idempotent retry (streaming/batch_index.py): a replayed batch_id
+    # probes the index without its own partition and overwrites it
+    write_batch(flags, flags_dir, batch_id)
     new_keys = keys.join(
         flags.filter(~F.col("is_dup")).select("doc_id"), "doc_id"
     )
-    if batch_id is not None:
-        new_keys.write.mode("overwrite").parquet(
-            f"{index_dir}/batch_id={batch_id}"
-        )
-    else:
-        new_keys.write.mode("append").parquet(index_dir)
+    write_batch(new_keys, index_dir, batch_id)
 
 
 def dedup_ingest_to_parquet(

@@ -2,14 +2,13 @@
 
 An explicit ``F.broadcast`` hint is never demoted by AQE, so every
 |V|-sized table in the iterative graph queries (rank vectors, keep-lists,
-label/degree maps, id maps) goes through the ``maybe_broadcast`` /
-``size_hint`` gate. These tests simulate a past-the-bound deployment
-(|V| > 5M nodes) by forcing the gate shut with ``KB_BROADCAST_BOUND=0`` —
-the demoted plan must contain NO broadcast hint anywhere (the planner is
-then free to shuffle-join, and AQE may still *promote* from runtime stats,
-which is a demotable decision). The default mode's hinted plans are locked
-by PLAN_LOCK.json; here we additionally assert the hint genuinely engages
-below the bound.
+label/degree maps, id maps) goes through the ``size_hint`` gate. These
+tests simulate a past-the-bound deployment (|V| > 5M nodes) by forcing the
+gate shut with ``KB_BROADCAST_BOUND=0`` — the demoted plan must contain NO
+broadcast hint anywhere (the planner is then free to shuffle-join, and AQE
+may still *promote* from runtime stats, which is a demotable decision).
+The default mode's hinted plans are locked by PLAN_LOCK.json; here we
+additionally assert the hint genuinely engages below the bound.
 """
 
 from __future__ import annotations
@@ -39,17 +38,15 @@ def test_gate_helpers_respect_bound(spark):
     assert hints.broadcast_bound() == hints.DEFAULT_BROADCAST_BOUND
     assert hints.broadcast_bound(123) == 123
     # under the bound: hinted
-    hinted = hints.maybe_broadcast(df, 10)
+    hinted = hints.size_hint(10)(df)
     assert "ResolvedHint" in hinted._jdf.queryExecution().analyzed().toString()
     # over the bound: untouched
-    assert hints.maybe_broadcast(df, 10_000_000) is df
     assert hints.size_hint(10_000_000)(df) is df
     # site-specific default bound
-    assert hints.maybe_broadcast(df, 500, default_bound=100) is df
-    # env override wins in both directions
+    assert hints.size_hint(500, default_bound=100)(df) is df
+    # env override wins
     os.environ["KB_BROADCAST_BOUND"] = "0"
     try:
-        assert hints.maybe_broadcast(df, 1) is df
         assert hints.size_hint(1)(df) is df
     finally:
         os.environ.pop("KB_BROADCAST_BOUND", None)

@@ -195,6 +195,42 @@ def test_parallel_types_and_self_loops_count(g):
     assert list(g.neighbors("a")) == ["a", "b", "c"]
 
 
+@pytest.mark.parametrize("preload", [True, False], ids=["preload", "default"])
+def test_common_neighbors_match_networkx_with_pending_writes(spark, tables, preload):
+    """common_neighbors/common_predecessors answer through the point reads:
+    NetworkX parity with pending writes laid over the stored edges, no
+    pending op flushed, and no Spark job on a preloaded graph."""
+    nx = pytest.importorskip("networkx")
+    g = Graph(spark, nodes=tables[0], edges=tables[1], preload=preload)
+    nxg = nx.DiGraph((r.src, r.dst) for r in tables[1].collect())
+    for u, v in [("a", "d"), ("b", "a"), ("d", "c"), ("hub", "c"), ("x0", "b")]:
+        g.add_edge(u, v)
+        nxg.add_edge(u, v)
+    g.remove_edge("a", "c")
+    nxg.remove_edge("a", "c")
+    pending = (dict(g._node_ops), dict(g._edge_ops))
+    keys = ["a", "b", "c", "d", "hub", "x0", "nobody"]
+
+    def both():
+        return {
+            (u, v): (g.common_neighbors(u, v), g.common_predecessors(u, v))
+            for u in keys
+            for v in keys
+        }
+
+    got, jobs = _jobs(spark, both)
+    succ = {k: set(nxg.successors(k)) if k in nxg else set() for k in keys}
+    pred = {k: set(nxg.predecessors(k)) if k in nxg else set() for k in keys}
+    assert got == {
+        (u, v): (succ[u] & succ[v], pred[u] & pred[v]) for u in keys for v in keys
+    }
+    assert any(n for n, _ in got.values()) and any(p for _, p in got.values())
+    if preload:
+        assert jobs == 0
+    assert g._flushes == 0
+    assert (g._node_ops, g._edge_ops) == pending
+
+
 def test_block_rows_bounded_by_cache_len(spark, tables):
     g = Graph(spark, nodes=tables[0], edges=tables[1], cache_len=5)
     assert g.out_degree("a") == 4

@@ -6,6 +6,7 @@ Structured Streaming.
 
 from __future__ import annotations
 
+import os
 import shutil
 import tempfile
 
@@ -352,10 +353,23 @@ def test_heavy_hitters_closed_window_parity(spark, event_files):
     shutil.rmtree(d, ignore_errors=True)
 
 
+def _parquet_rows(spark, path: str) -> list:
+    """Every row of a parquet dir, partition columns included, sorted."""
+    return sorted(tuple(r) for r in spark.read.parquet(path).collect())
+
+
+def _last_batch_id(out_dir: str) -> int:
+    """The highest ``batch_id=<n>`` partition a foreachBatch sink wrote."""
+    return max(
+        int(n.split("=", 1)[1]) for n in os.listdir(out_dir) if n.startswith("batch_id=")
+    )
+
+
 def test_streaming_dedup_ingest_matches_sequential_replay(spark, sf_dir):
     """The streaming dedup-ingest loop (foreachBatch probing a persistent
     MinHash band index) must produce exactly the flags a direct sequential
-    replay of the same batches produces — and must actually flag dups."""
+    replay of the same batches produces — and must actually flag dups. A
+    replayed batch_id leaves flags and index unchanged."""
     import glob
     import os
     import shutil
@@ -405,6 +419,18 @@ def test_streaming_dedup_ingest_matches_sequential_replay(spark, sf_dir):
         idx_docs = {r.doc_id for r in spark.read.parquet(f"{d}/index").collect()}
         dup_docs = {i for i, flag in got if flag}
         assert not (idx_docs & dup_docs)
+
+        # an at-least-once replay of the last batch (same batch_id) must not
+        # probe the index keys its own first attempt wrote
+        flags_before = _parquet_rows(spark, f"{d}/flags")
+        index_before = _parquet_rows(spark, f"{d}/index")
+        files = sorted(glob.glob(f"{d}/docs/part-*"))
+        dedup_ingest_batch(
+            spark.read.parquet(files[-1]), f"{d}/index", f"{d}/flags",
+            batch_id=_last_batch_id(f"{d}/flags"),
+        )
+        assert _parquet_rows(spark, f"{d}/flags") == flags_before
+        assert _parquet_rows(spark, f"{d}/index") == index_before
     finally:
         shutil.rmtree(d, ignore_errors=True)
 
@@ -468,7 +494,8 @@ def test_streaming_ann_ingest_matches_sequential_replay(spark, sf_dir):
     """The streaming ANN-ingest loop (foreachBatch probing a persistent
     IVF index, search-then-insert) must produce exactly the results a
     direct sequential replay of the same batches produces, and every
-    reported neighbor must have been indexed in an EARLIER batch."""
+    reported neighbor must have been indexed in an EARLIER batch. A
+    replayed batch_id leaves results and index unchanged."""
     import glob
     import os
     import shutil
@@ -529,6 +556,17 @@ def test_streaming_ann_ingest_matches_sequential_replay(spark, sf_dir):
         idx = spark.read.parquet(f"{d}/index")
         assert idx.count() == emb.count()
         assert idx.select("vec_id").distinct().count() == emb.count()
+
+        # an at-least-once replay of the last batch (same batch_id) must not
+        # find its own first attempt's vectors as neighbors
+        results_before = _parquet_rows(spark, f"{d}/results")
+        index_before = _parquet_rows(spark, f"{d}/index")
+        ann_ingest_batch(
+            spark.read.parquet(files[-1]), f"{d}/index", f"{d}/results", cents,
+            batch_id=_last_batch_id(f"{d}/results"),
+        )
+        assert _parquet_rows(spark, f"{d}/results") == results_before
+        assert _parquet_rows(spark, f"{d}/index") == index_before
     finally:
         shutil.rmtree(d, ignore_errors=True)
 
