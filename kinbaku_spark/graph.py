@@ -39,14 +39,22 @@ Record caches: the reference answers edge/has_edge/neighbors/out_degree by
 walking one node's out-edge tree (graph.py:472-492). Point reads here go
 through two caches of STORED records: a node LRU and per-source out-edge
 blocks, bounded together by ``cache_len`` (a block over ``cache_len`` rows
-is answered but not kept). A miss is one job: a point read on a hub
-transfers all of the hub's out-edges once. Pending ops of the entity are
-laid over the cached record at read time, so reads see the session's own
-writes. Every table rewrite (flush, remove_node, set_neighbors/
-set_predecessors) applies the same change to the cached records, so they
-stay warm; bulk mutations drop them all. ``preload()`` is the reference's
-``preload=True`` (graph.py:31,59,304-306): the same caches, filled and
-complete — unbounded, and a miss means "absent" with no job.
+is answered but not kept). A miss fetches one key with one job: a point
+read on a hub transfers all of the hub's out-edges once, and an absent node
+is remembered as absent. Each table (nodes, edges) counts its misses and,
+by the ski-rental rule (Karlin et al., 1988), fetches itself whole instead
+at the miss where ``misses so far × ROWS_PER_MISS`` reaches its row count
+N; from then on it is held complete — unbounded, and a miss means "absent"
+with no job. N is read from the plan statistics without a job, so only a
+resident (persisted, materialized) table of at most ``cache_len`` rows is
+ever bought; buying costs at most about twice the better fixed choice.
+Pending ops of the entity are laid over the cached record at read time, so
+reads see the session's own writes. Every table rewrite (flush,
+remove_node, set_neighbors/set_predecessors) applies the same change to the
+cached records, so they stay warm; bulk mutations drop them all and end
+the held state. ``preload()`` is the reference's ``preload=True``
+(graph.py:31,59,304-306): both tables held complete now, by the same
+whole-table fetch.
 
 Scale notes: the record caches are for the reference's point-op API, which
 is inherently driver-bound; at 100 TB you use the batch API (`add_edges`,
@@ -73,11 +81,21 @@ EDGE_KEY = ("src", "dst", "type")
 DEFAULT_FLUSH_EVERY = 50_000
 # point-read LRU capacity (reference cache_len default, graph.py:29)
 DEFAULT_CACHE_LEN = 1_000_000
+# Rows a whole-table fetch transfers for the CPU of one per-key miss: the
+# per-key job's CPU over the per-row transfer CPU, the ski-rental price
+# ratio. scripts/point_fetch_cost.py measures both; two runs at sf 0.01 on a
+# 4-core host (local[4]): a miss on the 51,677-row edge table 193/211 ms, a
+# whole fetch 970/1180 ms (15/19 µs a row), 12,836/11,253 rows per miss.
+ROWS_PER_MISS = 12_000
+
+# _lru_get's answer for a key with no cache entry (a node entry may be None:
+# a key known to be absent)
+_UNCACHED = object()
 
 
 def _lru_get(lru: OrderedDict, key):
-    rec = lru.get(key)
-    if rec is not None:
+    rec = lru.get(key, _UNCACHED)
+    if rec is not _UNCACHED:
         lru.move_to_end(key)
     return rec
 
@@ -91,6 +109,15 @@ def _lru_put(lru: OrderedDict, key, rec, cap: int) -> None:
 
 # localCheckpoint() every N flushes to truncate lineage for long op-logs.
 CHECKPOINT_EVERY_FLUSHES = 8
+
+
+def _plan_rows(df: DataFrame) -> int | None:
+    """The row count of ``df`` from its optimized plan's statistics, read
+    with no job: exact for a resident (persisted, materialized) table, an
+    upper bound after an anti-join of one, None when Spark does not know it
+    (createDataFrame, parquet scans, unions, filters)."""
+    n = df._jdf.queryExecution().optimizedPlan().stats().rowCount()
+    return int(str(n.get())) if n.isDefined() else None
 
 
 def _nullable(schema: StructType, keep: set[str]) -> StructType:
@@ -157,11 +184,13 @@ class Graph:
         # distributed scan is the wrong shape (~300 ms/job vs ~ms in the
         # reference); the caches answer repeat reads at dict speed while
         # every bulk/analytic path stays distributed. ``cache_len`` bounds
-        # the node LRU's entries and the blocks' total rows until
-        # preload() fills both and marks them complete.
+        # the node LRU's entries and the blocks' total rows; a table held
+        # complete (bought whole by the rule or by preload()) is unbounded.
+        # Per table: held complete, and per-key misses so far.
         self._cache_len = cache_len
-        self._complete = False
-        self._node_lru: OrderedDict[str, dict] = OrderedDict()
+        self._nodes_complete = self._edges_complete = False
+        self._node_misses = self._edge_misses = 0
+        self._node_lru: OrderedDict[str, dict | None] = OrderedDict()
         self._blocks: OrderedDict[str, dict[tuple[str, int], dict]] = OrderedDict()
         self._block_rows = 0
         self._id_map: DataFrame | None = None
@@ -306,35 +335,73 @@ class Graph:
     # -- delta machinery -----------------------------------------------------
 
     def preload(self) -> None:
-        """Load every node and edge record into the point-read caches — the
-        reference's ``preload=True`` semantics (graph.py:31,59,304-306: all
-        node attributes loaded at open, served from the record caches).
+        """Hold both tables complete now — the reference's ``preload=True``
+        semantics (graph.py:31,59,304-306: all node attributes loaded at
+        open, served from the record caches).
 
-        The node LRU and the out-edge blocks are filled completely, the
-        ``cache_len`` bound is lifted and the caches are marked complete:
-        a miss then means "absent", so every point read (``node``/``edge``/
-        ``has_node``/``has_edge``/``neighbors``/``predecessors``/degrees,
-        ``n_nodes``/``n_edges``) answers from driver memory with NO Spark
-        job. Point mutations keep the caches exact; bulk mutations
-        (add_edges/remove_nodes/...) and ``empty_cache`` drop them and end
-        complete mode. Operating envelope: the record set fits one process
-        — the reference's own envelope (its entire graph is one local
-        file)."""
-        self._flush()
-        if self._complete:
-            return
+        Each table not yet held is fetched whole (one job each) into its
+        cache, the same fill the ski-rental rule buys with: the node LRU
+        and the out-edge blocks hold every stored record, the ``cache_len``
+        bound is lifted, and a miss means "absent". Every point read
+        (``node``/``edge``/``has_node``/``has_edge``/``neighbors``/
+        ``predecessors``/degrees, ``n_nodes``/``n_edges``) then answers
+        from driver memory with NO Spark job, pending ops laid over the
+        stored records as always. Point mutations keep the caches exact;
+        bulk mutations (add_edges/remove_nodes/...) and ``empty_cache``
+        drop them and end the held state. Operating envelope: the record
+        set fits one process — the reference's own envelope (its entire
+        graph is one local file)."""
+        if not self._nodes_complete:
+            self._hold_nodes()
+        if not self._edges_complete:
+            self._hold_edges()
+
+    def _hold_nodes(self) -> None:
+        """Fetch the stored node table whole and hold it complete."""
         self._node_lru = OrderedDict((r["key"], r.asDict()) for r in self._nodes.collect())
+        self._nodes_complete = True
+
+    def _hold_edges(self) -> None:
+        """Fetch the stored edge table whole, as out-edge blocks, and hold
+        it complete."""
         blocks: OrderedDict[str, dict[tuple[str, int], dict]] = OrderedDict()
         for r in self._edges.collect():
             blocks.setdefault(r["src"], {})[(r["dst"], r["type"])] = r.asDict()
         self._blocks = blocks
         self._block_rows = sum(len(b) for b in blocks.values())
-        self._complete = True
+        self._edges_complete = True
+
+    def _pays(self, table: DataFrame, misses: int) -> bool:
+        """Ski rental: whether the per-key misses so far have paid for one
+        whole fetch of ``table`` (``misses × ROWS_PER_MISS ≥ N``). A table
+        whose row count N is unknown, or over ``cache_len``, is never
+        bought."""
+        n = _plan_rows(table)
+        return n is not None and n <= self._cache_len and misses * ROWS_PER_MISS >= n
+
+    def _nodes_held(self) -> bool:
+        """Whether the node table is held complete, buying it first if the
+        misses so far have paid for it. Called at a node miss."""
+        if not self._nodes_complete and self._pays(self._nodes, self._node_misses):
+            self._hold_nodes()
+        return self._nodes_complete
+
+    def _edges_held(self) -> bool:
+        """Whether the edge table is held complete, buying it first if the
+        misses so far have paid for it. Called at an edge miss."""
+        if not self._edges_complete and self._pays(self._edges, self._edge_misses):
+            self._hold_edges()
+        return self._edges_complete
 
     @property
-    def _cap(self) -> float:
-        """The cache bound: ``cache_len``, lifted while the caches are complete."""
-        return math.inf if self._complete else self._cache_len
+    def _node_cap(self) -> float:
+        """The node LRU's bound: ``cache_len``, lifted while the table is held."""
+        return math.inf if self._nodes_complete else self._cache_len
+
+    @property
+    def _edge_cap(self) -> float:
+        """The blocks' row bound: ``cache_len``, lifted while the table is held."""
+        return math.inf if self._edges_complete else self._cache_len
 
     def _blank_node_row(self, key: str) -> dict:
         """The auto-created ('ensure'd) node record: every attr NULL."""
@@ -346,26 +413,30 @@ class Graph:
 
     def _stored_node(self, key: str) -> dict | None:
         """The stored record of ``key`` (pending ops NOT applied), or None.
-        A miss is one job, found or not, and found records enter the LRU;
-        while the caches are complete a miss is None with no job."""
+        A miss is one job, found or not, and its answer enters the LRU (an
+        absent key as None); while the table is held a miss is None with
+        no job."""
         rec = _lru_get(self._node_lru, key)
-        if rec is None and not self._complete:
-            rows = self._nodes.filter(F.col("key") == key).collect()
-            if not rows:
-                return None
-            rec = rows[0].asDict()
-            _lru_put(self._node_lru, key, rec, self._cap)
+        if rec is not _UNCACHED:
+            return rec
+        if self._nodes_held():
+            return self._node_lru.get(key)
+        self._node_misses += 1
+        rows = self._nodes.filter(F.col("key") == key).collect()
+        rec = rows[0].asDict() if rows else None
+        _lru_put(self._node_lru, key, rec, self._node_cap)
         return rec
 
     def _block(self, src: str) -> dict[tuple[str, int], dict]:
         """The stored out-edges of ``src`` as {(dst, type): record}, pending
-        ops NOT applied. A miss is one job (none while the caches are
-        complete: the source has no out-edges)."""
+        ops NOT applied. A miss is one job (none while the table is held:
+        the source has no out-edges)."""
         blk = _lru_get(self._blocks, src)
-        if blk is not None:
+        if blk is not _UNCACHED:
             return blk
-        if self._complete:
-            return {}
+        if self._edges_held():
+            return self._blocks.get(src, {})
+        self._edge_misses += 1
         blk = {
             (r["dst"], r["type"]): r.asDict()
             for r in self._edges.filter(F.col("src") == src).collect()
@@ -379,24 +450,24 @@ class Graph:
         empty block counts as one row, so probes of edgeless sources stay
         bounded too."""
         size = max(1, len(blk))
-        if size > self._cap:
+        if size > self._edge_cap:
             return
         self._blocks[src] = blk
         self._block_rows += size
-        while self._block_rows > self._cap:
+        while self._block_rows > self._edge_cap:
             _, old = self._blocks.popitem(last=False)
             self._block_rows -= max(1, len(old))
 
     def _edit_blocks(self, changes: dict[str, dict[tuple[str, int], dict | None]]) -> None:
         """Apply materialized edge changes to the cached blocks: per source,
         {(dst, type): stored record, or None for a removal}. A source with
-        no cached block is skipped, unless the caches are complete, where
+        no cached block is skipped, unless the edge table is held, where
         its block starts empty."""
         for src, edits in changes.items():
             blk = self._blocks.pop(src, None)
             if blk is not None:
                 self._block_rows -= max(1, len(blk))
-            elif self._complete:
+            elif self._edges_complete:
                 blk = {}
             else:
                 continue
@@ -427,11 +498,12 @@ class Graph:
 
     def _in_keys(self, dst: str) -> set[tuple[str, int]]:
         """(src, type) of every in-edge of ``dst`` with pending ops laid
-        over: a scan of the resident blocks while the caches are complete,
-        else one filter job on the stored edges."""
-        if self._complete:
+        over: a scan of the blocks while the edge table is held, else one
+        filter job on the stored edges (an edge miss)."""
+        if self._edges_held():
             keys = {(s, t) for s, blk in self._blocks.items() for d, t in blk if d == dst}
         else:
+            self._edge_misses += 1
             rows = self._edges.filter(F.col("dst") == dst).select("src", "type").collect()
             keys = {(r[0], r[1]) for r in rows}
         return self._pending_over(keys, dst, 1)
@@ -498,7 +570,7 @@ class Graph:
             self._nodes = base
             self._node_ops = {}
             for r in upserts + inserts:
-                _lru_put(self._node_lru, r["key"], r.asDict(), self._cap)
+                _lru_put(self._node_lru, r["key"], r.asDict(), self._node_cap)
         if self._edge_ops:
             schema = _nullable(self._edges.schema, keep=set(EDGE_KEY))
             upserts = {
@@ -557,7 +629,7 @@ class Graph:
 
     @property
     def n_nodes(self) -> int:
-        if self._complete:
+        if self._nodes_complete:
             # every pending node op adds its key unless it is stored
             return len(self._node_lru) + sum(k not in self._node_lru for k in self._node_ops)
         self._flush()
@@ -565,7 +637,7 @@ class Graph:
 
     @property
     def n_edges(self) -> int:
-        if self._complete:
+        if self._edges_complete:
             n = sum(len(b) for b in self._blocks.values())
             for (s, d, t), (kind, _) in self._edge_ops.items():
                 n += (kind != "delete") - ((d, t) in self._blocks.get(s, ()))
@@ -1072,7 +1144,10 @@ class Graph:
 
     def add_edges(self, new_edges: DataFrame) -> None:
         """Bulk upsert on (src,dst,type): anti-join + union, endpoints
-        auto-created. One shuffle; Delta-MERGE-shaped."""
+        auto-created by one full outer join of the stored node table with
+        the distinct endpoints (stored rows keep their attrs, new keys are
+        blank). Each stored table is referenced once, so repeated calls grow
+        the plans linearly; Delta-MERGE-shaped."""
         self._flush()
         self._drop_caches()
         if "type" not in new_edges.columns:
@@ -1089,11 +1164,7 @@ class Graph:
             .union(new_edges.select("dst"))
             .distinct()
         )
-        missing = endpoints.join(self._nodes.select("key"), "key", "left_anti")
-        for c in self._nodes.columns:
-            if c != "key":
-                missing = missing.withColumn(c, F.lit(None).cast(self._nodes.schema[c].dataType))
-        self._nodes = self._nodes.unionByName(missing.select(self._nodes.columns))
+        self._nodes = self._nodes.join(endpoints, "key", "full_outer").select(self._nodes.columns)
 
     def remove_edges(self, triples: DataFrame) -> None:
         self._flush()
@@ -1130,9 +1201,11 @@ class Graph:
             )
 
     def _drop_caches(self) -> None:
-        """Forget every cached record and end complete mode: bulk mutations
-        are set algebra the caches cannot follow row by row."""
-        self._complete = False
+        """Forget every cached record, end the held state of both tables and
+        restart their miss counts: bulk mutations are set algebra the caches
+        cannot follow row by row."""
+        self._nodes_complete = self._edges_complete = False
+        self._node_misses = self._edge_misses = 0
         self._node_lru.clear()
         self._blocks.clear()
         self._block_rows = 0

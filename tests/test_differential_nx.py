@@ -307,10 +307,11 @@ def test_oplog_replay_point_reads_through_record_cache(spark, preload):
     assert set(g.edges) == set(nxg.edges)
     # a from-scratch preload over the flushed tables holds the same records
     # as every cached entry of the maintained state (all of them, when
-    # complete), and answers the same adjacency
+    # complete; an absent key is cached as None), and answers the same
+    # adjacency
     g2 = Graph(spark, nodes=g.nodes_df, edges=g.edges_df, preload=True)
     assert set(g2._node_lru) == set(nxg.nodes)
-    assert all(g2._node_lru[k] == rec for k, rec in g._node_lru.items())
+    assert all(g2._node_lru.get(k) == rec for k, rec in g._node_lru.items())
     assert all(g2._blocks.get(s, {}) == blk for s, blk in g._blocks.items())
     if preload:
         assert set(g._node_lru) == set(g2._node_lru)

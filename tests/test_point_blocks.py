@@ -327,3 +327,53 @@ def test_repeated_set_adjacent_grows_edge_plan_linearly(spark, tables, monkeypat
     assert g.edge("a", "c")["weight"] == 4.0
     assert list(g.predecessors("c")) == ["a", "new5"]
     assert g.edge("new5", "c")["weight"] is None
+
+
+def test_repeated_add_edges_grows_node_plan_linearly(spark, tables):
+    g = Graph(spark, nodes=tables[0], edges=tables[1])
+    node_leaves, edge_leaves = [], []
+    for i in range(7):
+        g.add_edges(
+            spark.createDataFrame(
+                [("a", f"bulk{i}", 0, float(i)), (f"bulk{i}", "hub", 0, None)],
+                "src string, dst string, type int, weight double",
+            )
+        )
+        node_leaves.append(_leaves(g._nodes))
+        edge_leaves.append(_leaves(g._edges))
+    for leaves in (node_leaves, edge_leaves):
+        steps = {b - a for a, b in zip(leaves, leaves[1:])}
+        assert len(steps) == 1, leaves  # the same growth per call
+        assert leaves[-1] <= leaves[0] + 6 * 2, leaves
+    # stored attrs kept, new endpoints blank, every key once
+    stored = tables[0].collect()
+    names = [tuple(r) for r in g.nodes_df.collect()]
+    assert sorted(names) == sorted([tuple(r) for r in stored] + [(f"bulk{i}", None) for i in range(7)])
+    assert g.edges_df.filter("dst = 'hub' or src = 'a'").count() == 4 + 14
+
+
+def test_absent_node_is_remembered_until_inserted(spark, g):
+    assert _jobs(spark, lambda: g.has_node("zz")) == (False, 1)
+    assert _jobs(spark, lambda: g.has_node("zz")) == (False, 0)
+    with pytest.raises(NodeNotFound):
+        _jobs(spark, lambda: g.node("zz"))
+    assert "zz" in g._node_lru and g._node_lru["zz"] is None
+    g.add_node("zz", {"name": "Zed"})
+    assert _jobs(spark, lambda: g.node("zz")["name"]) == ("Zed", 0)  # pending op
+    g._flush()
+    # the flushed insert replaced the absent entry
+    assert _jobs(spark, lambda: g.node("zz")["name"]) == ("Zed", 0)
+    assert _jobs(spark, lambda: g.has_node("zz")) == (True, 0)
+    # an auto-created endpoint replaces it too
+    assert not g.has_node("yy")
+    g.add_edge("a", "yy")
+    g._flush()
+    assert _jobs(spark, lambda: g.node("yy")) == ({"key": "yy", "name": None}, 0)
+
+
+def test_absent_node_entries_count_against_cache_len(spark, tables):
+    g = Graph(spark, nodes=tables[0], edges=tables[1], cache_len=2)
+    for k in ("zz0", "zz1", "a"):
+        g.has_node(k)
+    assert list(g._node_lru) == ["zz1", "a"]
+    assert _jobs(spark, lambda: g.has_node("zz0")) == (False, 1)

@@ -101,7 +101,7 @@ def test_preload_coherent_under_set_neighbors(g):
 
 def test_bulk_mutations_invalidate_preload(g, spark):
     g.preload()
-    assert g._complete and len(g._node_lru) == 3
+    assert g._nodes_complete and g._edges_complete and len(g._node_lru) == 3
     g.add_edges(
         spark.createDataFrame(
             [("c", "e", 0, 3.5)], "src string, dst string, type int, weight double"
@@ -109,7 +109,8 @@ def test_bulk_mutations_invalidate_preload(g, spark):
     )
     # bulk paths are set algebra on DataFrames — the cached records cannot
     # be maintained per-row, so they drop and point reads read through
-    assert not g._complete and not g._node_lru and not g._blocks
+    assert not (g._nodes_complete or g._edges_complete)
+    assert not g._node_lru and not g._blocks
     assert g.edge("c", "e")["weight"] == 3.5
     assert g.node("e")["name"] is None
     # preload can be rebuilt after the bulk load
@@ -163,13 +164,13 @@ def test_preload_adjacency_point_reads(g):
     assert time.monotonic() - t0 < 1.0
     # point mutations keep the caches complete; pending ops lay over them
     g.add_edge("a", "c")
-    assert g._complete
+    assert g._nodes_complete and g._edges_complete
     assert list(g.neighbors("a")) == ["b", "c"]
     # preload again is a no-op on complete caches
     g.preload()
     assert list(g.neighbors("a")) == ["b", "c"]
     g.set_neighbors("a", ["c"])
-    assert g._complete
+    assert g._nodes_complete and g._edges_complete
     assert list(g.neighbors("a")) == ["c"]
 
 
