@@ -35,28 +35,28 @@ last-op-per-entity — and materialize as ONE anti-join + union per flush
 (lineage stays O(flushes), not O(ops)). Reads lay the pending ops over the
 stored records, so no point read flushes.
 
-Record caches: the reference answers edge/has_edge/neighbors/out_degree by
+Record stores: the reference answers edge/has_edge/neighbors/out_degree by
 walking one node's out-edge tree (graph.py:472-492). Point reads here go
-through two caches of STORED records: a node LRU and per-source out-edge
-blocks, bounded together by ``cache_len`` (a block over ``cache_len`` rows
-is answered but not kept). A miss fetches one key with one job: a point
-read on a hub transfers all of the hub's out-edges once, and an absent node
-is remembered as absent. Each table (nodes, edges) counts its misses and,
-by the ski-rental rule (Karlin et al., 1988), fetches itself whole instead
-at the miss where ``misses so far × ROWS_PER_MISS`` reaches its row count
-N; from then on it is held complete — unbounded, and a miss means "absent"
-with no job. N is read from the plan statistics without a job, so only a
-resident (persisted, materialized) table of at most ``cache_len`` rows is
-ever bought; buying costs at most about twice the better fixed choice.
-Pending ops of the entity are laid over the cached record at read time, so
-reads see the session's own writes. Every table rewrite (flush,
-remove_node, set_neighbors/set_predecessors) applies the same change to the
-cached records, so they stay warm; bulk mutations drop them all and end
-the held state. ``preload()`` is the reference's ``preload=True``
-(graph.py:31,59,304-306): both tables held complete now, by the same
-whole-table fetch.
+through one store of STORED records per table (``_Records``): nodes by key,
+and per-source out-edge blocks by src, each bounded by ``cache_len`` (a
+block weighs its rows; one over ``cache_len`` is answered but not kept). A
+miss fetches one key with one job: a point read on a hub transfers all of
+the hub's out-edges once, and an absent node is remembered as absent. Each
+store counts its misses and, by the ski-rental rule (Karlin et al., 1988),
+fetches its table whole instead at the miss where ``misses so far ×
+ROWS_PER_MISS`` reaches the row count N; from then on it is held complete —
+unbounded, and a miss means "absent" with no job. N is read from the plan
+statistics without a job, so only a resident (persisted, materialized)
+table of at most ``cache_len`` rows is ever bought; buying costs at most
+about twice the better fixed choice. Pending ops of the entity are laid
+over the stored record at read time, so reads see the session's own
+writes. Every table rewrite (flush, remove_node,
+set_neighbors/set_predecessors) applies the same change to the stores, so
+they stay warm; bulk mutations clear them and end the held state.
+``preload()`` is the reference's ``preload=True`` (graph.py:31,59,304-306):
+both tables held complete now, by the same whole-table fetch.
 
-Scale notes: the record caches are for the reference's point-op API, which
+Scale notes: the record stores are for the reference's point-op API, which
 is inherently driver-bound; at 100 TB you use the batch API (`add_edges`,
 `remove_edges`, `add_nodes`, `remove_nodes`) — pure join/union transforms with
 no driver state — and partition `edges` by `src` (plus a `dst`-bucketed copy
@@ -87,25 +87,6 @@ DEFAULT_CACHE_LEN = 1_000_000
 # 4-core host (local[4]): a miss on the 51,677-row edge table 193/211 ms, a
 # whole fetch 970/1180 ms (15/19 µs a row), 12,836/11,253 rows per miss.
 ROWS_PER_MISS = 12_000
-
-# _lru_get's answer for a key with no cache entry (a node entry may be None:
-# a key known to be absent)
-_UNCACHED = object()
-
-
-def _lru_get(lru: OrderedDict, key):
-    rec = lru.get(key, _UNCACHED)
-    if rec is not _UNCACHED:
-        lru.move_to_end(key)
-    return rec
-
-
-def _lru_put(lru: OrderedDict, key, rec, cap: int) -> None:
-    lru[key] = rec
-    lru.move_to_end(key)
-    if len(lru) > cap:
-        lru.popitem(last=False)
-
 
 # localCheckpoint() every N flushes to truncate lineage for long op-logs.
 CHECKPOINT_EVERY_FLUSHES = 8
@@ -145,6 +126,121 @@ def _default_edges_schema() -> StructType:
     )
 
 
+def endpoint_keys(edges: DataFrame) -> DataFrame:
+    """The distinct endpoints of an edge table as one ``key`` column: the
+    node key set of every graph derived from its edges."""
+    return edges.select(F.col("src").alias("key")).union(edges.select("dst")).distinct()
+
+
+def _record(schema: StructType, ident: dict, attrs: dict | None) -> dict:
+    """A record of ``schema``, in field order: the identity columns from
+    ``ident``, every other field from ``attrs``, NULL where missing (an
+    upsert replaces the whole record; an auto-created one is all NULL)."""
+    attrs = attrs or {}
+    return {f.name: ident[f.name] if f.name in ident else attrs.get(f.name) for f in schema}
+
+
+# the entry of a key a _Records does not hold (a node entry may be None: a
+# key known to be absent)
+_UNCACHED = object()
+
+
+class _Records:
+    """The point-read cache of one stored table, keyed by column ``col``:
+    an LRU whose entry for a key is ``value(rows)`` of the key's STORED
+    rows and weighs ``weigh(entry)`` against the bound ``cap``.
+
+    A miss fetches one key with one job and counts. By the ski-rental rule
+    (Karlin et al., 1988) the miss where ``misses so far × ROWS_PER_MISS``
+    reaches the table's row count N fetches the table whole instead, and
+    from then on it is held: unbounded, and a key with no entry has no
+    stored rows. N is read from the plan statistics without a job; a table
+    whose N is unknown, or over ``cap``, is never bought."""
+
+    def __init__(self, col: str, value, weigh, cap: int) -> None:
+        self.col, self.value, self.weigh, self.cap = col, value, weigh, cap
+        self.entries: OrderedDict = OrderedDict()
+        self.size = 0
+        self.held = False
+        self.misses = 0
+
+    def get(self, key, table: DataFrame):
+        """The entry of ``key`` in the stored ``table``; a miss is one job,
+        or none while the table is held."""
+        v = self.entries.get(key, _UNCACHED)
+        if v is not _UNCACHED:
+            self.entries.move_to_end(key)
+            return v
+        if self.holds(table):  # possibly bought just now
+            return self.entries[key] if key in self.entries else self.value([])
+        self.misses += 1
+        v = self.value(table.filter(F.col(self.col) == key).collect())
+        self.put(key, v)
+        return v
+
+    def holds(self, table: DataFrame) -> bool:
+        """Whether the table is held, buying it first if the misses so far
+        have paid for it. Called at a miss."""
+        if not self.held:
+            n = _plan_rows(table)
+            if n is not None and n <= self.cap and self.misses * ROWS_PER_MISS >= n:
+                self.hold(table)
+        return self.held
+
+    def hold(self, table: DataFrame) -> None:
+        """Fetch ``table`` whole (one job) and hold it: the buy, and the
+        fill ``Graph.preload()`` uses."""
+        rows: dict = {}
+        for r in table.collect():
+            rows.setdefault(r[self.col], []).append(r)
+        self.entries = OrderedDict((k, self.value(rs)) for k, rs in rows.items())
+        self.size = sum(map(self.weigh, self.entries.values()))
+        self.held = True
+
+    def put(self, key, v) -> None:
+        """Make ``v`` the entry of ``key`` unless it alone exceeds the
+        bound; least recently used entries are evicted down to it."""
+        self.discard(key)
+        w, bound = self.weigh(v), math.inf if self.held else self.cap
+        if w > bound:
+            return
+        self.entries[key] = v
+        self.size += w
+        while self.size > bound:
+            _, old = self.entries.popitem(last=False)
+            self.size -= self.weigh(old)
+
+    def discard(self, key):
+        """Drop the entry of ``key`` and return it (_UNCACHED if none)."""
+        v = self.entries.pop(key, _UNCACHED)
+        if v is not _UNCACHED:
+            self.size -= self.weigh(v)
+        return v
+
+    def edit(self, changes: dict) -> None:
+        """Apply materialized changes to dict entries: per key, {inner key:
+        stored record, or None for a removal}. A key with no entry is
+        skipped, unless the table is held, where its entry starts empty."""
+        for key, edits in changes.items():
+            v = self.discard(key)
+            if v is _UNCACHED:
+                if not self.held:
+                    continue
+                v = self.value([])
+            for k, rec in edits.items():
+                if rec is None:
+                    v.pop(k, None)
+                else:
+                    v[k] = rec
+            self.put(key, v)
+
+    def clear(self) -> None:
+        """Forget every entry, end the held state and restart the misses."""
+        self.entries = OrderedDict()
+        self.size = self.misses = 0
+        self.held = False
+
+
 class Graph:
     """A directed graph backed by two DataFrames.
 
@@ -176,23 +272,25 @@ class Graph:
         self._flush_every = flush_every
         self._flushes = 0
         # KV front for point reads (reference cache semantics,
-        # graph.py:100-106 cache_pos_to_node + preload): a read-through
-        # node LRU and per-source out-edge blocks (src -> {(dst, type):
-        # record}, the reference's per-node out-edge tree), both holding
-        # STORED records; reads lay the entity's pending ops over them, so
-        # a read never flushes. Point lookups are the one workload where a
-        # distributed scan is the wrong shape (~300 ms/job vs ~ms in the
-        # reference); the caches answer repeat reads at dict speed while
-        # every bulk/analytic path stays distributed. ``cache_len`` bounds
-        # the node LRU's entries and the blocks' total rows; a table held
-        # complete (bought whole by the rule or by preload()) is unbounded.
-        # Per table: held complete, and per-key misses so far.
-        self._cache_len = cache_len
-        self._nodes_complete = self._edges_complete = False
-        self._node_misses = self._edge_misses = 0
-        self._node_lru: OrderedDict[str, dict | None] = OrderedDict()
-        self._blocks: OrderedDict[str, dict[tuple[str, int], dict]] = OrderedDict()
-        self._block_rows = 0
+        # graph.py:100-106 cache_pos_to_node + preload): one record store
+        # per table, both holding STORED records; reads lay the entity's
+        # pending ops over them, so a read never flushes. Point lookups are
+        # the one workload where a distributed scan is the wrong shape
+        # (~300 ms/job vs ~ms in the reference); the stores answer repeat
+        # reads at dict speed while every bulk/analytic path stays
+        # distributed. Nodes by key: the record, or None for an absent key,
+        # weighing 1. Out-edge blocks by src (the reference's per-node
+        # out-edge tree): {(dst, type): record}, weighing its rows (an empty
+        # block 1). ``cache_len`` bounds each store's weight.
+        self._node_recs = _Records(
+            "key", lambda rows: rows[0].asDict() if rows else None, lambda rec: 1, cache_len
+        )
+        self._edge_recs = _Records(
+            "src",
+            lambda rows: {(r["dst"], r["type"]): r.asDict() for r in rows},
+            lambda blk: max(1, len(blk)),
+            cache_len,
+        )
         self._id_map: DataFrame | None = None
         self._id_map_count: int | None = None
         if preload:
@@ -205,15 +303,9 @@ class Graph:
         """Build a graph from an edge DataFrame, deriving the node table from
         the endpoints (the reference auto-creates endpoint nodes on add_edge,
         graph.py:1446-1453)."""
-        spark = edges.sparkSession
         if "type" not in edges.columns:
             edges = edges.withColumn("type", F.lit(0))
-        nodes = (
-            edges.select(F.col("src").alias("key"))
-            .union(edges.select(F.col("dst").alias("key")))
-            .distinct()
-        )
-        return cls(spark, nodes=nodes, edges=edges, preload=preload)
+        return cls(edges.sparkSession, nodes=endpoint_keys(edges), edges=edges, preload=preload)
 
     @classmethod
     def with_schema(
@@ -337,146 +429,34 @@ class Graph:
     def preload(self) -> None:
         """Hold both tables complete now — the reference's ``preload=True``
         semantics (graph.py:31,59,304-306: all node attributes loaded at
-        open, served from the record caches).
+        open, served from the record stores).
 
         Each table not yet held is fetched whole (one job each) into its
-        cache, the same fill the ski-rental rule buys with: the node LRU
-        and the out-edge blocks hold every stored record, the ``cache_len``
-        bound is lifted, and a miss means "absent". Every point read
+        store by ``_Records.hold``, the same fill the ski-rental rule buys
+        with: both stores hold every stored record, the ``cache_len`` bound
+        is lifted, and a miss means "absent". Every point read
         (``node``/``edge``/``has_node``/``has_edge``/``neighbors``/
         ``predecessors``/degrees, ``n_nodes``/``n_edges``) then answers
         from driver memory with NO Spark job, pending ops laid over the
-        stored records as always. Point mutations keep the caches exact;
+        stored records as always. Point mutations keep the stores exact;
         bulk mutations (add_edges/remove_nodes/...) and ``empty_cache``
         drop them and end the held state. Operating envelope: the record
         set fits one process — the reference's own envelope (its entire
         graph is one local file)."""
-        if not self._nodes_complete:
-            self._hold_nodes()
-        if not self._edges_complete:
-            self._hold_edges()
-
-    def _hold_nodes(self) -> None:
-        """Fetch the stored node table whole and hold it complete."""
-        self._node_lru = OrderedDict((r["key"], r.asDict()) for r in self._nodes.collect())
-        self._nodes_complete = True
-
-    def _hold_edges(self) -> None:
-        """Fetch the stored edge table whole, as out-edge blocks, and hold
-        it complete."""
-        blocks: OrderedDict[str, dict[tuple[str, int], dict]] = OrderedDict()
-        for r in self._edges.collect():
-            blocks.setdefault(r["src"], {})[(r["dst"], r["type"])] = r.asDict()
-        self._blocks = blocks
-        self._block_rows = sum(len(b) for b in blocks.values())
-        self._edges_complete = True
-
-    def _pays(self, table: DataFrame, misses: int) -> bool:
-        """Ski rental: whether the per-key misses so far have paid for one
-        whole fetch of ``table`` (``misses × ROWS_PER_MISS ≥ N``). A table
-        whose row count N is unknown, or over ``cache_len``, is never
-        bought."""
-        n = _plan_rows(table)
-        return n is not None and n <= self._cache_len and misses * ROWS_PER_MISS >= n
-
-    def _nodes_held(self) -> bool:
-        """Whether the node table is held complete, buying it first if the
-        misses so far have paid for it. Called at a node miss."""
-        if not self._nodes_complete and self._pays(self._nodes, self._node_misses):
-            self._hold_nodes()
-        return self._nodes_complete
-
-    def _edges_held(self) -> bool:
-        """Whether the edge table is held complete, buying it first if the
-        misses so far have paid for it. Called at an edge miss."""
-        if not self._edges_complete and self._pays(self._edges, self._edge_misses):
-            self._hold_edges()
-        return self._edges_complete
-
-    @property
-    def _node_cap(self) -> float:
-        """The node LRU's bound: ``cache_len``, lifted while the table is held."""
-        return math.inf if self._nodes_complete else self._cache_len
-
-    @property
-    def _edge_cap(self) -> float:
-        """The blocks' row bound: ``cache_len``, lifted while the table is held."""
-        return math.inf if self._edges_complete else self._cache_len
-
-    def _blank_node_row(self, key: str) -> dict:
-        """The auto-created ('ensure'd) node record: every attr NULL."""
-        row = {f.name: None for f in self._nodes.schema}
-        row["key"] = key
-        return row
+        for recs, table in ((self._node_recs, self._nodes), (self._edge_recs, self._edges)):
+            if not recs.held:
+                recs.hold(table)
 
     # -- read-through stored records ------------------------------------------
 
     def _stored_node(self, key: str) -> dict | None:
-        """The stored record of ``key`` (pending ops NOT applied), or None.
-        A miss is one job, found or not, and its answer enters the LRU (an
-        absent key as None); while the table is held a miss is None with
-        no job."""
-        rec = _lru_get(self._node_lru, key)
-        if rec is not _UNCACHED:
-            return rec
-        if self._nodes_held():
-            return self._node_lru.get(key)
-        self._node_misses += 1
-        rows = self._nodes.filter(F.col("key") == key).collect()
-        rec = rows[0].asDict() if rows else None
-        _lru_put(self._node_lru, key, rec, self._node_cap)
-        return rec
+        """The stored record of ``key`` (pending ops NOT applied), or None."""
+        return self._node_recs.get(key, self._nodes)
 
     def _block(self, src: str) -> dict[tuple[str, int], dict]:
         """The stored out-edges of ``src`` as {(dst, type): record}, pending
-        ops NOT applied. A miss is one job (none while the table is held:
-        the source has no out-edges)."""
-        blk = _lru_get(self._blocks, src)
-        if blk is not _UNCACHED:
-            return blk
-        if self._edges_held():
-            return self._blocks.get(src, {})
-        self._edge_misses += 1
-        blk = {
-            (r["dst"], r["type"]): r.asDict()
-            for r in self._edges.filter(F.col("src") == src).collect()
-        }
-        self._keep_block(src, blk)
-        return blk
-
-    def _keep_block(self, src: str, blk: dict[tuple[str, int], dict]) -> None:
-        """Cache ``blk`` as the block of ``src`` unless it alone exceeds the
-        bound; least recently used blocks are evicted down to the bound. An
-        empty block counts as one row, so probes of edgeless sources stay
-        bounded too."""
-        size = max(1, len(blk))
-        if size > self._edge_cap:
-            return
-        self._blocks[src] = blk
-        self._block_rows += size
-        while self._block_rows > self._edge_cap:
-            _, old = self._blocks.popitem(last=False)
-            self._block_rows -= max(1, len(old))
-
-    def _edit_blocks(self, changes: dict[str, dict[tuple[str, int], dict | None]]) -> None:
-        """Apply materialized edge changes to the cached blocks: per source,
-        {(dst, type): stored record, or None for a removal}. A source with
-        no cached block is skipped, unless the edge table is held, where
-        its block starts empty."""
-        for src, edits in changes.items():
-            blk = self._blocks.pop(src, None)
-            if blk is not None:
-                self._block_rows -= max(1, len(blk))
-            elif self._edges_complete:
-                blk = {}
-            else:
-                continue
-            for k, rec in edits.items():
-                if rec is None:
-                    blk.pop(k, None)
-                else:
-                    blk[k] = rec
-            self._keep_block(src, blk)
+        ops NOT applied."""
+        return self._edge_recs.get(src, self._edges)
 
     def _pending_over(self, keys: set, key: str, end: int) -> set[tuple[str, int]]:
         """``keys``, the (other endpoint, type) pairs of the stored edges
@@ -500,10 +480,10 @@ class Graph:
         """(src, type) of every in-edge of ``dst`` with pending ops laid
         over: a scan of the blocks while the edge table is held, else one
         filter job on the stored edges (an edge miss)."""
-        if self._edges_held():
-            keys = {(s, t) for s, blk in self._blocks.items() for d, t in blk if d == dst}
+        if self._edge_recs.holds(self._edges):
+            keys = {(s, t) for s, blk in self._edge_recs.entries.items() for d, t in blk if d == dst}
         else:
-            self._edge_misses += 1
+            self._edge_recs.misses += 1
             rows = self._edges.filter(F.col("dst") == dst).select("src", "type").collect()
             keys = {(r[0], r[1]) for r in rows}
         return self._pending_over(keys, dst, 1)
@@ -528,7 +508,7 @@ class Graph:
 
     def _flush(self) -> None:
         """Materialize the delta: one anti-join + union per table. The
-        flushed records are applied to the caches, which stay warm."""
+        flushed records are applied to the stores, which stay warm."""
         if not self._dirty():
             return
         spark = self.spark
@@ -542,7 +522,7 @@ class Graph:
             # row; "ensure" (edge-endpoint auto-create) keeps the stored row
             # and inserts only when absent
             upserts = [
-                self._node_row(k, attrs, schema)
+                _record(schema, {"key": k}, attrs)
                 for k, (op, attrs) in self._node_ops.items()
                 if op == "upsert"
             ]
@@ -564,17 +544,17 @@ class Graph:
                     .join(F.broadcast(ensure_df), on="key", how="left_semi")
                     .collect()
                 }
-                inserts = [self._node_row(k, None, schema) for k in ensures if k not in present]
+                inserts = [_record(schema, {"key": k}, None) for k in ensures if k not in present]
             if upserts or inserts:
                 base = base.unionByName(self._rows_df(upserts + inserts, schema))
             self._nodes = base
             self._node_ops = {}
             for r in upserts + inserts:
-                _lru_put(self._node_lru, r["key"], r.asDict(), self._node_cap)
+                self._node_recs.put(r["key"], r)
         if self._edge_ops:
             schema = _nullable(self._edges.schema, keep=set(EDGE_KEY))
             upserts = {
-                t: self._edge_row(t, attrs, schema)
+                t: _record(schema, dict(zip(EDGE_KEY, t)), attrs)
                 for t, (op, attrs) in self._edge_ops.items()
                 if op == "upsert"
             }
@@ -589,9 +569,8 @@ class Graph:
             self._edges = base
             changes: dict[str, dict] = {}
             for t in self._edge_ops:
-                row = upserts.get(t)
-                changes.setdefault(t[0], {})[t[1:]] = None if row is None else row.asDict()
-            self._edit_blocks(changes)
+                changes.setdefault(t[0], {})[t[1:]] = upserts.get(t)
+            self._edge_recs.edit(changes)
             self._edge_ops = {}
         self._count_rewrite()
 
@@ -604,43 +583,32 @@ class Graph:
             self._nodes = self._nodes.localCheckpoint(eager=False)
             self._edges = self._edges.localCheckpoint(eager=False)
 
-    def _rows_df(self, rows: list[Row], schema: StructType) -> DataFrame:
-        """Driver rows as a ONE-partition DataFrame. A rewrite unions a few
-        rows onto a stored table, and createDataFrame would spread them over
-        the default parallelism, adding that many mostly empty partitions
-        (tasks per scan) on every rewrite."""
-        return self.spark.createDataFrame(self.spark.sparkContext.parallelize(rows, 1), schema)
-
-    @staticmethod
-    def _node_row(key: str, attrs: dict | None, schema: StructType) -> Row:
-        vals = dict(attrs or {})
-        data = {f.name: vals.get(f.name) for f in schema if f.name != "key"}
-        data["key"] = key
-        return Row(**{f.name: data[f.name] for f in schema})
-
-    @staticmethod
-    def _edge_row(triple: tuple, attrs: dict | None, schema: StructType) -> Row:
-        vals = dict(attrs or {})
-        data = {f.name: vals.get(f.name) for f in schema if f.name not in EDGE_KEY}
-        data["src"], data["dst"], data["type"] = triple
-        return Row(**{f.name: data[f.name] for f in schema})
+    def _rows_df(self, rows: list[dict], schema: StructType) -> DataFrame:
+        """Driver records (``_record``) as a ONE-partition DataFrame. A
+        rewrite unions a few rows onto a stored table, and createDataFrame
+        would spread them over the default parallelism, adding that many
+        mostly empty partitions (tasks per scan) on every rewrite."""
+        rdd = self.spark.sparkContext.parallelize([Row(**r) for r in rows], 1)
+        return self.spark.createDataFrame(rdd, schema)
 
     # -- counts (reference header counters, graph.py:133-149) ----------------
 
     @property
     def n_nodes(self) -> int:
-        if self._nodes_complete:
+        recs = self._node_recs
+        if recs.held:
             # every pending node op adds its key unless it is stored
-            return len(self._node_lru) + sum(k not in self._node_lru for k in self._node_ops)
+            return len(recs.entries) + sum(k not in recs.entries for k in self._node_ops)
         self._flush()
         return self._nodes.count()
 
     @property
     def n_edges(self) -> int:
-        if self._edges_complete:
-            n = sum(len(b) for b in self._blocks.values())
+        blocks = self._edge_recs.entries
+        if self._edge_recs.held:
+            n = sum(len(b) for b in blocks.values())
             for (s, d, t), (kind, _) in self._edge_ops.items():
-                n += (kind != "delete") - ((d, t) in self._blocks.get(s, ()))
+                n += (kind != "delete") - ((d, t) in blocks.get(s, ()))
             return n
         self._flush()
         return self._edges.count()
@@ -783,21 +751,18 @@ class Graph:
             raise BadArgument("node key must be a string")
         op = self._node_ops.get(key)
         if op is not None and op[0] == "upsert":
-            # read-your-writes: same shape as a materialized row (absent
-            # attrs are NULL — upsert replaces the whole record)
-            row = {f.name: (op[1] or {}).get(f.name) for f in self._nodes.schema}
-            row["key"] = key
-            return row
+            # read-your-writes: same shape as a materialized row
+            return _record(self._nodes.schema, {"key": key}, op[1])
         rec = self._stored_node(key)
         if rec is not None:
             return dict(rec)
-        if op is not None:
-            # a pending "ensure" is insert-if-absent: a stored record keeps
-            # its attrs (reference add_edge auto-create never clobbers,
-            # graph.py:1446-1453), an absent node reads back as the blank
-            # auto-created row
-            return self._blank_node_row(key)
-        raise NodeNotFound(key)
+        if op is None:
+            raise NodeNotFound(key)
+        # a pending "ensure" is insert-if-absent: a stored record keeps its
+        # attrs (reference add_edge auto-create never clobbers,
+        # graph.py:1446-1453), an absent node reads back as the blank
+        # auto-created row
+        return _record(self._nodes.schema, {"key": key}, None)
 
     def edge(self, src: str, dst: str, type: int = 0) -> dict:
         triple = (src, dst, type)
@@ -806,9 +771,7 @@ class Graph:
             kind, attrs = op
             if kind == "delete":
                 raise EdgeNotFound(triple)
-            row = {f.name: (attrs or {}).get(f.name) for f in self._edges.schema}
-            row.update({"src": src, "dst": dst, "type": type})
-            return row
+            return _record(self._edges.schema, dict(zip(EDGE_KEY, triple)), attrs)
         rec = self._block(src).get((dst, type))
         if rec is None:
             raise EdgeNotFound(triple)
@@ -961,69 +924,58 @@ class Graph:
             # memoized per Graph — NOT self.n_nodes, which would add a
             # full nodes-table scan job to every adjacency export
             self._id_map_count = ids_df.count()
-        ids = size_hint(self._id_map_count)(ids_df)
-        e = self.edges_df
+        return self._coo(size_hint(self._id_map_count)(ids_df), weight)
+
+    def _coo(self, ids: DataFrame, weight: str | None) -> DataFrame:
+        """The edges as (sid, tid, w) through the key -> id map ``ids``: one
+        join per endpoint; w is ``weight``'s column, or 1.0."""
         w = F.col(weight) if weight else F.lit(1.0)
         return (
-            e.select("src", "dst", w.alias("w"))
+            self.edges_df.select("src", "dst", w.alias("w"))
             .join(ids.withColumnRenamed("key", "src").withColumnRenamed("id", "sid"), "src")
             .join(ids.withColumnRenamed("key", "dst").withColumnRenamed("id", "tid"), "dst")
             .select("sid", "tid", "w")
         )
 
-    def adjacency_matrix(self, weight: str | None = None):
-        """Driver-side sparse matrix + key->id dict, parity with the reference
-        return shape. Falls back to a dict-of-arrays when scipy is absent."""
-        ids = {r["key"]: r["id"] for r in self.node_id_map().collect()}
-        coo = self.adjacency_coo(weight).collect()
+    @staticmethod
+    def _sparse(ids: dict, coo: DataFrame):
+        """``coo``'s triplets as an n × n CSR matrix (n = len(ids)), with
+        ``ids``: the reference return shape; a dict of arrays when scipy is
+        absent."""
+        trips = coo.collect()
         n = len(ids)
-        rows = [r["sid"] for r in coo]
-        cols = [r["tid"] for r in coo]
-        vals = [r["w"] for r in coo]
+        rows = [r["sid"] for r in trips]
+        cols = [r["tid"] for r in trips]
+        vals = [r["w"] for r in trips]
         try:
             from scipy.sparse import csr_matrix
 
             return csr_matrix((vals, (rows, cols)), shape=(n, n)), ids
         except ImportError:
             return {"shape": (n, n), "rows": rows, "cols": cols, "vals": vals}, ids
+
+    def adjacency_matrix(self, weight: str | None = None):
+        """Driver-side sparse matrix + key->id dict, parity with the reference
+        return shape."""
+        ids = {r["key"]: r["id"] for r in self.node_id_map().collect()}
+        return self._sparse(ids, self.adjacency_coo(weight))
 
     def subgraph(self, keys: list[str], weight: str | None = None):
         """Induced-subgraph sparse matrix + key->id dict — reference return
-        shape (graph.py:1231-1265); dict-of-arrays fallback without scipy."""
+        shape (graph.py:1231-1265)."""
         ids = {k: i for i, k in enumerate(sorted(set(keys)))}
-        coo = self.subgraph_coo(keys, weight).collect()
-        n = len(ids)
-        rows = [r["sid"] for r in coo]
-        cols = [r["tid"] for r in coo]
-        vals = [r["w"] for r in coo]
-        try:
-            from scipy.sparse import csr_matrix
-
-            return csr_matrix((vals, (rows, cols)), shape=(n, n)), ids
-        except ImportError:
-            return {"shape": (n, n), "rows": rows, "cols": cols, "vals": vals}, ids
+        return self._sparse(ids, self.subgraph_coo(keys, weight))
 
     def subgraph_coo(self, keys: list[str], weight: str | None = None) -> DataFrame:
         """Induced subgraph as COO (reference graph.py:1231-1265): double
         broadcast semi-join on the key list, then dense ids over the list."""
-        spark = self.spark
         # the key list is caller-supplied (already on the driver): enumerate
         # it in Python rather than planning a window over a 1-row-per-key
         # single partition — same ids, no WindowExec in the plan
-        ids = F.broadcast(
-            spark.createDataFrame(
-                [(k, i) for i, k in enumerate(sorted(set(keys)))],
-                "key string, id long",
-            )
+        ids = self.spark.createDataFrame(
+            [(k, i) for i, k in enumerate(sorted(set(keys)))], "key string, id long"
         )
-        e = self.edges_df
-        wcol = F.col(weight) if weight else F.lit(1.0)
-        return (
-            e.select("src", "dst", wcol.alias("w"))
-            .join(ids.withColumnRenamed("key", "src").withColumnRenamed("id", "sid"), "src")
-            .join(ids.withColumnRenamed("key", "dst").withColumnRenamed("id", "tid"), "dst")
-            .select("sid", "tid", "w")
-        )
+        return self._coo(F.broadcast(ids), weight)
 
     # -- point mutations (reference graph.py:1353-1563). Upsert REPLACES the
     #    whole attribute record (graph.py:1385-1405 — "attention" note in the
@@ -1073,12 +1025,12 @@ class Graph:
         )
         self._nodes = self._nodes.filter(F.col("key") != key)
         self._drop_id_map()
-        self._node_lru.pop(key, None)
+        self._node_recs.discard(key)
         gone = {
             s: {(d, t): None for d, t in blk if key in (s, d)}
-            for s, blk in self._blocks.items()
+            for s, blk in self._edge_recs.entries.items()
         }
-        self._edit_blocks({s: edits for s, edits in gone.items() if edits})
+        self._edge_recs.edit({s: edits for s, edits in gone.items() if edits})
         self._count_rewrite()
 
     def _set_adjacent(
@@ -1111,7 +1063,7 @@ class Graph:
                 stored = {r[0] for r in probe.select("src").collect()}
             changes = {
                 s: {(key, type): None}
-                for s, blk in self._blocks.items()
+                for s, blk in self._edge_recs.entries.items()
                 if (key, type) in blk and s not in keep
             }
         # edges: drop (key, v) of this type where v no longer targeted
@@ -1121,16 +1073,13 @@ class Graph:
         # add rows for targets not already stored (attrs NULL), same as the
         # reference's add-side of the set diff
         schema = _nullable(self._edges.schema, keep=set(EDGE_KEY))
-        rows = [
-            self._edge_row((key, v, type) if direction == "out" else (v, key, type), None, schema)
-            for v in target
-            if v not in stored
-        ]
+        ends = [(key, v) if direction == "out" else (v, key) for v in target if v not in stored]
+        rows = [_record(schema, {"src": s, "dst": d, "type": type}, None) for s, d in ends]
+        for r in rows:
+            changes.setdefault(r["src"], {})[(r["dst"], type)] = r
         if rows:
             self._edges = self._edges.unionByName(self._rows_df(rows, schema))
-        for r in rows:
-            changes.setdefault(r["src"], {})[(r["dst"], type)] = r.asDict()
-        self._edit_blocks(changes)
+        self._edge_recs.edit(changes)
         self._count_rewrite()
 
     def set_neighbors(self, key: str, neighbors: list[str], type: int = 0) -> None:
@@ -1159,12 +1108,9 @@ class Graph:
         self._edges = self._edges.join(
             new_edges.select(*EDGE_KEY), on=list(EDGE_KEY), how="left_anti"
         ).unionByName(new_edges)
-        endpoints = (
-            new_edges.select(F.col("src").alias("key"))
-            .union(new_edges.select("dst"))
-            .distinct()
+        self._nodes = self._nodes.join(endpoint_keys(new_edges), "key", "full_outer").select(
+            self._nodes.columns
         )
-        self._nodes = self._nodes.join(endpoints, "key", "full_outer").select(self._nodes.columns)
 
     def remove_edges(self, triples: DataFrame) -> None:
         self._flush()
@@ -1204,11 +1150,8 @@ class Graph:
         """Forget every cached record, end the held state of both tables and
         restart their miss counts: bulk mutations are set algebra the caches
         cannot follow row by row."""
-        self._nodes_complete = self._edges_complete = False
-        self._node_misses = self._edge_misses = 0
-        self._node_lru.clear()
-        self._blocks.clear()
-        self._block_rows = 0
+        self._node_recs.clear()
+        self._edge_recs.clear()
         self._drop_id_map()
 
     def _drop_id_map(self) -> None:

@@ -22,6 +22,7 @@ from functools import reduce
 
 from pyspark.sql import DataFrame, functions as F
 
+from kinbaku_spark.graph import endpoint_keys
 from kinbaku_spark.operators.supersteps import peel, propagate, until_stable
 from kinbaku_spark.plans.hints import size_hint
 
@@ -29,7 +30,7 @@ from kinbaku_spark.plans.hints import size_hint
 def _bound(edges: DataFrame, bound_rows: int | None) -> int:
     """Row bound for node-sized vectors: callers pass a known |V| bound;
     a library caller without one pays one count of the endpoint set."""
-    return _node_keys(edges).count() if bound_rows is None else bound_rows
+    return endpoint_keys(edges).count() if bound_rows is None else bound_rows
 
 
 def _both_ways(edges: DataFrame, f_to: str) -> DataFrame:
@@ -78,7 +79,7 @@ def scc_bounded(
     """
     edges = edges.select("src", "dst").localCheckpoint(eager=False)
     bound = _bound(edges, bound_rows)
-    active = _node_keys(edges).localCheckpoint(eager=False)
+    active = endpoint_keys(edges).localCheckpoint(eager=False)
     e_act = edges
     certified = []
     for peel_no in range(1, peels + 1):
@@ -247,7 +248,7 @@ def scc(
     hint = size_hint(bound)
     h = lambda c: F.concat(F.md5(F.col(c)), F.col(c))  # noqa: E731
     nodes = (
-        _node_keys(edges0)
+        endpoint_keys(edges0)
         .withColumn("cls", F.lit("r"))
         .localCheckpoint(eager=True)
     )
@@ -257,7 +258,7 @@ def scc(
     # self-loop node is its own singleton SCC (ADVICE r06 #2) — certify
     # them up front from the pre-filter endpoint set
     selfloop_only = (
-        _node_keys(edges.select("src", "dst"))
+        endpoint_keys(edges.select("src", "dst"))
         .join(nodes.select("key"), "key", "left_anti")
         .select("key", F.col("key").alias("comp"))
         .localCheckpoint(eager=True)
@@ -392,19 +393,13 @@ def _symmetrized(edges: DataFrame) -> DataFrame:
     )
 
 
-def _node_keys(edges: DataFrame) -> DataFrame:
-    return (
-        edges.select(F.col("src").alias("key")).union(edges.select("dst")).distinct()
-    )
-
-
 def _walk_sums(edges, rounds, nodes, bound_rows, beta) -> DataFrame:
     """x_t(v) = beta(t) + Σ_{u ~ v} x_{t-1}(u) on the symmetrized edge
     table, x_0 = 1, as exact BIGINTs: (key, x) for every node. The
     constant rides the node's self row into the one SUM (a self row of 0
     still keeps a node with no neighbors)."""
     und = _symmetrized(edges)
-    nodes = (nodes or _node_keys(edges)).select("key")
+    nodes = (nodes or endpoint_keys(edges)).select("key")
     bound = _bound(edges, bound_rows)
     x = nodes.select("key", F.lit(1).cast("long").alias("x"))
     for t in range(1, rounds + 1):

@@ -13,7 +13,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from kinbaku_spark.graph import Graph
-from kinbaku_spark.operators.ids import ordered_zero_ids
 from kinbaku_spark.operators.supersteps import peel, propagate
 from kinbaku_spark.plans.hints import size_hint
 from kinbaku_spark.queries import register
@@ -23,6 +22,7 @@ from kinbaku_spark.sources.tables import (
     SUPPLIER_PART_NODES_SQL,
     customer_order_edges,
     supplier_part_edges,
+    supplier_part_nodes_of,
 )
 from kinbaku_spark.state import shared
 
@@ -51,30 +51,12 @@ def _cached(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     """(nodes, edges) of the stored supplier→part graph."""
     def build():
         edges = supplier_part_edges(spark, sf_dir).persist()
-        # derive nodes FROM the cached edges (same canonical result as
-        # supplier_part_nodes, without re-running the lineitem aggregation)
-        keys = (
-            edges.select(F.col("src").alias("key"))
-            .union(edges.select("dst"))
-            .distinct()
-        )
-        # two-phase range ids (operators/ids.py): deterministic key-ordered
-        # dense index with range-parallel sorts, no single-task global window.
-        # localCheckpoint truncates the build lineage — the nodes table is
-        # the engine's STORED state, so query plans scan the materialized
-        # table instead of replaying (and replicating) the id-assignment
-        # subtree under every reference.
-        nodes = (
-            ordered_zero_ids(keys, id_col="index")
-            .select(
-                "key",
-                "index",
-                F.col("key").alias("name"),
-                F.lit(0).alias("age"),
-                F.lit(0.0).alias("score"),
-            )
-            .localCheckpoint(eager=True)
-        )
+        # derive nodes FROM the cached edges (without re-running the
+        # lineitem aggregation). localCheckpoint truncates the build
+        # lineage — the nodes table is the engine's STORED state, so query
+        # plans scan the materialized table instead of replaying (and
+        # replicating) the id-assignment subtree under every reference.
+        nodes = supplier_part_nodes_of(edges).localCheckpoint(eager=True)
         # materialize eagerly: this is one-time ETL (the stored graph), not
         # per-query work — queries then run against warm storage
         edges.count()

@@ -13,6 +13,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from kinbaku_spark.graph import endpoint_keys
 from kinbaku_spark.knobs import env_flag
 from kinbaku_spark.state import fingerprint, shared
 
@@ -156,11 +157,15 @@ def supplier_part_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
     two-phase range assigner (operators/ids.py) — same mapping as a global
     row_number window, without the single-task sort (VERDICT r01 #5).
     """
+    return supplier_part_nodes_of(supplier_part_edges(spark, sf_dir))
+
+
+def supplier_part_nodes_of(edges: DataFrame) -> DataFrame:
+    """supplier_part_nodes derived from a given supplier→part edge table
+    (e.g. a persisted one, without re-running the lineitem aggregation)."""
     from kinbaku_spark.operators.ids import ordered_zero_ids
 
-    e = supplier_part_edges(spark, sf_dir)
-    keys = e.select(F.col("src").alias("key")).union(e.select("dst")).distinct()
-    return ordered_zero_ids(keys, "key", "index").select(
+    return ordered_zero_ids(endpoint_keys(edges), "key", "index").select(
         "key",
         F.col("index"),
         F.col("key").alias("name"),
@@ -225,6 +230,13 @@ def part_succession_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     family needs. Linear in lineitem (one window per order partition) —
     never the quadratic all-pairs-within-order product.
     """
+    return _part_successions(spark, sf_dir).distinct()
+
+
+def _part_successions(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(src, dst) = (P_a, P_b) for every pair of consecutive lineitems of
+    one order, self-loops dropped, one row per occurrence: one LEAD window
+    per order partition."""
     li = load_table(spark, sf_dir, "lineitem")
     w = Window.partitionBy("l_orderkey").orderBy("l_linenumber", "l_partkey")
     return (
@@ -237,7 +249,6 @@ def part_succession_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.concat(F.lit("P"), F.col("cur").cast("string")).alias("src"),
             F.concat(F.lit("P"), F.col("nxt").cast("string")).alias("dst"),
         )
-        .distinct()
     )
 
 
@@ -261,18 +272,8 @@ def part_succession_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """part_succession_edges with the occurrence COUNT kept per (src, dst)
     — the recurrence-strength weight the typed-motif query buckets into
     edge types. Same single-window linear derivation."""
-    li = load_table(spark, sf_dir, "lineitem")
-    w = Window.partitionBy("l_orderkey").orderBy("l_linenumber", "l_partkey")
     return (
-        li.select(
-            F.col("l_partkey").alias("cur"),
-            F.lead("l_partkey").over(w).alias("nxt"),
-        )
-        .filter(F.col("nxt").isNotNull() & (F.col("nxt") != F.col("cur")))
-        .select(
-            F.concat(F.lit("P"), F.col("cur").cast("string")).alias("src"),
-            F.concat(F.lit("P"), F.col("nxt").cast("string")).alias("dst"),
-        )
+        _part_successions(spark, sf_dir)
         .groupBy("src", "dst")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )

@@ -55,6 +55,7 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from kinbaku_spark.graph import endpoint_keys
 from kinbaku_spark.plans.hints import size_hint
 
 _POINTER = "_CURRENT"
@@ -183,11 +184,7 @@ def cc_ingest_batch(
     if n_edges == 0:
         return
     hint = size_hint(2 * n_edges)
-    endpoints = (
-        edges.select(F.col("src").alias("key"))
-        .union(edges.select("dst"))
-        .distinct()
-    )
+    endpoints = endpoint_keys(edges)
     labels = cc_read_state(spark, labels_dir)
     if labels is None:
         labels = spark.createDataFrame([], "key string, label string")

@@ -96,7 +96,7 @@ def measure(args, data: str, cores: int) -> None:
 
     def whole(table: str) -> None:
         g = Graph(spark, nodes=nodes, edges=edges)
-        g._hold_nodes() if table == "nodes" else g._hold_edges()
+        g._node_recs.hold(nodes) if table == "nodes" else g._edge_recs.hold(edges)
 
     out = {}
     for table, pool in (("nodes", keys), ("edges", sources)):

@@ -310,11 +310,11 @@ def test_oplog_replay_point_reads_through_record_cache(spark, preload):
     # complete; an absent key is cached as None), and answers the same
     # adjacency
     g2 = Graph(spark, nodes=g.nodes_df, edges=g.edges_df, preload=True)
-    assert set(g2._node_lru) == set(nxg.nodes)
-    assert all(g2._node_lru.get(k) == rec for k, rec in g._node_lru.items())
-    assert all(g2._blocks.get(s, {}) == blk for s, blk in g._blocks.items())
+    assert set(g2._node_recs.entries) == set(nxg.nodes)
+    assert all(g2._node_recs.entries.get(k) == rec for k, rec in g._node_recs.entries.items())
+    assert all(g2._edge_recs.entries.get(s, {}) == blk for s, blk in g._edge_recs.entries.items())
     if preload:
-        assert set(g._node_lru) == set(g2._node_lru)
-        assert {s for s, blk in g._blocks.items() if blk} == set(g2._blocks)
+        assert set(g._node_recs.entries) == set(g2._node_recs.entries)
+        assert {s for s, blk in g._edge_recs.entries.items() if blk} == set(g2._edge_recs.entries)
     for n in list(nxg.nodes)[:10]:
         assert set(g2.neighbors(n)) == set(nxg.successors(n)), n

@@ -51,6 +51,6 @@ def test_opstream_sessions_match_graph_model(spark, point_graph, monkeypatch, pr
                 model.add_edge(args[0], args[1], args[2]["weight"])
             elif op == "remove_edge":
                 model.remove_edge(*args)
-        held.append((g._nodes_complete, g._edges_complete))
+        held.append((g._node_recs.held, g._edge_recs.held))
     assert wrong == []
     assert held == [(price is None, price is None)] * SESSIONS

@@ -14,7 +14,6 @@ import itertools
 import pathlib
 import re
 import time
-from collections import OrderedDict
 
 import pytest
 
@@ -92,7 +91,7 @@ def test_read_your_writes_without_flush(g):
     assert g._flushes == 0
     assert set(g._edge_ops) == {("a", "d", 0), ("a", "c", 0), ("b", "d", 0)}
     # the stored block itself is untouched by pending writes
-    assert ("c", 0) in g._blocks["a"] and ("d", 0) not in g._blocks["a"]
+    assert ("c", 0) in g._edge_recs.entries["a"] and ("d", 0) not in g._edge_recs.entries["a"]
 
 
 def test_one_job_per_miss_zero_per_hit(spark, g):
@@ -128,20 +127,20 @@ def test_flush_keeps_touched_blocks_warm(spark, g):
     g.remove_edge("a", "c")
     g._flush()
     # the flushed ops were applied to a's block, which stays cached
-    assert set(g._blocks["a"]) == {("a", 0), ("b", 0), ("b", 1), ("d", 0)}
-    assert "b" in g._blocks
+    assert set(g._edge_recs.entries["a"]) == {("a", 0), ("b", 0), ("b", 1), ("d", 0)}
+    assert "b" in g._edge_recs.entries
     assert _jobs(spark, lambda: list(g.neighbors("a"))) == (["a", "b", "d"], 0)
     assert _jobs(spark, lambda: g.edge("a", "d")["weight"]) == (8.0, 0)
     assert _jobs(spark, lambda: g.has_edge("a", "c")) == (False, 0)
-    assert g._block_rows == sum(max(1, len(b)) for b in g._blocks.values())
+    assert g._edge_recs.size == sum(max(1, len(b)) for b in g._edge_recs.entries.values())
 
 
 def test_remove_node_cascade_reaches_other_blocks(spark, g):
     assert g.has_edge("a", "c") and g.has_edge("b", "c") and g.out_degree("c") == 1
     g.remove_node("c")
     # the cascade is applied to every cached block, which stay cached
-    assert set(g._blocks) == {"a", "b", "c"}
-    assert g._block_rows == sum(max(1, len(b)) for b in g._blocks.values())
+    assert set(g._edge_recs.entries) == {"a", "b", "c"}
+    assert g._edge_recs.size == sum(max(1, len(b)) for b in g._edge_recs.entries.values())
     for read, want in (
         (lambda: list(g.neighbors("a")), ["a", "b"]),
         (lambda: g.has_edge("b", "c"), False),
@@ -235,26 +234,41 @@ def test_block_rows_bounded_by_cache_len(spark, tables):
     g = Graph(spark, nodes=tables[0], edges=tables[1], cache_len=5)
     assert g.out_degree("a") == 4
     assert g.out_degree("b") == 1
-    assert list(g._blocks) == ["a", "b"] and g._block_rows == 5
+    assert list(g._edge_recs.entries) == ["a", "b"] and g._edge_recs.size == 5
     assert g.out_degree("c") == 1  # evicts the least recently used block
-    assert list(g._blocks) == ["b", "c"] and g._block_rows == 2
+    assert list(g._edge_recs.entries) == ["b", "c"] and g._edge_recs.size == 2
     # a hub over the cap is answered but not kept
     assert _jobs(spark, lambda: g.out_degree("hub")) == (10, 1)
-    assert "hub" not in g._blocks and g._block_rows <= 5
+    assert "hub" not in g._edge_recs.entries and g._edge_recs.size <= 5
     assert _jobs(spark, lambda: g.has_edge("hub", "x3")) == (True, 1)
-    assert g._block_rows <= 5
+    assert g._edge_recs.size <= 5
 
 
 def test_one_edge_record_cache(spark):
-    assert "_edge_lru" not in inspect.getsource(graph_mod)
-    caches = sorted(k for k, v in vars(Graph(spark)).items() if isinstance(v, OrderedDict))
-    assert caches == ["_blocks", "_node_lru"]
-    # preload fills the same two caches: no other record or key structure
+    """One record store type for both tables: a Graph holds exactly two
+    ``_Records`` and, after preload and point mutations, no other record or
+    key structure; the per-table twins of the store's state and methods are
+    gone."""
+    src = inspect.getsource(graph_mod)
+    assert "_edge_lru" not in src
+    stores = sorted(k for k, v in vars(Graph(spark)).items() if isinstance(v, graph_mod._Records))
+    assert stores == ["_edge_recs", "_node_recs"]
     g = Graph(spark, preload=True)
     g.add_edge("a", "b")
     g.remove_node("a")
+    g.add_edge("b", "c")
+    # (an OrderedDict is a dict)
     held = {k for k, v in vars(g).items() if isinstance(v, (dict, set, frozenset))}
-    assert held - {"_node_ops", "_edge_ops"} == {"_blocks", "_node_lru"}
+    assert held == {"_node_ops", "_edge_ops"}
+    assert g._node_recs.held and g._edge_recs.held
+    twins = (
+        "_hold_nodes", "_hold_edges", "_nodes_held", "_edges_held", "_pays",
+        "_node_cap", "_edge_cap", "_keep_block", "_edit_blocks", "_lru_get",
+        "_lru_put", "_nodes_complete", "_edges_complete", "_node_misses",
+        "_edge_misses", "_block_rows", "_blocks", "_node_lru", "_cache_len",
+        "_node_row", "_edge_row", "_blank_node_row",
+    )
+    assert [n for n in twins if re.search(rf"\b{n}\b", src)] == []
 
 
 def test_preload_only_structures_are_gone():
@@ -357,7 +371,7 @@ def test_absent_node_is_remembered_until_inserted(spark, g):
     assert _jobs(spark, lambda: g.has_node("zz")) == (False, 0)
     with pytest.raises(NodeNotFound):
         _jobs(spark, lambda: g.node("zz"))
-    assert "zz" in g._node_lru and g._node_lru["zz"] is None
+    assert "zz" in g._node_recs.entries and g._node_recs.entries["zz"] is None
     g.add_node("zz", {"name": "Zed"})
     assert _jobs(spark, lambda: g.node("zz")["name"]) == ("Zed", 0)  # pending op
     g._flush()
@@ -375,5 +389,5 @@ def test_absent_node_entries_count_against_cache_len(spark, tables):
     g = Graph(spark, nodes=tables[0], edges=tables[1], cache_len=2)
     for k in ("zz0", "zz1", "a"):
         g.has_node(k)
-    assert list(g._node_lru) == ["zz1", "a"]
+    assert list(g._node_recs.entries) == ["zz1", "a"]
     assert _jobs(spark, lambda: g.has_node("zz0")) == (False, 1)

@@ -101,7 +101,7 @@ def test_preload_coherent_under_set_neighbors(g):
 
 def test_bulk_mutations_invalidate_preload(g, spark):
     g.preload()
-    assert g._nodes_complete and g._edges_complete and len(g._node_lru) == 3
+    assert g._node_recs.held and g._edge_recs.held and len(g._node_recs.entries) == 3
     g.add_edges(
         spark.createDataFrame(
             [("c", "e", 0, 3.5)], "src string, dst string, type int, weight double"
@@ -109,8 +109,8 @@ def test_bulk_mutations_invalidate_preload(g, spark):
     )
     # bulk paths are set algebra on DataFrames — the cached records cannot
     # be maintained per-row, so they drop and point reads read through
-    assert not (g._nodes_complete or g._edges_complete)
-    assert not g._node_lru and not g._blocks
+    assert not (g._node_recs.held or g._edge_recs.held)
+    assert not g._node_recs.entries and not g._edge_recs.entries
     assert g.edge("c", "e")["weight"] == 3.5
     assert g.node("e")["name"] is None
     # preload can be rebuilt after the bulk load
@@ -121,7 +121,7 @@ def test_bulk_mutations_invalidate_preload(g, spark):
 def test_lru_read_through_and_invalidation(g):
     # no preload: first read scans, second hits the LRU
     assert g.node("a")["name"] == "Alice"
-    assert "a" in g._node_lru
+    assert "a" in g._node_recs.entries
     t0 = time.monotonic()
     for _ in range(100):
         g.node("a")
@@ -132,7 +132,7 @@ def test_lru_read_through_and_invalidation(g):
     assert g.node("a")["name"] == "Ann"
     assert g.edge("a", "b")["weight"] == 1.5
     # the read kept a's out-edge block: the second read is a cache hit
-    assert ("b", 0) in g._blocks["a"]
+    assert ("b", 0) in g._edge_recs.entries["a"]
     stored, g._edges = g._edges, None  # a stored-table read would raise
     assert g.edge("a", "b")["weight"] == 1.5
     g._edges = stored
@@ -149,8 +149,8 @@ def test_lru_capacity_bound(spark):
     g = Graph(spark, nodes=nodes, cache_len=3)
     for i in range(6):
         assert g.node(f"n{i}")["age"] == i
-    assert len(g._node_lru) == 3  # oldest evicted
-    assert "n5" in g._node_lru and "n0" not in g._node_lru
+    assert len(g._node_recs.entries) == 3  # oldest evicted
+    assert "n5" in g._node_recs.entries and "n0" not in g._node_recs.entries
 
 
 def test_preload_adjacency_point_reads(g):
@@ -164,13 +164,13 @@ def test_preload_adjacency_point_reads(g):
     assert time.monotonic() - t0 < 1.0
     # point mutations keep the caches complete; pending ops lay over them
     g.add_edge("a", "c")
-    assert g._nodes_complete and g._edges_complete
+    assert g._node_recs.held and g._edge_recs.held
     assert list(g.neighbors("a")) == ["b", "c"]
     # preload again is a no-op on complete caches
     g.preload()
     assert list(g.neighbors("a")) == ["b", "c"]
     g.set_neighbors("a", ["c"])
-    assert g._nodes_complete and g._edges_complete
+    assert g._node_recs.held and g._edge_recs.held
     assert list(g.neighbors("a")) == ["c"]
 
 

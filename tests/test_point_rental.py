@@ -163,9 +163,9 @@ def test_answers_match_dict_model(spark, resident, monkeypatch, price, cache_len
     assert g.n_nodes == len(m.nodes)
     assert g.n_edges == len(m.edges)
     if price == 0 or cache_len is not None:
-        assert not (g._nodes_complete or g._edges_complete)
+        assert not (g._node_recs.held or g._edge_recs.held)
     else:
-        assert g._nodes_complete and g._edges_complete
+        assert g._node_recs.held and g._edge_recs.held
 
 
 def test_buy_happens_at_the_paying_miss(spark, resident, monkeypatch):
@@ -175,9 +175,9 @@ def test_buy_happens_at_the_paying_miss(spark, resident, monkeypatch):
     g = Graph(spark, nodes=resident[0], edges=resident[1])
     for i, src in enumerate(["k00", "k01", "k02"]):
         assert _jobs(spark, lambda: g.out_degree(src))[1] == 1
-        assert not g._edges_complete and g._edge_misses == i + 1
+        assert not g._edge_recs.held and g._edge_recs.misses == i + 1
     assert _jobs(spark, lambda: list(g.predecessors("k03")))[1] == 1  # the 4th miss buys
-    assert g._edges_complete and g._block_rows == N_EDGES
+    assert g._edge_recs.held and g._edge_recs.size == N_EDGES
     for read in (
         lambda: g.out_degree("k04"),
         lambda: g.has_edge("k05", "k06"),
@@ -189,12 +189,12 @@ def test_buy_happens_at_the_paying_miss(spark, resident, monkeypatch):
         assert _jobs(spark, read)[1] == 0
     # the node table rents on its own count: 2 × 20 ≥ 24 first holds at
     # its 3rd miss
-    assert not g._nodes_complete
+    assert not g._node_recs.held
     assert _jobs(spark, lambda: g.node("k00")["name"]) == ("name-k00", 1)
     assert _jobs(spark, lambda: g.has_node("zz")) == (False, 1)
-    assert not g._nodes_complete and g._node_misses == 2
+    assert not g._node_recs.held and g._node_recs.misses == 2
     assert _jobs(spark, lambda: g.node("k01")["name"]) == ("name-k01", 1)
-    assert g._nodes_complete and g._node_misses == 2
+    assert g._node_recs.held and g._node_recs.misses == 2
     for read, want in (
         (lambda: g.node("k09")["age"], 9),
         (lambda: g.has_node("zz9"), False),
@@ -203,8 +203,8 @@ def test_buy_happens_at_the_paying_miss(spark, resident, monkeypatch):
         assert _jobs(spark, read) == (want, 0)
     # a bulk mutation ends the held state and restarts the rent
     g.add_edges(spark.createDataFrame([("k00", "new", 0)], "src string, dst string, type int"))
-    assert not (g._nodes_complete or g._edges_complete)
-    assert (g._node_misses, g._edge_misses) == (0, 0)
+    assert not (g._node_recs.held or g._edge_recs.held)
+    assert (g._node_recs.misses, g._edge_recs.misses) == (0, 0)
 
 
 def test_unknown_row_count_never_buys(spark, monkeypatch):
@@ -218,8 +218,8 @@ def test_unknown_row_count_never_buys(spark, monkeypatch):
     for k in ("k00", "k01", "k02", "k03"):
         assert _jobs(spark, lambda: g.out_degree(k))[1] == 1
         assert _jobs(spark, lambda: g.has_node(k)) == (True, 1)
-    assert not (g._nodes_complete or g._edges_complete)
-    assert (g._node_misses, g._edge_misses) == (4, 4)
+    assert not (g._node_recs.held or g._edge_recs.held)
+    assert (g._node_recs.misses, g._edge_recs.misses) == (4, 4)
 
 
 def test_table_over_cache_len_never_buys(spark, resident, monkeypatch):
@@ -227,13 +227,13 @@ def test_table_over_cache_len_never_buys(spark, resident, monkeypatch):
     g = Graph(spark, nodes=resident[0], edges=resident[1], cache_len=N_NODES - 1)
     for k in ("k00", "k01", "k02"):
         assert _jobs(spark, lambda: g.node(k)["name"]) == (f"name-{k}", 1)
-    assert not g._nodes_complete and len(g._node_lru) == 3
+    assert not g._node_recs.held and len(g._node_recs.entries) == 3
 
 
 def test_preload_is_two_jobs_then_none(spark, resident):
     g = Graph(spark, nodes=resident[0], edges=resident[1])
     assert _jobs(spark, g.preload)[1] == 2
-    assert g._nodes_complete and g._edges_complete
+    assert g._node_recs.held and g._edge_recs.held
     assert _jobs(spark, g.preload)[1] == 0
     for read in (
         lambda: g.node("k03"),
