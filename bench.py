@@ -12,7 +12,8 @@ driver materialization.
 Every query runs twice in one session, run 1 *cold* (it pays the query's
 shared-state builds and first-call codegen) and run 2 *warm*; the faster
 one is reported. ``--trace`` adds both runs' work, folded from Spark's
-event log (see ``run_columns``), to BENCH_DETAIL.json. NAMEs run those
+event log, and their generated-class compiles and JIT seconds, read from
+the JVM (see ``run_columns``), to BENCH_DETAIL.json. NAMEs run those
 registry queries instead, print one JSON line each and leave
 BENCH_DETAIL.json alone; one NAME per process gives a fresh-process cold
 number.
@@ -324,26 +325,44 @@ def enable_event_log() -> str:
     return log_dir
 
 
+def jvm_counters(spark) -> tuple[int, float]:
+    """``(compiles, jit_s)`` so far in the driver JVM: generated classes
+    Janino compiled (one per codegen-cache miss) and HotSpot's JIT
+    compilation time, elapsed seconds summed over its compiler threads
+    (they run beside the query, so this is not wall time on its path).
+    ``local`` executors share that JVM, so both count the tasks' codegen
+    too."""
+    jvm = spark.sparkContext._jvm
+    codegen = jvm.org.apache.spark.metrics.source.CodegenMetrics
+    jit = jvm.java.lang.management.ManagementFactory.getCompilationMXBean()
+    return codegen.METRIC_COMPILATION_TIME().getCount(), jit.getTotalCompilationTime() / 1e3
+
+
 def time_query(spark, name: str, spans: dict, tag: bool) -> None:
     """Run ``name`` twice; ``spans["<name>|<run>"]`` gets each run's epoch
     start (ms) and wall seconds. With ``tag`` the run's jobs carry that
-    key as their job group."""
+    key as their job group, and its span adds the run's change in
+    :func:`jvm_counters`."""
     for run in ("cold", "warm"):
         group = f"{name}|{run}"
         if tag:
             spark.sparkContext.setJobGroup(group, group)
+            before = jvm_counters(spark)
         wall0, t0 = time.time(), time.perf_counter()
         _force(QUERIES[name](spark, SF_DIR))
         spans[group] = (wall0 * 1e3, time.perf_counter() - t0)
         if tag:
+            after = jvm_counters(spark)
+            spans[group] += tuple(a - b for a, b in zip(after, before))
             spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
 
 
 def run_columns(spans, folded: dict[str, GroupWork] | None = None) -> dict:
     """``{name: {run: columns}}``: each run's wall seconds and, given the
-    folded event log, the work of its job group and its driver gap."""
+    folded event log, the work of its job group and its driver gap, plus
+    its compiles and JIT seconds when its span carries them."""
     out: dict[str, dict] = {}
-    for group, (start_ms, secs) in spans.items():
+    for group, (start_ms, secs, *jvm) in spans.items():
         name, run = group.rsplit("|", 1)
         cols = out.setdefault(name, {})[run] = {"wall_s": round(secs, 3)}
         if folded is None:
@@ -363,6 +382,9 @@ def run_columns(spans, folded: dict[str, GroupWork] | None = None) -> dict:
             python_bytes=w.python_bytes,
             driver_gap_s=round(gap, 3),
         )
+        if jvm:
+            compiles, jit_s = jvm
+            cols.update(codegen_compiles=compiles, jit_s=round(jit_s, 3))
     return out
 
 
@@ -384,7 +406,7 @@ def measure(names: list[str], log_dir: str | None) -> dict:
     # two runs per query, report the faster: the first run pays one-time
     # codegen/broadcast setup that a resident engine amortizes; steady-state
     # is the comparable number
-    spans: dict[str, tuple[float, float]] = {}
+    spans: dict[str, tuple] = {}
     for name in names:
         time_query(spark, name, spans, tag=log_dir is not None)
     if log_dir is None:

@@ -1,6 +1,8 @@
 import os
 import sys
 import threading
+import time
+from collections import defaultdict
 
 import pytest
 
@@ -14,6 +16,32 @@ from kinbaku_spark.session import get_spark  # noqa: E402
 
 SF_SMOKE = os.environ.get("KB_TEST_SF_DIR", "/root/testdata/sf0.001")
 SF_ORACLE = os.environ.get("KB_ORACLE_SF_DIR", "/root/testdata/sf0.001")
+
+# Tier-1 runs under ``timeout 2670`` (ROADMAP's Tier-1 command); the terminal
+# summary reports each file's seconds and the run's share of that budget.
+TIER1_TIMEOUT_S = 2670
+_STARTED = time.monotonic()  # conftest loads before collection starts
+
+
+def pytest_terminal_summary(terminalreporter):
+    """Report only: per-file seconds (setup, call and teardown; session
+    fixtures such as the JVM bill the first file that asks for them),
+    slowest first, and the run's wall time as a share of the Tier-1
+    timeout."""
+    tr = terminalreporter
+    seconds: dict[str, float] = defaultdict(float)
+    for reports in tr.stats.values():
+        for rep in reports:
+            if isinstance(rep, pytest.TestReport):
+                seconds[rep.nodeid.split("::")[0]] += rep.duration
+    tr.write_sep("-", "seconds per test file")
+    for path, secs in sorted(seconds.items(), key=lambda kv: -kv[1]):
+        tr.write_line(f"{secs:8.1f}  {path}")
+    wall = time.monotonic() - _STARTED
+    tr.write_line(
+        f"total {wall:.0f} s wall, {wall / TIER1_TIMEOUT_S:.0%} of the "
+        f"{TIER1_TIMEOUT_S} s Tier-1 timeout"
+    )
 
 
 @pytest.fixture(scope="session")

@@ -1,13 +1,15 @@
 """bench.py's final stdout line must fit the 2000-char tail it is parsed
 from, and a name the size guard drops from ``queries`` must still appear on
 the line, in ``trimmed`` (the reported set is add-only). The harness's
-trace fold, names mode and name check run here without Spark."""
+trace fold and JVM-counter columns, names mode and name check run here
+without Spark."""
 
 from __future__ import annotations
 
 import importlib
 import json
 import os
+from types import SimpleNamespace
 
 import pytest
 
@@ -122,6 +124,27 @@ def test_names_mode_never_writes_detail(bench, fake_engine, capsys):
     bench.main([])
     with open(bench.DETAIL_PATH) as fh:
         assert set(json.load(fh)["queries"]) == {"q1_pricing_summary", "g_kcore"}
+
+
+def test_trace_adds_compile_and_jit_deltas(bench, fake_engine, monkeypatch, tmp_path):
+    """Under a trace each run's span carries its change in the JVM
+    counters, and both land in that run's columns; the untagged warm-up
+    reads no counter."""
+
+    context = SimpleNamespace(setJobGroup=lambda *a: None, setLocalProperty=lambda *a: None)
+    session = SimpleNamespace(sparkContext=context, stop=lambda: None)
+    # cumulative (compiles, JIT s), read before and after each tagged run
+    reads = iter([(100, 5.0), (130, 7.5), (130, 7.5), (131, 7.75)])
+    monkeypatch.setattr(bench, "get_spark", lambda **kw: session)
+    monkeypatch.setattr(bench, "jvm_counters", lambda spark: next(reads))
+    cols = bench.measure(["x_extra"], str(tmp_path))
+    cold, warm = cols["x_extra"]["cold"], cols["x_extra"]["warm"]
+    assert (cold["codegen_compiles"], cold["jit_s"]) == (30, 2.5)
+    assert (warm["codegen_compiles"], warm["jit_s"]) == (1, 0.25)
+    assert cold["jobs"] == 0  # an empty event log folds to no work
+    assert next(reads, None) is None
+    # untraced runs carry wall time only
+    assert set(bench.measure(["x_extra"], None)["x_extra"]["warm"]) == {"wall_s"}
 
 
 def test_unknown_name_fails_clearly(bench, fake_engine, capsys, monkeypatch):
