@@ -41,10 +41,14 @@ through one store of STORED records per table (``_Records``): nodes by key,
 and per-source out-edge blocks by src, each bounded by ``cache_len`` (a
 block weighs its rows; one over ``cache_len`` is answered but not kept). A
 miss fetches one key with one job: a point read on a hub transfers all of
-the hub's out-edges once, and an absent node is remembered as absent. Each
+the hub's out-edges once, and an absent node is remembered as absent. Every
+fetch a store pays for (``_fetch``) comes back through Arrow as dicts equal to
+``collect()``'s rows, with no per-row pickling or ``Row`` objects. Each
 store counts its misses and, by the ski-rental rule (Karlin et al., 1988),
 fetches its table whole instead at the miss where ``misses so far ×
-ROWS_PER_MISS`` reaches the row count N; from then on it is held complete —
+ROWS_PER_MISS`` reaches the row count N: ``N / ROWS_PER_MISS`` misses set
+the buy point, and ``ROWS_PER_MISS`` is the CPU of one miss over the per-row
+CPU of a whole fetch. From then on the table is held complete —
 unbounded, and a miss means "absent" with no job. N is read from the plan
 statistics without a job, so only a resident (persisted, materialized)
 table of at most ``cache_len`` rows is ever bought; buying costs at most
@@ -70,6 +74,7 @@ from collections import OrderedDict
 from typing import Any, Iterator
 
 from pyspark.sql import DataFrame, Row, SparkSession, functions as F
+from pyspark.sql.conversion import ArrowTableToRowsConversion
 from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
 from kinbaku_spark.exceptions import BadArgument, EdgeNotFound, NodeNotFound
@@ -82,11 +87,14 @@ DEFAULT_FLUSH_EVERY = 50_000
 # point-read LRU capacity (reference cache_len default, graph.py:29)
 DEFAULT_CACHE_LEN = 1_000_000
 # Rows a whole-table fetch transfers for the CPU of one per-key miss: the
-# per-key job's CPU over the per-row transfer CPU, the ski-rental price
-# ratio. scripts/point_fetch_cost.py measures both; two runs at sf 0.01 on a
-# 4-core host (local[4]): a miss on the 51,677-row edge table 193/211 ms, a
-# whole fetch 970/1180 ms (15/19 µs a row), 12,836/11,253 rows per miss.
-ROWS_PER_MISS = 12_000
+# per-key job's CPU over the per-row CPU of a whole fetch, the ski-rental
+# price ratio. scripts/point_fetch_cost.py measures both; two runs at sf 0.01
+# on a 4-core host (local[4]), both fetches through Arrow: a miss on the
+# 51,677-row edge table 128/135 ms, a whole fetch 450/450 ms (320/280 ms of
+# it Python, 150/130 ms JVM; 6.2/6.1 µs a row), 20,493/22,147 rows per miss.
+# Seven runs spread from 13,007 to 26,537 with a median of 20,493, which
+# buys that table at its 4th miss.
+ROWS_PER_MISS = 20_000
 
 # localCheckpoint() every N flushes to truncate lineage for long op-logs.
 CHECKPOINT_EVERY_FLUSHES = 8
@@ -99,6 +107,22 @@ def _plan_rows(df: DataFrame) -> int | None:
     (createDataFrame, parquet scans, unions, filters)."""
     n = df._jdf.queryExecution().optimizedPlan().stats().rowCount()
     return int(str(n.get())) if n.isDefined() else None
+
+
+def _fetch(df: DataFrame) -> list[dict]:
+    """The rows of ``df`` as dicts equal, in value and Python type, to
+    ``collect()``'s ``asDict()`` rows (a nested struct is a ``Row``, a
+    binary value ``bytes`` or ``bytearray`` as the session's
+    ``spark.sql.execution.pyspark.binaryAsBytes`` says). One job, like
+    ``collect()``, but the rows travel as Arrow batches: no per-row pickling
+    in the JVM and no ``Row`` per record in Python."""
+    schema = df.schema
+    as_bytes = df.sparkSession.conf.get("spark.sql.execution.pyspark.binaryAsBytes", "true")
+    rows = ArrowTableToRowsConversion.convert(
+        df.toArrow(), schema, return_as_tuples=True, binary_as_bytes=as_bytes.lower() == "true"
+    )
+    names = schema.names
+    return [dict(zip(names, r)) for r in rows]
 
 
 def _nullable(schema: StructType, keep: set[str]) -> StructType:
@@ -174,7 +198,7 @@ class _Records:
         if self.holds(table):  # possibly bought just now
             return self.entries[key] if key in self.entries else self.value([])
         self.misses += 1
-        v = self.value(table.filter(F.col(self.col) == key).collect())
+        v = self.value(_fetch(table.filter(F.col(self.col) == key)))
         self.put(key, v)
         return v
 
@@ -191,7 +215,7 @@ class _Records:
         """Fetch ``table`` whole (one job) and hold it: the buy, and the
         fill ``Graph.preload()`` uses."""
         rows: dict = {}
-        for r in table.collect():
+        for r in _fetch(table):
             rows.setdefault(r[self.col], []).append(r)
         self.entries = OrderedDict((k, self.value(rs)) for k, rs in rows.items())
         self.size = sum(map(self.weigh, self.entries.values()))
@@ -283,11 +307,11 @@ class Graph:
         # out-edge tree): {(dst, type): record}, weighing its rows (an empty
         # block 1). ``cache_len`` bounds each store's weight.
         self._node_recs = _Records(
-            "key", lambda rows: rows[0].asDict() if rows else None, lambda rec: 1, cache_len
+            "key", lambda rows: rows[0] if rows else None, lambda rec: 1, cache_len
         )
         self._edge_recs = _Records(
             "src",
-            lambda rows: {(r["dst"], r["type"]): r.asDict() for r in rows},
+            lambda rows: {(r["dst"], r["type"]): r for r in rows},
             lambda blk: max(1, len(blk)),
             cache_len,
         )
@@ -484,8 +508,8 @@ class Graph:
             keys = {(s, t) for s, blk in self._edge_recs.entries.items() for d, t in blk if d == dst}
         else:
             self._edge_recs.misses += 1
-            rows = self._edges.filter(F.col("dst") == dst).select("src", "type").collect()
-            keys = {(r[0], r[1]) for r in rows}
+            rows = _fetch(self._edges.filter(F.col("dst") == dst).select("src", "type"))
+            keys = {(r["src"], r["type"]) for r in rows}
         return self._pending_over(keys, dst, 1)
 
     def _node_exists(self, key: str) -> bool:

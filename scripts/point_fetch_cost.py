@@ -13,7 +13,10 @@ the JVM over ``--repeats`` rounds per table, each round a batch of
 table, after ``WARMUP`` rounds that are dropped. It prints the medians:
 
 - a miss, per key;
-- a whole fetch;
+- a whole fetch, and the part of it spent in this Python process and in
+  the JVM (with its child processes), so the receipt shows where fetch CPU
+  goes (each column is its own median, so the parts need not sum to the
+  total);
 - the per-row transfer cost: (whole fetch - miss) / rows;
 - rows per miss: miss / per-row cost.
 
@@ -76,14 +79,17 @@ def measure(args, data: str, cores: int) -> None:
     edges = tables.supplier_part_edges(spark, data).persist()
     rows = {"nodes": nodes.count(), "edges": edges.count()}
 
-    def cpu_s() -> float:
+    def cpu_s() -> tuple[float, float]:
+        """CPU seconds so far of this process and of the JVM with its
+        children."""
         t = os.times()
-        return t.user + t.system + sum(proc_cpu_s(p) for p in [jvm, *descendants(jvm)])
+        return t.user + t.system, sum(proc_cpu_s(p) for p in [jvm, *descendants(jvm)])
 
-    def cpu_of(fn) -> float:
-        c0 = cpu_s()
+    def cpu_of(fn) -> tuple[float, float]:
+        py0, jvm0 = cpu_s()
         fn()
-        return cpu_s() - c0
+        py1, jvm1 = cpu_s()
+        return py1 - py0, jvm1 - jvm0
 
     keys = sorted(r[0] for r in nodes.select("key").collect())
     sources = sorted(r[0] for r in edges.select("src").distinct().collect())
@@ -106,13 +112,16 @@ def measure(args, data: str, cores: int) -> None:
         # rounds alternate a batch of misses and a whole fetch; the first
         # WARMUP rounds (JIT, planner caches) are dropped
         rounds = [
-            (cpu_of(lambda: misses(table, batch)) / len(batch), cpu_of(lambda: whole(table)))
+            (sum(cpu_of(lambda: misses(table, batch))) / len(batch), cpu_of(lambda: whole(table)))
             for batch in batches
         ][WARMUP:]
         miss = statistics.median(r[0] for r in rounds)
-        fetch = statistics.median(r[1] for r in rounds)
+        fetch = statistics.median(sum(r[1]) for r in rounds)
+        fetch_py = statistics.median(r[1][0] for r in rounds)
+        fetch_jvm = statistics.median(r[1][1] for r in rounds)
         per_row = (fetch - miss) / rows[table]
-        out[table] = (rows[table], miss, fetch, per_row, miss / per_row if per_row > 0 else float("inf"))
+        ratio = miss / per_row if per_row > 0 else float("inf")
+        out[table] = (rows[table], miss, fetch, fetch_py, fetch_jvm, per_row, ratio)
     spark.stop()
 
     print(
@@ -120,13 +129,16 @@ def measure(args, data: str, cores: int) -> None:
         f" spark {pyspark.__version__}; medians of {args.repeats} rounds of"
         f" {args.misses} misses and a whole fetch per table"
     )
-    print(f"{'table':<6} {'rows':>7} {'miss_ms':>8} {'whole_ms':>9} {'row_us':>7} {'rows_per_miss':>13}")
-    for table, (n, miss, fetch, per_row, ratio) in out.items():
+    print(
+        f"{'table':<6} {'rows':>7} {'miss_ms':>8} {'whole_ms':>9} {'whole_py_ms':>11}"
+        f" {'whole_jvm_ms':>12} {'row_us':>7} {'rows_per_miss':>13}"
+    )
+    for table, (n, miss, fetch, fetch_py, fetch_jvm, per_row, ratio) in out.items():
         print(
-            f"{table:<6} {n:>7} {miss * 1e3:>8.1f} {fetch * 1e3:>9.1f}"
-            f" {per_row * 1e6:>7.2f} {ratio:>13.0f}"
+            f"{table:<6} {n:>7} {miss * 1e3:>8.1f} {fetch * 1e3:>9.1f} {fetch_py * 1e3:>11.1f}"
+            f" {fetch_jvm * 1e3:>12.1f} {per_row * 1e6:>7.2f} {ratio:>13.0f}"
         )
-    print(f"ROWS_PER_MISS {out['edges'][4]:.0f}")
+    print(f"ROWS_PER_MISS {out['edges'][-1]:.0f}")
 
 
 if __name__ == "__main__":

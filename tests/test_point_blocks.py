@@ -9,6 +9,8 @@ flushes and set_neighbors/set_predecessors calls."""
 
 from __future__ import annotations
 
+import datetime
+import decimal
 import inspect
 import itertools
 import pathlib
@@ -16,6 +18,7 @@ import re
 import time
 
 import pytest
+from pyspark.sql import Row
 
 from kinbaku_spark import graph as graph_mod
 from kinbaku_spark.exceptions import EdgeNotFound, NodeNotFound
@@ -391,3 +394,68 @@ def test_absent_node_entries_count_against_cache_len(spark, tables):
         g.has_node(k)
     assert list(g._node_recs.entries) == ["zz1", "a"]
     assert _jobs(spark, lambda: g.has_node("zz0")) == (False, 1)
+
+
+# every column type a record may carry, NULLs included; the stores must hand
+# back what collect() does: a nested struct as a Row, a map as a dict, a
+# binary value as collect() returns it
+_ATTRS = (
+    "s string, i int, l bigint, d double, b boolean, dt date, ts timestamp,"
+    " dec decimal(12,2), bin binary, arr array<string>, m map<string,int>,"
+    " st struct<x:int, y:string, z:struct<w:double>>"
+)
+_FULL = (
+    "text",
+    7,
+    2**40,
+    1.25,
+    True,
+    datetime.date(2024, 2, 29),
+    datetime.datetime(2024, 3, 1, 12, 30, 45, 123456),
+    decimal.Decimal("1234.50"),
+    bytearray(b"\x00\xffbin"),
+    ["p", None, "q"],
+    {"k": 1, "none": None},
+    (3, "y", (0.5,)),
+)
+_NULLS = (None,) * len(_FULL)
+_SPARSE = ("", 0, -1, -0.0, False, None, None, decimal.Decimal("-0.01"), bytearray(), [], {}, (None, None, None))
+
+
+def _typed(v):
+    """``v`` with the Python type of every value, nested ones included, so
+    that equal results of two reads also agree in type."""
+    if isinstance(v, Row):
+        return ("Row", tuple(v.__fields__), tuple(map(_typed, v)))
+    if isinstance(v, dict):
+        return ("dict", sorted((k, _typed(x)) for k, x in v.items()))
+    if isinstance(v, (list, tuple)):
+        return (type(v).__name__, [_typed(x) for x in v])
+    return (type(v).__name__, v)
+
+
+@pytest.mark.parametrize("preload", [False, True], ids=["miss", "preload"])
+def test_records_match_collect_in_value_and_type(spark, tmp_path, preload):
+    nodes = spark.createDataFrame(
+        [("n1", *_FULL), ("n2", *_NULLS), ("n3", *_SPARSE)], f"key string, {_ATTRS}"
+    )
+    edges = spark.createDataFrame(
+        [("n1", "n2", 0, *_FULL), ("n1", "n3", 1, *_NULLS), ("n2", "n1", 0, *_SPARSE)],
+        f"src string, dst string, type int, {_ATTRS}",
+    )
+    nodes.write.parquet(str(tmp_path / "nodes"))
+    edges.write.parquet(str(tmp_path / "edges"))
+    nodes, edges = spark.read.parquet(str(tmp_path / "nodes")), spark.read.parquet(str(tmp_path / "edges"))
+    want_nodes = {r["key"]: r.asDict() for r in nodes.collect()}
+    want_edges = {(r["src"], r["dst"], r["type"]): r.asDict() for r in edges.collect()}
+    g = Graph(spark, nodes=nodes, edges=edges, preload=preload)
+    assert g._node_recs.held is g._edge_recs.held is preload
+    for key, want in want_nodes.items():
+        assert _typed(g.node(key)) == _typed(want)
+    for (src, dst, type_), want in want_edges.items():
+        assert _typed(g.edge(src, dst, type_)) == _typed(want)
+    for src in ("n1", "n2", "n3"):
+        assert list(g.neighbors(src)) == sorted(d for s, d, _ in want_edges if s == src)
+        block = {(d, t): rec for (s, d, t), rec in want_edges.items() if s == src}
+        assert _typed(g._edge_recs.entries.get(src, {})) == _typed(block)  # held: no block, no edges
+    assert list(g.predecessors("n1")) == ["n2"]
