@@ -73,8 +73,8 @@ import math
 from collections import OrderedDict
 from typing import Any, Iterator
 
-from pyspark.sql import DataFrame, Row, SparkSession, functions as F
-from pyspark.sql.conversion import ArrowTableToRowsConversion
+from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.conversion import ArrowTableToRowsConversion, LocalDataToArrowConversion
 from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
 from kinbaku_spark.exceptions import BadArgument, EdgeNotFound, NodeNotFound
@@ -608,12 +608,14 @@ class Graph:
             self._edges = self._edges.localCheckpoint(eager=False)
 
     def _rows_df(self, rows: list[dict], schema: StructType) -> DataFrame:
-        """Driver records (``_record``) as a ONE-partition DataFrame. A
-        rewrite unions a few rows onto a stored table, and createDataFrame
-        would spread them over the default parallelism, adding that many
-        mostly empty partitions (tasks per scan) on every rewrite."""
-        rdd = self.spark.sparkContext.parallelize([Row(**r) for r in rows], 1)
-        return self.spark.createDataFrame(rdd, schema)
+        """Driver records (``_record``) as a ONE-partition DataFrame, the
+        write twin of ``_fetch``: the rows become an Arrow table in
+        ``schema`` and a local relation, so no later scan of the stored
+        table runs a Python task. A rewrite unions a few rows onto a stored
+        table, and createDataFrame would spread them over several mostly
+        empty partitions (tasks per scan) on every rewrite."""
+        table = LocalDataToArrowConversion.convert(rows, schema, use_large_var_types=False)
+        return self.spark.createDataFrame(table, schema).coalesce(1)
 
     # -- counts (reference header counters, graph.py:133-149) ----------------
 

@@ -715,6 +715,19 @@ def make_media_codecs():
             out.append(np.stack(rows[::-1]))  # bottom-up
         return int(usec), int(w), int(h), out
 
+    def sample_frames(usec: int, n_frames: int, every_ms: int) -> list:
+        """The frame sampler of a decoded clip: ``(ts_ms, frame index)`` at
+        each every_ms tick of its duration (at least one tick), the frame
+        under the tick chosen. ``usec`` is the container's micro-sec per
+        frame; frame times floor at 1 ms, so a sub-millisecond frame rate
+        cannot divide by zero."""
+        frame_ms = max(usec // 1000, 1)
+        n_samples = max(1, frame_ms * n_frames // every_ms)
+        return [
+            (int(k * every_ms), int(min(k * every_ms // frame_ms, n_frames - 1)))
+            for k in range(int(n_samples))
+        ]
+
     return {
         "encode_png": encode_png,
         "decode_png": decode_png,
@@ -733,6 +746,7 @@ def make_media_codecs():
         "encode_avi": encode_avi,
         "encode_avi_mjpeg": encode_avi_mjpeg,
         "decode_avi": decode_avi,
+        "sample_frames": sample_frames,
     }
 
 

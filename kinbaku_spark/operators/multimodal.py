@@ -32,23 +32,6 @@ AUDIO_FEATURE_SCHEMA = (
 )
 
 
-def decode_image(payload: bytes) -> tuple[int, int]:
-    """Real image decode → (width, height). PNG/BMP get a full pixel
-    decode, JPEG/GIF a header decode (operators/codecs.py). Raises
-    ValueError on unrecognized magic bytes."""
-    from kinbaku_spark.operators.codecs import CODECS
-
-    return CODECS["image_dims"](payload)
-
-
-def decode_audio(payload: bytes):
-    """Real audio decode → (sample_rate, n_frames, int16 samples) for
-    16-bit PCM WAV (stdlib ``wave``)."""
-    from kinbaku_spark.operators.codecs import CODECS
-
-    return CODECS["decode_wav"](payload)
-
-
 def with_binary_payload(
     df: DataFrame, source_col: str = "text", payload_col: str = "payload"
 ) -> DataFrame:
@@ -213,7 +196,8 @@ def video_frame_samples(
     else:
         from kinbaku_spark.operators.codecs import make_media_codecs
 
-        _decode_avi = make_media_codecs()["decode_avi"]
+        codecs = make_media_codecs()
+        _decode_avi, _sample_frames = codecs["decode_avi"], codecs["sample_frames"]
 
         def sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             import numpy as _np
@@ -228,16 +212,11 @@ def video_frame_samples(
                         # (header-only file): zero sampled rows, not a
                         # frames[-1] IndexError inside the executor task
                         continue
-                    frame_ms = max(usec // 1000, 1)
-                    duration_ms = frame_ms * len(frames)
-                    n_samples = max(1, duration_ms // every_ms)
-                    for k in range(int(n_samples)):
-                        ts = k * every_ms
-                        fi = min(ts // frame_ms, len(frames) - 1)
-                        f = frames[int(fi)]
+                    for ts, fi in _sample_frames(usec, len(frames), every_ms):
+                        f = frames[fi]
                         ids.append(int(doc_id))
-                        idxs.append(int(fi))
-                        tss.append(int(ts))
+                        idxs.append(fi)
+                        tss.append(ts)
                         sizes.append(int(f.nbytes))
                         sums.append(int(f.astype(_np.int64).sum()))
                 yield _pd.DataFrame(

@@ -30,6 +30,7 @@ import random
 from pyspark.sql import Column, DataFrame, functions as F
 
 from kinbaku_spark.plans.checkpoints import pin
+from kinbaku_spark.plans.hints import block_pairs
 
 
 def dot_double(a: Column, b: Column) -> Column:
@@ -48,6 +49,34 @@ def norm_double(a: Column) -> Column:
 
 def cosine(a: Column, b: Column) -> Column:
     return dot_double(a, b) / (norm_double(a) * norm_double(b))
+
+
+def make_cosine_fold():
+    """The numpy twin of :func:`cosine` for Python kernels, built as a
+    closure so cloudpickle ships it by value and executors need not import
+    ``kinbaku_spark`` (the operators/codecs.py make_media_codecs
+    convention)."""
+    import numpy as np
+
+    def cosine_fold(qmat, cmat):
+        """Cosine of every (row of qmat, row of cmat) pair as an (n, m)
+        float64 matrix. The dims fold left to right, ``acc += outer(x_d,
+        y_d)`` with both norms in the same loop, vectorized across rows:
+        the same double additions in the same order as F.aggregate and the
+        DuckDB oracles' list_reduce, so sims are bit-identical to theirs."""
+        q = np.asarray(qmat, dtype=np.float64)
+        c = np.asarray(cmat, dtype=np.float64)
+        acc = np.zeros((len(q), len(c)), dtype=np.float64)
+        qn = np.zeros(len(q), dtype=np.float64)
+        cn = np.zeros(len(c), dtype=np.float64)
+        for d in range(q.shape[1]):
+            x, y = q[:, d], c[:, d]
+            acc = acc + np.outer(x, y)
+            qn = qn + x * x
+            cn = cn + y * y
+        return acc / (np.sqrt(qn)[:, None] * np.sqrt(cn)[None, :])
+
+    return cosine_fold
 
 
 # ---------------------------------------------------------------------------
@@ -210,28 +239,28 @@ def lsh_topk(
     )
 
 
+# row-block count of the exhaustive near-dup GEMM (plans/hints.block_pairs)
+NEAR_DUP_BLOCKS = 8
+
+
 def embedding_near_duplicates(
     corpus: DataFrame,
     threshold: float = 0.4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    blocks: int = 8,
 ) -> DataFrame:
     """All pairs with cosine >= threshold — the EXHAUSTIVE verification
     baseline (the registered scale path is
     :func:`embedding_near_duplicates_lsh`).
 
-    The pair space is a distributed BLOCK MATRIX MULTIPLY (the proven
-    x_knn_hubness pattern, queries/eval.py): both sides hash into ``blocks``
-    row-blocks, the B x B block pairs cross-join JVM-side (Arrow transfer
-    is O(n*B) vectors, never the n² pair space), and each task folds the
-    dims SEQUENTIALLY (``acc += outer(x_d, y_d)``, norms accumulated once
-    per row in the same loop) — the identical left-to-right accumulation
-    as the F.aggregate fold and the SQL oracle's list_reduce, so results
-    stay bit-equal. Replaces a crossJoin whose per-pair interpreted
-    higher-order fold measured 11.5 s at sf0.1; the block GEMM runs the
-    same 2M pairs in ~1 s. At 100 TB ``blocks`` scales with the corpus so
-    each block pair fits executor memory (or you use the LSH form).
+    The pair space is a distributed BLOCK MATRIX MULTIPLY: the corpus
+    splits into NEAR_DUP_BLOCKS row-blocks paired by
+    plans/hints.block_pairs, and each task scores its pair with
+    :func:`make_cosine_fold`'s fold, bit-equal to the SQL oracle.
+    Replaces a crossJoin whose per-pair interpreted higher-order fold
+    measured 11.5 s at sf0.1; the block GEMM runs the same 2M pairs in
+    ~1 s. At 100 TB the block count scales with the corpus so each block
+    pair fits executor memory (or you use the LSH form).
 
     Contract: integral ids (the kernel transports them as int64; checked
     up front), null embeddings excluded up front (the crossJoin form
@@ -252,48 +281,24 @@ def embedding_near_duplicates(
             " (kernel transports ids as int64); map string keys to dense"
             " ids first (operators/ids.py)"
         )
-    B = blocks
     thr = float(threshold)
-    blk = (
-        corpus.filter(F.col(vec_col).isNotNull())
-        .select(
-            F.pmod(F.xxhash64(F.col(id_col)), F.lit(B)).alias("g"),
-            F.struct(
-                F.col(id_col).alias("vid"), F.col(vec_col).alias("vec")
-            ).alias("ve"),
-        )
-        .groupBy("g")
-        .agg(F.collect_list("ve").alias("vs"))
+    pairs = block_pairs(
+        corpus.filter(F.col(vec_col).isNotNull()),
+        F.xxhash64(F.col(id_col)),
+        F.struct(F.col(id_col).alias("vid"), F.col(vec_col).alias("vec")),
+        NEAR_DUP_BLOCKS,
     )
-    pairs = (
-        blk.select(F.col("vs").alias("qs"))
-        .crossJoin(blk.select(F.col("vs").alias("cs")))
-        .repartition(B * B)
-    )
+    cosine_fold = make_cosine_fold()
 
     def kernel(batches):
         import numpy as np
         import pandas as pd
 
         for pdf in batches:
-            for qs, cs in zip(pdf["qs"], pdf["cs"]):
+            for qs, cs in zip(pdf["a"], pdf["b"]):
                 qid = np.array([r["vid"] for r in qs], dtype=np.int64)
                 cid = np.array([r["vid"] for r in cs], dtype=np.int64)
-                qmat = np.array([r["vec"] for r in qs], dtype=np.float64)
-                cmat = np.array([r["vec"] for r in cs], dtype=np.float64)
-                n, dim = qmat.shape
-                m = len(cid)
-                # dim-sequential left fold == F.aggregate == list_reduce
-                acc = np.zeros((n, m), dtype=np.float64)
-                qn = np.zeros(n, dtype=np.float64)
-                cn = np.zeros(m, dtype=np.float64)
-                for d in range(dim):
-                    x = qmat[:, d]
-                    y = cmat[:, d]
-                    acc = acc + np.outer(x, y)
-                    qn = qn + x * x
-                    cn = cn + y * y
-                sim = acc / (np.sqrt(qn)[:, None] * np.sqrt(cn)[None, :])
+                sim = cosine_fold([r["vec"] for r in qs], [r["vec"] for r in cs])
                 # raw-sim pre-filter with slack; the EXACT rounded compare
                 # happens Spark-side below (np.round is half-to-even — a
                 # different tie rule than F.round/the oracle, so it must
@@ -482,32 +487,25 @@ def semantic_dedup(
         )
         pair_key = ["cluster", "__sub"]
     # Within-cell pair scoring as ONE numpy Gram matrix per cell
-    # (applyInPandas over the cell key) instead of a s² pair self-join
-    # through the interpreted expression cosine. The dim-sequential outer-
-    # product fold is the SAME accumulation the SQL oracle replays —
-    # proven bit-identical against DuckDB by the x_knn_hubness block
-    # kernel (queries/eval.py). A cell must fit one task: that is
-    # SemDeDup's own working assumption, and max_cluster_size bounds it.
+    # (applyInPandas over the cell key, scored by make_cosine_fold's fold)
+    # instead of a s² pair self-join through the interpreted expression
+    # cosine. A cell must fit one task: that is SemDeDup's own working
+    # assumption, and max_cluster_size bounds it.
     id_type = dict(
         (f.name, f.dataType.simpleString()) for f in assigned.schema.fields
     )[id_col]
+    cosine_fold = make_cosine_fold()
 
     def _cell_dups(pdf):
         import numpy as np
         import pandas as pd
 
         ids = pdf[id_col].to_numpy()
-        m = np.array(list(pdf[vec_col]), dtype=np.float64)
-        n, dim = m.shape
+        n = len(ids)
         if n < 2:
             return pd.DataFrame({id_col: ids[:0]})
-        acc = np.zeros((n, n), dtype=np.float64)
-        nrm = np.zeros(n, dtype=np.float64)
-        for d in range(dim):
-            x = m[:, d]
-            acc = acc + np.outer(x, x)
-            nrm = nrm + x * x
-        sim = np.round(acc / (np.sqrt(nrm)[:, None] * np.sqrt(nrm)[None, :]), 6)
+        m = list(pdf[vec_col])
+        sim = np.round(cosine_fold(m, m), 6)
         mask = (ids[:, None] < ids[None, :]) & (sim >= threshold)
         drop = np.unique(np.broadcast_to(ids[None, :], (n, n))[mask])
         return pd.DataFrame({id_col: drop})

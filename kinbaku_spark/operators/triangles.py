@@ -8,12 +8,11 @@ join rows but the same arithmetic runs as B² numpy GEMMs over
     Σ_{u,v adjacent} |N(u) ∩ N(v)|  =  Σ A∘A²  =  6·T
     per-node:  Σ_v A_uv·(A²)_uv     =  (A³)_uu  =  2·T(u)
 
-Mirrors x_knn_hubness's block-multiply (queries/eval.py):
-row-blocks by id % B, JVM crossJoin of the B² block pairs, one int64
-GEMM per task, the driver sees B² partial rows. Per-task memory is
-(n/B)·n bytes — B (or a column-block split) is the knob when n grows;
-for sparse-large graphs a successor-array-intersect plan (see
-queries/graph_metrics.py KB_WEDGE_SAMPLE_PPM) is the right
+The block pairs come from plans/hints.block_pairs (row-blocks by
+id % B), one int64 GEMM per pair, and the driver sees B² partial rows.
+Per-task memory is (n/B)·n cells — B (or a column-block split) is the
+knob when n grows; for sparse-large graphs a successor-array-intersect
+plan (see queries/graph_metrics.py KB_WEDGE_SAMPLE_PPM) is the right
 asymptotic instead.
 
 Ids are two-phase range ids (operators/ids.py) — dense 0..n-1, no
@@ -43,7 +42,7 @@ def triangle_block_gemm(proj: DataFrame, per_node: bool = False) -> DataFrame:
     """
     from kinbaku_spark.operators.ids import ordered_zero_ids
 
-    from kinbaku_spark.plans.hints import size_hint
+    from kinbaku_spark.plans.hints import block_pairs, size_hint
 
     ids = ordered_zero_ids(
         proj.select(F.col("s1").alias("key")).union(proj.select("s2")).distinct()
@@ -65,26 +64,14 @@ def triangle_block_gemm(proj: DataFrame, per_node: bool = False) -> DataFrame:
         .select("i", "j")
     )
     und = e.union(e.select(F.col("j"), F.col("i")))
-    B = TRI_BLOCKS
+    n_df = ids.agg((F.max("id") + 1).cast("long").alias("n"))
     # pack each edge into ONE long (i<<32 | j): the kernel receives a flat
     # int64 Arrow array it can shift/mask vectorized, instead of
     # block-sized struct lists deserialized row-by-row in Python (the
     # actual cost at this scale — the GEMM itself is milliseconds)
-    blk = (
-        und.select(
-            F.pmod(F.col("i"), F.lit(B)).alias("g"),
-            (F.shiftleft(F.col("i"), 32) + F.col("j")).alias("ij"),
-        )
-        .groupBy("g")
-        .agg(F.collect_list("ij").alias("es"))
-    )
-    n_df = ids.agg((F.max("id") + 1).cast("long").alias("n"))
-    pairs = (
-        blk.select(F.col("es").alias("ea"))
-        .crossJoin(blk.select(F.col("es").alias("eb")))
-        .crossJoin(F.broadcast(n_df))
-        .repartition(B * B)
-    )
+    pairs = block_pairs(
+        und, F.col("i"), F.shiftleft(F.col("i"), 32) + F.col("j"), TRI_BLOCKS
+    ).crossJoin(F.broadcast(n_df))
 
     def kernel(batches):
         import numpy as np
@@ -100,7 +87,7 @@ def triangle_block_gemm(proj: DataFrame, per_node: bool = False) -> DataFrame:
             return u, m
 
         for pdf in batches:
-            for ea, eb, n in zip(pdf["ea"], pdf["eb"], pdf["n"]):
+            for ea, eb, n in zip(pdf["a"], pdf["b"], pdf["n"]):
                 ua, ma = dense(ea, int(n))
                 ub, mb = dense(eb, int(n))
                 # paths[u_local, v_local] = |N(u) ∩ N(v)|; adjacency of

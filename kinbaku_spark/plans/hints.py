@@ -1,4 +1,4 @@
-"""Size-gated broadcast hints (VERDICT r02 next-round #2).
+"""Plan hints: size-gated broadcasts, and the task count of Python stages.
 
 An EXPLICIT ``F.broadcast`` hint is ALWAYS honored — AQE never demotes it —
 so an ungated hint on a |V|-sized table (rank vectors, keep-lists, label
@@ -17,11 +17,17 @@ with the data.
 ``KB_BROADCAST_BOUND`` overrides the default bound; tests set it to 0 to
 lock the demoted (shuffle-join) plan shape for a large-|V| deployment
 without materializing 5M-node fixtures.
+
+The Python-stage half decides how many tasks a ``mapInPandas`` stage gets,
+since each Python task pays a fixed worker cost: :func:`spread_rows`
+widens a row-expensive map stage to the core count, and
+:func:`block_pairs` lays out a block-pair GEMM stage as one task per pair
+of row-blocks.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from kinbaku_spark.knobs import env_int
 
@@ -65,3 +71,26 @@ def spread_rows(df: DataFrame) -> DataFrame:
     if df.rdd.getNumPartitions() >= sc.defaultParallelism:
         return df
     return df.repartition(sc.defaultParallelism)
+
+
+def block_pairs(df: DataFrame, key: Column, item: Column, B: int) -> DataFrame:
+    """Every ordered pair of ``df``'s B row-blocks as one ``(a, b)`` row of
+    two item lists, in B * B partitions: the input of a block-pair GEMM.
+
+    A row goes to block ``pmod(key, B)``, its ``item`` collected into the
+    block's list. The self cross join pairs the lists JVM-side, so Arrow
+    carries O(n * B) items to Python, never the n² pair space, and the
+    round-robin exchange gives the Python stage one task per pair. B is
+    the memory knob: a task holds two blocks of ~n / B items each. The
+    kernel that maps the pairs, and any pruning of its output, stays at
+    the caller's site."""
+    blk = (
+        df.select(F.pmod(key, F.lit(B)).alias("g"), item.alias("v"))
+        .groupBy("g")
+        .agg(F.collect_list("v").alias("vs"))
+    )
+    return (
+        blk.select(F.col("vs").alias("a"))
+        .crossJoin(blk.select(F.col("vs").alias("b")))
+        .repartition(B * B)
+    )

@@ -28,8 +28,8 @@ PLAN_OPS = [
     # a statless-side cross join silently planning as CartesianProduct
     # re-reads the big side's shuffle once per left partition — caught in
     # x_hist_quantile_accuracy (r07); locked so the class cannot return.
-    # The ONE legitimate instance is the triangle block-GEMM's all-pairs
-    # block pairing (operators/triangles.py — every block pair is needed,
+    # The ONE legitimate instance is the block-GEMM's all-pairs block
+    # pairing (plans/hints.block_pairs — every block pair is needed,
     # exactly a matmul's data movement): pinned at count 1 in the
     # triangle-family lock entries.
     "CartesianProduct",

@@ -9,8 +9,9 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from kinbaku_spark.functions.hashing import md5_long, sql_md5_long
 from kinbaku_spark.operators.rank import prefix_sums
-from kinbaku_spark.operators.similarity import cosine
+from kinbaku_spark.operators.similarity import cosine, make_cosine_fold
 from kinbaku_spark.operators.text import text_quality
+from kinbaku_spark.plans.hints import block_pairs
 from kinbaku_spark.queries import kmeans_state, register
 from kinbaku_spark.queries.kmeans_state import kmeans_assign_cte
 from kinbaku_spark.queries.similarity import _sql_cosine
@@ -960,53 +961,37 @@ def x_knn_hubness(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Pair generation is distributed BLOCK MATRIX MULTIPLY — no driver
     collect, no Python-side corpus broadcast (round-1's anti-pattern):
-    both sides are hashed into KNN_BLOCKS row-blocks, the B x B block
-    pairs cross-join JVM-side (each carries one query chunk + one corpus
-    chunk, so Arrow transfer is O(n*B + m*B) vectors, never the n*m pair
-    space), and each task GEMMs its block pair with the SAME
-    dim-sequential left-fold the DuckDB oracle replays (proven
-    bit-identical by x_ann_pandas_topk). Per-block top-k on the rounded
-    key (round is monotone, so block-local and global orderings agree)
-    keeps only B*k candidates per query for the global rank. At 100 TB
-    B scales with corpus so blocks fit executor memory, or the identical
-    rank/in-degree tail runs over IVF/LSH candidates (similarity.py
-    ivf_topk) instead of exact all-pairs.
+    the corpus splits into KNN_BLOCKS row-blocks by vec_id, paired by
+    plans/hints.block_pairs, and each task scores its pair with
+    operators/similarity.make_cosine_fold's fold, bit-identical to the
+    DuckDB oracle. Per-block top-k on the rounded key (round is monotone,
+    so block-local and global orderings agree) keeps only B*k candidates
+    per query for the global rank. At 100 TB B scales with corpus so
+    blocks fit executor memory, or the identical rank/in-degree tail runs
+    over IVF/LSH candidates (similarity.py ivf_topk) instead of exact
+    all-pairs.
     """
     emb = load_table(spark, sf_dir, "embeddings")
-    B = KNN_BLOCKS
-    blk = emb.select(
-        F.pmod(F.col("vec_id"), F.lit(B)).alias("g"),
-        F.struct("vec_id", "embedding").alias("ve"),
-    ).groupBy("g").agg(F.collect_list("ve").alias("vs"))
-    pairs = (
-        blk.select(F.col("vs").alias("qs"))
-        .crossJoin(blk.select(F.col("vs").alias("cs")))
-        .repartition(B * B)
+    pairs = block_pairs(
+        emb, F.col("vec_id"), F.struct("vec_id", "embedding"), KNN_BLOCKS
     )
+    cosine_fold = make_cosine_fold()
 
     def kernel(batches):
         import numpy as np
         import pandas as pd
 
         for pdf in batches:
-            for qs, cs in zip(pdf["qs"], pdf["cs"]):
+            for qs, cs in zip(pdf["a"], pdf["b"]):
                 qid = np.array([r["vec_id"] for r in qs], dtype=np.int64)
                 cid = np.array([r["vec_id"] for r in cs], dtype=np.int64)
-                qmat = np.array([r["embedding"] for r in qs], dtype=np.float64)
-                cmat = np.array([r["embedding"] for r in cs], dtype=np.float64)
-                n, dim = qmat.shape
-                m = len(cid)
-                # dim-sequential left fold == F.aggregate == the SQL oracle
-                acc = np.zeros((n, m), dtype=np.float64)
-                qn = np.zeros(n, dtype=np.float64)
-                cn = np.zeros(m, dtype=np.float64)
-                for d in range(dim):
-                    x = qmat[:, d]
-                    y = cmat[:, d]
-                    acc = acc + np.outer(x, y)
-                    qn = qn + x * x
-                    cn = cn + y * y
-                sim = np.round(acc / (np.sqrt(qn)[:, None] * np.sqrt(cn)[None, :]), 6)
+                sim = np.round(
+                    cosine_fold(
+                        [r["embedding"] for r in qs], [r["embedding"] for r in cs]
+                    ),
+                    6,
+                )
+                n, m = sim.shape
                 sim[qid[:, None] == cid[None, :]] = -np.inf  # self-pairs out
                 # block-local top-k by (sim desc, cid asc) — same composite
                 # key as the global window, so pruning is exact

@@ -297,7 +297,8 @@ def x_video_decode_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     constant pixel value (doc_id*7 + k*31) % 251 at 25 fps — then decode
     it back with the REAL stdlib AVI decoder (operators/codecs.py
     decode_avi: RIFF chunk walk, DIB bottom-up BGR un-padding) and run the
-    production frame sampler math over the DECODED frames (one sample per
+    production frame sampler (operators/codecs.py sample_frames, shared
+    with video_frame_samples) over the DECODED frames (one sample per
     VIDEO_SAMPLE_MS). pixel_sum is the exact sum over the sampled decoded
     frames, so a parser bug — wrong chunk offset, wrong stride, wrong
     row order — breaks the driver's value hash. Closes VERDICT r03
@@ -309,6 +310,7 @@ def x_video_decode_real(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     codecs = make_media_codecs()
     _enc, _dec = codecs["encode_avi"], codecs["decode_avi"]
+    _sample_frames = codecs["sample_frames"]
     usec, every_ms = VIDEO_USEC, VIDEO_SAMPLE_MS
 
     def roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -326,21 +328,13 @@ def x_video_decode_real(spark: SparkSession, sf_dir: str) -> DataFrame:
                     for k in range(nf)
                 ]
                 du, dw, dh, decoded = _dec(_enc(frames, usec))  # real decode
-                # same sampler math as video_frame_samples(fake=False)
-                # (operators/multimodal.py) including the max(...,1) guard
-                # against sub-millisecond frame rates — keep in sync
-                frame_ms = max(du // 1000, 1)
-                duration_ms = frame_ms * len(decoded)
-                n_samples = max(1, duration_ms // every_ms)
-                px = 0
-                for s in range(int(n_samples)):
-                    fi = min((s * every_ms) // frame_ms, len(decoded) - 1)
-                    px += int(decoded[int(fi)].astype(_np.int64).sum())
+                samples = _sample_frames(du, len(decoded), every_ms)
+                px = sum(int(decoded[fi].astype(_np.int64).sum()) for _, fi in samples)
                 ids.append(int(doc_id))
                 nfs.append(len(decoded))
                 ws.append(int(dw))
                 hs.append(int(dh))
-                sfs.append(int(n_samples))
+                sfs.append(len(samples))
                 sums.append(px)
                 durs.append(int(du) * len(decoded))
             yield _pd.DataFrame(
@@ -402,6 +396,7 @@ def x_video_decode_mjpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     codecs = make_media_codecs()
     _enc, _dec = codecs["encode_avi_mjpeg"], codecs["decode_avi"]
+    _sample_frames = codecs["sample_frames"]
     usec, every_ms = VIDEO_USEC, VIDEO_SAMPLE_MS
 
     def roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -423,19 +418,13 @@ def x_video_decode_mjpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
                 else:
                     avi = _enc(frames, usec, subsampling="420", restart_interval=2)
                 du, dw, dh, decoded = _dec(avi)  # real decode
-                # same sampler math as x_video_decode_real — keep in sync
-                frame_ms = max(du // 1000, 1)
-                duration_ms = frame_ms * len(decoded)
-                n_samples = max(1, duration_ms // every_ms)
-                px = 0
-                for s in range(int(n_samples)):
-                    fi = min((s * every_ms) // frame_ms, len(decoded) - 1)
-                    px += int(decoded[int(fi)].astype(_np.int64).sum())
+                samples = _sample_frames(du, len(decoded), every_ms)
+                px = sum(int(decoded[fi].astype(_np.int64).sum()) for _, fi in samples)
                 ids.append(int(doc_id))
                 nfs.append(len(decoded))
                 ws.append(int(dw))
                 hs.append(int(dh))
-                sfs.append(int(n_samples))
+                sfs.append(len(samples))
                 sums.append(px)
                 durs.append(int(du) * len(decoded))
             yield _pd.DataFrame(

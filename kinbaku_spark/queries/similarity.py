@@ -355,27 +355,23 @@ def x_ann_pandas_topk(spark, sf_dir):
     Pandas-UDF scale path for vector math the built-ins can't express
     (learned kernels, quantized dot products, re-rankers).
 
-    Bit-for-bit identical to the SQL fold: the kernel accumulates the dot
-    product and norms SEQUENTIALLY over dimensions (vectorized across
-    ROWS), i.e. the same left-to-right double additions as F.aggregate /
-    list_reduce — so the shared oracle of x_ann_cosine_topk verifies this
+    Bit-for-bit identical to the SQL fold: the kernel scores each batch
+    against the query with operators/similarity.make_cosine_fold's fold
+    (the same left-to-right double additions as F.aggregate /
+    list_reduce), so the shared oracle of x_ann_cosine_topk verifies this
     kernel exactly, proving the Arrow path preserves numerics. Rounding
     and the top-k cut stay JVM-side (round + TakeOrderedAndProject).
     """
-    import math
-
     from pyspark.sql import functions as F
 
+    from kinbaku_spark.operators.similarity import make_cosine_fold
 
     emb = load_table(spark, sf_dir, "embeddings")
     qv = _query_vec(spark, sf_dir)
     if qv is None:  # empty corpus: same empty result as the oracle
         return _empty_topk(emb)
-    q = [float(v) for v in qv]
-    nq = 0.0
-    for v in q:
-        nq += v * v
-    nq = math.sqrt(nq)
+    q = [[float(v) for v in qv]]
+    cosine_fold = make_cosine_fold()
 
     def kernel(batches):
         import numpy as np
@@ -384,15 +380,7 @@ def x_ann_pandas_topk(spark, sf_dir):
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            mat = np.stack(pdf["embedding"].to_numpy())  # (n, d) float32
-            n = mat.shape[0]
-            acc = np.zeros(n, dtype=np.float64)
-            na = np.zeros(n, dtype=np.float64)
-            for d in range(mat.shape[1]):  # sequential over dims,
-                x = mat[:, d].astype(np.float64)  # vectorized over rows
-                acc = acc + x * q[d]
-                na = na + x * x
-            sim = acc / (np.sqrt(na) * nq)
+            sim = cosine_fold(np.stack(pdf["embedding"].to_numpy()), q)[:, 0]
             yield pd.DataFrame({"vec_id": pdf["vec_id"], "sim": sim})
 
     scored = emb.filter(F.col("vec_id") != 0).mapInPandas(

@@ -72,6 +72,15 @@ SMOKE = [
     "m_remove_node_cascade",
     "m_set_neighbors",
     "m_set_predecessors",
+    # Python kernels on the shared block-pair layout (plans/hints.block_pairs),
+    # cosine fold (operators/similarity.make_cosine_fold) and frame sampler
+    # (operators/codecs.make_media_codecs)
+    "x_knn_hubness",
+    "x_dedup_embedding",
+    "g_local_clustering",
+    "x_ann_pandas_topk",
+    "x_video_decode_real",
+    "x_video_decode_mjpeg",
 ]
 
 if os.environ.get("KB_FULL_PARITY") == "1":

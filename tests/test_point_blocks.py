@@ -301,6 +301,16 @@ def test_rewrites_add_one_partition_per_union(spark, tables):
     assert parts() == (nodes0 + 3, edges0 + 3)
 
 
+def test_rewrites_leave_no_python_rdd(spark, tables):
+    # a rewrite's rows are a local relation (Graph._rows_df), so later scans
+    # of the stored tables run JVM tasks only, not Python workers
+    g = Graph(spark, nodes=tables[0], edges=tables[1])
+    g.add_edge("a", "p0")
+    g._flush()
+    for df in (g._nodes, g._edges):
+        assert "PythonRDD" not in df.rdd.toDebugString().decode()
+
+
 def _leaves(df) -> int:
     return df._jdf.queryExecution().logical().collectLeaves().size()
 
@@ -459,3 +469,17 @@ def test_records_match_collect_in_value_and_type(spark, tmp_path, preload):
         block = {(d, t): rec for (s, d, t), rec in want_edges.items() if s == src}
         assert _typed(g._edge_recs.entries.get(src, {})) == _typed(block)  # held: no block, no edges
     assert list(g.predecessors("n1")) == ["n2"]
+    # a record written by add_node/add_edge (the Arrow write path,
+    # Graph._rows_df) and read back from the stored tables after the flush
+    # equals what was written in value, and collect() in value and type
+    attrs = dict(zip(nodes.columns[1:], _FULL))
+    g.add_node("n4", attrs)
+    g.add_edge("n4", "n1", attrs)
+    g._flush()
+    back = Graph(spark, nodes=g._nodes, edges=g._edges, preload=preload)
+    node_row = next(r for r in g._nodes.collect() if r["key"] == "n4").asDict()
+    edge_row = next(r for r in g._edges.collect() if r["src"] == "n4").asDict()
+    assert back.node("n4") == node_row == {"key": "n4", **attrs}
+    assert _typed(back.node("n4")) == _typed(node_row)
+    assert back.edge("n4", "n1") == edge_row == {"src": "n4", "dst": "n1", "type": 0, **attrs}
+    assert _typed(back.edge("n4", "n1")) == _typed(edge_row)
