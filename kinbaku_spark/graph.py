@@ -52,13 +52,27 @@ CPU of a whole fetch. From then on the table is held complete —
 unbounded, and a miss means "absent" with no job. N is read from the plan
 statistics without a job, so only a resident (persisted, materialized)
 table of at most ``cache_len`` rows is ever bought; buying costs at most
-about twice the better fixed choice. Pending ops of the entity are laid
-over the stored record at read time, so reads see the session's own
-writes. Every table rewrite (flush, remove_node,
+about twice the better fixed choice. A table is resident only while the
+cached column buffers its plan reads are persisted: an unpersisted
+DataFrame keeps its old plan and statistics, but its N is unknown. Pending
+ops of the entity are laid over the stored record at read time, so reads
+see the session's own writes. Every table rewrite (flush, remove_node,
 set_neighbors/set_predecessors) applies the same change to the stores, so
 they stay warm; bulk mutations clear them and end the held state.
 ``preload()`` is the reference's ``preload=True`` (graph.py:31,59,304-306):
 both tables held complete now, by the same whole-table fetch.
+
+Shared snapshots: the reference opens every handle over one mmap'd file, so
+a new handle on a warm file reads the shared page cache. Here a whole fetch
+of a resident table publishes its entries in the session registry
+(``state.publish``), keyed by the RDD id of the table's cached column
+buffers, and every later store over the same resident table holds them at
+its first miss with no job, as if it had bought the table (unless the
+session's binary type has changed since the fetch). The entries are shared
+read-only: a store copies the outer map before its first write and
+a block before it edits it, so one Graph's writes never reach another. A
+snapshot goes with its table: once the buffers are unpersisted, the next
+lookup drops it.
 
 Scale notes: the record stores are for the reference's point-op API, which
 is inherently driver-bound; at 100 TB you use the batch API (`add_edges`,
@@ -77,6 +91,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.conversion import ArrowTableToRowsConversion, LocalDataToArrowConversion
 from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
+from kinbaku_spark import state
 from kinbaku_spark.exceptions import BadArgument, EdgeNotFound, NodeNotFound
 
 EDGE_KEY = ("src", "dst", "type")
@@ -100,13 +115,28 @@ ROWS_PER_MISS = 20_000
 CHECKPOINT_EVERY_FLUSHES = 8
 
 
-def _plan_rows(df: DataFrame) -> int | None:
-    """The row count of ``df`` from its optimized plan's statistics, read
-    with no job: exact for a resident (persisted, materialized) table, an
-    upper bound after an anti-join of one, None when Spark does not know it
-    (createDataFrame, parquet scans, unions, filters)."""
-    n = df._jdf.queryExecution().optimizedPlan().stats().rowCount()
-    return int(str(n.get())) if n.isDefined() else None
+def _resident(df: DataFrame) -> tuple[int | None, int | None]:
+    """``df``'s row count from its optimized plan's statistics, and the RDD
+    id of its cached column buffers when ``df`` is a resident table itself
+    (the key of its record snapshots, ``state.snapshot``); both read with
+    no job. The count is exact for a resident (persisted, materialized)
+    table, an upper bound after an anti-join of one, and None when Spark
+    does not know it (createDataFrame, parquet scans, unions, filters) or
+    once a cached table the plan reads has been unpersisted."""
+    plan = df._jdf.queryExecution().optimizedPlan()
+    buffers = state.resident_buffers(df.sparkSession.sparkContext, plan)
+    if buffers is None:
+        return None, None
+    n = plan.stats().rowCount()
+    rdd = buffers[0] if plan.nodeName() == "InMemoryRelation" else None
+    return (int(str(n.get())) if n.isDefined() else None), rdd
+
+
+def _binary_as_bytes(spark: SparkSession) -> bool:
+    """Whether ``collect()`` returns a binary value as ``bytes`` (else
+    ``bytearray``): the session's
+    ``spark.sql.execution.pyspark.binaryAsBytes``."""
+    return spark.conf.get("spark.sql.execution.pyspark.binaryAsBytes", "true").lower() == "true"
 
 
 def _fetch(df: DataFrame) -> list[dict]:
@@ -117,9 +147,8 @@ def _fetch(df: DataFrame) -> list[dict]:
     ``collect()``, but the rows travel as Arrow batches: no per-row pickling
     in the JVM and no ``Row`` per record in Python."""
     schema = df.schema
-    as_bytes = df.sparkSession.conf.get("spark.sql.execution.pyspark.binaryAsBytes", "true")
     rows = ArrowTableToRowsConversion.convert(
-        df.toArrow(), schema, return_as_tuples=True, binary_as_bytes=as_bytes.lower() == "true"
+        df.toArrow(), schema, return_as_tuples=True, binary_as_bytes=_binary_as_bytes(df.sparkSession)
     )
     names = schema.names
     return [dict(zip(names, r)) for r in rows]
@@ -179,13 +208,20 @@ class _Records:
     reaches the table's row count N fetches the table whole instead, and
     from then on it is held: unbounded, and a key with no entry has no
     stored rows. N is read from the plan statistics without a job; a table
-    whose N is unknown, or over ``cap``, is never bought."""
+    whose N is unknown, or over ``cap``, is never bought.
+
+    A whole fetch of a resident table publishes its entries as the table's
+    snapshot (``state.publish``), and a later store over the same table
+    holds that snapshot at its first miss, with no job (``adopt``). The
+    entries are then shared: a store copies them before its first write
+    (``_own``) and ``edit`` copies a block before changing it."""
 
     def __init__(self, col: str, value, weigh, cap: int) -> None:
         self.col, self.value, self.weigh, self.cap = col, value, weigh, cap
         self.entries: OrderedDict = OrderedDict()
         self.size = 0
         self.held = False
+        self.shared = False  # entries is a published snapshot
         self.misses = 0
 
     def get(self, key, table: DataFrame):
@@ -193,9 +229,10 @@ class _Records:
         or none while the table is held."""
         v = self.entries.get(key, _UNCACHED)
         if v is not _UNCACHED:
-            self.entries.move_to_end(key)
+            if not self.held:  # a held store is unbounded: its order is unused
+                self.entries.move_to_end(key)
             return v
-        if self.holds(table):  # possibly bought just now
+        if self.holds(table):  # possibly adopted or bought just now
             return self.entries[key] if key in self.entries else self.value([])
         self.misses += 1
         v = self.value(_fetch(table.filter(F.col(self.col) == key)))
@@ -203,23 +240,51 @@ class _Records:
         return v
 
     def holds(self, table: DataFrame) -> bool:
-        """Whether the table is held, buying it first if the misses so far
-        have paid for it. Called at a miss."""
+        """Whether the table is held, adopting its snapshot or buying it
+        first if the misses so far have paid for it. Called at a miss."""
         if not self.held:
-            n = _plan_rows(table)
+            n, rdd = _resident(table)
+            if self.adopt(table, rdd):
+                return True
             if n is not None and n <= self.cap and self.misses * ROWS_PER_MISS >= n:
-                self.hold(table)
+                self.hold(table, rdd)
         return self.held
 
-    def hold(self, table: DataFrame) -> None:
+    def adopt(self, table: DataFrame, rdd: int | None) -> bool:
+        """Hold the snapshot published for ``table``, the resident table
+        whose cached column buffers are RDD ``rdd`` (None: not resident), if
+        there is one of at most ``cap`` rows, as a buy would, fetched with
+        the session's binary type; no job."""
+        spark = table.sparkSession
+        snap = state.snapshot(spark.sparkContext, rdd, self.col)
+        if snap is None or snap[0] > self.cap or snap[3] != _binary_as_bytes(spark):
+            return False
+        _, self.size, self.entries, _ = snap
+        self.held = self.shared = True
+        return True
+
+    def hold(self, table: DataFrame, rdd: int | None) -> None:
         """Fetch ``table`` whole (one job) and hold it: the buy, and the
-        fill ``Graph.preload()`` uses."""
+        fill ``Graph.preload()`` uses. The entries of a resident table
+        (``rdd`` as for ``adopt``) are published as its snapshot."""
         rows: dict = {}
-        for r in _fetch(table):
+        fetched = _fetch(table)
+        for r in fetched:
             rows.setdefault(r[self.col], []).append(r)
         self.entries = OrderedDict((k, self.value(rs)) for k, rs in rows.items())
         self.size = sum(map(self.weigh, self.entries.values()))
         self.held = True
+        self.shared = rdd is not None
+        if self.shared:
+            spark = table.sparkSession
+            snap = (len(fetched), self.size, self.entries, _binary_as_bytes(spark))
+            state.publish(spark.sparkContext, rdd, self.col, snap)
+
+    def _own(self) -> None:
+        """Copy shared entries before a write changes them."""
+        if self.shared:
+            self.entries = OrderedDict(self.entries)
+            self.shared = False
 
     def put(self, key, v) -> None:
         """Make ``v`` the entry of ``key`` unless it alone exceeds the
@@ -236,6 +301,7 @@ class _Records:
 
     def discard(self, key):
         """Drop the entry of ``key`` and return it (_UNCACHED if none)."""
+        self._own()
         v = self.entries.pop(key, _UNCACHED)
         if v is not _UNCACHED:
             self.size -= self.weigh(v)
@@ -244,13 +310,15 @@ class _Records:
     def edit(self, changes: dict) -> None:
         """Apply materialized changes to dict entries: per key, {inner key:
         stored record, or None for a removal}. A key with no entry is
-        skipped, unless the table is held, where its entry starts empty."""
+        skipped, unless the table is held, where its entry starts empty.
+        An entry is copied before it changes: it may be shared."""
         for key, edits in changes.items():
             v = self.discard(key)
             if v is _UNCACHED:
                 if not self.held:
                     continue
                 v = self.value([])
+            v = dict(v)
             for k, rec in edits.items():
                 if rec is None:
                     v.pop(k, None)
@@ -262,7 +330,7 @@ class _Records:
         """Forget every entry, end the held state and restart the misses."""
         self.entries = OrderedDict()
         self.size = self.misses = 0
-        self.held = False
+        self.held = self.shared = False
 
 
 class Graph:
@@ -455,9 +523,10 @@ class Graph:
         semantics (graph.py:31,59,304-306: all node attributes loaded at
         open, served from the record stores).
 
-        Each table not yet held is fetched whole (one job each) into its
-        store by ``_Records.hold``, the same fill the ski-rental rule buys
-        with: both stores hold every stored record, the ``cache_len`` bound
+        Each table not yet held adopts the snapshot another Graph published
+        for it (no job), or is fetched whole (one job each) into its store
+        by ``_Records.hold``, the same fill the ski-rental rule buys with:
+        both stores hold every stored record, the ``cache_len`` bound
         is lifted, and a miss means "absent". Every point read
         (``node``/``edge``/``has_node``/``has_edge``/``neighbors``/
         ``predecessors``/degrees, ``n_nodes``/``n_edges``) then answers
@@ -469,7 +538,9 @@ class Graph:
         graph is one local file)."""
         for recs, table in ((self._node_recs, self._nodes), (self._edge_recs, self._edges)):
             if not recs.held:
-                recs.hold(table)
+                rdd = _resident(table)[1]
+                if not recs.adopt(table, rdd):
+                    recs.hold(table, rdd)
 
     # -- read-through stored records ------------------------------------------
 

@@ -147,115 +147,117 @@ def _dct_matrix() -> np.ndarray:
 _C = _dct_matrix()
 
 
-def _round_half_up(x):
-    return np.floor(x + 0.5 + _EPS)
-
-
-def _canonical_codes(bits, vals):
-    """(symbol -> (code, length)) per the T.81 canonical construction;
-    validates the length counts describe a real prefix code."""
-    codes, code = {}, 0
-    k = 0
-    total = 0
-    for length in range(1, 17):
-        total = (total + bits[length - 1]) << 1
-        for _ in range(bits[length - 1]):
-            if k >= len(vals):
-                raise ValueError("JPEG: DHT value list shorter than counts")
-            codes[vals[k]] = (code, length)
-            code += 1
-            k += 1
-        code <<= 1
-    if total > (1 << 17) or k != len(vals) or k != sum(bits):
-        raise ValueError("JPEG: invalid Huffman length counts")
-    return codes
-
-
-class _BitWriter:
-    def __init__(self):
-        self.out = bytearray()
-        self.acc = 0
-        self.n = 0
-
-    def write(self, value: int, length: int) -> None:
-        self.acc = (self.acc << length) | (value & ((1 << length) - 1))
-        self.n += length
-        while self.n >= 8:
-            self.n -= 8
-            byte = (self.acc >> self.n) & 0xFF
-            self.out.append(byte)
-            if byte == 0xFF:
-                self.out.append(0x00)  # byte stuffing
-
-    def flush(self) -> bytes:
-        if self.n:
-            pad = 8 - self.n
-            self.write((1 << pad) - 1, pad)  # fill with 1-bits
-        return bytes(self.out)
-
-
-class _BitReader:
-    def __init__(self, data: bytes, pos: int):
-        self.data = data
-        self.pos = pos
-        self.acc = 0
-        self.n = 0
-
-    def read_bit(self) -> int:
-        if self.n == 0:
-            if self.pos >= len(self.data):
-                raise ValueError("JPEG: entropy stream truncated")
-            byte = self.data[self.pos]
-            self.pos += 1
-            if byte == 0xFF:
-                nxt = self.data[self.pos] if self.pos < len(self.data) else None
-                if nxt == 0x00:
-                    self.pos += 1  # stuffed byte
-                else:
-                    raise ValueError("JPEG: unexpected marker in entropy data")
-            self.acc = byte
-            self.n = 8
-        self.n -= 1
-        return (self.acc >> self.n) & 1
-
-    def read_bits(self, length: int) -> int:
-        v = 0
-        for _ in range(length):
-            v = (v << 1) | self.read_bit()
-        return v
-
-    def sync_restart(self) -> int:
-        """Byte-align, scan past pad/stuffed bytes to the next RSTn
-        marker, consume it, and return n (0-7)."""
-        self.n = 0
-        while self.pos + 1 < len(self.data):
-            if self.data[self.pos] == 0xFF and self.data[self.pos + 1] != 0x00:
-                marker = self.data[self.pos + 1]
-                if 0xD0 <= marker <= 0xD7:
-                    self.pos += 2
-                    return marker - 0xD0
-                raise ValueError("JPEG: expected restart marker")
-            self.pos += 1
-        raise ValueError("JPEG: truncated at restart marker")
-
-
-def _magnitude(v: int) -> tuple[int, int]:
-    """(category, raw bits) for a DC diff / AC coefficient."""
-    if v == 0:
-        return 0, 0
-    a = abs(v)
-    t = a.bit_length()
-    bits = v if v > 0 else v + (1 << t) - 1
-    return t, bits
-
-
-def _extend(v: int, t: int) -> int:
-    return v if v >= (1 << (t - 1)) else v - (1 << t) + 1
-
-
 def make_jpeg_codec():
     """Closure factory (same pattern as make_media_codecs): executor-side
-    pipelines close over the returned functions."""
+    pipelines close over the returned functions. Every helper they call is
+    defined in here, so cloudpickle ships it by value with them: a codec
+    runs where ``kinbaku_spark`` cannot be imported. (The module-level
+    tables and arrays they read pickle by value too.)"""
+
+    def _round_half_up(x):
+        return np.floor(x + 0.5 + _EPS)
+
+
+    def _canonical_codes(bits, vals):
+        """(symbol -> (code, length)) per the T.81 canonical construction;
+        validates the length counts describe a real prefix code."""
+        codes, code = {}, 0
+        k = 0
+        total = 0
+        for length in range(1, 17):
+            total = (total + bits[length - 1]) << 1
+            for _ in range(bits[length - 1]):
+                if k >= len(vals):
+                    raise ValueError("JPEG: DHT value list shorter than counts")
+                codes[vals[k]] = (code, length)
+                code += 1
+                k += 1
+            code <<= 1
+        if total > (1 << 17) or k != len(vals) or k != sum(bits):
+            raise ValueError("JPEG: invalid Huffman length counts")
+        return codes
+
+
+    class _BitWriter:
+        def __init__(self):
+            self.out = bytearray()
+            self.acc = 0
+            self.n = 0
+
+        def write(self, value: int, length: int) -> None:
+            self.acc = (self.acc << length) | (value & ((1 << length) - 1))
+            self.n += length
+            while self.n >= 8:
+                self.n -= 8
+                byte = (self.acc >> self.n) & 0xFF
+                self.out.append(byte)
+                if byte == 0xFF:
+                    self.out.append(0x00)  # byte stuffing
+
+        def flush(self) -> bytes:
+            if self.n:
+                pad = 8 - self.n
+                self.write((1 << pad) - 1, pad)  # fill with 1-bits
+            return bytes(self.out)
+
+
+    class _BitReader:
+        def __init__(self, data: bytes, pos: int):
+            self.data = data
+            self.pos = pos
+            self.acc = 0
+            self.n = 0
+
+        def read_bit(self) -> int:
+            if self.n == 0:
+                if self.pos >= len(self.data):
+                    raise ValueError("JPEG: entropy stream truncated")
+                byte = self.data[self.pos]
+                self.pos += 1
+                if byte == 0xFF:
+                    nxt = self.data[self.pos] if self.pos < len(self.data) else None
+                    if nxt == 0x00:
+                        self.pos += 1  # stuffed byte
+                    else:
+                        raise ValueError("JPEG: unexpected marker in entropy data")
+                self.acc = byte
+                self.n = 8
+            self.n -= 1
+            return (self.acc >> self.n) & 1
+
+        def read_bits(self, length: int) -> int:
+            v = 0
+            for _ in range(length):
+                v = (v << 1) | self.read_bit()
+            return v
+
+        def sync_restart(self) -> int:
+            """Byte-align, scan past pad/stuffed bytes to the next RSTn
+            marker, consume it, and return n (0-7)."""
+            self.n = 0
+            while self.pos + 1 < len(self.data):
+                if self.data[self.pos] == 0xFF and self.data[self.pos + 1] != 0x00:
+                    marker = self.data[self.pos + 1]
+                    if 0xD0 <= marker <= 0xD7:
+                        self.pos += 2
+                        return marker - 0xD0
+                    raise ValueError("JPEG: expected restart marker")
+                self.pos += 1
+            raise ValueError("JPEG: truncated at restart marker")
+
+
+    def _magnitude(v: int) -> tuple[int, int]:
+        """(category, raw bits) for a DC diff / AC coefficient."""
+        if v == 0:
+            return 0, 0
+        a = abs(v)
+        t = a.bit_length()
+        bits = v if v > 0 else v + (1 << t) - 1
+        return t, bits
+
+
+    def _extend(v: int, t: int) -> int:
+        return v if v >= (1 << (t - 1)) else v - (1 << t) + 1
 
     enc_tables = {
         0: (_canonical_codes(DC_LUMA_BITS, DC_LUMA_VALS),

@@ -1,7 +1,7 @@
 """CPU of a per-key point-read miss against a whole-table fetch, and the
 ski-rental price ratio ``ROWS_PER_MISS`` they give (kinbaku_spark/graph.py).
 
-    python3 scripts/point_fetch_cost.py [--sf 0.01] [--seed 7] [--misses 10] [--repeats 5]
+    python3 scripts/point_fetch_cost.py [--sf 0.01] [--seed 7] [--misses 10] [--repeats 15]
 
 Run it from the root of a checkout. It generates the supplier→part graph
 with perfbench's generator into a temp dir and sets the engine up exactly as
@@ -10,7 +10,10 @@ persisted and counted). Then it measures CPU seconds of this process and
 the JVM over ``--repeats`` rounds per table, each round a batch of
 ``--misses`` distinct keys fetched one job each on a graph that never buys
 (nodes by ``has_node``, edges by ``out_degree``) and one whole fetch of the
-table, after ``WARMUP`` rounds that are dropped. It prints the medians:
+table, after ``WARMUP`` rounds that are dropped. A whole fetch publishes the
+table's record snapshot, as the buy does; it is dropped again after each
+round, so that every miss is a per-key job. It prints the median over the
+rounds, and beside it the interquartile range, of:
 
 - a miss, per key;
 - a whole fetch, and the part of it spent in this Python process and in
@@ -20,7 +23,7 @@ table, after ``WARMUP`` rounds that are dropped. It prints the medians:
 - the per-row transfer cost: (whole fetch - miss) / rows;
 - rows per miss: miss / per-row cost.
 
-``ROWS_PER_MISS`` is the edge table's figure, the larger table and the one
+``ROWS_PER_MISS`` is the edge table's median, the larger table and the one
 whose buy the benchmark's sessions pay for.
 """
 
@@ -48,7 +51,7 @@ def main(argv=None) -> int:
     parser.add_argument("--sf", type=float, default=0.01)
     parser.add_argument("--seed", type=int, default=7)
     parser.add_argument("--misses", type=int, default=10)
-    parser.add_argument("--repeats", type=int, default=5)
+    parser.add_argument("--repeats", type=int, default=15)
     args = parser.parse_args(argv)
 
     cores = len(os.sched_getaffinity(0))
@@ -68,6 +71,7 @@ def measure(args, data: str, cores: int) -> None:
     from pyspark import SparkContext
 
     from kinbaku_spark import graph as graph_mod
+    from kinbaku_spark import state
     from kinbaku_spark.graph import Graph
     from kinbaku_spark.session import get_spark
     from kinbaku_spark.sources import tables
@@ -102,8 +106,18 @@ def measure(args, data: str, cores: int) -> None:
 
     def whole(table: str) -> None:
         g = Graph(spark, nodes=nodes, edges=edges)
-        g._node_recs.hold(nodes) if table == "nodes" else g._edge_recs.hold(edges)
+        recs, df = (g._node_recs, nodes) if table == "nodes" else (g._edge_recs, edges)
+        recs.hold(df, graph_mod._resident(df)[1])
 
+    # printed columns, in the order of a round's figures: (name, scale, decimals)
+    cols = (
+        ("miss_ms", 1e3, 1),
+        ("whole_ms", 1e3, 1),
+        ("whole_py_ms", 1e3, 1),
+        ("whole_jvm_ms", 1e3, 1),
+        ("row_us", 1e6, 2),
+        ("rows_per_miss", 1, 0),
+    )
     out = {}
     for table, pool in (("nodes", keys), ("edges", sources)):
         n = WARMUP + args.repeats
@@ -111,34 +125,38 @@ def measure(args, data: str, cores: int) -> None:
         batches = [pool[i * step :: step * n][: args.misses] for i in range(n)]
         # rounds alternate a batch of misses and a whole fetch; the first
         # WARMUP rounds (JIT, planner caches) are dropped
-        rounds = [
-            (sum(cpu_of(lambda: misses(table, batch))) / len(batch), cpu_of(lambda: whole(table)))
-            for batch in batches
-        ][WARMUP:]
-        miss = statistics.median(r[0] for r in rounds)
-        fetch = statistics.median(sum(r[1]) for r in rounds)
-        fetch_py = statistics.median(r[1][0] for r in rounds)
-        fetch_jvm = statistics.median(r[1][1] for r in rounds)
-        per_row = (fetch - miss) / rows[table]
-        ratio = miss / per_row if per_row > 0 else float("inf")
-        out[table] = (rows[table], miss, fetch, fetch_py, fetch_jvm, per_row, ratio)
+        rounds = []
+        for batch in batches:
+            miss = sum(cpu_of(lambda: misses(table, batch))) / len(batch)
+            fetch_py, fetch_jvm = cpu_of(lambda: whole(table))
+            state.drop_snapshots()  # the next round's misses must not adopt it
+            fetch = fetch_py + fetch_jvm
+            per_row = (fetch - miss) / rows[table]
+            ratio = miss / per_row if per_row > 0 else float("inf")
+            rounds.append((miss, fetch, fetch_py, fetch_jvm, per_row, ratio))
+        out[table] = [spread([r[i] for r in rounds[WARMUP:]]) for i in range(len(cols))]
     spark.stop()
 
     print(
         f"config: sf {args.sf} seed {args.seed} local[{cores}] driver {DRIVER_MEM}"
-        f" spark {pyspark.__version__}; medians of {args.repeats} rounds of"
-        f" {args.misses} misses and a whole fetch per table"
+        f" spark {pyspark.__version__}; median [interquartile range] of {args.repeats}"
+        f" rounds of {args.misses} misses and a whole fetch per table"
     )
-    print(
-        f"{'table':<6} {'rows':>7} {'miss_ms':>8} {'whole_ms':>9} {'whole_py_ms':>11}"
-        f" {'whole_jvm_ms':>12} {'row_us':>7} {'rows_per_miss':>13}"
-    )
-    for table, (n, miss, fetch, fetch_py, fetch_jvm, per_row, ratio) in out.items():
-        print(
-            f"{table:<6} {n:>7} {miss * 1e3:>8.1f} {fetch * 1e3:>9.1f} {fetch_py * 1e3:>11.1f}"
-            f" {fetch_jvm * 1e3:>12.1f} {per_row * 1e6:>7.2f} {ratio:>13.0f}"
+    print(f"{'table':<6} {'rows':>7} " + " ".join(f"{name:>22}" for name, _, _ in cols))
+    for table, spreads in out.items():
+        cells = (
+            f"{med * k:.{d}f} [{lo * k:.{d}f}, {hi * k:.{d}f}]".rjust(22)
+            for (_, k, d), (med, lo, hi) in zip(cols, spreads)
         )
-    print(f"ROWS_PER_MISS {out['edges'][-1]:.0f}")
+        print(f"{table:<6} {rows[table]:>7} " + " ".join(cells))
+    print(f"ROWS_PER_MISS {out['edges'][-1][0]:.0f}")
+
+
+def spread(xs: list[float]) -> tuple[float, float, float]:
+    """(median, first quartile, third quartile) of ``xs``, the quartiles
+    order statistics (an infinite rows-per-miss stays infinite)."""
+    s = sorted(xs)
+    return statistics.median(s), s[len(s) // 4], s[3 * len(s) // 4]
 
 
 if __name__ == "__main__":

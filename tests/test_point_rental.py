@@ -51,9 +51,36 @@ def resident(spark):
 
 
 def test_plan_rows_of_resident_and_unknown_tables(spark, resident):
-    assert graph_mod._plan_rows(resident[0]) == N_NODES
-    assert graph_mod._plan_rows(resident[1]) == N_EDGES
-    assert graph_mod._plan_rows(spark.createDataFrame([("a",)], "key string")) is None
+    (n_nodes, node_rdd), (n_edges, edge_rdd) = map(graph_mod._resident, resident)
+    assert (n_nodes, n_edges) == (N_NODES, N_EDGES)
+    assert isinstance(node_rdd, int) and isinstance(edge_rdd, int) and node_rdd != edge_rdd
+    assert graph_mod._resident(spark.createDataFrame([("a",)], "key string")) == (None, None)
+    # an anti-join of a resident table: its count bounds the rows, but it
+    # is no resident table itself
+    anti = resident[0].join(spark.createDataFrame([("k00",)], "key string"), "key", "left_anti")
+    assert graph_mod._resident(anti) == (N_NODES, None)
+
+
+def test_unpersisted_table_is_not_resident(spark, monkeypatch):
+    """After ``unpersist()`` a Dataset's plan still reads the released
+    cached table, and its statistics still carry the row count; the table
+    is no longer resident, so it is read per key and never bought."""
+    monkeypatch.setattr(graph_mod, "ROWS_PER_MISS", 10**9)
+    nodes_rows, edges_rows = _rows(5)
+    nodes = spark.createDataFrame(nodes_rows, "key string, name string, age int").persist()
+    edges = spark.createDataFrame(edges_rows, "src string, dst string, type int, weight double").persist()
+    assert nodes.count() == N_NODES and edges.count() == N_EDGES
+    assert graph_mod._resident(nodes)[0] == N_NODES  # the statistics are read before the release
+    nodes.unpersist()
+    edges.unpersist()
+    assert graph_mod._resident(nodes) == graph_mod._resident(edges) == (None, None)
+    g = Graph(spark, nodes=nodes, edges=edges)
+    m = Model(nodes_rows, edges_rows)
+    for k in ("k00", "k01", "k02", "zz"):
+        assert _jobs(spark, lambda: g.has_node(k)) == (k in m.nodes, 1)
+        assert _jobs(spark, lambda: g.out_degree(k)) == (sum(s == k for s, _, _ in m.edges), 1)
+    assert not (g._node_recs.held or g._edge_recs.held)
+    assert (g._node_recs.misses, g._edge_recs.misses) == (4, 4)
 
 
 class Model:
