@@ -38,41 +38,35 @@ stored records, so no point read flushes.
 Record stores: the reference answers edge/has_edge/neighbors/out_degree by
 walking one node's out-edge tree (graph.py:472-492). Point reads here go
 through one store of STORED records per table (``_Records``): nodes by key,
-and per-source out-edge blocks by src, each bounded by ``cache_len`` (a
-block weighs its rows; one over ``cache_len`` is answered but not kept). A
-miss fetches one key with one job: a point read on a hub transfers all of
-the hub's out-edges once, and an absent node is remembered as absent. Every
-fetch a store pays for (``_fetch``) comes back through Arrow as dicts equal to
-``collect()``'s rows, with no per-row pickling or ``Row`` objects. Each
-store counts its misses and, by the ski-rental rule (Karlin et al., 1988),
-fetches its table whole instead at the miss where ``misses so far ×
-ROWS_PER_MISS`` reaches the row count N: ``N / ROWS_PER_MISS`` misses set
-the buy point, and ``ROWS_PER_MISS`` is the CPU of one miss over the per-row
-CPU of a whole fetch. From then on the table is held complete —
-unbounded, and a miss means "absent" with no job. N is read from the plan
-statistics without a job, so only a resident (persisted, materialized)
-table of at most ``cache_len`` rows is ever bought; buying costs at most
-about twice the better fixed choice. A table is resident only while the
-cached column buffers its plan reads are persisted: an unpersisted
-DataFrame keeps its old plan and statistics, but its N is unknown. Pending
-ops of the entity are laid over the stored record at read time, so reads
-see the session's own writes. Every table rewrite (flush, remove_node,
+and per-source out-edge blocks by src. Every fetch a store pays for
+(``_fetch``) comes back through Arrow as dicts equal to ``collect()``'s rows,
+with no per-row pickling or ``Row`` objects. At its first miss, a store holds
+its table whole if the table is resident: its optimized plan's root is one
+persisted, materialized cached table of at most ``cache_len`` rows (read from
+the plan with no job). A held store is unbounded, and a key with no entry is
+absent, with no job. Every other table is read per key: a miss fetches one
+key with one job into an LRU bounded by ``cache_len`` (a block weighs its
+rows; one over ``cache_len`` is answered but not kept), so a point read on a
+hub transfers all of the hub's out-edges once, and an absent node is
+remembered as absent. An unpersisted DataFrame keeps its old plan, so it is
+resident only while the cached column buffers its plan reads are persisted.
+Pending ops of the entity are laid over the stored record at read time, so
+reads see the session's own writes. Every table rewrite (flush, remove_node,
 set_neighbors/set_predecessors) applies the same change to the stores, so
 they stay warm; bulk mutations clear them and end the held state.
 ``preload()`` is the reference's ``preload=True`` (graph.py:31,59,304-306):
-both tables held complete now, by the same whole-table fetch.
+both tables held now, whatever their size or residency.
 
 Shared snapshots: the reference opens every handle over one mmap'd file, so
-a new handle on a warm file reads the shared page cache. Here a whole fetch
-of a resident table publishes its entries in the session registry
-(``state.publish``), keyed by the RDD id of the table's cached column
-buffers, and every later store over the same resident table holds them at
-its first miss with no job, as if it had bought the table (unless the
-session's binary type has changed since the fetch). The entries are shared
-read-only: a store copies the outer map before its first write and
-a block before it edits it, so one Graph's writes never reach another. A
-snapshot goes with its table: once the buffers are unpersisted, the next
-lookup drops it.
+a new handle on a warm file reads the shared page cache. Here the records of
+a resident table are fetched once per session binary type and kept in the
+session registry (``state.snapshot``), keyed by the RDD id of the table's
+cached column buffers; every store that holds the table holds them, and
+only the first pays the job. The entries are shared read-only: a store
+copies the outer map before its first write and a block before it edits
+it, so one Graph's writes never reach another, and reads return deep
+copies, so no caller's edit reaches a store. A snapshot goes with its
+table: once the buffers are unpersisted, the next lookup drops it.
 
 Scale notes: the record stores are for the reference's point-op API, which
 is inherently driver-bound; at 100 TB you use the batch API (`add_edges`,
@@ -83,6 +77,7 @@ for predecessor-heavy workloads, mirroring the reference's dual out/in trees).
 
 from __future__ import annotations
 
+import copy
 import math
 from collections import OrderedDict
 from typing import Any, Iterator
@@ -101,35 +96,22 @@ EDGE_KEY = ("src", "dst", "type")
 DEFAULT_FLUSH_EVERY = 50_000
 # point-read LRU capacity (reference cache_len default, graph.py:29)
 DEFAULT_CACHE_LEN = 1_000_000
-# Rows a whole-table fetch transfers for the CPU of one per-key miss: the
-# per-key job's CPU over the per-row CPU of a whole fetch, the ski-rental
-# price ratio. scripts/point_fetch_cost.py measures both; two runs at sf 0.01
-# on a 4-core host (local[4]), both fetches through Arrow: a miss on the
-# 51,677-row edge table 128/135 ms, a whole fetch 450/450 ms (320/280 ms of
-# it Python, 150/130 ms JVM; 6.2/6.1 µs a row), 20,493/22,147 rows per miss.
-# Seven runs spread from 13,007 to 26,537 with a median of 20,493, which
-# buys that table at its 4th miss.
-ROWS_PER_MISS = 20_000
-
 # localCheckpoint() every N flushes to truncate lineage for long op-logs.
 CHECKPOINT_EVERY_FLUSHES = 8
 
 
-def _resident(df: DataFrame) -> tuple[int | None, int | None]:
-    """``df``'s row count from its optimized plan's statistics, and the RDD
-    id of its cached column buffers when ``df`` is a resident table itself
-    (the key of its record snapshots, ``state.snapshot``); both read with
-    no job. The count is exact for a resident (persisted, materialized)
-    table, an upper bound after an anti-join of one, and None when Spark
-    does not know it (createDataFrame, parquet scans, unions, filters) or
-    once a cached table the plan reads has been unpersisted."""
+def _resident(df: DataFrame) -> tuple[int, int] | None:
+    """The row count of ``df`` and the RDD id of its cached column buffers
+    when ``df`` is a resident table (``state.resident_buffers``), both read
+    from its optimized plan with no job; None for any other table
+    (createDataFrame, parquet scans, unions, an anti-join of a resident
+    table, a released cache)."""
     plan = df._jdf.queryExecution().optimizedPlan()
-    buffers = state.resident_buffers(df.sparkSession.sparkContext, plan)
-    if buffers is None:
-        return None, None
+    rdd = state.resident_buffers(df.sparkSession.sparkContext, plan)
+    if rdd is None:
+        return None
     n = plan.stats().rowCount()
-    rdd = buffers[0] if plan.nodeName() == "InMemoryRelation" else None
-    return (int(str(n.get())) if n.isDefined() else None), rdd
+    return (int(str(n.get())), rdd) if n.isDefined() else None
 
 
 def _binary_as_bytes(spark: SparkSession) -> bool:
@@ -200,29 +182,24 @@ _UNCACHED = object()
 
 class _Records:
     """The point-read cache of one stored table, keyed by column ``col``:
-    an LRU whose entry for a key is ``value(rows)`` of the key's STORED
-    rows and weighs ``weigh(entry)`` against the bound ``cap``.
+    the entry of a key is ``value(rows)`` of the key's STORED rows.
 
-    A miss fetches one key with one job and counts. By the ski-rental rule
-    (Karlin et al., 1988) the miss where ``misses so far × ROWS_PER_MISS``
-    reaches the table's row count N fetches the table whole instead, and
-    from then on it is held: unbounded, and a key with no entry has no
-    stored rows. N is read from the plan statistics without a job; a table
-    whose N is unknown, or over ``cap``, is never bought.
-
-    A whole fetch of a resident table publishes its entries as the table's
-    snapshot (``state.publish``), and a later store over the same table
-    holds that snapshot at its first miss, with no job (``adopt``). The
-    entries are then shared: a store copies them before its first write
-    (``_own``) and ``edit`` copies a block before changing it."""
+    At its first miss a store holds its table if the table is resident
+    (``_resident``) and of at most ``cap`` rows: it takes the table's
+    snapshot (``state.snapshot``), which the first store over the table
+    fetches whole with one job. A held store is unbounded, and a key with
+    no entry has no stored rows. Over any other table the store is an LRU
+    whose entries weigh ``weigh(entry)`` against the bound ``cap``, and a
+    miss fetches one key with one job. Snapshot entries are shared: a store
+    copies them before its first write (``_own``) and ``edit`` copies a
+    block before changing it."""
 
     def __init__(self, col: str, value, weigh, cap: int) -> None:
         self.col, self.value, self.weigh, self.cap = col, value, weigh, cap
         self.entries: OrderedDict = OrderedDict()
-        self.size = 0
+        self.size = 0  # the entries' weight; a held store keeps none
         self.held = False
         self.shared = False  # entries is a published snapshot
-        self.misses = 0
 
     def get(self, key, table: DataFrame):
         """The entry of ``key`` in the stored ``table``; a miss is one job,
@@ -232,53 +209,42 @@ class _Records:
             if not self.held:  # a held store is unbounded: its order is unused
                 self.entries.move_to_end(key)
             return v
-        if self.holds(table):  # possibly adopted or bought just now
+        if self.holds(table):  # possibly held just now
             return self.entries[key] if key in self.entries else self.value([])
-        self.misses += 1
         v = self.value(_fetch(table.filter(F.col(self.col) == key)))
         self.put(key, v)
         return v
 
     def holds(self, table: DataFrame) -> bool:
-        """Whether the table is held, adopting its snapshot or buying it
-        first if the misses so far have paid for it. Called at a miss."""
+        """Whether the table is held, holding it first if it is resident
+        and of at most ``cap`` rows. Called at a miss."""
         if not self.held:
-            n, rdd = _resident(table)
-            if self.adopt(table, rdd):
-                return True
-            if n is not None and n <= self.cap and self.misses * ROWS_PER_MISS >= n:
-                self.hold(table, rdd)
+            self.hold(table, self.cap)
         return self.held
 
-    def adopt(self, table: DataFrame, rdd: int | None) -> bool:
-        """Hold the snapshot published for ``table``, the resident table
-        whose cached column buffers are RDD ``rdd`` (None: not resident), if
-        there is one of at most ``cap`` rows, as a buy would, fetched with
-        the session's binary type; no job."""
-        spark = table.sparkSession
-        snap = state.snapshot(spark.sparkContext, rdd, self.col)
-        if snap is None or snap[0] > self.cap or snap[3] != _binary_as_bytes(spark):
-            return False
-        _, self.size, self.entries, _ = snap
-        self.held = self.shared = True
-        return True
-
-    def hold(self, table: DataFrame, rdd: int | None) -> None:
-        """Fetch ``table`` whole (one job) and hold it: the buy, and the
-        fill ``Graph.preload()`` uses. The entries of a resident table
-        (``rdd`` as for ``adopt``) are published as its snapshot."""
-        rows: dict = {}
-        fetched = _fetch(table)
-        for r in fetched:
-            rows.setdefault(r[self.col], []).append(r)
-        self.entries = OrderedDict((k, self.value(rs)) for k, rs in rows.items())
-        self.size = sum(map(self.weigh, self.entries.values()))
-        self.held = True
-        self.shared = rdd is not None
-        if self.shared:
+    def hold(self, table: DataFrame, cap: float) -> None:
+        """Hold ``table`` if it is resident and of at most ``cap`` rows: its
+        snapshot for the session's binary type, fetched whole (one job) and
+        published if there is none yet. With no cap (``Graph.preload()``),
+        any other table is fetched whole for this store alone."""
+        resident = _resident(table)
+        if resident is not None and resident[0] <= cap:
             spark = table.sparkSession
-            snap = (len(fetched), self.size, self.entries, _binary_as_bytes(spark))
-            state.publish(spark.sparkContext, rdd, self.col, snap)
+            key = (resident[1], self.col, _binary_as_bytes(spark))
+            self.entries = state.snapshot(spark.sparkContext, key, lambda: self._fill(table))
+            self.shared = True
+        elif cap == math.inf:
+            self.entries = self._fill(table)
+        else:
+            return
+        self.held, self.size = True, 0
+
+    def _fill(self, table: DataFrame) -> OrderedDict:
+        """The entries of ``table`` fetched whole: one job."""
+        rows: dict = {}
+        for r in _fetch(table):
+            rows.setdefault(r[self.col], []).append(r)
+        return OrderedDict((k, self.value(rs)) for k, rs in rows.items())
 
     def _own(self) -> None:
         """Copy shared entries before a write changes them."""
@@ -287,15 +253,16 @@ class _Records:
             self.shared = False
 
     def put(self, key, v) -> None:
-        """Make ``v`` the entry of ``key`` unless it alone exceeds the
-        bound; least recently used entries are evicted down to it."""
+        """Make ``v`` the entry of ``key``, unless the store is an LRU and
+        ``v`` alone exceeds its bound; least recently used entries are
+        evicted down to it."""
         self.discard(key)
-        w, bound = self.weigh(v), math.inf if self.held else self.cap
-        if w > bound:
+        w = 0 if self.held else self.weigh(v)
+        if w > self.cap:
             return
         self.entries[key] = v
         self.size += w
-        while self.size > bound:
+        while self.size > self.cap:
             _, old = self.entries.popitem(last=False)
             self.size -= self.weigh(old)
 
@@ -303,7 +270,7 @@ class _Records:
         """Drop the entry of ``key`` and return it (_UNCACHED if none)."""
         self._own()
         v = self.entries.pop(key, _UNCACHED)
-        if v is not _UNCACHED:
+        if v is not _UNCACHED and not self.held:
             self.size -= self.weigh(v)
         return v
 
@@ -327,9 +294,9 @@ class _Records:
             self.put(key, v)
 
     def clear(self) -> None:
-        """Forget every entry, end the held state and restart the misses."""
+        """Forget every entry and end the held state."""
         self.entries = OrderedDict()
-        self.size = self.misses = 0
+        self.size = 0
         self.held = self.shared = False
 
 
@@ -373,7 +340,8 @@ class Graph:
         # distributed. Nodes by key: the record, or None for an absent key,
         # weighing 1. Out-edge blocks by src (the reference's per-node
         # out-edge tree): {(dst, type): record}, weighing its rows (an empty
-        # block 1). ``cache_len`` bounds each store's weight.
+        # block 1). ``cache_len`` bounds each store's weight, and the rows
+        # of a resident table it holds whole.
         self._node_recs = _Records(
             "key", lambda rows: rows[0] if rows else None, lambda rec: 1, cache_len
         )
@@ -523,11 +491,12 @@ class Graph:
         semantics (graph.py:31,59,304-306: all node attributes loaded at
         open, served from the record stores).
 
-        Each table not yet held adopts the snapshot another Graph published
-        for it (no job), or is fetched whole (one job each) into its store
-        by ``_Records.hold``, the same fill the ski-rental rule buys with:
-        both stores hold every stored record, the ``cache_len`` bound
-        is lifted, and a miss means "absent". Every point read
+        Each table not yet held is held by ``_Records.hold``, the fill of a
+        first miss with the ``cache_len`` cap lifted: a resident table
+        takes its snapshot (one job for the first Graph over it, none
+        after), any other table is fetched whole (one job) for this Graph
+        alone. Both stores then hold every stored record, unbounded, and a
+        miss means "absent". Every point read
         (``node``/``edge``/``has_node``/``has_edge``/``neighbors``/
         ``predecessors``/degrees, ``n_nodes``/``n_edges``) then answers
         from driver memory with NO Spark job, pending ops laid over the
@@ -538,9 +507,7 @@ class Graph:
         graph is one local file)."""
         for recs, table in ((self._node_recs, self._nodes), (self._edge_recs, self._edges)):
             if not recs.held:
-                rdd = _resident(table)[1]
-                if not recs.adopt(table, rdd):
-                    recs.hold(table, rdd)
+                recs.hold(table, math.inf)
 
     # -- read-through stored records ------------------------------------------
 
@@ -578,7 +545,6 @@ class Graph:
         if self._edge_recs.holds(self._edges):
             keys = {(s, t) for s, blk in self._edge_recs.entries.items() for d, t in blk if d == dst}
         else:
-            self._edge_recs.misses += 1
             rows = _fetch(self._edges.filter(F.col("dst") == dst).select("src", "type"))
             keys = {(r["src"], r["type"]) for r in rows}
         return self._pending_over(keys, dst, 1)
@@ -693,7 +659,7 @@ class Graph:
     @property
     def n_nodes(self) -> int:
         recs = self._node_recs
-        if recs.held:
+        if recs.holds(self._nodes):
             # every pending node op adds its key unless it is stored
             return len(recs.entries) + sum(k not in recs.entries for k in self._node_ops)
         self._flush()
@@ -701,8 +667,8 @@ class Graph:
 
     @property
     def n_edges(self) -> int:
-        blocks = self._edge_recs.entries
-        if self._edge_recs.held:
+        if self._edge_recs.holds(self._edges):
+            blocks = self._edge_recs.entries
             n = sum(len(b) for b in blocks.values())
             for (s, d, t), (kind, _) in self._edge_ops.items():
                 n += (kind != "delete") - ((d, t) in blocks.get(s, ()))
@@ -852,7 +818,7 @@ class Graph:
             return _record(self._nodes.schema, {"key": key}, op[1])
         rec = self._stored_node(key)
         if rec is not None:
-            return dict(rec)
+            return copy.deepcopy(rec)
         if op is None:
             raise NodeNotFound(key)
         # a pending "ensure" is insert-if-absent: a stored record keeps its
@@ -872,7 +838,7 @@ class Graph:
         rec = self._block(src).get((dst, type))
         if rec is None:
             raise EdgeNotFound(triple)
-        return dict(rec)
+        return copy.deepcopy(rec)
 
     def has_node(self, key: str) -> bool:
         return self._node_exists(key)
@@ -1244,9 +1210,9 @@ class Graph:
             )
 
     def _drop_caches(self) -> None:
-        """Forget every cached record, end the held state of both tables and
-        restart their miss counts: bulk mutations are set algebra the caches
-        cannot follow row by row."""
+        """Forget every cached record and end the held state of both
+        tables: bulk mutations are set algebra the caches cannot follow row
+        by row."""
         self._node_recs.clear()
         self._edge_recs.clear()
         self._drop_id_map()

@@ -1,16 +1,16 @@
 """The graph_point_ops benchmark's own checker, run in the default tier:
 OpStream sessions over a small resident supplier→part graph written by
 perfbench's generator, every answer checked against pointops.GraphModel the
-way perfbench/run.py checks it. Covers the per-key path (ROWS_PER_MISS = 0)
-and the ski-rental default, under which the first session buys both tables
-and every later session holds their shared snapshot and runs no job. Each
-case persists tables of its own, so no case adopts another's snapshot."""
+way perfbench/run.py checks it. Covers the per-key path (a ``cache_len``
+below both tables' row counts) and the default, under which the first
+session holds both tables at their first miss, one whole fetch each, and
+every later session holds their shared snapshot and runs no job. Each case
+persists tables of its own, so no case shares another's snapshot."""
 
 from __future__ import annotations
 
 import pytest
 
-from kinbaku_spark import graph as graph_mod
 from kinbaku_spark.graph import Graph
 from kinbaku_spark.sources import tables
 from perfbench import datagen, expected
@@ -34,18 +34,16 @@ def point_graph(spark, point_data):
     data, weights = point_data
     edges = tables.supplier_part_edges(spark, data).persist()
     nodes = tables.supplier_part_nodes(spark, data).persist()
-    edges.count()
-    nodes.count()
-    yield nodes, edges, weights
+    rows = min(edges.count(), nodes.count())
+    yield nodes, edges, weights, rows
     nodes.unpersist()
     edges.unpersist()
 
 
-@pytest.mark.parametrize("price", [0, None], ids=["per-key", "default"])
-def test_opstream_sessions_match_graph_model(spark, point_graph, monkeypatch, price):
-    nodes, edges, weights = point_graph
-    if price is not None:
-        monkeypatch.setattr(graph_mod, "ROWS_PER_MISS", price)
+@pytest.mark.parametrize("per_key", [True, False], ids=["per-key", "default"])
+def test_opstream_sessions_match_graph_model(spark, point_graph, per_key):
+    nodes, edges, weights, rows = point_graph
+    kw = {"cache_len": rows - 1} if per_key else {}
     model = bench.graph_model(weights)
     stream = OpStream(model, seed=7)
     wrong, held, jobs = [], [], []
@@ -62,13 +60,13 @@ def test_opstream_sessions_match_graph_model(spark, point_graph, monkeypatch, pr
                 model.remove_edge(*args)
 
     for _ in range(SESSIONS):
-        g = Graph(spark, nodes=nodes, edges=edges)
+        g = Graph(spark, nodes=nodes, edges=edges, **kw)
         model.reset()
         jobs.append(_jobs(spark, lambda: session(g))[1])
         held.append((g._node_recs.held, g._edge_recs.held))
     assert wrong == []
-    assert held == [(price is None, price is None)] * SESSIONS
-    if price is None:
-        assert jobs[0] > 0 and jobs[1:] == [0] * (SESSIONS - 1)
-    else:
+    assert held == [(not per_key, not per_key)] * SESSIONS
+    if per_key:
         assert min(jobs) > 0
+    else:
+        assert jobs == [2] + [0] * (SESSIONS - 1)

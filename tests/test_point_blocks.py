@@ -270,8 +270,10 @@ def test_one_edge_record_cache(spark):
         "_lru_put", "_nodes_complete", "_edges_complete", "_node_misses",
         "_edge_misses", "_block_rows", "_blocks", "_node_lru", "_cache_len",
         "_node_row", "_edge_row", "_blank_node_row",
+        "ROWS_PER_MISS",
     )
     assert [n for n in twins if re.search(rf"\b{n}\b", src)] == []
+    assert not hasattr(g._node_recs, "misses") and not hasattr(g._edge_recs, "misses")
 
 
 def test_preload_only_structures_are_gone():

@@ -1,17 +1,16 @@
-"""Ski-rental whole-table fetch on the default point-read path: each table
-(nodes, edges) fetches per key and counts its misses, and at the miss where
-``misses_so_far × ROWS_PER_MISS ≥ N`` (N: the row count in the plan
-statistics) fetches itself whole and is held complete. Covers answers
-against a dict model under every price setting (never buy, buy at the
-second miss, buy after a few misses, the module default, a small
-``cache_len``), through pending writes, flushes, remove_node and
-set_neighbors/set_predecessors; and pins the job counts: the miss the buy
-happens at, no job for present and absent keys after it, no buy without a
-known row count, and preload() as two jobs, then none."""
+"""The hold rule on the default point-read path: at its first miss each
+store (nodes, edges) holds its table whole if the table is resident, that
+is, its optimized plan's root is one persisted, materialized cached table
+of at most ``cache_len`` rows; any other table is read per key. Covers
+answers against a dict model for a held table, a table that is not
+resident and one over ``cache_len``, through pending writes, flushes,
+remove_node and set_neighbors/set_predecessors; and pins the job counts: a
+resident table's first miss is one job and later misses none, an
+unpersisted table and a createDataFrame table stay per key, a table over
+``cache_len`` stays per key, and preload() is two jobs, then none."""
 
 from __future__ import annotations
 
-import math
 import random
 
 import pytest
@@ -54,18 +53,17 @@ def test_plan_rows_of_resident_and_unknown_tables(spark, resident):
     (n_nodes, node_rdd), (n_edges, edge_rdd) = map(graph_mod._resident, resident)
     assert (n_nodes, n_edges) == (N_NODES, N_EDGES)
     assert isinstance(node_rdd, int) and isinstance(edge_rdd, int) and node_rdd != edge_rdd
-    assert graph_mod._resident(spark.createDataFrame([("a",)], "key string")) == (None, None)
-    # an anti-join of a resident table: its count bounds the rows, but it
-    # is no resident table itself
+    assert graph_mod._resident(spark.createDataFrame([("a",)], "key string")) is None
+    # an anti-join of a resident table reads its cached buffers, but it is
+    # no resident table itself
     anti = resident[0].join(spark.createDataFrame([("k00",)], "key string"), "key", "left_anti")
-    assert graph_mod._resident(anti) == (N_NODES, None)
+    assert graph_mod._resident(anti) is None
 
 
-def test_unpersisted_table_is_not_resident(spark, monkeypatch):
+def test_unpersisted_table_is_not_resident(spark):
     """After ``unpersist()`` a Dataset's plan still reads the released
     cached table, and its statistics still carry the row count; the table
-    is no longer resident, so it is read per key and never bought."""
-    monkeypatch.setattr(graph_mod, "ROWS_PER_MISS", 10**9)
+    is no longer resident, so it is read per key and never held."""
     nodes_rows, edges_rows = _rows(5)
     nodes = spark.createDataFrame(nodes_rows, "key string, name string, age int").persist()
     edges = spark.createDataFrame(edges_rows, "src string, dst string, type int, weight double").persist()
@@ -73,14 +71,13 @@ def test_unpersisted_table_is_not_resident(spark, monkeypatch):
     assert graph_mod._resident(nodes)[0] == N_NODES  # the statistics are read before the release
     nodes.unpersist()
     edges.unpersist()
-    assert graph_mod._resident(nodes) == graph_mod._resident(edges) == (None, None)
+    assert graph_mod._resident(nodes) is graph_mod._resident(edges) is None
     g = Graph(spark, nodes=nodes, edges=edges)
     m = Model(nodes_rows, edges_rows)
     for k in ("k00", "k01", "k02", "zz"):
         assert _jobs(spark, lambda: g.has_node(k)) == (k in m.nodes, 1)
         assert _jobs(spark, lambda: g.out_degree(k)) == (sum(s == k for s, _, _ in m.edges), 1)
     assert not (g._node_recs.held or g._edge_recs.held)
-    assert (g._node_recs.misses, g._edge_recs.misses) == (4, 4)
 
 
 class Model:
@@ -144,20 +141,20 @@ def _check_reads(g, m, keys, rng):
                 g.edge(s, d, t)
 
 
-@pytest.mark.parametrize(
-    "price, cache_len",
-    [(0, None), (10**9, None), ("later", None), ("default", None), (10**9, 5)],
-    ids=["never-buy", "buy-at-second-miss", "buy-later", "default", "small-cache"],
-)
-def test_answers_match_dict_model(spark, resident, monkeypatch, price, cache_len):
-    if price == "later":
-        # price 20: the edge table buys at its 4th miss, the node table at
-        # its 3rd, after some keys and absent keys were cached one by one
-        price = math.ceil(N_EDGES / 3)
-    if price != "default":
-        monkeypatch.setattr(graph_mod, "ROWS_PER_MISS", price)
-    kw = {} if cache_len is None else {"cache_len": cache_len}
-    g = Graph(spark, nodes=resident[0], edges=resident[1], **kw)
+def _created(spark):
+    """The tables of ``_rows(5)`` as createDataFrame tables: not resident."""
+    nodes_rows, edges_rows = _rows(5)
+    return (
+        spark.createDataFrame(nodes_rows, "key string, name string, age int"),
+        spark.createDataFrame(edges_rows, "src string, dst string, type int, weight double"),
+    )
+
+
+@pytest.mark.parametrize("case", ["default", "not-resident", "small-cache"])
+def test_answers_match_dict_model(spark, resident, case):
+    nodes, edges = _created(spark) if case == "not-resident" else resident
+    kw = {"cache_len": 5} if case == "small-cache" else {}
+    g = Graph(spark, nodes=nodes, edges=edges, **kw)
     m = Model(*_rows(5))
     rng = random.Random(11)
     keys = sorted(m.nodes) + ["zz0", "zz1"]  # two keys never stored at first
@@ -189,22 +186,14 @@ def test_answers_match_dict_model(spark, resident, monkeypatch, price, cache_len
     # counts last: unless held, each flushes the pending ops and counts
     assert g.n_nodes == len(m.nodes)
     assert g.n_edges == len(m.edges)
-    if price == 0 or cache_len is not None:
-        assert not (g._node_recs.held or g._edge_recs.held)
-    else:
-        assert g._node_recs.held and g._edge_recs.held
+    held = case == "default"
+    assert (g._node_recs.held, g._edge_recs.held) == (held, held)
 
 
-def test_buy_happens_at_the_paying_miss(spark, resident, monkeypatch):
-    # price ceil(N/3): misses 1-3 fetch one key each, the 4th (3 × price ≥ N)
-    # fetches the whole table
-    monkeypatch.setattr(graph_mod, "ROWS_PER_MISS", math.ceil(N_EDGES / 3))
+def test_resident_table_is_held_at_its_first_miss(spark, resident):
     g = Graph(spark, nodes=resident[0], edges=resident[1])
-    for i, src in enumerate(["k00", "k01", "k02"]):
-        assert _jobs(spark, lambda: g.out_degree(src))[1] == 1
-        assert not g._edge_recs.held and g._edge_recs.misses == i + 1
-    assert _jobs(spark, lambda: list(g.predecessors("k03")))[1] == 1  # the 4th miss buys
-    assert g._edge_recs.held and g._edge_recs.size == N_EDGES
+    assert _jobs(spark, lambda: g.out_degree("k00"))[1] == 1  # the whole edge table
+    assert g._edge_recs.held and sum(map(len, g._edge_recs.entries.values())) == N_EDGES
     for read in (
         lambda: g.out_degree("k04"),
         lambda: g.has_edge("k05", "k06"),
@@ -214,43 +203,36 @@ def test_buy_happens_at_the_paying_miss(spark, resident, monkeypatch):
         lambda: g.n_edges,
     ):
         assert _jobs(spark, read)[1] == 0
-    # the node table rents on its own count: 2 × 20 ≥ 24 first holds at
-    # its 3rd miss
+    # the node table is held at its own first miss
     assert not g._node_recs.held
     assert _jobs(spark, lambda: g.node("k00")["name"]) == ("name-k00", 1)
-    assert _jobs(spark, lambda: g.has_node("zz")) == (False, 1)
-    assert not g._node_recs.held and g._node_recs.misses == 2
-    assert _jobs(spark, lambda: g.node("k01")["name"]) == ("name-k01", 1)
-    assert g._node_recs.held and g._node_recs.misses == 2
+    assert g._node_recs.held
     for read, want in (
         (lambda: g.node("k09")["age"], 9),
         (lambda: g.has_node("zz9"), False),
         (lambda: g.n_nodes, N_NODES),
     ):
         assert _jobs(spark, read) == (want, 0)
-    # a bulk mutation ends the held state and restarts the rent
+    # a bulk mutation ends the held state, and the rewritten tables are
+    # not resident: they are read per key (a join plan: several jobs)
     g.add_edges(spark.createDataFrame([("k00", "new", 0)], "src string, dst string, type int"))
     assert not (g._node_recs.held or g._edge_recs.held)
-    assert (g._node_recs.misses, g._edge_recs.misses) == (0, 0)
+    for read in (lambda: g.has_node("new"), lambda: g.has_node("new2"), lambda: g.out_degree("k00")):
+        assert _jobs(spark, read)[1] > 0
+    assert not (g._node_recs.held or g._edge_recs.held)
 
 
-def test_unknown_row_count_never_buys(spark, monkeypatch):
-    monkeypatch.setattr(graph_mod, "ROWS_PER_MISS", 10**9)
-    nodes_rows, edges_rows = _rows(5)
-    g = Graph(
-        spark,
-        nodes=spark.createDataFrame(nodes_rows, "key string, name string, age int"),
-        edges=spark.createDataFrame(edges_rows, "src string, dst string, type int, weight double"),
-    )
+def test_unknown_row_count_never_buys(spark):
+    """A createDataFrame table is not resident: every miss fetches one key
+    and the table is never held."""
+    g = Graph(spark, *_created(spark))
     for k in ("k00", "k01", "k02", "k03"):
         assert _jobs(spark, lambda: g.out_degree(k))[1] == 1
         assert _jobs(spark, lambda: g.has_node(k)) == (True, 1)
     assert not (g._node_recs.held or g._edge_recs.held)
-    assert (g._node_recs.misses, g._edge_recs.misses) == (4, 4)
 
 
-def test_table_over_cache_len_never_buys(spark, resident, monkeypatch):
-    monkeypatch.setattr(graph_mod, "ROWS_PER_MISS", 10**9)
+def test_table_over_cache_len_never_buys(spark, resident):
     g = Graph(spark, nodes=resident[0], edges=resident[1], cache_len=N_NODES - 1)
     for k in ("k00", "k01", "k02"):
         assert _jobs(spark, lambda: g.node(k)["name"]) == (f"name-{k}", 1)
@@ -271,3 +253,10 @@ def test_preload_is_two_jobs_then_none(spark, resident):
         lambda: g.n_edges,
     ):
         assert _jobs(spark, read)[1] == 0
+    # tables that are not resident are fetched whole for the one Graph
+    # that preloads them: a second Graph pays again
+    created = _created(spark)
+    for _ in range(2):
+        c = Graph(spark, *created)
+        assert _jobs(spark, c.preload)[1] == 2
+        assert _jobs(spark, lambda: (c.n_nodes, c.n_edges)) == ((N_NODES, N_EDGES), 0)

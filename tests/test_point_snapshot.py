@@ -1,14 +1,15 @@
-"""Record snapshots shared across Graph handles: a whole fetch of a resident
-table (the ski-rental buy or preload()) publishes its records in the session
-registry (``state.snapshot``), and a later Graph over the same resident
-tables holds them at its first miss with no job. Covers: a second Graph's
-point reads run no job; the writes, flushes, remove_node and
-set_neighbors/set_predecessors of one Graph are never seen by another,
-either way round; a store whose ``cache_len`` is below the row count does
-not adopt; an unpersisted table is not adopted and its snapshot is gone;
-a snapshot is held only under the binary type it was fetched with; and
-Graphs opened and written on several threads at once all answer like their
-dict model."""
+"""Record snapshots shared across Graph handles: the first store to hold a
+resident table (at its first miss, or in preload()) fetches its records
+into the session registry (``state.snapshot``), and a later Graph over the
+same resident tables holds them at its first miss with no job. Covers: a
+second Graph's point reads and counts run no job; the writes, flushes,
+remove_node and set_neighbors/set_predecessors of one Graph are never seen
+by another, either way round; nor are a caller's edits to the nested values
+of a record read back; a store whose ``cache_len`` is below the row count
+does not hold the table; an unpersisted table is not held and its snapshot
+is gone; a snapshot is held only under the binary type it was fetched with;
+and Graphs opened and written on several threads at once all answer like
+their dict model."""
 
 from __future__ import annotations
 
@@ -21,7 +22,7 @@ from kinbaku_spark import graph as graph_mod
 from kinbaku_spark import state
 from kinbaku_spark.graph import Graph
 from test_point_blocks import _jobs
-from test_point_rental import N_NODES, Model, _rows, resident  # noqa: F401 (a fixture)
+from test_point_rental import N_EDGES, N_NODES, Model, _rows, resident  # noqa: F401 (a fixture)
 
 
 def _same(g, m, keys):
@@ -71,9 +72,8 @@ STEPS = ("writes", "flush", "remove_node", "set_neighbors", "set_predecessors")
 
 
 @pytest.mark.parametrize("fill", ["buy", "preload"])
-def test_second_graph_reads_run_no_job(spark, resident, monkeypatch, fill):
-    # price 10**9: a store buys its table at its second miss
-    monkeypatch.setattr(graph_mod, "ROWS_PER_MISS", 10**9)
+def test_second_graph_reads_run_no_job(spark, resident, fill):
+    # "buy": the first Graph holds each table at its first miss
     a = Graph(spark, nodes=resident[0], edges=resident[1])
     if fill == "preload":
         a.preload()
@@ -97,9 +97,8 @@ def test_second_graph_reads_run_no_job(spark, resident, monkeypatch, fill):
     ):
         assert _jobs(spark, read) == (want, 0)
     assert b._node_recs.held and b._edge_recs.held
-    assert (b._node_recs.misses, b._edge_recs.misses) == (0, 0)
     assert _jobs(spark, b.preload)[1] == 0
-    # a store bounded below the row count does not adopt, as it would not buy
+    # a store bounded below the row count does not hold the table
     c = Graph(spark, nodes=resident[0], edges=resident[1], cache_len=N_NODES - 1)
     assert _jobs(spark, lambda: c.node("k03")) == (m.nodes["k03"], 1)
     assert _jobs(spark, lambda: c.out_degree("k03"))[1] == 1
@@ -119,7 +118,7 @@ def test_writes_of_one_graph_stay_invisible_to_another(spark, resident, writer):
         _mutate(w, mw, step, keys, rng)
         _same(w, mw, keys)
         assert _jobs(spark, lambda: _same(r, base, keys))[1] == 0, step
-    # a Graph opened after all of it adopts the unchanged snapshot
+    # a Graph opened after all of it holds the unchanged snapshot
     fresh = Graph(spark, nodes=resident[0], edges=resident[1])
     assert _jobs(spark, lambda: _same(fresh, base, keys))[1] == 0
 
@@ -138,14 +137,19 @@ def test_released_table_is_not_adopted(spark, resident, release):
     assert _jobs(spark, lambda: b.node("k00"))[1] == 1
     assert _jobs(spark, lambda: b.out_degree("k00"))[1] == 1
     assert not (b._node_recs.held or b._edge_recs.held)
-    # the misses looked the registry up, which dropped both snapshots
+    # the misses are per key and never reach the registry: its next lookup
+    # (here, holding another resident table) drops both snapshots
+    other = spark.createDataFrame([("a",)], "key string").persist()
+    assert other.count() == 1
+    Graph(spark, nodes=other).preload()
+    other.unpersist()
     assert not rdds & {k[1] for k in state._SNAPSHOTS}
 
 
 def test_snapshot_is_held_only_under_its_binary_type(spark):
     """A snapshot fetched while ``collect()`` returned binary values as
     ``bytes`` is not held once the session returns ``bytearray``: the
-    store fetches per key, as ``collect()`` would return it."""
+    store fetches the table again, as ``collect()`` would return it."""
     conf = "spark.sql.execution.pyspark.binaryAsBytes"
     before = spark.conf.get(conf, "true")
     nodes = spark.createDataFrame([("a", bytearray(b"\x01"))], "key string, bin binary").persist()
@@ -165,12 +169,11 @@ def test_snapshot_is_held_only_under_its_binary_type(spark):
         edges.unpersist()
 
 
-def test_concurrent_graphs_match_their_models(spark, resident, monkeypatch, run_threads):
+def test_concurrent_graphs_match_their_models(spark, resident, run_threads):
     """Six threads at once (more than the cores of a 4-core host) each open
-    Graphs over the same resident tables (buying or adopting), read, write
-    and flush: every Graph answers like its own model, whatever the others
-    wrote."""
-    monkeypatch.setattr(graph_mod, "ROWS_PER_MISS", 10**9)
+    Graphs over the same resident tables (fetching or sharing the
+    snapshot), read, write and flush: every Graph answers like its own
+    model, whatever the others wrote."""
     errors = []
 
     def session(i):
@@ -188,3 +191,46 @@ def test_concurrent_graphs_match_their_models(spark, resident, monkeypatch, run_
 
     run_threads(6, session)
     assert errors == []
+
+
+def test_counts_hold_the_table(spark, resident):
+    """``n_nodes``/``n_edges`` hold a resident table like a point-read
+    miss: one job per table for the first Graph, then none, and none for a
+    second Graph."""
+    a = Graph(spark, nodes=resident[0], edges=resident[1])
+    assert _jobs(spark, lambda: a.n_nodes) == (N_NODES, 1)
+    assert _jobs(spark, lambda: a.n_edges) == (N_EDGES, 1)
+    assert _jobs(spark, lambda: (a.n_nodes, a.n_edges)) == ((N_NODES, N_EDGES), 0)
+    b = Graph(spark, nodes=resident[0], edges=resident[1])
+    assert _jobs(spark, lambda: (b.n_nodes, b.n_edges)) == ((N_NODES, N_EDGES), 0)
+    assert b._node_recs.held and b._edge_recs.held
+
+
+def test_nested_values_of_a_read_are_fresh(spark):
+    """``node``/``edge`` return records whose nested values (an ``array``
+    attribute's list, a ``map`` attribute's dict) are the caller's own:
+    editing them changes no later read, from the same Graph or from another
+    over the same resident tables, and runs no job."""
+    nodes = spark.createDataFrame(
+        [("a", ["x"], {"k": 1}), ("b", [], {})], "key string, tags array<string>, meta map<string,int>"
+    ).persist()
+    edges = spark.createDataFrame(
+        [("a", "b", 0, ["e"], {"w": 2})], "src string, dst string, type int, tags array<string>, meta map<string,int>"
+    ).persist()
+    assert nodes.count() == 2 and edges.count() == 1
+    try:
+        a = Graph(spark, nodes=nodes, edges=edges, preload=True)
+        b = Graph(spark, nodes=nodes, edges=edges)
+        want_node = {"key": "a", "tags": ["x"], "meta": {"k": 1}}
+        want_edge = {"src": "a", "dst": "b", "type": 0, "tags": ["e"], "meta": {"w": 2}}
+        for g in (a, b):
+            node, edge = g.node("a"), g.edge("a", "b")
+            node["tags"].append("MUTATED")
+            node["meta"]["k"] = 0
+            edge["tags"].clear()
+            edge["meta"]["x"] = 9
+        for g in (a, b):
+            assert _jobs(spark, lambda: (g.node("a"), g.edge("a", "b"))) == ((want_node, want_edge), 0)
+    finally:
+        nodes.unpersist()
+        edges.unpersist()
